@@ -1,30 +1,137 @@
 package graft
 
-/** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric","value","unit","queries","sf"}.
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import scala.collection.mutable.ListBuffer
+
+/** The measurement CLI, on the [[Measure]] timing core:
   *
-  * Each query executes via a `noop`-format write so the measured plan is
-  * the FULL plan — final sorts and all payload columns survive (a bare
-  * `.count()` would let Catalyst drop top-level ORDER BY via
-  * EliminateSorts and prune every non-key column). Failures are reported
-  * per-query and make the process exit nonzero.
+  *  - `runMain graft.Bench` — the catalog bench: every catalog query on
+  *    `SPARK_GRAFT_SF_DIR`, ONE JSON line {"metric","value","unit",
+  *    "queries","sf",...} last on stdout and the full artifact in
+  *    `BENCH_full[.sfN].json`. Failures are reported per query and make
+  *    the process exit nonzero.
+  *  - `time <sfDir> <names> [reps] [warmups]` — warm per-query timer
+  *    for A/B probes (combine with `SPARK_GRAFT_CONF` to A/B a session
+  *    conf on the same build). Clears the registry before every rep, so
+  *    each rep pays its own cache build like the bench's isolated pass,
+  *    and prints per-rep seconds, GC ms and the median. Probe instrument
+  *    only: committed numbers always come from the catalog bench.
+  *  - `plan <sfDir> [names|all] [outDir]` — `explain("formatted")` of the
+  *    unexecuted frame the catalog serves, to stdout or to
+  *    `outDir/<name>.txt`. Read it for Exchange count, partial-aggregation
+  *    shape, PushedFilters/ReadSchema on scans and WholeStageCodegen
+  *    spans.
+  *  - `curation <sfDir> [reps]` — the one-call curation recipe end to end.
+  *  - `stream <sfDir>` — streaming rows/s and per-batch state curves
+  *    ([[BenchStream]]).
   */
 object Bench {
-  import scala.jdk.CollectionConverters._
-
-  /** Cumulative stop-the-world GC time across all collectors, in ms.
-    * Reported in the bench JSON so heap pressure is visible: r5's
-    * official numbers inflated the isolated dedup pass 10-20x purely
-    * from end-of-run JVM state in an 8 GiB heap, and nothing in the
-    * artifact could show it.
-    */
-  private def gcMs(): Long =
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+  private val Usage = "usage: Bench [time <sfDir> <names> [reps] [warmups] | " +
+    "plan <sfDir> [names|all] [outDir] | curation <sfDir> [reps] | stream <sfDir>]"
 
   def main(args: Array[String]): Unit = {
+    val cmd = command(args.toList)
+    val spark = Sessions.build()
+    try cmd(spark) finally spark.stop()
+  }
+
+  /** The subcommand `args` name; bad arguments fail with the usage text
+    * before any session starts. */
+  private def command(args: List[String]): SparkSession => Unit = args match {
+    case Nil => catalog
+    case "time" :: sf :: names :: rest if rest.size <= 2 =>
+      val (ns, reps, warmups) = (queryNames(names), countArg(rest.headOption, 3, 1),
+        countArg(rest.lift(1), 1, 0))
+      time(_, sf, ns, reps, warmups)
+    case "plan" :: sf :: rest if rest.size <= 2 =>
+      val ns = rest.headOption.filter(_ != "all").map(queryNames)
+        .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+      plan(_, sf, ns, rest.lift(1))
+    case "curation" :: sf :: rest if rest.size <= 1 =>
+      val reps = countArg(rest.headOption, 2, 1)
+      curation(_, sf, reps)
+    case "stream" :: sf :: Nil => BenchStream.run(_, sf)
+    case _ => throw new IllegalArgumentException(Usage)
+  }
+
+  private def queryNames(arg: String): Seq[String] = {
+    val names = arg.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(names.nonEmpty && unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    names
+  }
+
+  private def countArg(arg: Option[String], default: Int, min: Int): Int =
+    arg.fold(default) { a =>
+      a.toIntOption.filter(_ >= min)
+        .getOrElse(throw new IllegalArgumentException(s"'$a' is not a count >= $min; $Usage"))
+    }
+
+  /** A pass's reps of one row: the elapsed seconds of every rep run (a
+    * failing rep's fail-fast time last), whether one failed, and the
+    * first rep's frame. */
+  private[graft] final case class Reps(times: Vector[Double], failed: Boolean,
+      first: Option[DataFrame])
+
+  /** Failures and designed refusals of one run, tagged by row, in the
+    * order they happened; [[reps]] is the one rep runner every pass uses. */
+  private[graft] final class Ledger {
+    val errors = ListBuffer.empty[(String, String)]
+    // A refused query is excluded from every total and reported under
+    // "refusals" — the run stays official (quarantining it would block
+    // the sf6.4 artifact forever), while a REAL failure still
+    // quarantines. A GateRefusal surfacing only in a later pass (e.g. a
+    // cache-dependent gate) is a refusal there too (r15 advice).
+    val refusals = ListBuffer.empty[(String, String)]
+
+    /** Up to `n` noop-timed reps of `frame`, stopping at the first throw,
+      * which is recorded under `tag`. `fresh` clears the registry before
+      * each rep, so each rep pays its own full cache build. */
+    def reps(tag: String, n: Int, fresh: Boolean)(frame: => DataFrame): Reps = {
+      val times = Vector.newBuilder[Double]
+      var first = Option.empty[DataFrame]
+      var failed = false
+      for (rep <- 0 until n if !failed) {
+        if (fresh) CacheRegistry.unpersistAll(blocking = true)
+        val t0 = System.nanoTime()
+        try {
+          val t = Measure.noop(frame)
+          times += t.seconds
+          if (rep == 0) first = Some(t.frame)
+        } catch {
+          case e: Throwable =>
+            failed = true
+            (if (Measure.isRefusal(e)) refusals else errors) +=
+              (tag -> s"${e.getClass.getSimpleName}: ${e.getMessage}")
+            times += (System.nanoTime() - t0) / 1e9
+        }
+      }
+      Reps(times.result(), failed, first)
+    }
+  }
+
+  /** Automatic warm re-probe of round-over-round movers (r18 verdict #2):
+    * any row whose new shared median exceeds 2x its median in the PRIOR
+    * artifact is re-run twice, warm, and its best time recorded — the
+    * adjudication (host-I/O excursion vs real regression) ships INSIDE
+    * the artifact instead of requiring a manual probe session. A failing
+    * re-probe is recorded in the ledger as `reprobe:<name>`, never as a
+    * time. */
+  private[graft] def reprobe(medians: Seq[(String, Double)], prior: Map[String, Double],
+      ledger: Ledger)(frame: String => DataFrame): Seq[(String, Double)] =
+    medians
+      .filter { case (k, v) => prior.get(k).exists(p => p > 0 && v > 2 * p) }
+      .sortBy { case (k, v) => -(v / prior(k)) }
+      .take(12)
+      .flatMap { case (k, _) =>
+        val r = ledger.reps(s"reprobe:$k", 2, fresh = false)(frame(k))
+        if (r.failed) None else Some(k -> r.times.min)
+      }
+
+  private def catalog(spark: SparkSession): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // untimed warmup: pay JVM/codegen/filesystem first-touch cost once
     // here instead of inside whichever query happens to run first
     spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -54,22 +161,8 @@ object Bench {
         .groupBy(col("a.doc_id")).agg(count(lit(1)))
         .write.format("noop").mode("overwrite").save()
     }
-    var failures = List.empty[(String, String)]
-    // Designed gate REFUSALS are not failures: above its documented bound
-    // a kernel throws with guidance instead of grinding (the media
-    // band-bucket gate fires at 64× on the structurally-skewed short-doc
-    // band — r12's factor-64 probe; v04's all-pairs gate at 2^17 rows).
-    // A refused query is excluded from every total and reported under
-    // "refusals" — the run stays official (quarantining it would block
-    // the sf6.4 artifact forever), while a REAL failure still quarantines.
-    var refusals = List.empty[(String, String)]
-    // classify by TYPE, not message text: a genuine bug whose wrapped
-    // message embeds the guidance string must quarantine, not pass as a
-    // designed refusal (r14 advice). Walk the cause chain because a gate
-    // firing inside a forked action arrives wrapped.
-    def isRefusal(e: Throwable): Boolean =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
-        .exists(_.isInstanceOf[graft.util.GateRefusal])
+    def frame(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
+    val ledger = new Ledger
     // N consecutive runs per query; the COMMITTED number is the per-query
     // MEDIAN (with min and first-run kept alongside). One-shot timings on
     // this host swing up to 7x run-to-run from page-cache state alone
@@ -100,12 +193,7 @@ object Bench {
       "v24_semantic_spanprobe")
     val anchorReps = math.min(reps,
       math.max(1, sys.env.getOrElse("SPARK_GRAFT_ANCHOR_REPS", reps.toString).toInt))
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      val n = s.length
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
-    }
-    val gcBeforeShared = gcMs()
+    val gcBeforeShared = Measure.gcMs()
     // shared-cache pass (the library's real session economics: retained
     // caches are populated once and reused). A query is "coupled" when it
     // touched the CacheRegistry while running (populate OR reuse —
@@ -116,41 +204,20 @@ object Bench {
     // depends on which query ran first. For a coupled query the shared
     // MEDIAN is its steady-state (cache-reusing) cost; its build-inclusive
     // cost lives in queries_first and, order-independently, in isolated.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      val touches0 = CacheRegistry.touches
+      val r = ledger.reps(name, if (anchorNames(name)) anchorReps else reps,
+        fresh = false)(frame(name))
       // the coupling detection must NOT run inside the timed window:
       // rendering withCachedData forces analysis + cache substitution +
       // full plan stringification, which r4 measured at 0.8-2.0 s on
       // complex plans — enough to make untouched queries look regressed
-      // round-over-round. Stop the clock at the write, THEN inspect (the
-      // plan is already analyzed by then; touches straddle the work).
-      val touches0 = CacheRegistry.touches
-      var coupled = false
-      var failed = false
-      val repsFor = if (anchorNames(name)) anchorReps else reps
-      val times = (0 until repsFor).iterator.takeWhile(_ => !failed).map { rep =>
-        val t0 = System.nanoTime()
-        try {
-          val df = fn(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-          val elapsed = (System.nanoTime() - t0) / 1e9
-          if (rep == 0)
-            coupled = CacheRegistry.touches != touches0 ||
-              df.queryExecution.withCachedData.toString.contains("InMemoryRelation")
-          elapsed
-        } catch {
-          case e: Throwable =>
-            failed = true
-            if (isRefusal(e))
-              refusals ::= (name -> s"${e.getClass.getSimpleName}: ${e.getMessage}")
-            else
-              failures ::= (name -> s"${e.getClass.getSimpleName}: ${e.getMessage}")
-            if (rep == 0) coupled = CacheRegistry.touches != touches0
-            (System.nanoTime() - t0) / 1e9
-        }
-      }.toVector
-      (name, times, coupled)
-    }.filterNot { case (name, _, _) => refusals.exists(_._1 == name) }
-    val gcShared = gcMs() - gcBeforeShared
+      // round-over-round. Inspect after the clock stops.
+      val coupled = CacheRegistry.touches != touches0 ||
+        r.first.exists(_.queryExecution.withCachedData.toString.contains("InMemoryRelation"))
+      (name, r.times, coupled)
+    }.filterNot { case (name, _, _) => ledger.refusals.exists(_._1 == name) }
+    val gcShared = Measure.gcMs() - gcBeforeShared
     // isolation pass: re-time each coupled query against a CLEARED
     // registry, so every number includes its own full cache build —
     // independent of alphabetical run order. Start it from a compacted
@@ -160,76 +227,22 @@ object Bench {
     CacheRegistry.unpersistAll(blocking = true)
     spark.sharedState.cacheManager.clearCache()
     System.gc()
-    val gcBeforeIso = gcMs()
+    val gcBeforeIso = Measure.gcMs()
+    // every rep clears the registry first, so each isolated rep pays its
+    // own full cache build — the median here is the noise-immune
+    // build-inclusive number.
     val isolated = results.collect { case (name, _, true) => name }.map { name =>
-      // every rep clears the registry first, so each isolated rep pays
-      // its own full cache build — the median here is the noise-immune
-      // build-inclusive number.
-      var failed = false
-      val times = (0 until reps).iterator.takeWhile(_ => !failed).map { _ =>
-        CacheRegistry.unpersistAll(blocking = true)
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        catch {
-          case e: Throwable =>
-            failed = true
-            // same type-classification as the shared pass: a designed
-            // GateRefusal surfacing only here (e.g. a future
-            // cache-dependent gate) must be recorded as a refusal, not
-            // flip the artifact to .failed.json (r15 advice)
-            if (isRefusal(e))
-              refusals ::= (s"isolated:$name" -> s"${e.getClass.getSimpleName}: ${e.getMessage}")
-            else
-              failures ::= (s"isolated:$name" -> s"${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }.toVector
-      name -> times
+      name -> ledger.reps(s"isolated:$name", reps, fresh = true)(frame(name)).times
     }
-    def qmap(entries: Seq[(String, Double)]): String =
-      entries.map { case (k, v) => util.Json.quote(k) + ":" + v }
-        .mkString("{", ",", "}")
-    val medians = results.map { case (k, ts, _) => k -> median(ts) }
-    // ---- automatic warm re-probe of round-over-round movers (r18
-    // verdict #2): before overwriting the committed artifact for this
-    // SF, read its PRIOR "queries" medians; any row whose new shared
-    // median exceeds 2x its prior one is re-run twice at the end of the
-    // run and its best warm time recorded under "warm_reprobe" — the
-    // adjudication (host-I/O excursion vs real regression) ships INSIDE
-    // the same artifact instead of requiring a manual probe session.
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val defaultName =
-      if (sfName == "sf0.1") "BENCH_full.json" else s"BENCH_full.$sfName.json"
-    val basePath = sys.env.get("SPARK_GRAFT_BENCH_FULL").map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_REPO", "."), defaultName))
-    val priorQueries: Map[String, Double] =
-      try {
-        if (!java.nio.file.Files.exists(basePath)) Map.empty
-        else {
-          val txt = new String(java.nio.file.Files.readAllBytes(basePath),
-            java.nio.charset.StandardCharsets.UTF_8)
-          """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-            """"([^"]+)":([-0-9.Ee+]+)""".r.findAllMatchIn(m.group(1))
-              .map(g => g.group(1) -> g.group(2).toDouble).toMap
-          }.getOrElse(Map.empty)
-        }
-      } catch { case _: Exception => Map.empty }
-    val reprobed: Seq[(String, Double)] = medians
-      .filter { case (k, v) => priorQueries.get(k).exists(p => p > 0 && v > 2 * p) }
-      .sortBy { case (k, v) => -(v / priorQueries(k)) }
-      .take(12)
-      .map { case (k, _) =>
-        val ts = (0 until 2).map { _ =>
-          val t0 = System.nanoTime()
-          try SparkEntry.queries(k)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-          (System.nanoTime() - t0) / 1e9
-        }
-        k -> ts.min
-      }
+    val medians = results.map { case (k, ts, _) => k -> Measure.median(ts) }
+    // SPARK_GRAFT_BENCH_FULL overrides the full path for multi-SF sweeps
+    // that need one artifact per SF instead of last-write-wins. The
+    // re-probe must read the PRIOR artifact before this run replaces it.
+    val defaultName = Measure.artifactName("BENCH_full", sfDir)
+    val basePath = sys.env.get("SPARK_GRAFT_BENCH_FULL").map(Paths.get(_))
+      .getOrElse(Measure.repoPath(defaultName))
+    val priorQueries = Measure.priorQueries(basePath)
+    val reprobed = reprobe(medians, priorQueries, ledger)(frame)
     // Disclosed by-contract-quadratic anchors, reported on their own
     // line: v04 is an exact all-pairs kernel behind a loud 2^17 refusal
     // gate (the d07/v02/v17 routing lives in its scaladoc), so its cost
@@ -249,31 +262,27 @@ object Bench {
     val builderNames = Set("d00_build_simhash_index", "m00_build_phash_index",
       "d11_simhash_index_append", "m09_media_index_append")
     val buildersS = medians.collect { case (k, v) if builderNames(k) => v }.sum
-    val qs = qmap(medians)
-    val qsMin = qmap(results.map { case (k, ts, _) => k -> ts.min })
-    val qsFirst = qmap(results.map { case (k, ts, _) => k -> ts.head })
+    val qs = Measure.obj(medians)
+    val qsMin = Measure.obj(results.map { case (k, ts, _) => k -> ts.min })
+    val qsFirst = Measure.obj(results.map { case (k, ts, _) => k -> ts.head })
     val total = medians.map(_._2).sum
     val totalFirst = results.map(_._2.head).sum
     val iso =
       if (isolated.isEmpty) ""
-      else ",\"isolated\":" + qmap(isolated.map { case (k, ts) => k -> median(ts) }) +
-        ",\"isolated_min\":" + qmap(isolated.map { case (k, ts) => k -> ts.min })
-    val reprobe =
+      else ",\"isolated\":" + Measure.obj(isolated.map { case (k, ts) => k -> Measure.median(ts) }) +
+        ",\"isolated_min\":" + Measure.obj(isolated.map { case (k, ts) => k -> ts.min })
+    val warm =
       if (reprobed.isEmpty) ""
-      else ",\"warm_reprobe\":" + qmap(reprobed) +
-        ",\"warm_reprobe_prior\":" + qmap(reprobed.map { case (k, _) =>
+      else ",\"warm_reprobe\":" + Measure.obj(reprobed) +
+        ",\"warm_reprobe_prior\":" + Measure.obj(reprobed.map { case (k, _) =>
           k -> priorQueries(k) })
-    val errs =
-      if (failures.isEmpty) ""
-      else failures.reverse.map { case (k, m) =>
-        util.Json.quote(k) + ":" + util.Json.quote(m.take(300))
-      }.mkString(",\"errors\":{", ",", "}")
-    val refs =
-      if (refusals.isEmpty) ""
-      else refusals.reverse.map { case (k, m) =>
-        util.Json.quote(k) + ":" + util.Json.quote(m.take(300))
-      }.mkString(",\"refusals\":{", ",", "}")
-    val gcIso = gcMs() - gcBeforeIso
+    def messages(key: String, ms: Seq[(String, String)]): String =
+      if (ms.isEmpty) ""
+      else s",${util.Json.quote(key)}:" +
+        Measure.obj(ms.map { case (k, m) => k -> util.Json.quote(m.take(300)) })
+    val errs = messages("errors", ledger.errors.toSeq)
+    val refs = messages("refusals", ledger.refusals.toSeq)
+    val gcIso = Measure.gcMs() - gcBeforeIso
     val heapMaxMb = Runtime.getRuntime.maxMemory / (1024L * 1024L)
     val notes = util.Json.quote(
       s"queries: per-query MEDIAN of $reps consecutive shared-cache runs " +
@@ -315,27 +324,7 @@ object Bench {
     // 2000-char cap), so whatever must always survive goes at the end of
     // the line. The complete JSON is also written to BENCH_full.json in
     // the repo so the official artifact never depends on capture size.
-    val line = s"""{"metric":"total","unit":"sec","queries":$qs,"queries_min":$qsMin,"queries_first":$qsFirst$iso$reprobe$errs$refs,"notes":$notes,"sf":${util.Json.quote(sfDir)},"reps":$reps,"anchor_reps":$anchorReps,"gc_ms_shared":$gcShared,"gc_ms_isolated":$gcIso,"heap_max_mb":$heapMaxMb,"anchors_s":$anchorsS,"builders_s":$buildersS,"value_first":$totalFirst,"value":$total}"""
-    // anchor the artifact to the repo (the sbt project dir that forked
-    // this JVM, exported as SPARK_GRAFT_REPO in build.sbt), not the
-    // process cwd — a bench launched from elsewhere must not drop the
-    // official artifact outside the repo. SPARK_GRAFT_BENCH_FULL
-    // overrides the full path for multi-SF sweeps that need one
-    // artifact per SF instead of last-write-wins.
-    //
-    // A run with ANY failed query must never replace the canonical
-    // artifact: its total silently sums ~0.1s fail-fast times for the
-    // broken queries, misrepresenting cost (this exact overwrite shipped
-    // an invalid 482s artifact in round 7). Failed runs go to a
-    // .failed.json sibling so the evidence survives without becoming
-    // the record.
-    // The bare name is reserved for the OFFICIAL scale (sf0.1): a smoke
-    // run at another SF would otherwise silently replace the canonical
-    // artifact with numbers measured on different data — the same
-    // integrity failure the failed-run quarantine exists for. Other SFs
-    // get a suffixed sibling (BENCH_full.sf0.001.json). sfName/
-    // defaultName/basePath are computed above the warm-reprobe block,
-    // which must read the PRIOR artifact before this write replaces it.
+    val line = s"""{"metric":"total","unit":"sec","queries":$qs,"queries_min":$qsMin,"queries_first":$qsFirst$iso$warm$errs$refs,"notes":$notes,"sf":${util.Json.quote(sfDir)},"reps":$reps,"anchor_reps":$anchorReps,"gc_ms_shared":$gcShared,"gc_ms_isolated":$gcIso,"heap_max_mb":$heapMaxMb,"anchors_s":$anchorsS,"builders_s":$buildersS,"value_first":$totalFirst,"value":$total}"""
     // <300 chars INCLUDING sbt's "[info] " prefix: nine rounds of driver
     // artifacts carried parsed:null because this line only survives the
     // ~2000-char stdout tail if it fits AFTER everything sbt and Spark
@@ -343,21 +332,117 @@ object Bench {
     // full line and BENCH_full.json. Printed twice (before the full line
     // and again last, after spark.stop() so shutdown logging cannot trail
     // it) so at least one copy sits inside the captured tail.
-    val compact = s"""{"metric":"total","unit":"sec","value":${math.rint(total * 1000) / 1000},"value_first":${math.rint(totalFirst * 1000) / 1000},"sf":${util.Json.quote(sfDir)},"anchors_s":${math.rint(anchorsS * 1000) / 1000},"builders_s":${math.rint(buildersS * 1000) / 1000},"reps":$reps,"queries_n":${results.size},"coupled_n":${isolated.size},"errors_n":${failures.size},"refusals_n":${refusals.size},"reprobed_n":${reprobed.size},"full":${util.Json.quote(defaultName)}}"""
-    val fullPath =
-      if (failures.isEmpty) basePath
-      else basePath.resolveSibling(
-        basePath.getFileName.toString.stripSuffix(".json") + ".failed.json")
-    try java.nio.file.Files.write(fullPath,
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val compact = s"""{"metric":"total","unit":"sec","value":${math.rint(total * 1000) / 1000},"value_first":${math.rint(totalFirst * 1000) / 1000},"sf":${util.Json.quote(sfDir)},"anchors_s":${math.rint(anchorsS * 1000) / 1000},"builders_s":${math.rint(buildersS * 1000) / 1000},"reps":$reps,"queries_n":${results.size},"coupled_n":${isolated.size},"errors_n":${ledger.errors.size},"refusals_n":${ledger.refusals.size},"reprobed_n":${reprobed.size},"full":${util.Json.quote(defaultName)}}"""
+    // A run with ANY failed query must never replace the canonical
+    // artifact: its total silently sums ~0.1s fail-fast times for the
+    // broken queries, misrepresenting cost (this exact overwrite shipped
+    // an invalid 482s artifact in round 7).
+    val fullPath = if (ledger.errors.isEmpty) basePath else Measure.failedSibling(basePath)
+    try Measure.write(fullPath, line)
     catch { case e: Exception => System.err.println(s"[bench] $fullPath write failed: $e") }
     println(compact)
     println(line)
     spark.stop()
     println(compact)
-    if (failures.nonEmpty) {
-      failures.reverse.foreach { case (k, m) => System.err.println(s"[bench] $k FAILED: $m") }
+    if (ledger.errors.nonEmpty) {
+      ledger.errors.foreach { case (k, m) => System.err.println(s"[bench] $k FAILED: $m") }
       sys.exit(1)
     }
+  }
+
+  private def time(spark: SparkSession, sfDir: String, names: Seq[String],
+      reps: Int, warmups: Int): Unit =
+    names.foreach { name =>
+      spark.sparkContext.setJobDescription(s"time: $name")
+      def rep(): Measure.Timed = {
+        CacheRegistry.unpersistAll(blocking = true)
+        Measure.noop(SparkEntry.queries(name)(spark, sfDir))
+      }
+      (0 until warmups).foreach(_ => rep())
+      val ts = (1 to reps).map { i =>
+        val t = rep()
+        println(f"[time] $name rep$i ${t.seconds}%.3f s (gc ${t.gcMs} ms)")
+        t.seconds
+      }
+      println(f"TIME $name%-34s median=${Measure.median(ts)}%8.3f s  " +
+        s"reps=${ts.map(t => f"$t%.3f").mkString(",")}")
+    }
+
+  /** A query whose CONSTRUCTION throws still gets its text (the exception),
+    * so a sweep over the catalog is total. */
+  private def plan(spark: SparkSession, sfDir: String, names: Seq[String],
+      outDir: Option[String]): Unit = {
+    outDir.foreach(d => Files.createDirectories(Paths.get(d)))
+    names.foreach { name =>
+      val text =
+        try SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+        catch { case e: Exception =>
+          s"CONSTRUCTION FAILED: ${e.getClass.getName}: ${e.getMessage}" }
+      outDir match {
+        case Some(d) => Files.writeString(Paths.get(d, s"$name.txt"), text)
+        case None => println(s"==== $name ====\n$text")
+      }
+    }
+  }
+
+  /** Every stage of [[graft.pipeline.Curation.pretrainingCorpus]] is
+    * individually oracled and benched in the catalog (t12/d08/d10 → d01/
+    * d03/d05/d07 → p06), but the COMPOSED artifact — the thing a real
+    * user runs — needs its own number: cross-stage recomputation hides
+    * between stages, not inside them (the r6 curateSemantic class). Two
+    * measurements per rep:
+    *
+    *  - `e2e`: one action over the full lexical+semantic recipe
+    *    (scrub → cutSpans → quality/exact/near-dup → SemDeDup →
+    *    leakage-safe splits), counted by split so the whole DAG executes;
+    *  - a stage ladder (each stage materialized via count on a fresh
+    *    registry) whose SUM bounds what the composition would cost if it
+    *    re-ran every prefix — `e2e ≲ Σ stages` is the no-recomputation
+    *    check, printed per rep for eyeball diffing.
+    *
+    * Prints one compact JSON line last (the bench stdout-framing
+    * contract). */
+  private def curation(spark: SparkSession, dir: String, reps: Int): Unit = {
+    import org.apache.spark.sql.functions._
+    import graft.pipeline.Curation
+    val docs = QueryHelpers.tbl(spark, dir, "documents")
+    val vecs = QueryHelpers.tbl(spark, dir, "embeddings")
+      .select(col("vec_id").cast("long").as("vec_id"),
+        col("embedding").cast("array<double>").as("v"))
+    var lastE2e = 0.0
+    var lastStages = Seq.empty[(String, Double)]
+    (1 to reps).foreach { rep =>
+      CacheRegistry.unpersistAll(blocking = true)
+      val (tE2e, nOut) = Measure.seconds {
+        Curation.pretrainingCorpus(docs, Some(vecs))
+          .groupBy(col("split")).count().collect().map(_.getLong(1)).sum
+      }
+      println(f"[curation] rep$rep e2e ${tE2e}%.2f s ($nOut docs out)")
+      // stage ladder: each step runs on a FRESH registry so it measures
+      // the true cold cost of its whole prefix — without the per-stage
+      // reset, later stages hit plan-matched caches retained by earlier
+      // ones and Σ stages understates the all-prefixes bound the e2e
+      // number is checked against
+      val stages = ListBuffer.empty[(String, Double)]
+      def stage(name: String)(f: => Long): Unit = {
+        CacheRegistry.unpersistAll(blocking = true)
+        stages += (name -> Measure.seconds(f)._1)
+      }
+      val cleaned = Curation.cutSpans(Curation.scrub(docs), 8)
+        .drop("n_span_tokens_removed")
+      stage("scrub")(Curation.scrub(docs).count())
+      stage("cutSpans")(cleaned.count())
+      stage("curate(lexical)")(Curation.curate(cleaned).count())
+      stage("curateSemantic")(Curation.curateSemantic(cleaned, vecs).count())
+      stage("splitsLeakageSafe")(
+        graft.pipeline.Splits.assignLeakageSafe(
+          Curation.curateSemantic(cleaned, vecs).drop("split"), 0.3, 100L).count())
+      println(stages.map { case (k, v) => f"$k=${v}%.2f" }
+        .mkString(f"[curation] rep$rep stages (cumulative-prefix costs): ", " ", ""))
+      lastE2e = tE2e
+      lastStages = stages.toSeq
+    }
+    val stagesJson = Measure.obj(lastStages.map { case (k, v) => k -> math.rint(v * 100) / 100 })
+    println(s"""{"metric":"curation_e2e","unit":"sec","value":${math.rint(lastE2e * 100) / 100},"stages":$stagesJson,"sf":${util.Json.quote(dir)},"reps":$reps}""")
   }
 }

@@ -5,21 +5,19 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming-half benchmark: `runMain graft.StreamBench` with
-  * `SPARK_GRAFT_SF_DIR` (default sf0.1) and `SPARK_GRAFT_STREAM_CHUNKS`
-  * (default 8 micro-batches).
+/** Streaming-half benchmark: `runMain graft.Bench stream <sfDir>`.
   *
   * The 11 streaming duals and 3 delivery sinks are correctness-pinned
   * (streaming == batch on replay, spec-per-dual), but a cluster
   * operator's first question about any of them at 100 TB is rows/sec,
   * micro-batch latency, and state growth — numbers no spec produces.
-  * This main replays the scale-factor corpora through the three
+  * This subcommand replays the scale-factor corpora through the three
   * streaming surfaces whose state models differ, so each documented
   * state bound becomes a measured per-batch curve:
   *
   *  - `curation` — [[graft.pipeline.StreamingCuration]] over the
-  *    documents table in K ascending-doc_id chunks. State lives in the
-  *    WAREHOUSE (fingerprint column + `_sigs` signature history), not a
+  *    documents table in [[Chunks]] ascending-doc_id chunks. State lives
+  *    in the WAREHOUSE (fingerprint column + `_sigs` signature history), not a
   *    state store; the artifact records each batch's trigger latency and
   *    the per-batch signature/delivered appends (the warehouse-side
   *    state growth).
@@ -39,13 +37,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * numInputRows, triggerExecution ms, state rows/bytes) — the same
   * numbers a production listener would ship to a metrics bus. Replay
   * chunks are staged ONCE per run outside the timed window; timing
-  * covers `start()` → `awaitTermination()`.
+  * covers `start()` → `awaitTermination()`. The staged copies (corpus-
+  * sized at the big tiers), the checkpoints and the scratch database are
+  * deleted when the run ends, failed or not.
   *
   * Prints one compact JSON line last (the Bench stdout-framing
   * contract) and writes the full artifact to `STREAMBENCH[.sfN].json`
-  * under the repo root, mirroring Bench's official-scale naming rule.
+  * under the repo root, by [[Measure.artifactName]].
   */
-object StreamBench {
+object BenchStream {
+
+  /** Micro-batches per workload; every committed artifact used 8. */
+  val Chunks = 8
 
   private final case class BatchRow(batchId: Long, inputRows: Long,
       triggerMs: Long, stateRows: Long, stateBytes: Long)
@@ -73,22 +76,19 @@ object StreamBench {
       }
 
   private def timedRun(start: => StreamingQuery): (StreamingQuery, Double) = {
-    val t0 = System.nanoTime()
-    val q = start
-    q.awaitTermination()
-    (q, (System.nanoTime() - t0) / 1e9)
+    val (s, q) = Measure.seconds { val q = start; q.awaitTermination(); q }
+    (q, s)
   }
 
-  /** Stage `df` as `chunks` sequential single-file parquet writes under a
-    * fresh temp dir (the FileStreamSource orders by modification time, so
+  /** Stage `df` as [[Chunks]] sequential single-file parquet writes under
+    * `dir` (the FileStreamSource orders by modification time, so
     * each write lands as one micro-batch under maxFilesPerTrigger=1);
     * `orderCol` defines the chunk boundaries — ascending doc_id for the
     * curation monotone-id contract, ts for the event streams. */
-  private def stageChunks(df: DataFrame, orderCol: String, chunks: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("streambench").toString
+  private def stageChunks(df: DataFrame, orderCol: String, dir: String): String = {
     val chunked = df.withColumn("_chunk",
-      ntile(chunks).over(Window.orderBy(col(orderCol))))
-    (1 to chunks).foreach { c =>
+      ntile(Chunks).over(Window.orderBy(col(orderCol))))
+    (1 to Chunks).foreach { c =>
       chunked.filter(col("_chunk") === c).drop("_chunk")
         .coalesce(1).write.mode("append").parquet(dir)
       Thread.sleep(60) // distinct mtimes → deterministic discovery order
@@ -100,13 +100,50 @@ object StreamBench {
     s.readStream.schema(s.read.parquet(dir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "8").toInt
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+  def run(spark: SparkSession, sfDir: String): Unit = {
     val db = "graft_streambench"
+    val temps = scala.collection.mutable.ListBuffer.empty[String]
+    def temp(prefix: String): String = {
+      val d = java.nio.file.Files.createTempDirectory(prefix).toString
+      temps += d
+      d
+    }
     spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
+    val results =
+      try workloads(spark, sfDir, db, temp)
+      finally {
+        spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
+        temps.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+      }
+    def jBatches(bs: Seq[BatchRow]): String = bs.map { b =>
+      s"""{"batch":${b.batchId},"input_rows":${b.inputRows},"trigger_ms":${b.triggerMs},""" +
+        s""""state_rows":${b.stateRows},"state_bytes":${b.stateBytes}}"""
+    }.mkString("[", ",", "]")
+    val wl = results.map { r =>
+      val rps = if (r.wallS > 0) r.rowsIn / r.wallS else 0.0
+      val extras = r.extra.map { case (k, v) => s"""${util.Json.quote(k)}:$v""" }
+        .map("," + _).mkString
+      util.Json.quote(r.name) + ":{" +
+        s""""rows_in":${r.rowsIn},"wall_s":${math.rint(r.wallS * 1000) / 1000},""" +
+        s""""rows_per_sec":${math.rint(rps * 10) / 10},"batches":${jBatches(r.batches)},""" +
+        s""""note":${util.Json.quote(r.note)}$extras}"""
+    }.mkString("{", ",", "}")
+    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
+    val artifact = Measure.artifactName("STREAMBENCH", sfDir)
+    val line = s"""{"metric":"stream","unit":"sec","sf":${util.Json.quote(sfDir)},""" +
+      s""""chunks":$Chunks,"workloads":$wl,"artifact":${util.Json.quote(artifact)}}"""
+    Measure.write(Measure.repoPath(artifact), line)
+    println(line)
+    val compact = results.map(r =>
+      s"""${util.Json.quote(r.name)}:{"wall_s":${math.rint(r.wallS * 1000) / 1000},""" +
+        s""""rows_per_sec":${math.rint((if (r.wallS > 0) r.rowsIn / r.wallS else 0.0) * 10) / 10}}""")
+      .mkString("{\"metric\":\"stream\",", ",", s""","sf":${util.Json.quote(sfName)}}""")
+    spark.stop()
+    println(compact)
+  }
 
+  private def workloads(spark: SparkSession, sfDir: String, db: String,
+      temp: String => String): Seq[WorkloadResult] = {
     val results = scala.collection.mutable.ArrayBuffer.empty[WorkloadResult]
 
     // ---- curation: documents → quality gate → exact + near-dup vs corpus
@@ -114,11 +151,11 @@ object StreamBench {
       val docs = QueryHelpers.tbl(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
       val n = docs.count()
-      val src = stageChunks(docs, "doc_id", chunks)
+      val src = stageChunks(docs, "doc_id", temp("streambench"))
       CacheRegistry.unpersistAll(blocking = true)
       val (q, wall) = timedRun(graft.pipeline.StreamingCuration.start(
         fileStream(spark, src), "sb_curated",
-        java.nio.file.Files.createTempDirectory("sbcur_cp").toString, database = db))
+        temp("sbcur_cp"), database = db))
       val batches = progressRows(q)
       // warehouse-side state growth per batch (no state store here): the
       // ledgered _batch_id column makes the appends auditable post-hoc
@@ -149,12 +186,12 @@ object StreamBench {
       val ev = QueryHelpers.eventsTbl(spark, sfDir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       val n = ev.count()
-      val src = stageChunks(ev, "ts", chunks)
+      val src = stageChunks(ev, "ts", temp("streambench"))
       val agg = fileStream(spark, src).groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), QueryHelpers.sumExact(col("value")).as("sum_value"))
       val (q, wall) = timedRun(graft.sinks.StreamingUpsert.startMaterializedAgg(
         agg, "sb_mv_user", Seq("user_id"),
-        java.nio.file.Files.createTempDirectory("sbmv_cp").toString, database = db))
+        temp("sbmv_cp"), database = db))
       results += WorkloadResult("mat_agg", n, wall, progressRows(q),
         "streaming-agg state is O(distinct users): state_rows should approach the " +
           "user universe and flatten; trigger_ms includes the bucketed warehouse " +
@@ -167,7 +204,7 @@ object StreamBench {
       val ev = QueryHelpers.eventsTbl(spark, sfDir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       val n = ev.count()
-      val src = stageChunks(ev, "ts", chunks)
+      val src = stageChunks(ev, "ts", temp("streambench"))
       // sentinel file last: advances the watermark past every real
       // window so append mode emits them before AvailableNow stops
       locally {
@@ -180,45 +217,13 @@ object StreamBench {
       val (q, wall) = timedRun(
         graft.streaming.EventStreams.hourlyTumbling(fileStream(spark, src))
           .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("sbtb_cp").toString)
+          .option("checkpointLocation", temp("sbtb_cp"))
           .trigger(Trigger.AvailableNow()).start())
       results += WorkloadResult("tumbling", n + 1, wall, progressRows(q),
         "state is O(open windows): bounded by (hours inside the 2h lateness " +
           "horizon) x |event types|, evicted as the watermark passes — the " +
           "sentinel batch should collapse state_rows to the final hour only")
     }
-
-    spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
-
-    def jBatches(bs: Seq[BatchRow]): String = bs.map { b =>
-      s"""{"batch":${b.batchId},"input_rows":${b.inputRows},"trigger_ms":${b.triggerMs},""" +
-        s""""state_rows":${b.stateRows},"state_bytes":${b.stateBytes}}"""
-    }.mkString("[", ",", "]")
-    val wl = results.map { r =>
-      val rps = if (r.wallS > 0) r.rowsIn / r.wallS else 0.0
-      val extras = r.extra.map { case (k, v) => s"""${util.Json.quote(k)}:$v""" }
-        .map("," + _).mkString
-      util.Json.quote(r.name) + ":{" +
-        s""""rows_in":${r.rowsIn},"wall_s":${math.rint(r.wallS * 1000) / 1000},""" +
-        s""""rows_per_sec":${math.rint(rps * 10) / 10},"batches":${jBatches(r.batches)},""" +
-        s""""note":${util.Json.quote(r.note)}$extras}"""
-    }.mkString("{", ",", "}")
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val artifact =
-      if (sfName == "sf0.1") "STREAMBENCH.json" else s"STREAMBENCH.$sfName.json"
-    val line = s"""{"metric":"stream","unit":"sec","sf":${util.Json.quote(sfDir)},""" +
-      s""""chunks":$chunks,"workloads":$wl,"artifact":${util.Json.quote(artifact)}}"""
-    val path = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO", "."), artifact)
-    java.nio.file.Files.write(path,
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(line)
-    val compact = results.map(r =>
-      s"""${util.Json.quote(r.name)}:{"wall_s":${math.rint(r.wallS * 1000) / 1000},""" +
-        s""""rows_per_sec":${math.rint((if (r.wallS > 0) r.rowsIn / r.wallS else 0.0) * 10) / 10}}""")
-      .mkString("{\"metric\":\"stream\",", ",", s""","sf":${util.Json.quote(sfName)}}""")
-    spark.stop()
-    println(compact)
+    results.toSeq
   }
 }

@@ -45,7 +45,7 @@ object ScaleUp {
       sys.env.getOrElse("SPARK_GRAFT_REPO", ".") + "/target/sfdata/sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     require(factor >= 1 && factor <= 64, s"factor out of range: $factor")
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.build()
     try run(spark, src, dst, factor)
     finally spark.stop()
   }

@@ -7,9 +7,19 @@ import org.apache.spark.sql.SparkSession
   * one but not the other is exactly the benchmark/correctness skew the
   * oracle discipline exists to prevent). */
 object Sessions {
-  def build(cpus: String): SparkSession =
-    finish(shared(SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus))
+  /** Harness session (`graft.Bench` and its subcommands, Verify,
+    * ScaleUp): sized by `SPARK_GRAFT_CPUS`, default 32. This is the one
+    * place a harness reads the variable. */
+  def build(): SparkSession = build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+
+  def build(cpus: String): SparkSession = finish(builder(cpus))
+
+  /** The unstarted local builder behind [[build]], for callers that add
+    * non-tuning settings (the test session's warehouse dir and app name)
+    * and must otherwise plan under the same rule set. */
+  private[graft] def builder(cpus: String): SparkSession.Builder =
+    shared(SparkSession.builder().master(s"local[${checkCpus(cpus)}]"),
+      shufflePartitions = cpus)
 
   /** Daemon-side session for [[Main]]'s no-active-session fallback.
     * Unlike [[build]] this NEVER forces a master: a `spark-submit
@@ -29,18 +39,9 @@ object Sessions {
     * message, not a bare NumberFormatException). */
   def adopt(cpusEnv: Option[String]): SparkSession = {
     val submitted = sys.props.get("spark.master").exists(_.nonEmpty)
-    val cpus = cpusEnv.map { c =>
-      // digits-only AND parses: '+5' would build an invalid local[+5]
-      // master, and an over-i32 digit string must still get THIS
-      // message rather than a bare NumberFormatException
-      require(c.nonEmpty && c.forall(_.isDigit) && c.toIntOption.exists(_ >= 1),
-        s"SPARK_GRAFT_CPUS must be a positive integer (got '$c'); " +
-          "it sizes spark.sql.shuffle.partitions")
-      c
-    }.getOrElse(Runtime.getRuntime.availableProcessors().toString)
-    if (!submitted)
-      return finish(shared(SparkSession.builder().master(s"local[$cpus]"),
-        shufflePartitions = cpus))
+    val cpus = cpusEnv.map(checkCpus)
+      .getOrElse(Runtime.getRuntime.availableProcessors().toString)
+    if (!submitted) return build(cpus)
     // submitted launch: TUNING defaults yield to any user-submitted
     // conf, but the CORRECTNESS pins do not — a cluster's ambient
     // spark-defaults.conf (indistinguishable from a deliberate --conf
@@ -52,6 +53,16 @@ object Sessions {
     finish((CorrectnessConf ++ defaults).foldLeft(SparkSession.builder()) {
       case (b, (k, v)) => b.config(k, v)
     })
+  }
+
+  // digits-only AND parses: '+5' would build an invalid local[+5]
+  // master, and an over-i32 digit string must still get THIS message
+  // rather than a bare NumberFormatException
+  private def checkCpus(c: String): String = {
+    require(c.nonEmpty && c.forall(_.isDigit) && c.toIntOption.exists(_ >= 1),
+      s"SPARK_GRAFT_CPUS must be a positive integer (got '$c'); " +
+        "it sizes spark.sql.shuffle.partitions")
+    c
   }
 
   /** Confs that define RESULT semantics — forced on every session. */
@@ -68,7 +79,7 @@ object Sessions {
     // the attribute is defined by a projection over raw text (toks =
     // split(text)), predicate pushdown substitutes the definition and
     // the corpus pays the split once more per inserted filter, below
-    // the Exchange. The r19 sweep (ProbeCells genaudit/genab) plan-
+    // the Exchange. The r19 sweep (PROBES_r19 genaudit/genab) plan-
     // diffed all 123 catalog queries: 10 gain filters under the rule,
     // none get faster (no empty generator inputs exist in any source —
     // shingled()/toked() rows always carry >= 1 element), and two pay
@@ -78,6 +89,7 @@ object Sessions {
     // hazard class, including the streaming signatures() path no bench
     // row times. Tuning, not correctness: inferred filters never change
     // results, only plans.
+    // PlanRegressionSpec's t09 case guards the exclusion.
     "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     "spark.ui.enabled" -> "false") ++ extraConf

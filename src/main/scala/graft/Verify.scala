@@ -52,7 +52,7 @@ object Verify {
       require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
     }
     def keep(name: String) = only.forall(_.contains(name))
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.build()
     dump(spark, SparkEntry.queries.filter(kv => keep(kv._1)), sfDir, outDir)
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${util.Json.quote(k)}: ${util.Json.quote(v)}" }

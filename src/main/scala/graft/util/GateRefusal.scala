@@ -4,7 +4,7 @@ package graft.util
   * ([[graft.operators.Multimodal]]'s `phashGate`) and the exact
   * all-pairs gate ([[graft.operators.Embeddings.cosineNearDupPairs]]) —
   * when a corpus exceeds the kernel's documented bound: a refusal with
-  * guidance, not a failure. [[graft.Bench]] classifies refusals by this
+  * guidance, not a failure. [[graft.Measure]] classifies refusals by this
   * TYPE (walking the cause chain); the previous message-substring match
   * ("raise maxBandBucket") would also have classified a genuine
   * correctness bug whose wrapped message happened to embed the guidance

@@ -85,10 +85,13 @@ class MainSpec extends SparkSpec {
   test("Sessions.adopt rejects a non-integer SPARK_GRAFT_CPUS before Spark sees it") {
     // the env var sizes spark.sql.shuffle.partitions, which rejects
     // non-int values only on FIRST USE — deep inside the daemon's first
-    // job. Fail at session build instead, with the reason.
-    for (bad <- Seq("*", "0", "", "-4", "eight", "+5", "99999999999")) {
-      val e = intercept[IllegalArgumentException] { Sessions.adopt(Some(bad)) }
-      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), s"for '$bad'")
+    // job. Fail at session build instead, with the reason; the harness
+    // path (Sessions.build) runs the same check.
+    val paths = Seq[(String, String => Any)](
+      "adopt" -> (c => Sessions.adopt(Some(c))), "build" -> (c => Sessions.build(c)))
+    for (bad <- Seq("*", "0", "", "-4", "eight", "+5", "99999999999"); (path, open) <- paths) {
+      val e = intercept[IllegalArgumentException] { open(bad) }
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), s"$path for '$bad'")
     }
     // a valid count (and the unset default) both yield a live session
     assert(!Sessions.adopt(Some("8")).sparkContext.isStopped)

@@ -309,4 +309,15 @@ class PlanRegressionSpec extends SparkSpec {
       .r.findAllIn(p).size
     assert(exchanges <= 2, s"unexpected extra shuffles ($exchanges):\n${p.take(3000)}")
   }
+
+  test("t09: no generator-inferred size(...) > 0 filter re-splits the corpus") {
+    // InferFiltersFromGenerate copies each explode input into a
+    // pre-Generate Filter (size(e) > 0 AND isnotnull(e)); on t09 that
+    // re-evaluates split(text) once per inserted filter (three of them,
+    // 2.84x slower; PROBES_r19). Sessions excludes the rule engine-wide.
+    val p = Catalog.byName("t09_unigram_xent").run(spark, sf)
+      .queryExecution.optimizedPlan.toString
+    val inferred = """Filter .*size\(.*\) > 0""".r.findAllIn(p).toSeq
+    assert(inferred.isEmpty, s"inferred generator filters:\n${inferred.mkString("\n")}")
+  }
 }

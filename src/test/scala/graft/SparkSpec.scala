@@ -5,8 +5,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for ScalaTest suites. One session per JVM
-  * (tests fork once); small shuffle-partition count keeps tiny-data tests
-  * fast while exercising real exchanges.
+  * (tests fork once), built from [[Sessions]]' conf so the suites plan
+  * under the same rule set as Bench, Verify and the daemon; 4 cores
+  * (and so 4 shuffle partitions) keep tiny-data tests fast while
+  * exercising real exchanges.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -32,14 +34,9 @@ object SparkSpec {
       f.delete()
     }
     purge(new java.io.File("target/test-warehouse"))
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Sessions.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "target/test-warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
