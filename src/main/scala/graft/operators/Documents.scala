@@ -20,8 +20,9 @@ import org.apache.spark.sql.expressions.Window
   *    rows) shrink the join key space to band buckets; candidates are then
   *    verified with the exact Jaccard, so output precision is 1.0 and
   *    recall for sim ≥ 0.9 pairs is 1 − (1 − 0.81)^32 ≈ 1 − 1e-23.
-  *  - d04 SimHash packs a document into one 64-bit key; banded self-join
-  *    on 16-bit sub-keys finds hamming-close pairs without n².
+  *  - d04 SimHash packs a document into one 64-bit key; the banded
+  *    kernel on 8-bit sub-keys ([[HammingBands]]) finds hamming-close
+  *    pairs without n².
   */
 object Documents {
 
@@ -720,16 +721,7 @@ object Documents {
       }.toDF("doc_id", "simhash")
   }
 
-  /** 8×8-bit band expansion of a `(doc_id, simhash)` frame —
-    * `(doc_id, simhash, i, k)`, one row per band. */
-  private def simhashBanded(sim: DataFrame): DataFrame =
-    sim.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 8).map(i =>
-        struct(lit(i).as("i"),
-          shiftrightunsigned(col("simhash"), i * 8).bitwiseAND(lit(0xFFL)).as("k"))): _*)).as("b"))
-      .select(col("doc_id"), col("simhash"), col("b.i").as("i"), col("b.k").as("k"))
-
-  /** [[simhashBanded]] plus the band-bucket cluster key of the
+  /** [[HammingBands.bandRows]] plus the band-bucket cluster key of the
     * persisted `_sigs` layout: `kb = i·8 + (k >> 5)` ∈ [0, 64) — 32
     * contiguous k-values per bucket per band. The stored signature
     * history is written kb-range-partitioned and kb-sorted (r20; flat
@@ -744,80 +736,15 @@ object Documents {
     * build/append at EVERY SF) dominated d11; row-group stats give the
     * skip without the directories (r19 verdict #2). */
   private def sigBandRows(sim: DataFrame): DataFrame =
-    simhashBanded(sim).withColumn("kb",
+    HammingBands.bandRows(sim, "simhash").withColumn("kb",
       (col("i") * 8 + shiftrightunsigned(col("k"), 5)).cast("int"))
 
-  /** The pair half of the d04 family build: exhaustive banded pairing
-    * over a signature frame (8×8-bit bands; pigeonhole covers
-    * hamming ≤ 7, so ≤ 6 loses nothing vs n²). Returns the verified pair
-    * set — the build PRODUCT the persisted index stores.
-    *
-    * Shape (r19): per-bucket primitive kernel — the
-    * [[graft.operators.Multimodal.phashKernel]] design applied to the
-    * text family. The pre-r19 banded SELF-JOIN shuffled the banded
-    * stream twice (both join inputs), sorted both sides, and paid a
-    * third exchange for the `distinct()` that dropped cross-band
-    * duplicate pairs; the kernel shuffles the stream ONCE (groupByKey
-    * on (i, k)), probes each bucket at register speed over primitive
-    * long arrays, and emits a qualifying pair only in its FIRST
-    * matching band (a band j < i collides iff xor's byte j is zero —
-    * no distinct() exchange, identical pair set). d00 build portion
-    * measured 2.0 → 1.3 s warm at sf0.1; plan 3 Exchange → 1. Bucket
-    * state is primitive-sized (16 B/doc) and the quadratic probe is
-    * the SAME candidate set the join co-located per bucket anyway. */
-  private[graft] def simhashPairsFrom(sim: DataFrame): DataFrame = {
-    val s = sim.sparkSession
-    import s.implicits._
-    simhashBanded(sim).select(col("i"), col("k"), col("doc_id"), col("simhash"))
-      .as[(Int, Long, Long, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (key: (Int, Long), iter: Iterator[(Int, Long, Long, Long)]) =>
-        val bi = key._1
-        // drain straight into growable primitive arrays: a bucket is
-        // corpus/2048 rows on average at scale, so materializing the
-        // iterator as boxed tuples first (~60 B/row) would hold tens of
-        // millions of objects per task where 16 B/doc suffices
-        var ids = new Array[Long](64)
-        var hs = new Array[Long](64)
-        var n = 0
-        while (iter.hasNext) {
-          val row = iter.next()
-          if (n == ids.length) {
-            ids = java.util.Arrays.copyOf(ids, n << 1)
-            hs = java.util.Arrays.copyOf(hs, n << 1)
-          }
-          ids(n) = row._3; hs(n) = row._4; n += 1
-        }
-        if (n < 2) Iterator.empty
-        else {
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-          var a = 0
-          while (a < n) {
-            var b = a + 1
-            while (b < n) {
-              val x = hs(a) ^ hs(b)
-              val ham = java.lang.Long.bitCount(x)
-              if (ham <= 6) {
-                var j = 0
-                var firstHere = true
-                while (firstHere && j < bi) {
-                  if (((x >>> (j * 8)) & 0xFFL) == 0L) firstHere = false
-                  j += 1
-                }
-                if (firstHere) {
-                  val (da, db) =
-                    if (ids(a) <= ids(b)) (ids(a), ids(b)) else (ids(b), ids(a))
-                  out += ((da, db, ham.toLong))
-                }
-              }
-              b += 1
-            }
-            a += 1
-          }
-          out.iterator
-        }
-      }.toDF("doc_a", "doc_b", "hamming")
-  }
+  /** The pair half of the d04 family build: the verified pair set of a
+    * signature frame ([[HammingBands.pairs]] — hamming ≤ 6, exhaustive
+    * by pigeonhole, each pair once), the build PRODUCT the persisted
+    * index stores. */
+  private[graft] def simhashPairsFrom(sim: DataFrame): DataFrame =
+    HammingBands.pairs(sim, "simhash")
 
   /** Shared build body for the dir-keyed and frame-keyed ensures. */
   private def simhashBuild(s: SparkSession, docs: DataFrame, table: String,
@@ -842,10 +769,10 @@ object Documents {
       // the only substitutable input. Cost: one shingle re-derivation
       // for later plan-matched callers, paid only on builds.
       graft.CacheRegistry.release("neardup.shingles")
-      // retained: the banded self-join reads this one-row-per-doc frame
-      // TWICE, and the _sigs aux write reads it a third time — without
-      // the cache each consumer recomputes the whole shingle→explode→
-      // fold upstream (78.5 s isolated at sf0.1 in the pre-kernel form)
+      // retained: the pair kernel and the _sigs aux write both read this
+      // one-row-per-doc frame — without the cache each consumer
+      // recomputes the whole shingle→fold upstream (78.5 s isolated at
+      // sf0.1 in the pre-kernel form)
       graft.CacheRegistry.retain("neardup.simhash", simhashSigsOf(docs))
     }
     graft.plans.PersistedIndex.ensureWith(s, table, meta, force,
@@ -970,14 +897,7 @@ object Documents {
               "r19 band-partitioned revision. Run ensureSimhashIndex once to " +
               "migrate (the freshness probe requires _sigs and will rebuild).", e)
       }
-    def diag[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (sys.env.contains("SPARK_GRAFT_DIAG"))
-        println(f"[append-diag] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-    val newSigs = diag("newSigs localCheckpoint")(simhashSigsOf(newDocs).localCheckpoint())
+    val newSigs = simhashSigsOf(newDocs).localCheckpoint()
     try {
       val newBand = sigBandRows(newSigs)
       // the delta's touched band buckets (≤ 128 values, driver-sized):
@@ -987,8 +907,7 @@ object Documents {
       // reads ≤ 8·|delta| of 64 buckets' worth — the r18
       // corpus-proportional bookkeeping floor made delta-proportional
       // (r18 verdict #6)
-      val kbs = diag("delta band buckets")(
-        newBand.select($"kb").distinct().as[Int].collect().toSeq)
+      val kbs = newBand.select($"kb").distinct().as[Int].collect().toSeq
       // EMPTY delta: nothing to hash, pair or stamp — the grown corpus
       // IS the base corpus (same fingerprint by determinism, checked),
       // so resident state is already exactly the full-rebuild answer.
@@ -1005,36 +924,24 @@ object Documents {
       // the kb < 8 slice is exactly the i = 0 band rows — one row per
       // resident doc, pruned to 8 of 64 kb buckets (the one resident
       // probe that stays corpus-proportional: doc_id equality has no band
-      // relationship to prune on; an EMPTY delta skips it entirely)
-      if (kbs.nonEmpty) diag("disjointness check")(
+      // relationship to prune on)
       require(resident.filter($"kb" < 8).select($"doc_id")
           .join(broadcast(newSigs), Seq("doc_id")).limit(1).count() == 0L,
         s"appendToSimhashIndex($table): newDocs doc_ids overlap the indexed corpus " +
-          "— an append cannot re-pair resident docs; rebuild instead"))
-      diag("poison")(P.poison(s, table, Seq("n", "fp")))
-      val resBand = resident.filter($"kb".isin(kbs: _*))
-      val cross = resBand.as("x").join(broadcast(newBand).as("y"),
-          col("x.i") === col("y.i") && col("x.k") === col("y.k"))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"),
-          bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
-        // filter BEFORE the dedup exchange: non-qualifying band-colliding
-        // candidates dominate in hot buckets and the output set is
-        // identical either way (r14 advice)
-        .filter(col("hamming") <= 6)
-        .distinct()
-      diag("pairs append (cross + within)")(
+          "— an append cannot re-pair resident docs; rebuild instead")
+      P.poison(s, table, Seq("n", "fp"))
+      val cross = HammingBands.crossPairs(
+        resident.filter($"kb".isin(kbs: _*)), newBand, "simhash")
       P.appendTable(cross.unionByName(simhashPairsFrom(newSigs))
-        .select(col("doc_a"), col("doc_b"), col("hamming")), table, "_pairs"))
-      diag("sigs append")(
+        .select(col("doc_a"), col("doc_b"), col("hamming")), table, "_pairs")
       // kb-range-cluster the delta so its new files carry tight kb
       // row-group stats (the pruning the r19 hive directories gave) —
       // the append commits a few flat files instead of ≤64 directory
       // entries (the commit constant that dominated d11)
       P.appendTablePath(
         newBand.repartitionByRange(col("kb")).sortWithinPartitions("kb"),
-        table, "_sigs"))
-      diag("stamp")(P.stamp(s, table, Seq("n" -> grown._1, "fp" -> grown._2)))
+        table, "_sigs")
+      P.stamp(s, table, Seq("n" -> grown._1, "fp" -> grown._2))
     } finally newSigs.unpersist(false)
     P.location(s, table, "_pairs")
   }
@@ -1222,10 +1129,10 @@ object Documents {
         // primitive groupByKey fold (the proven v02 pattern; 64 unrolled
         // sum(when(bitwiseAND…)) columns land in the documented
         // codegen-method-limit pitfall and measured 78.5 s isolated at
-        // sf0.1) plus the exhaustive 8×8-bit banded self-join
+        // sf0.1) plus the exhaustive 8×8-bit banded kernel
         // (pigeonhole covers hamming ≤ 7, so the ≤ 6 threshold EQUALS
         // an n² scan without the n² cost) — lives in
-        // [[simhashSigsOf]]/[[simhashPairsFrom]]; this serve reads the PERSISTED pair
+        // [[simhashSigsOf]]/[[HammingBands.pairs]]; this serve reads the PERSISTED pair
         // index [[ensureSimhashIndex]] maintains (fingerprint-skip,
         // d00's named-builder row carries the build cost) and builds it
         // in-query only when the corpus changed.

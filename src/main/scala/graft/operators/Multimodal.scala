@@ -139,47 +139,6 @@ object Multimodal {
   def sizeBalanced(frames: DataFrame, partitions: Int): DataFrame =
     frames.repartition(partitions, pmod(length(col("payload")), lit(partitions)))
 
-  /** Verified media near-dup pairs `(doc_a, doc_b, hamming)` over
-    * exact-payload REPRESENTATIVES — the shared engine of m05 (pair
-    * listing) and m06 (cluster + canonical pick).
-    *
-    * Stage 1, exact collapse: byte-identical blobs (same decoded
-    * payload) are collapsed to one representative — the smallest
-    * doc_id — via a map-side-combining reduceGroups on the payload md5.
-    * Mass-duplicated media (the degenerate regime the r9 scale run hit:
-    * replicated corpora whose identical blobs densified the pair graph
-    * 685×) collapses BEFORE any quadratic work, and the within-group
-    * pairs (all hamming 0, quadratic in group size by definition) are
-    * deliberately not emitted: exact-dup group membership is the
-    * md5-group itself (d01's composition), not a near-dup finding.
-    *
-    * Stage 2, classic average-hash on representatives: resize to the
-    * 8×8 canonical grid (64 bytes) → bit i = value_i ≥ mean, computed
-    * as the INTEGER comparison v*64 ≥ sum so both engines agree exactly
-    * (no division). The 64-bit hash travels as two BIGINT halves (bit
-    * 63 would overflow signed).
-    *
-    * Stage 3, banded kernel: candidates share one of eight 8-bit bands
-    * — hamming ≤ 6 < 8 bands forces a shared band (pigeonhole, d04's
-    * argument), so the banded result EQUALS the n² scan the oracle
-    * runs, without n² cost. One shuffle keyed on (band, value), then a
-    * primitive-array kernel per bucket: XOR + popcount per pair, and a
-    * pair is emitted ONLY in its first matching band — cross-band
-    * de-duplication by construction, where the previous join-shaped
-    * form paid a distinct() exchange over every candidate ROW (with
-    * both hash halves aboard) and collapsed under structural skew (at
-    * 30× scale, ~46k short-doc blobs share h1 = 0 and therefore four
-    * whole band values; the kernel grinds that bucket at register
-    * speed instead of materializing 1e9 candidate rows). */
-  /** Warm-call memo for [[phashPairs]]: the hash frame is rooted on a
-    * map-closure, so the registry's plan matching can never reuse it
-    * across calls — without this every m05/m06 invocation re-paid the
-    * decode→resize→hash build AND the banded self-join (m06's first warm
-    * profile read ~13 s at sf0.1, mostly this re-pay plus the CC loop's).
-    * Object identity of the returned handle is the semantic key
-    * downstream (NearDup.components memoizes on it); invalidated when
-    * the registry entry is gone (Bench's isolation pass, Engine.close),
-    * the owning session stopped, or the data dir differs. */
   /** Band-bucket population bound for [[phashPairs]]: kernel work is
     * bucket-quadratic (a band value shared by B representatives costs
     * B²/2 XOR+popcount probes). Exact duplicates are already collapsed
@@ -208,6 +167,15 @@ object Multimodal {
       math.max(8L, (2L * hottest + gate - 1L) / gate)).toInt
   }
 
+  /** Warm-call memo for [[phashPairs]]: the hash frame is rooted on a
+    * map-closure, so the registry's plan matching can never reuse it
+    * across calls — without this every m05/m06 invocation re-paid the
+    * decode→resize→hash build AND the banded self-join (m06's first warm
+    * profile read ~13 s at sf0.1, mostly this re-pay plus the CC loop's).
+    * Object identity of the returned handle is the semantic key
+    * downstream (NearDup.components memoizes on it); invalidated when
+    * the registry entry is gone (Bench's isolation pass, Engine.close),
+    * the owning session stopped, or the data dir differs. */
   private val phashPairsMemo = new java.util.concurrent.atomic.AtomicReference[
     (String, SparkSession, Long, (Long, Long, Long), DataFrame)]()
 
@@ -335,47 +303,27 @@ object Multimodal {
       }.toDF("doc_id", "md5", "h0", "h1")
   }
 
-  private def bandSlice(b: Int, h0: Long, h1: Long): Long =
-    if (b < 4) (h0 >>> (b * 8)) & 255L else (h1 >>> ((b - 4) * 8)) & 255L
-
-  /** Band rows `(bi, bv, doc_id, h0, h1)` of a signature frame. */
-  private[graft] def phashBandRows(sigs: DataFrame): Dataset[(Int, Long, Long, Long, Long)] = {
-    val s = sigs.sparkSession
-    import s.implicits._
-    sigs.select(col("doc_id"), col("h0"), col("h1")).as[(Long, Long, Long)]
-      .flatMap { case (id, h0, h1) =>
-        (0 until 8).iterator.map(b => (b, bandSlice(b, h0, h1), id, h0, h1))
-      }
-  }
+  /** A signature frame's aHash as ONE 64-bit signature `(doc_id, sig)`,
+    * `sig = h0 | h1 << 32`: band b of `sig` is the aHash's byte b and
+    * the popcount of a packed XOR is the two-half sum, so
+    * [[HammingBands]] pairs it exactly as the two halves would pair. */
+  private def packedSigs(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), col("h0").bitwiseOR(shiftleft(col("h1"), 32)).as("sig"))
 
   /** Band-bucket occupancy profile of a signature frame — `(bi, bv,
     * cnt)`, one row per populated 8-bit band bucket (≤ 8·256 rows at any
     * corpus size). Persisted as the `_prof` aux so appends gate the
     * merged corpus without re-scanning the resident signature history. */
   private def bandProfile(sigs: DataFrame): DataFrame =
-    phashBandRows(sigs).toDF("bi", "bv", "doc_id", "h0", "h1")
-      .groupBy(col("bi"), col("bv"))
-      .agg(count(lit(1)).as("cnt"))
+    HammingBands.profile(HammingBands.bandRows(packedSigs(sigs), "sig"))
+      .select(col("i").as("bi"), col("k").as("bv"), col("cnt"))
 
-  /** Hot-bucket gate over band rows (see [[MaxBandBucket]]); `what`
-    * names the corpus in the refusal so an append-time firing reads
-    * differently from a build-time one. */
-  private[graft] def phashGate(banded: Dataset[(Int, Long, Long, Long, Long)],
-      maxBandBucket: Long, what: String): Unit = {
-    val s = banded.sparkSession
-    import s.implicits._
-    // max over an empty corpus is NULL, which means zero buckets —
-    // nothing to gate
-    val hottest = Option(banded.toDF("bi", "bv", "doc_id", "h0", "h1")
-      .groupBy($"bi", $"bv").count()
-      .agg(max($"count")).head.get(0)).fold(0L)(_.asInstanceOf[Long])
-    gateCheck(hottest, maxBandBucket, what)
-  }
-
-  /** The gate decision over an already-computed hottest-bucket count —
-    * shared by [[phashGate]] (full band-row profile) and the append's
-    * incremental profile merge, so the two paths cannot drift on the
-    * refusal contract. */
+  /** The hot-bucket gate (see [[MaxBandBucket]]) over a hottest-bucket
+    * count — shared by the build ([[HammingBands.hottest]] over the
+    * band rows), the cell-partitioned kernel and the append's
+    * incremental profile merge, so the paths cannot drift on the
+    * refusal contract; `what` names the corpus in the refusal so an
+    * append-time firing reads differently from a build-time one. */
   private[graft] def gateCheck(hottest: Long, maxBandBucket: Long,
       what: String): Unit = {
     if (hottest > maxBandBucket) {
@@ -403,90 +351,18 @@ object Multimodal {
     }
   }
 
-  /** Stage 3: per-bucket primitive kernel over band rows. A qualifying
-    * pair is emitted only in its FIRST matching band, so the output
-    * carries no cross-band duplicates and needs no distinct() exchange. */
-  private[graft] def phashKernel(
-      banded: Dataset[(Int, Long, Long, Long, Long)]): DataFrame = {
-    val s = banded.sparkSession
-    import s.implicits._
-    banded.groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (key: (Int, Long), iter: Iterator[(Int, Long, Long, Long, Long)]) =>
-        val bi = key._1
-        // unbox ONCE into primitive arrays: the probe loop below runs
-        // bucket²/2 times (1e9+ in a structurally hot bucket) and must
-        // touch nothing but longs — probing boxed tuples measured ~50×
-        // slower at 30× scale
-        val items = iter.toArray
-        val n = items.length
-        val ids = new Array[Long](n)
-        val h0s = new Array[Long](n)
-        val h1s = new Array[Long](n)
-        var i = 0
-        while (i < n) {
-          val t = items(i)
-          ids(i) = t._3; h0s(i) = t._4; h1s(i) = t._5
-          i += 1
-        }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        i = 0
-        while (i < n) {
-          val ida = ids(i); val a0 = h0s(i); val a1 = h1s(i)
-          var j = i + 1
-          while (j < n) {
-            val ham = java.lang.Long.bitCount(a0 ^ h0s(j)) +
-              java.lang.Long.bitCount(a1 ^ h1s(j))
-            if (ham <= 6) {
-              var fb = 0
-              while (bandSlice(fb, a0, a1) != bandSlice(fb, h0s(j), h1s(j))) fb += 1
-              if (fb == bi) {
-                val idb = ids(j)
-                out += ((math.min(ida, idb), math.max(ida, idb), ham.toLong))
-              }
-            }
-            j += 1
-          }
-          i += 1
-        }
-        out.iterator
-      }.toDF("doc_a", "doc_b", "hamming")
-  }
-
-  /** gate + kernel over a signature frame — the verified pair set
-    * (pair count ≪ corpus: 65 / 3660 rows at sf0.01 / sf0.1) is the
-    * build PRODUCT the persisted index stores. */
-  private def phashVerify(sigs: DataFrame, maxBandBucket: Long,
-      what: String): DataFrame = {
-    phashGate(phashBandRows(sigs), maxBandBucket, what)
-    phashKernel(phashBandRows(sigs))
-  }
-
-  /** Signature + feature rows `(doc_id, h0, h1, v)` per representative —
-    * [[phashSigsOf]]'s decode→collapse pass also emitting the
-    * clustering feature vector [[phashPairsViaCells]] trains on: the 8
-    * BAND BYTES of the aHash itself (`bandSlice(b)/255` for b = 0..7 —
-    * the exact slices the kernel buckets on), so cells partition the
-    * SAME space the hamming kernel measures distance in. The r15 form
-    * clustered the m03 byte-histogram density instead, and because
-    * histogram proximity correlates only weakly with aHash hamming on
-    * short payloads, single-probe recall vs the exact kernel measured
-    * 0.218 (sf0.1) / 0.123 (sf1); band-byte cells with top-2 probing
-    * measure 0.92+ on the same corpora (PROBES_r16). No second decode
-    * pass, no join — the vector is 8 shifts off the hash. */
+  /** Signature + feature rows `(doc_id, sig, v)` per representative —
+    * [[phashSigsOf]] packed ([[packedSigs]]) plus the clustering feature
+    * vector [[phashPairsViaCells]] trains on: the aHash's 8 band bytes
+    * / 255, the exact slices the kernel buckets on (why: see
+    * [[phashPairsViaCells]]). */
   private[graft] def phashSigFeats(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    decode(fromDocuments(docs)).groupByKey { r =>
-        val d = java.security.MessageDigest.getInstance("MD5").digest(r.payload)
-        java.util.Base64.getEncoder.encodeToString(d)
-      }.reduceGroups((a, b) => if (a.doc_id <= b.doc_id) a else b)
-      .map { case (_, r) =>
-        val (h0, h1) = aHash64(r.payload)
-        val v = new Array[Double](8)
-        var b = 0
-        while (b < 8) { v(b) = bandSlice(b, h0, h1).toDouble / 255.0; b += 1 }
-        (r.doc_id, h0, h1, v)
-      }.toDF("doc_id", "h0", "h1", "v")
+    packedSigs(phashSigsOf(docs)).as[(Long, Long)]
+      .map { case (id, sig) =>
+        (id, sig, Array.tabulate(8)(b => HammingBands.slice(b, sig).toDouble / 255.0))
+      }.toDF("doc_id", "sig", "v")
   }
 
   /** Cell-partitioned media near-dup pairing — the escape hatch the
@@ -500,7 +376,7 @@ object Multimodal {
     * enforces — bounded wall-clock where [[phashPairs]] refuses.
     *
     * The cells are trained ON THE HASH'S OWN BAND BYTES
-    * (`bandSlice(b)/255`, b = 0..7 — [[phashSigFeats]]) and every rep
+    * (`HammingBands.slice(b)/255`, b = 0..7 — [[phashSigFeats]]) and every rep
     * probes its top-`probes` cells ([[Embeddings.CellModel.probe]], the
     * IVF multi-probe move): a hamming ≤ 6 pair survives whenever the
     * two probe sets intersect. MEASURED recall vs the exact kernel
@@ -520,14 +396,8 @@ object Multimodal {
     * broadcast-probe assignment fused into band-row generation (no
     * join — the cell id packs into the band-value key), one shuffle
     * keyed (band, cell·256+value) carrying `probes ×` the flat row
-    * count, then [[phashKernelCells]] — a pair sharing BOTH probed
-    * cells is emitted ONLY in its minimum shared cell (each band row
-    * carries its rep's sorted probe set), so the output is unique by
-    * construction across bands AND probes and needs no distinct()
-    * exchange. The r16 form deduped cross-probe emissions with an
-    * output-sized distinct() instead; at sf3 that exchange measured
-    * ~9.5 s of the 12.4 s warm total (PROBES_r17) — the min-shared-cell
-    * rule is the first-matching-band argument applied one level up. The
+    * count, then [[HammingBands.cellPairs]], which emits a pair sharing
+    * several probed cells only in the minimum one (no distinct()). The
     * gate still fires if a single CELL's band bucket exceeds the
     * bound — raise `cells` (more, smaller cells) before raising the
     * gate. */
@@ -550,16 +420,8 @@ object Multimodal {
     // aggregation over the 8×reps band rows, map-side combined.
     val k =
       if (cells > 0) cells
-      else {
-        val hottest = Option(sf.select($"doc_id", $"h0", $"h1")
-          .as[(Long, Long, Long)]
-          .flatMap { case (id, h0, h1) =>
-            (0 until 8).iterator.map(b => (b, bandSlice(b, h0, h1), id))
-          }.toDF("b", "bv", "doc_id")
-          .groupBy($"b", $"bv").count()
-          .agg(max($"count")).head.get(0)).fold(0L)(_.asInstanceOf[Long])
-        mediaCells(hottest, maxBandBucket)
-      }
+      else mediaCells(HammingBands.hottest(HammingBands.bandRows(sf, "sig")),
+        maxBandBucket)
     // d07's r16 trainer posture, shared: trainer on the deterministic
     // hash-prefix sample (no-op below 65536 reps), coarse→fine routing
     // past 4096 cells — see Embeddings.cellModel
@@ -569,9 +431,9 @@ object Multimodal {
       return Seq.empty[(Long, Long, Long)].toDF("doc_a", "doc_b", "hamming")
     val bc = s.sparkContext.broadcast(model)
     val P = probes
-    val banded = sf.select($"doc_id", $"h0", $"h1", $"v")
-      .as[(Long, Long, Long, Array[Double])]
-      .flatMap { case (id, h0, h1, v) =>
+    val banded = sf.select($"doc_id", $"sig", $"v")
+      .as[(Long, Long, Array[Double])]
+      .flatMap { case (id, sig, v) =>
         // same ranking arithmetic and (cosine desc, cell asc) tie order
         // as the trainer's assignment step — probe cells are the
         // oracle's `pr WHERE rn <= probes`
@@ -585,82 +447,42 @@ object Multimodal {
         // emission rule without a post-hoc distinct
         pc.iterator.flatMap(c =>
           (0 until 8).iterator.map(b =>
-            (b, c * 256L + bandSlice(b, h0, h1), id, h0, h1, pc)))
+            (b, c * 256L + HammingBands.slice(b, sig), id, sig, pc)))
       }
-    phashGate(banded.map(t => (t._1, t._2, t._3, t._4, t._5)),
+    gateCheck(HammingBands.hottest(banded.select($"_1".as("i"), $"_2".as("k"))),
       maxBandBucket, "cells")
-    phashKernelCells(banded)
+    HammingBands.cellPairs(banded)
   }
 
-  /** [[phashKernel]] for cell-probed band rows: same per-bucket
-    * primitive hamming loop, but each row carries its representative's
-    * sorted probe-cell set and a qualifying pair is emitted only when
-    * this bucket's band is the pair's FIRST matching band AND this
-    * bucket's cell is the pair's MINIMUM shared probed cell — unique by
-    * construction across both bands and probes, so the cells path needs
-    * no output distinct() (the min-shared-cell rule is the
-    * first-matching-band argument applied to the probe dimension; the
-    * intersection is non-empty for every co-bucketed pair, so exactly
-    * one (band, cell) bucket emits it). The shared-set walk runs only
-    * on hamming hits that already won the band rule, never in the n²/2
-    * probe loop. */
-  private def phashKernelCells(
-      banded: Dataset[(Int, Long, Long, Long, Long, Array[Long])]): DataFrame = {
-    val s = banded.sparkSession
-    import s.implicits._
-    banded.groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (key: (Int, Long), iter: Iterator[(Int, Long, Long, Long, Long, Array[Long])]) =>
-        val bi = key._1
-        val cell = key._2 >>> 8 // key = cell·256 + 8-bit band value
-        val items = iter.toArray
-        val n = items.length
-        val ids = new Array[Long](n)
-        val h0s = new Array[Long](n)
-        val h1s = new Array[Long](n)
-        val pcs = new Array[Array[Long]](n)
-        var i = 0
-        while (i < n) {
-          val t = items(i)
-          ids(i) = t._3; h0s(i) = t._4; h1s(i) = t._5; pcs(i) = t._6
-          i += 1
-        }
-        // first common element of two sorted probe sets
-        def minShared(a: Array[Long], b: Array[Long]): Long = {
-          var x = 0; var y = 0
-          while (x < a.length && y < b.length) {
-            if (a(x) == b(y)) return a(x)
-            else if (a(x) < b(y)) x += 1
-            else y += 1
-          }
-          -1L
-        }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        i = 0
-        while (i < n) {
-          val ida = ids(i); val a0 = h0s(i); val a1 = h1s(i); val pa = pcs(i)
-          var j = i + 1
-          while (j < n) {
-            val ham = java.lang.Long.bitCount(a0 ^ h0s(j)) +
-              java.lang.Long.bitCount(a1 ^ h1s(j))
-            if (ham <= 6) {
-              var fb = 0
-              while (bandSlice(fb, a0, a1) != bandSlice(fb, h0s(j), h1s(j))) fb += 1
-              if (fb == bi && minShared(pa, pcs(j)) == cell) {
-                val idb = ids(j)
-                out += ((math.min(ida, idb), math.max(ida, idb), ham.toLong))
-              }
-            }
-            j += 1
-          }
-          i += 1
-        }
-        out.iterator
-      }.toDF("doc_a", "doc_b", "hamming")
-  }
-
-  /** Shared build body for the dir-keyed and frame-keyed ensures —
-    * verified pairs in `_pairs` plus the per-representative signature
-    * history in the `_sigs` aux (what [[appendToMediaIndex]] probes). */
+  /** Shared build body for the dir-keyed and frame-keyed ensures:
+    * verified media near-dup pairs `(doc_a, doc_b, hamming)` over
+    * exact-payload REPRESENTATIVES in `_pairs` — the shared engine of
+    * m05 (pair listing) and m06 (cluster + canonical pick) — plus the
+    * per-representative signature history in the `_sigs` aux (what
+    * [[appendToMediaIndex]] probes).
+    *
+    * Stage 1, exact collapse: byte-identical blobs (same decoded
+    * payload) are collapsed to one representative — the smallest
+    * doc_id — via a map-side-combining reduceGroups on the payload md5.
+    * Mass-duplicated media (the degenerate regime the r9 scale run hit:
+    * replicated corpora whose identical blobs densified the pair graph
+    * 685×) collapses BEFORE any quadratic work, and the within-group
+    * pairs (all hamming 0, quadratic in group size by definition) are
+    * deliberately not emitted: exact-dup group membership is the
+    * md5-group itself (d01's composition), not a near-dup finding.
+    *
+    * Stage 2, classic average-hash on representatives: resize to the
+    * 8×8 canonical grid (64 bytes) → bit i = value_i ≥ mean, computed
+    * as the INTEGER comparison v*64 ≥ sum so both engines agree exactly
+    * (no division). The 64-bit hash is stored as two BIGINT halves (bit
+    * 63 would overflow signed) and packed into one signature for
+    * pairing ([[packedSigs]]).
+    *
+    * Stage 3, the banded kernel d04 shares ([[HammingBands.pairs]]):
+    * candidates share one of eight 8-bit bands, so the banded result
+    * EQUALS the n² scan the oracle runs, without n² cost, and a hot
+    * bucket (at 30× scale ~46k short-doc blobs share h1 = 0 and
+    * therefore four whole band values) is ground at register speed. */
   private def mediaBuild(s: SparkSession, docs: DataFrame, table: String,
       meta: Seq[(String, Long)], force: Boolean, maxBandBucket: Long): String = {
     // Evaluated only when the ensure decides to BUILD:
@@ -685,8 +507,12 @@ object Multimodal {
       // resident history per append — the corpus-proportional piece of
       // m09's bookkeeping floor (r18 verdict #6)
       aux = Seq("_sigs" -> (() => hashed),
-        "_prof" -> (() => bandProfile(hashed))))(
-      phashVerify(hashed, maxBandBucket, "build"))
+        "_prof" -> (() => bandProfile(hashed)))) {
+      val packed = packedSigs(hashed)
+      gateCheck(HammingBands.hottest(HammingBands.bandRows(packed, "sig")),
+        maxBandBucket, "build")
+      HammingBands.pairs(packed, "sig")
+    }
   }
 
   /** Incremental append for the persisted media index —
@@ -760,7 +586,17 @@ object Multimodal {
     // order contract over ALL new docs (not just the reps the collapse
     // keeps): a sub-maxid duplicate would displace a resident rep
     val minNew = newDocs.agg(min(col("doc_id"))).head().get(0)
-    if (minNew == null) return P.location(s, table, "_pairs") // empty delta: no-op
+    // EMPTY delta: the grown corpus IS the base corpus, so the resident
+    // index is already the full-rebuild answer — return before any
+    // write, unless the caller's grown meta says rows were lost
+    if (minNew == null) {
+      require(base == grown,
+        s"appendToMediaIndex($table): empty delta but grown meta " +
+          s"(${grown.map { case (n, v) => s"$n=$v" }.mkString(", ")}) differs from base " +
+          s"(${base.map { case (n, v) => s"$n=$v" }.mkString(", ")}) — the delta " +
+          "frame lost rows the caller counted")
+      return P.location(s, table, "_pairs")
+    }
     require(minNew.asInstanceOf[Long] > baseMaxId,
       s"appendToMediaIndex($table): delta min doc_id $minNew is not above the " +
         s"resident corpus max $baseMaxId — media reps are min-doc_id per " +
@@ -793,21 +629,12 @@ object Multimodal {
           s"index's verified gate is $baseGate — the append cannot change " +
           "the gate contract; rebuild with ensureMediaIndex to re-gate")
     }
-    def diag[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (sys.env.contains("SPARK_GRAFT_DIAG"))
-        println(f"[mappend-diag] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-    val newSigs = diag("newSigs (decode+collapse+hash delta)")(
-      phashSigsOf(newDocs).localCheckpoint())
+    val newSigs = phashSigsOf(newDocs).localCheckpoint()
     try {
       // absorption: md5 matches collapse into the resident rep (no new
       // rep, no pairs — the rebuild's collapse, reproduced); only
       // genuinely new payloads survive as fresh reps
-      val freshNew = diag("absorption")(
-        absorptionSurvivors(newSigs, resident).localCheckpoint())
+      val freshNew = absorptionSurvivors(newSigs, resident).localCheckpoint()
       try {
         // gate BEFORE poison, on the merged profile == grown corpus reps.
         // The stored _prof carries the RESIDENT profile, so the merge is
@@ -826,37 +653,21 @@ object Multimodal {
                   "ensureMediaIndex once to migrate (the freshness probe " +
                   "requires _prof and will rebuild).", e)
           }
-        val mergedProf = diag("gate (profile merge)") {
-          val deltaProf = bandProfile(freshNew)
-            .as[(Int, Long, Long)].collect()
-          val m = scala.collection.mutable.HashMap.empty[(Int, Long), Long]
-          (storedProf.iterator ++ deltaProf.iterator).foreach { case (bi, bv, c) =>
-            m.updateWith((bi, bv))(prev => Some(prev.getOrElse(0L) + c)) }
-          gateCheck(if (m.isEmpty) 0L else m.values.max, baseGate, "append")
-          m
-        }
+        val deltaProf = bandProfile(freshNew).as[(Int, Long, Long)].collect()
+        val mergedProf = scala.collection.mutable.HashMap.empty[(Int, Long), Long]
+        (storedProf.iterator ++ deltaProf.iterator).foreach { case (bi, bv, c) =>
+          mergedProf.updateWith((bi, bv))(prev => Some(prev.getOrElse(0L) + c)) }
+        gateCheck(if (mergedProf.isEmpty) 0L else mergedProf.values.max, baseGate,
+          "append")
         P.poison(s, table, base.map(_._1))
-        val resBand = phashBandRows(resident).toDF("bi", "bv", "doc_id", "h0", "h1")
-        val newBand = phashBandRows(freshNew).toDF("bi", "bv", "doc_id", "h0", "h1")
-        val cross = resBand.as("x").join(broadcast(newBand).as("y"),
-            col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv"))
-          .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-            greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"),
-            (bitCountLong(col("x.h0").bitwiseXOR(col("y.h0"))) +
-              bitCountLong(col("x.h1").bitwiseXOR(col("y.h1")))).as("hamming"))
-          // filter BEFORE the dedup exchange: band-colliding candidates
-          // above the threshold dominate in hot buckets and the output
-          // set is identical either way (r14 advice)
-          .filter(col("hamming") <= 6)
-          .distinct()
-        diag("pairs append (cross + within)")(
-        P.appendTable(cross.unionByName(
-            phashKernel(phashBandRows(freshNew))
-              .select(col("doc_a"), col("doc_b"), col("hamming"))),
-          table, "_pairs"))
-        diag("sigs append")(
+        val freshPacked = packedSigs(freshNew)
+        val cross = HammingBands.crossPairs(
+          HammingBands.bandRows(packedSigs(resident), "sig"),
+          HammingBands.bandRows(freshPacked, "sig"), "sig")
+        P.appendTable(cross.unionByName(HammingBands.pairs(freshPacked, "sig")),
+          table, "_pairs")
         P.appendTable(freshNew.select($"doc_id", $"md5", $"h0", $"h1"),
-          table, "_sigs"))
+          table, "_sigs")
         // rewrite the (profile-sized) _prof with the merged counts so the
         // NEXT append's gate also merges instead of re-profiling; between
         // poison and stamp, so a crash here leaves the poisoned meta the
@@ -870,9 +681,6 @@ object Multimodal {
     } finally newSigs.unpersist(false)
     P.location(s, table, "_pairs")
   }
-
-  private def bitCountLong(c: org.apache.spark.sql.Column) =
-    bit_count(c).cast("long")
 
   /** The append's absorption probe: delta signature rows whose md5 does
     * NOT match a resident representative (those that will mint fresh
@@ -948,7 +756,7 @@ object Multimodal {
     * cell partition drops. */
   private def M10OracleSql: String = {
     // clustering features = the hash's own 8 band bytes / 255 (exactly
-    // phashSigFeats / the engine's bandSlice order: b 0..3 from h0,
+    // phashSigFeats / the engine's HammingBands.slice order: b 0..3 from h0,
     // 4..7 from h1)
     val bandExprs = (0 until 8).map { b =>
       val src = if (b < 4) s"(h0 >> ${b * 8})" else s"(h1 >> ${(b - 4) * 8})"

@@ -1,7 +1,7 @@
 package graft.util
 
 /** Thrown by the DESIGNED size gates — the media band-bucket gate
-  * ([[graft.operators.Multimodal]]'s `phashGate`) and the exact
+  * ([[graft.operators.Multimodal.gateCheck]]) and the exact
   * all-pairs gate ([[graft.operators.Embeddings.cosineNearDupPairs]]) —
   * when a corpus exceeds the kernel's documented bound: a refusal with
   * guidance, not a failure. [[graft.Measure]] classifies refusals by this

@@ -320,4 +320,32 @@ class PlanRegressionSpec extends SparkSpec {
     val inferred = """Filter .*size\(.*\) > 0""".r.findAllIn(p).toSeq
     assert(inferred.isEmpty, s"inferred generator filters:\n${inferred.mkString("\n")}")
   }
+
+  test("hamming bands: flat and cell pair builds plan one shuffle; the cross stratum broadcasts") {
+    import spark.implicits._
+    import graft.operators.HammingBands
+    // the r19 kernel claim: ONE (band, value) exchange, no self-join and
+    // no cross-band distinct() — the join form planned 3 exchanges
+    def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    }
+    val sigs = Seq((1L, 0x0F0FL), (2L, 0x0F0EL), (3L, 1L << 63)).toDF("doc_id", "sig")
+    val cellRows = Seq((0, 256L + 0x0F, 1L, 0x0F0FL, Array(1L, 2L)),
+      (0, 256L + 0x0F, 2L, 0x0F0FL, Array(1L))).toDS()
+    for ((what, p) <- Seq("flat" -> finalPlan(HammingBands.pairs(sigs, "sig")),
+                          "cells" -> finalPlan(HammingBands.cellPairs(cellRows)))) {
+      val exchanges = "\\bExchange ".r.findAllIn(p).size
+      assert(exchanges == 1, s"$what build must plan exactly one shuffle ($exchanges):\n$p")
+      assert(!p.contains("Join"), s"$what build must not join:\n$p")
+      assert(!p.contains("Aggregate"), s"$what build must not plan a distinct aggregate:\n$p")
+    }
+    // the append's resident × delta stratum: the delta side broadcasts,
+    // so the resident side is scanned in place, never shuffled to join
+    val delta = Seq((10L, 0x0F0DL)).toDF("doc_id", "sig")
+    val cross = finalPlan(HammingBands.crossPairs(HammingBands.bandRows(sigs, "sig"),
+      HammingBands.bandRows(delta, "sig"), "sig"))
+    assert(cross.contains("BroadcastHashJoin") && !cross.contains("SortMergeJoin"),
+      s"cross stratum must broadcast the delta:\n$cross")
+  }
 }

@@ -38,28 +38,64 @@ class DocumentsSpec extends SparkSpec {
     // self-join + distinct() (3 exchanges) to a per-bucket primitive
     // kernel emitting each pair in its FIRST matching band (1 exchange).
     // The pair SET with hammings must be identical to the reference
-    // join form — this replays the pre-r19 form inline and compares.
+    // join form — this replays the pre-r19 form inline and compares,
+    // over the fixture corpus's signatures and a synthetic signature
+    // frame built for the kernel's edge cases.
     import org.apache.spark.sql.functions._
+    import spark.implicits._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val sigs = Documents.simhashSigsOf(docs)
-    val banded = sigs.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 8).map(i =>
-        struct(lit(i).as("i"),
-          shiftrightunsigned(col("simhash"), i * 8).bitwiseAND(lit(0xFFL)).as("k"))): _*)).as("b"))
-      .select(col("doc_id"), col("simhash"), col("b.i").as("i"), col("b.k").as("k"))
-    val ref = banded.as("x").join(banded.as("y"),
-        col("x.i") === col("y.i") && col("x.k") === col("y.k") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val kernel = Documents.simhashPairsFrom(sigs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(ref.nonEmpty, "fixture corpus plants simhash near-dups")
-    assert(kernel == ref,
-      s"kernel minus ref: ${kernel.diff(ref)}; ref minus kernel: ${ref.diff(kernel)}")
+    // synthetic edge cases: a band-0 bucket of 102 rows (the drain
+    // grows past its 64-row initial capacity); a pair whose ONLY shared
+    // band is band 7 (one flipped bit in each of bytes 0..6, so hamming
+    // 7 — a co-bucketed candidate the verify must reject); bit 63 set
+    // (a pHash packing whose h1 has bit 31 set); pairs at hamming
+    // exactly 6 (emitted) and 7 (not); a hamming-6 pair sharing bands
+    // 3..7 only (emitted once, in band 3)
+    val rnd = new scala.util.Random(7)
+    val hot = (0 until 100).map(i => (1000L + i, rnd.nextLong() & ~0xFFL))
+    val top = 1L << 63
+    val synthetic = (hot ++ Seq(
+      (1L, 0x1234567890ABCDEFL),
+      (2L, 0x1234567890ABCDEFL ^ 0x0001010101010101L), // band 7 only, ham 7
+      (3L, top | 0x00FF00FF00FF00FFL),
+      (4L, top | 0x00FF00FF00FF00FFL ^ 0x0000000000000007L), // ham 3
+      (5L, top | 0x00FF00FF00FF00FFL ^ 0x000000000000003FL), // ham 6 to 3
+      (6L, top | 0x00FF00FF00FF00FFL ^ 0x000000000000007FL), // ham 7 to 3
+      (7L, 0x0F0F0F0F0F0F0F0FL),
+      (8L, 0x0F0F0F0F0F0F0F0FL ^ 0x0000000000030303L), // ham 6, bands 3..7
+      (9L, hot(0)._2 ^ 0x0000000000000300L), // ham 2 into the hot bucket
+      (10L, hot(1)._2 ^ 0x3F00000000000000L))) // ham 6 into the hot bucket
+      .toDF("doc_id", "simhash")
+    for ((what, sigs) <- Seq("fixture corpus" -> Documents.simhashSigsOf(docs),
+                             "synthetic signatures" -> synthetic)) {
+      val banded = sigs.select(col("doc_id"), col("simhash"),
+        explode(array((0 until 8).map(i =>
+          struct(lit(i).as("i"),
+            shiftrightunsigned(col("simhash"), i * 8).bitwiseAND(lit(0xFFL)).as("k"))): _*)).as("b"))
+        .select(col("doc_id"), col("simhash"), col("b.i").as("i"), col("b.k").as("k"))
+      val ref = banded.as("x").join(banded.as("y"),
+          col("x.i") === col("y.i") && col("x.k") === col("y.k") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+          bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= 6)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val kernel = Documents.simhashPairsFrom(sigs)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(ref.nonEmpty, s"$what plants simhash near-dups")
+      assert(kernel == ref, s"$what: " +
+        s"kernel minus ref: ${kernel.diff(ref)}; ref minus kernel: ${ref.diff(kernel)}")
+    }
+    // the synthetic frame witnesses each edge case it was built for
+    val syn = Documents.simhashPairsFrom(synthetic).as[(Long, Long, Long)].collect()
+    assert(syn.count(p => p == ((3L, 4L, 3L))) == 1 && syn.contains((3L, 5L, 6L)) &&
+      syn.contains((7L, 8L, 6L)) && syn.contains((9L, 1000L, 2L)) &&
+      syn.contains((10L, 1001L, 6L)), syn.toSeq)
+    assert(!syn.exists(p => (p._1, p._2) == ((1L, 2L)) || (p._1, p._2) == ((3L, 6L))),
+      "hamming-7 pairs must not be emitted")
+    assert(syn.length == syn.map(p => (p._1, p._2)).distinct.length,
+      "each pair is emitted once")
   }
 
   test("d01 exact dedup: one fingerprint per distinct text") {

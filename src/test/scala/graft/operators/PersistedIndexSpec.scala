@@ -239,6 +239,18 @@ class PersistedIndexSpec extends SparkSpec {
         (bm._1, bm._2 + 1), gm)
     }
     assert(e1.getMessage.contains("does not match the expected base"))
+    // empty delta: grown == base returns the pair table and writes
+    // nothing; grown != base means the delta frame lost rows the caller
+    // counted — refuse
+    val metaBefore = fileSnapshot(P.location(spark, "apx_basechk", "_meta"))
+    assert(Documents.appendToSimhashIndex(spark, delta.limit(0), "apx_basechk", bm, bm) ==
+      P.location(spark, "apx_basechk", "_pairs"))
+    assert(fileSnapshot(P.location(spark, "apx_basechk", "_meta")) == metaBefore,
+      "an empty append must leave _meta untouched")
+    val e0 = intercept[IllegalArgumentException] {
+      Documents.appendToSimhashIndex(spark, delta.limit(0), "apx_basechk", bm, gm)
+    }
+    assert(e0.getMessage.contains("lost rows"))
     // poison sentinel: a crashed prior append left _meta at -1 — a RETRY
     // must refuse (appending again would duplicate pairs durably),
     // directing the caller to the rebuilding ensure
@@ -427,9 +439,21 @@ class PersistedIndexSpec extends SparkSpec {
         bm.map { case (n, v) => (n, v + 1) })
     }
     assert(e1.getMessage.contains("not above the resident corpus max"))
+    // empty delta: the same rule as the simhash appender — grown == base
+    // returns the pair table and writes nothing; grown != base refuses
+    val high = Seq((20L, "a fresh id-above delta")).toDF("doc_id", "text")
+    val metaBefore = fileSnapshot(P.location(spark, "mapx_ord", "_meta"))
+    assert(Multimodal.appendToMediaIndex(spark, high.limit(0), "mapx_ord", bm, bm) ==
+      P.location(spark, "mapx_ord", "_pairs"))
+    assert(fileSnapshot(P.location(spark, "mapx_ord", "_meta")) == metaBefore,
+      "an empty append must leave _meta untouched")
+    val e0 = intercept[IllegalArgumentException] {
+      Multimodal.appendToMediaIndex(spark, high.limit(0), "mapx_ord", bm,
+        bm.map { case ("n", v) => ("n", v + 1); case kv => kv })
+    }
+    assert(e0.getMessage.contains("lost rows"))
     // poison sentinel: a crashed prior append must send the retry to the
     // rebuilding ensure, never to a second (duplicating) append
-    val high = Seq((20L, "a fresh id-above delta")).toDF("doc_id", "text")
     P.poison(spark, "mapx_ord", bm.map(_._1))
     val e2 = intercept[IllegalArgumentException] {
       Multimodal.appendToMediaIndex(spark, high, "mapx_ord", bm,
