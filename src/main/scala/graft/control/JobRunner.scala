@@ -1,7 +1,7 @@
 package graft.control
 
 import graft.sinks.{LoadRequest, SinkRegistry}
-import graft.sources.SheetSource
+import graft.sources.v2.SheetDataSource
 import graft.util.Timed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Path}
@@ -55,12 +55,18 @@ final class JobRunner(
           sheets.map(_.getFileName.toString.stripSuffix(".csv"))))
   }
 
-  /** The export side: one declarative plan — full sheet or A1 slice, then
-    * autodetect typing (`run_export`, `manager.py:40-45` + `export.py`). */
-  private[control] def exportPlan(job: JobSpec): DataFrame =
-    SheetSource.read(spark, resolveSheet(job.document, job.sheet).toString,
-      cellRange = Option(job.range.trim).filter(_.nonEmpty),
-      header = true, infer = true)
+  /** The export side: one declarative plan through the `sheet` connector —
+    * full sheet or A1 slice (an empty Range cell reads the whole sheet),
+    * header row, then autodetect typing (`run_export`, `manager.py:40-45`
+    * + `export.py`). The connector is named by class, which Spark resolves
+    * without the `sheet` service registration: a classpath built from
+    * compiled classes alone (no resources) still reads. */
+  private[graft] def exportPlan(job: JobSpec): DataFrame =
+    spark.read.format(classOf[SheetDataSource].getName)
+      .option("range", job.range)
+      .option("header", "true")
+      .option("inferSchema", "true")
+      .load(resolveSheet(job.document, job.sheet).toString)
 
   /** Run one job through the U1→(U2|U3) lifecycle, appending the log line
     * (`run_job`, `manager.py:183-203`; log `manager.py:147-164`). */

@@ -1,9 +1,12 @@
 package graft.sources
 
+import graft.control.CsvCodec
 import graft.util.A1Notation
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** Sheet-style source: reads CSV-as-sheet (every cell a string, like
   * gspread's `get_all_values`, `/root/reference/flusher/export.py:50-56`),
@@ -14,129 +17,130 @@ import org.apache.spark.sql.types._
   * Covers SURVEY.md §2.1 S1 (full scan), S2 (range scan = column
   * projection + row slice), S3 (open-ended range: no upper row bound) and
   * K4 (schema autodetect). The zero-egress environment has no live sheet
-  * API, so local CSV directories emulate sheet semantics (SURVEY §4.2c).
+  * API, so local CSV files emulate sheet semantics (SURVEY §4.2c).
   *
-  * Row order: sheet rows are numbered by `zipWithIndex` over the ordered
-  * CSV read — per-partition offsets are computed once (one lightweight
-  * count job), indices stay distributed, and the numbering is stable
-  * across re-reads regardless of partition count — unlike
-  * `monotonically_increasing_id`, which is partition-local (SURVEY §7
-  * risk 2).
+  * The phases work on a [[Grid]] held on the driver: a sheet is one
+  * ordered file and small by nature (Google Sheets caps a spreadsheet at
+  * 10M cells), so it is parsed once, with no Spark job. The `sheet`
+  * connector (`graft.sources.v2.SheetDataSource`) runs the four phases
+  * and scans the resulting grid; that connector is how the daemon reads.
   */
 object SheetSource {
 
-  /** 1-based sheet row number column carried by raw reads. */
+  /** Name of the 1-based sheet row number column the connector exposes. */
   val RowCol = "_sheet_row"
 
-  /** Read the whole sheet untyped: all-string columns `_c0.._cN` plus
-    * [[RowCol]]. S1 — `export.py:53-57`. */
-  def readRaw(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("header", "false")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-    // CSV read may infer non-string nothing — header=false & inferSchema
-    // default off gives all-string already; enforce anyway for safety.
-    val allString = raw.select(raw.schema.fieldNames.map(f => col(f).cast("string")): _*)
-    val schema = StructType(allString.schema.fields :+ StructField(RowCol, LongType, nullable = false))
-    val withIdx = allString.rdd.zipWithIndex.map { case (row, i) =>
-      Row.fromSeq(row.toSeq :+ (i + 1L))
+  /** One sheet on the driver: rows of string cells, all of one width; the
+    * 1-based sheet row of each row; one name and one type per column.
+    * Columns are named by their A1 letters and typed as strings until
+    * [[promoteHeader]] and [[inferSchema]] say otherwise. */
+  final case class Grid(
+      rows: Vector[Vector[String]],
+      rowNums: Vector[Long],
+      names: Vector[String],
+      types: Vector[DataType]) {
+    def width: Int = names.length
+    def schema: StructType =
+      StructType(names.indices.map(c => StructField(names(c), types(c), nullable = true)))
+  }
+
+  /** Read the whole sheet untyped. S1 — `export.py:53-57`. The file is
+    * parsed once, line by line, with the control table's CSV codec (quoted
+    * cells, doubled quotes): blank lines stay rows, so A1 row numbers
+    * match the sheet's, and short rows are padded with empty cells to the
+    * widest row. `spark` is unused; the
+    * parameter stays so callers that replay the phases with a session (the
+    * perfbench daemon workload) compile unchanged. */
+  def readRaw(spark: SparkSession, path: String): Grid = {
+    val src = scala.io.Source.fromFile(path, "UTF-8")
+    val parsed = try src.getLines().map(CsvCodec.parseLine).toVector finally src.close()
+    if (parsed.isEmpty) {
+      // name the document and sheet, never the path: the message lands in
+      // the control table's Last Result, which must not leak the filesystem
+      val f = new java.io.File(path)
+      throw new IllegalArgumentException(
+        s"sheet '${f.getName.stripSuffix(".csv")}' of document '${f.getParentFile.getName}' is empty")
     }
-    spark.createDataFrame(withIdx, schema)
+    val width = parsed.map(_.length).max
+    Grid(parsed.map(_.toVector.padTo(width, "")), Vector.range(1L, parsed.length + 1L),
+      Vector.tabulate(width)(c => A1Notation.colLetters(c + 1)), Vector.fill(width)(StringType))
   }
 
   /** Apply an A1 range: column slice + row filter. Open-ended ranges
-    * (`"A2:F"`) simply omit the upper row bound — no `count()` needed
-    * (S3, `export.py:47-48`). */
-  def slice(sheet: DataFrame, cellRange: String): DataFrame = {
+    * (`"A2:F"`) simply omit the upper row bound (S3, `export.py:47-48`);
+    * bounds past the data clamp to it. */
+  def slice(grid: Grid, cellRange: String): Grid = {
     val r = A1Notation.parseRange(cellRange)
-    val dataCols = sheet.columns.filter(_ != RowCol)
-    require(r.startCol <= dataCols.length,
-      s"range '$cellRange' starts at column ${r.startCol} but sheet has ${dataCols.length}")
-    val picked = dataCols.slice(r.startCol - 1, math.min(r.endCol, dataCols.length))
-    val rowOk = r.endRow match {
-      case Some(end) => col(RowCol).between(r.startRow, end.toLong)
-      case None      => col(RowCol) >= r.startRow
+    require(r.startCol <= grid.width,
+      s"range '$cellRange' starts at column ${r.startCol} but sheet has ${grid.width}")
+    val cols = (r.startCol - 1) until math.min(r.endCol, grid.width)
+    val keep = grid.rowNums.indices.filter { i =>
+      grid.rowNums(i) >= r.startRow && r.endRow.forall(grid.rowNums(i) <= _)
     }
-    sheet.filter(rowOk).select(col(RowCol) +: picked.map(col): _*)
+    Grid(keep.map(i => cols.map(grid.rows(i)).toVector).toVector, keep.map(grid.rowNums).toVector,
+      cols.map(grid.names).toVector, cols.map(grid.types).toVector)
   }
 
-  /** Promote the first row of the (sliced) sheet to column names —
-    * sanitized and deduplicated by the shared [[HeaderNames]] rule (same
-    * names as the DSv2 connector for the same sheet). */
-  def promoteHeader(sheet: DataFrame): DataFrame = {
-    val ordered = sheet.orderBy(col(RowCol))
-    val first = ordered.limit(1).collect()
-    require(first.nonEmpty, "cannot promote header of an empty sheet")
-    val dataCols = sheet.columns.filter(_ != RowCol)
-    val headerVals = dataCols.map { c =>
-      Option(first(0).get(sheet.columns.indexOf(c))).map(_.toString).getOrElse("")
+  /** Promote the first row of the (sliced) sheet to column names.
+    * Non-alphanumerics → `_`; empty or digit-leading names fall back to
+    * `col<i>` (slice-relative, 0-based); case-insensitive collisions get
+    * `_2`, `_3`… suffixes — duplicate names would otherwise make
+    * `fieldIndex` silently serve one column's data for both. */
+  def promoteHeader(grid: Grid): Grid = {
+    require(grid.rows.nonEmpty, "cannot promote header of an empty sheet")
+    val seen = mutable.Map.empty[String, Int]
+    val names = grid.rows.head.indices.map { i =>
+      val clean = grid.rows.head(i).trim.replaceAll("[^A-Za-z0-9_]", "_")
+      val n = if (clean.isEmpty || clean.head.isDigit) s"col$i" else clean
+      val k = n.toLowerCase
+      val c = seen.getOrElse(k, 0)
+      seen(k) = c + 1
+      if (c == 0) n else s"${n}_${c + 1}"
     }
-    val names = HeaderNames.sanitize(headerVals.toSeq)
-    val headerRow = first(0).getAs[Long](sheet.columns.indexOf(RowCol))
-    ordered.filter(col(RowCol) > headerRow)
-      .select(col(RowCol) +: dataCols.zip(names).map { case (c, n) => col(c).as(n) }: _*)
+    grid.copy(rows = grid.rows.tail, rowNums = grid.rowNums.tail, names = names.toVector)
   }
 
   /** Candidate types in warehouse-autodetect priority order (K4 parity
     * with BigQuery CSV autodetect: INT64 → FLOAT64 → BOOL → DATE →
     * TIMESTAMP → STRING). */
-  private val DateRe = "^\\d{4}-\\d{2}-\\d{2}$"
+  private val Candidates = Seq(LongType, DoubleType, BooleanType, DateType, TimestampType)
 
-  /** One-pass schema inference over all-string columns: for each column,
-    * a single aggregation counts non-empty cells that FAIL each candidate
-    * cast (`try_cast`); the narrowest all-pass type wins. Empty cells stay
-    * null. One job regardless of column count.
-    */
-  def inferSchema(sheet: DataFrame): DataFrame = {
-    val dataCols = sheet.columns.filter(_ != RowCol)
-    if (dataCols.isEmpty) return sheet
-    def nonEmpty(c: String) = col(c).isNotNull && trim(col(c)) =!= ""
-    def fails(c: String, t: String) = expr(s"try_cast(`$c` AS $t)").isNull && nonEmpty(c)
-    val checks = dataCols.flatMap { c =>
-      Seq(
-        sum(when(nonEmpty(c), 1L).otherwise(0L)).as(s"$c#n"),
-        sum(when(fails(c, "BIGINT"), 1L).otherwise(0L)).as(s"$c#long"),
-        sum(when(fails(c, "DOUBLE"), 1L).otherwise(0L)).as(s"$c#double"),
-        sum(when(fails(c, "BOOLEAN"), 1L).otherwise(0L)).as(s"$c#boolean"),
-        // cast-to-date accepts trailing time-of-day, so DATE additionally
-        // requires the bare yyyy-MM-dd shape
-        sum(when(fails(c, "DATE") || (nonEmpty(c) && !trim(col(c)).rlike(DateRe)), 1L)
-          .otherwise(0L)).as(s"$c#date"),
-        sum(when(fails(c, "TIMESTAMP"), 1L).otherwise(0L)).as(s"$c#timestamp"))
+  /** Casting to date accepts a trailing time of day, so DATE additionally
+    * requires the bare yyyy-MM-dd shape (spaces around it are trimmed). */
+  private val DateRe = " *\\d{4}-\\d{2}-\\d{2} *".r
+
+  /** The session time zone timestamp cells are read in. */
+  private[sources] def sessionZone: String = SparkSession.active.sessionState.conf.sessionLocalTimeZone
+
+  private def blank(v: String): Boolean = v.forall(_ == ' ')
+
+  /** The one typing rule: read a cell as `t` in Spark's internal form,
+    * or null. A cell of spaces only is null (SQL `trim` semantics); a
+    * string keeps its original spacing; any other type is Spark's own
+    * `Cast` in TRY mode, so a cell that does not cast is null, never an
+    * error. Inference and the connector's scan both read cells through
+    * this, so the scan accepts exactly what inference accepted. */
+  private[sources] def cellReader(t: DataType, zone: String): String => Any = {
+    if (t == StringType) v => if (blank(v)) null else UTF8String.fromString(v)
+    else {
+      val cast = Cast(BoundReference(0, StringType, nullable = true), t, Some(zone), EvalMode.TRY)
+      val in = new GenericInternalRow(1)
+      v => if (blank(v)) null else { in.update(0, UTF8String.fromString(v)); cast.eval(in) }
     }
-    val stats = sheet.agg(checks.head, checks.tail: _*).collect()(0)
-    def failed(c: String, t: String): Long = stats.getAs[Long](s"$c#$t")
-    val casts = dataCols.map { c =>
-      val t =
-        if (stats.getAs[Long](s"$c#n") == 0L) "string" // all-empty: no evidence
-        else if (failed(c, "long") == 0L) "long"
-        else if (failed(c, "double") == 0L) "double"
-        else if (failed(c, "boolean") == 0L) "boolean"
-        else if (failed(c, "date") == 0L) "date"
-        else if (failed(c, "timestamp") == 0L) "timestamp"
-        else "string"
-      if (t == "string") when(nonEmpty(c), col(c)).otherwise(lit(null)).cast("string").as(c)
-      else expr(s"try_cast(`$c` AS $t)").as(c)
-    }
-    sheet.select(col(RowCol) +: casts: _*)
   }
 
-  /** Full sheet-export read: optional A1 slice → optional header promote →
-    * optional schema inference → drop the internal row column. This is the
-    * engine's equivalent of `export.to_csv` + autodetect load fused into
-    * one plan (SURVEY §3.4).
-    */
-  def read(
-      spark: SparkSession,
-      path: String,
-      cellRange: Option[String] = None,
-      header: Boolean = false,
-      infer: Boolean = false): DataFrame = {
-    val raw = readRaw(spark, path)
-    val sliced = cellRange.map(slice(raw, _)).getOrElse(raw)
-    val headed = if (header) promoteHeader(sliced) else sliced
-    val typed = if (infer) inferSchema(headed) else headed
-    typed.drop(RowCol)
+  /** Type every column: the first candidate that reads every non-blank
+    * cell wins; a column with no non-blank cell stays string (no
+    * evidence). Runs in the session time zone, see [[sessionZone]]. */
+  def inferSchema(grid: Grid): Grid = {
+    val zone = sessionZone
+    val types = grid.names.indices.map { c =>
+      val cells = grid.rows.map(_(c)).filterNot(blank)
+      Candidates.find { t =>
+        val read = cellReader(t, zone)
+        cells.nonEmpty && cells.forall(v => read(v) != null && (t != DateType || DateRe.matches(v)))
+      }.getOrElse(StringType)
+    }
+    grid.copy(types = types.toVector)
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources.v2
 
-import graft.control.CsvCodec
-import graft.util.A1Notation
+import graft.sources.SheetSource
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -9,11 +9,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-import java.time.{LocalDate, LocalDateTime, ZoneOffset}
-import java.time.format.DateTimeFormatter
 import scala.jdk.CollectionConverters._
-import scala.util.Try
 
 /** DataSource V2 "sheet" format (SURVEY §4.2c): a sheet-semantics
   * connector — all-string cells, A1 range addressing, header promotion,
@@ -28,8 +24,10 @@ import scala.util.Try
   * }}}
   *
   * Zero-egress environment: local CSV files stand in for the live sheet
-  * API (same emulation as [[graft.sources.SheetSource]]); the connector
-  * boundary is exactly where a real Sheets HTTP client would slot in.
+  * API; the connector boundary is exactly where a real Sheets HTTP client
+  * would slot in. The sheet is read, sliced, named and typed on the
+  * driver by [[graft.sources.SheetSource]]'s phases, and the scan serves
+  * that grid.
   *
   * Scan design: `SupportsPushDownRequiredColumns` prunes at the CELL
   * level — unprojected columns are never type-converted (the reference's
@@ -42,18 +40,30 @@ import scala.util.Try
 class SheetDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "sheet"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SheetDataSource.resolve(options).schema
+  // Spark resolves one load by calling inferSchema and then getTable on
+  // the same provider instance; keeping the table between the two calls
+  // parses the sheet once per load, and a new load always re-reads it
+  private var last: Option[(Map[String, String], SheetTable)] = None
+
+  private def table(options: CaseInsensitiveStringMap): SheetTable = {
+    val key = options.asCaseSensitiveMap().asScala.toMap
+    last.collect { case (`key`, t) => t }.getOrElse {
+      val t = SheetDataSource.resolve(options)
+      last = Some(key -> t)
+      t
+    }
+  }
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = table(options).schema()
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    SheetDataSource.resolve(new CaseInsensitiveStringMap(properties))
+    table(new CaseInsensitiveStringMap(properties))
 }
 
 object SheetDataSource {
-  /** Name of the row-number metadata column (1-based sheet row) — shared
-    * with the v1 reader so the two readers expose ONE column name. */
-  val RowCol: String = graft.sources.SheetSource.RowCol
+  /** Name of the row-number metadata column (1-based sheet row). */
+  val RowCol: String = SheetSource.RowCol
 
   private[v2] object SheetRowColumn extends MetadataColumn {
     override def name: String = RowCol
@@ -61,24 +71,16 @@ object SheetDataSource {
     override def comment: String = "1-based sheet row number"
   }
 
-  // fraction accepts 0..9 digits — the inference regex admits micro/nano
-  // precision, so the converter must parse everything inference accepts
-  private val TsFmt = new java.time.format.DateTimeFormatterBuilder()
-    .appendPattern("yyyy-MM-dd HH:mm:ss")
-    .appendFraction(java.time.temporal.ChronoField.NANO_OF_SECOND, 0, 9, true)
-    .toFormatter
-  private val DateRe = "^\\d{4}-\\d{2}-\\d{2}$".r
-  private val TsRe = "^\\d{4}-\\d{2}-\\d{2}[ T]\\d{2}:\\d{2}:\\d{2}(\\.\\d+)?$".r
-
-  /** Geometry + typing of one sheet read, computed once on the driver and
-    * shipped to the reader. 0-based column offsets are relative to the
-    * RAW file row; rows are 1-based sheet rows. */
+  /** One resolved sheet read, shipped to the reader: the sliced, named and
+    * typed grid, the session time zone its cells are read in, and the
+    * scan's window of 1-based sheet rows. */
   final case class SheetSpec(
       path: String,
-      colOffsets: Seq[Int],
-      dataStartRow: Long,
-      endRow: Option[Long],
-      schema: StructType) extends Serializable {
+      grid: SheetSource.Grid,
+      zone: String,
+      startRow: Long,
+      endRow: Option[Long]) {
+    val schema: StructType = grid.schema
     /** A real data column named `_sheet_row` shadows the metadata column
       * everywhere — table surface, filter pushdown, reader — so the
       * shadow decision lives HERE, once (schema names are stored exactly
@@ -86,113 +88,16 @@ object SheetDataSource {
     def rowColIsData: Boolean = schema.fieldNames.contains(RowCol)
   }
 
-  /** resolve() is memoized on (options, file mtime+size): Spark calls
-    * inferSchema and getTable separately per load, which would otherwise
-    * read + type-infer the whole file twice on the driver. A file edit
-    * changes the key, so stale tables aren't served. */
-  private val resolveCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Boolean, Boolean, Long, Long), SheetTable]()
-
   def resolve(options: CaseInsensitiveStringMap): SheetTable = {
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("sheet source requires a path"))
-    val header = options.getBoolean("header", false)
-    val infer = options.getBoolean("inferSchema", false)
-    val rangeOpt = Option(options.get("range")).map(_.trim).filter(_.nonEmpty)
-    val f = new java.io.File(path)
-    val key = (path, rangeOpt.getOrElse(""), header, infer, f.lastModified(), f.length())
-    resolveCache.computeIfAbsent(key, _ => resolveUncached(path, rangeOpt, header, infer))
-  }
-
-  private def resolveUncached(path: String, rangeOpt: Option[String],
-      header: Boolean, infer: Boolean): SheetTable = {
-    val rows = readRows(path)
-    require(rows.nonEmpty, s"empty sheet: $path")
-    val width = rows.map(_.length).max
-
-    val (cols, startRow, endRow) = rangeOpt match {
-      case Some(r) =>
-        val cr = A1Notation.parseRange(r)
-        require(cr.startCol <= width, s"range '$r' starts past sheet width $width")
-        ((cr.startCol - 1) until math.min(cr.endCol, width),
-          cr.startRow.toLong, cr.endRow.map(_.toLong))
-      case None => (0 until width, 1L, None)
-    }
-
-    val sliced = rows.zipWithIndex
-      .filter { case (_, i) =>
-        val rn = i + 1L
-        rn >= startRow && endRow.forall(rn <= _)
-      }
-      .map { case (cells, _) => cols.map(c => if (c < cells.length) cells(c) else "") }
-
-    val (names, dataRows, dataStartRow) =
-      if (header) {
-        require(sliced.nonEmpty, "header requested on an empty range")
-        (graft.sources.HeaderNames.sanitize(sliced.head), sliced.tail, startRow + 1)
-      } else
-        (cols.map(c => A1Notation.colLetters(c + 1)), sliced, startRow)
-
-    val types: Seq[DataType] =
-      if (infer) cols.indices.map(i => inferColumn(dataRows.iterator.map(_(i))))
-      else cols.map(_ => StringType)
-
-    val schema = StructType(names.zip(types).map { case (n, t) =>
-      StructField(n, t, nullable = true)
-    }.toSeq)
-    new SheetTable(SheetSpec(path, cols, dataStartRow, endRow, schema))
-  }
-
-  private[v2] def readRows(path: String): Vector[Seq[String]] = {
-    val src = scala.io.Source.fromFile(path)
-    try src.getLines().map(CsvCodec.parseLine).toVector
-    finally src.close()
-  }
-
-  /** Autodetect priority (K4 parity): BIGINT → DOUBLE → BOOLEAN → DATE →
-    * TIMESTAMP → STRING over non-empty cells; all-empty stays string. */
-  private def inferColumn(values: Iterator[String]): DataType = {
-    var sawAny = false
-    var okLong, okDouble, okBool, okDate, okTs = true
-    values.foreach { v0 =>
-      val v = v0.trim
-      if (v.nonEmpty) {
-        sawAny = true
-        if (okLong) okLong = Try(v.toLong).isSuccess
-        if (okDouble) okDouble = Try(v.toDouble).isSuccess
-        if (okBool) okBool = v.equalsIgnoreCase("true") || v.equalsIgnoreCase("false")
-        if (okDate) okDate = DateRe.matches(v) && Try(LocalDate.parse(v)).isSuccess
-        if (okTs) okTs = TsRe.matches(v)
-      }
-    }
-    if (!sawAny) StringType
-    else if (okLong) LongType
-    else if (okDouble) DoubleType
-    else if (okBool) BooleanType
-    else if (okDate) DateType
-    else if (okTs) TimestampType
-    else StringType
-  }
-
-  /** Convert one trimmed cell to Spark's internal representation.
-    * Degenerate-cell rule, shared with `SheetSource.inferSchema`'s string
-    * branch: trim-then-null-if-empty — a whitespace-only cell is null in
-    * BOTH readers (they advertise identical semantics for the same
-    * physical sheet); a non-empty string keeps its original spacing. */
-  private[v2] def convert(v: String, t: DataType): Any = {
-    val s = v.trim
-    if (s.isEmpty) null
-    else t match {
-      case StringType    => UTF8String.fromString(v)
-      case LongType      => s.toLong
-      case DoubleType    => s.toDouble
-      case BooleanType   => s.equalsIgnoreCase("true")
-      case DateType      => LocalDate.parse(s).toEpochDay.toInt
-      case TimestampType =>
-        val ldt = LocalDateTime.parse(s.replace('T', ' '), TsFmt)
-        ldt.toEpochSecond(ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
-      case other => throw new IllegalStateException(s"unsupported sheet type $other")
-    }
+    val raw = SheetSource.readRaw(SparkSession.active, path)
+    val sliced = Option(options.get("range")).map(_.trim).filter(_.nonEmpty)
+      .fold(raw)(SheetSource.slice(raw, _))
+    val headed = if (options.getBoolean("header", false)) SheetSource.promoteHeader(sliced) else sliced
+    val grid = if (options.getBoolean("inferSchema", false)) SheetSource.inferSchema(headed) else headed
+    new SheetTable(SheetSpec(path, grid, SheetSource.sessionZone,
+      grid.rowNums.headOption.getOrElse(1L), grid.rowNums.lastOption))
   }
 }
 
@@ -218,13 +123,13 @@ final class SheetTable(spec: SheetDataSource.SheetSpec) extends Table
   * server-side A1 range fetch (`export.py:50` moves only the requested
   * cells): columns are pruned at the cell level, and row-number
   * predicates on `_sheet_row` narrow the scan's row window so filtered
-  * rows are never parsed, converted, or emitted. Accepted filters are
+  * rows are never converted or emitted. Accepted filters are
   * consumed entirely (not re-evaluated post-scan); anything not a simple
   * `_sheet_row` bound is left to Spark. */
 final class SheetScanBuilder(spec: SheetDataSource.SheetSpec)
   extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
   private var required: StructType = spec.schema
-  private var startRow: Long = spec.dataStartRow
+  private var startRow: Long = spec.startRow
   private var endRow: Option[Long] = spec.endRow
   private var pushed: Array[Filter] = Array.empty
 
@@ -251,7 +156,7 @@ final class SheetScanBuilder(spec: SheetDataSource.SheetSpec)
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    SheetScan(spec.copy(dataStartRow = startRow, endRow = endRow), required)
+    SheetScan(spec.copy(startRow = startRow, endRow = endRow), required)
 }
 
 final case class SheetScan(spec: SheetDataSource.SheetSpec, required: StructType)
@@ -260,25 +165,25 @@ final case class SheetScan(spec: SheetDataSource.SheetSpec, required: StructType
   override def toBatch: Batch = this
   override def description(): String =
     s"SheetScan ${spec.path} cols=${required.fieldNames.mkString(",")} " +
-      s"rows=${spec.dataStartRow}..${spec.endRow.map(_.toString).getOrElse("end")}"
+      s"rows=${spec.startRow}..${spec.endRow.map(_.toString).getOrElse("end")}"
   // one ordered partition — sheet row order is part of the contract
   override def planInputPartitions(): Array[InputPartition] = Array(SheetPartition(spec))
-  override def createReaderFactory(): PartitionReaderFactory =
-    SheetReaderFactory(spec, required)
+  override def createReaderFactory(): PartitionReaderFactory = SheetReaderFactory(required)
 }
 
 final case class SheetPartition(spec: SheetDataSource.SheetSpec) extends InputPartition
 
-final case class SheetReaderFactory(spec: SheetDataSource.SheetSpec, required: StructType)
-  extends PartitionReaderFactory {
+final case class SheetReaderFactory(required: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new SheetReader(spec, required)
+    new SheetReader(partition.asInstanceOf[SheetPartition].spec, required)
 }
 
-/** Streams the sheet rows, converting ONLY the pruned-to columns;
-  * `_sheet_row` fields are served from the row counter, not the cells. */
+/** Streams the grid rows inside the row window, converting ONLY the
+  * pruned-to columns; `_sheet_row` fields are served from the grid's row
+  * numbers, not the cells. */
 final class SheetReader(spec: SheetDataSource.SheetSpec, required: StructType)
   extends PartitionReader[InternalRow] {
+  private val grid = spec.grid
 
   // -1 marks the _sheet_row metadata field; a DATA column of that name
   // takes precedence (the metadata column is shadowed, see SheetSpec)
@@ -286,27 +191,21 @@ final class SheetReader(spec: SheetDataSource.SheetSpec, required: StructType)
     case SheetDataSource.RowCol if !spec.rowColIsData => -1
     case n => spec.schema.fieldIndex(n)
   }
-  private val rows = SheetDataSource.readRows(spec.path).iterator.zipWithIndex
-    .filter { case (_, i) =>
-      val rn = i + 1L
-      rn >= spec.dataStartRow && spec.endRow.forall(rn <= _)
-    }
+  private val read: Array[String => Any] =
+    fieldIdx.map(fi => if (fi < 0) null else SheetSource.cellReader(grid.types(fi), spec.zone))
+  private val rows = grid.rowNums.indices.iterator.filter { i =>
+    grid.rowNums(i) >= spec.startRow && spec.endRow.forall(grid.rowNums(i) <= _)
+  }
   private var current: InternalRow = _
 
   override def next(): Boolean =
     if (!rows.hasNext) false
     else {
-      val (cells, i) = rows.next()
-      val rn = i + 1L
-      val values = fieldIdx.map { fi =>
-        if (fi < 0) rn
-        else {
-          val c = spec.colOffsets(fi)
-          val raw = if (c < cells.length) cells(c) else ""
-          SheetDataSource.convert(raw, spec.schema.fields(fi).dataType)
-        }
-      }
-      current = InternalRow.fromSeq(values.toIndexedSeq)
+      val i = rows.next()
+      val cells = grid.rows(i)
+      current = InternalRow.fromSeq(fieldIdx.indices.map { k =>
+        if (fieldIdx(k) < 0) grid.rowNums(i) else read(k)(cells(fieldIdx(k)))
+      })
       true
     }
 

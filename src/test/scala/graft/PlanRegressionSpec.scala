@@ -348,4 +348,53 @@ class PlanRegressionSpec extends SparkSpec {
     assert(cross.contains("BroadcastHashJoin") && !cross.contains("SortMergeJoin"),
       s"cross stratum must broadcast the delta:\n$cross")
   }
+  test("daemon sheet read: range + header + infer runs one Spark job, no exchange, no sort") {
+    import graft.control.{CsvControlTable, CsvRunLog, JobRunner, JobSpec}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    // the removed DataFrame reader launched 7 jobs per read: the CSV
+    // column probe, the row-numbering offset count, the header collect,
+    // the inference aggregate and the write re-running the rest
+    val root = java.nio.file.Files.createTempDirectory("sheetjobs")
+    val doc = java.nio.file.Files.createDirectory(root.resolve("Doc"))
+    java.nio.file.Files.write(doc.resolve("S1.csv"), (Seq("junk,id,qty,note") ++
+      (1 to 200).map(i => s"x,$i,${i * 10},n$i")).mkString("\n").getBytes)
+    val runner = new JobRunner(spark,
+      CsvControlTable.init(java.nio.file.Files.createTempFile("ctl", ".csv"), Seq.empty),
+      graft.sinks.SinkRegistry.default(root.resolve("out").toString), root,
+      new CsvRunLog(root.resolve("runlog.csv")), log = _ => ())
+    val job = JobSpec("Doc", "S1", "B1:D", "warehouse", "t", "", "", "", "", "", "", 2L)
+    val group = s"sheet-jobs-${System.nanoTime()}"
+    val jobs = new AtomicInteger()
+    val drained = new CountDownLatch(1)
+    // listener events arrive in order: once the drain job's start is
+    // seen, every job the read started has been counted
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-drain" => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      def inGroup[T](g: String)(body: => T): T = {
+        sc.setJobGroup(g, g)
+        try body finally sc.clearJobGroup()
+      }
+      val df = inGroup(group) {
+        val d = runner.exportPlan(job)
+        d.write.format("noop").mode("overwrite").save()
+        d
+      }
+      inGroup(s"$group-drain")(spark.range(1).count())
+      assert(drained.await(60, TimeUnit.SECONDS), "listener never saw the drain job")
+      assert(jobs.get == 1, s"a sheet read must run exactly one Spark job, ran ${jobs.get}")
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange") && !p.contains("Sort"), s"sheet read must not shuffle or sort:\n$p")
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -194,4 +194,47 @@ class JobRunnerSpec extends SparkSpec {
     // the legitimate document still resolves
     assert(runner.resolveSheet("SalesDoc", "Sheet1").getFileName.toString == "Sheet1.csv")
   }
+
+  test("sheet rows load as the sheet has them: blank rows, doubled quotes, ragged widths") {
+    val (root, runLog) = freshEnv()
+    // row 3 is blank; row 2 holds an RFC 4180 doubled-quote cell; row 4
+    // is wider than the header row
+    Files.write(root.resolve("SalesDoc").resolve("Quirks.csv"),
+      "id,note\n1,\"say \"\"hi\"\"\"\n\n4,x,extra\n".getBytes)
+    val ct = CsvControlTable.init(Files.createTempFile("ctl", ".csv"), Seq(
+      cells(sheet = "Quirks", range = "A1:B3", dest = "quirks_range", refreshNow = "yes"),
+      cells(sheet = "Quirks", dest = "quirks_full", refreshNow = "yes")))
+    val runner = new JobRunner(spark, ct, SinkRegistry.default(
+      Files.createTempDirectory("csvout").toString), root, runLog,
+      clock = clock, log = _ => ())
+    assert(runner.pollOnce() == 2)
+    assert(ct.readAll().forall(_.state == "Success"), ct.readAll().map(_.lastResult))
+    // A1:B3 is sheet rows 1..3: the header, row 2 and the blank row 3 —
+    // not row 4's data
+    val ranged = spark.table("g_sheets.quirks_range")
+    assert(ranged.columns.toSeq == Seq("id", "note"))
+    assert(ranged.collect().map(_.toSeq.map(String.valueOf)).toSet ==
+      Set(Seq("1", "say \"hi\""), Seq("null", "null")))
+    // the whole sheet is as wide as its widest row
+    val full = spark.table("g_sheets.quirks_full")
+    assert(full.columns.toSeq == Seq("id", "note", "col2"))
+    assert(full.collect().map(_.toSeq.map(String.valueOf)).toSet ==
+      Set(Seq("1", "say \"hi\"", "null"), Seq("null", "null", "null"), Seq("4", "x", "extra")))
+  }
+
+  test("an empty sheet fails naming the document and sheet, not the file path") {
+    val (root, runLog) = freshEnv()
+    Files.write(root.resolve("SalesDoc").resolve("Empty.csv"), Array.emptyByteArray)
+    val ct = CsvControlTable.init(Files.createTempFile("ctl", ".csv"), Seq(
+      cells(sheet = "Empty", dest = "empty_t", refreshNow = "yes")))
+    val runner = new JobRunner(spark, ct, SinkRegistry.default(
+      Files.createTempDirectory("csvout").toString), root, runLog,
+      clock = clock, log = _ => ())
+    assert(runner.pollOnce() == 1)
+    val j = ct.readAll().head
+    assert(j.state == "Failure")
+    assert(j.lastResult.contains("Empty") && j.lastResult.contains("SalesDoc"), j.lastResult)
+    assert(!j.lastResult.contains(root.toString), j.lastResult)
+    assert(!j.lastResult.contains(root.toAbsolutePath.normalize.toString), j.lastResult)
+  }
 }

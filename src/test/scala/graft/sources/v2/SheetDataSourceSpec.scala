@@ -122,4 +122,18 @@ class SheetDataSourceSpec extends SparkSpec {
     val rows = df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(rows == Seq((2L, "y1"), (3L, "y2"), (4L, "y3")))
   }
+  test("a sheet rewritten with the same size and mtime is read afresh") {
+    val path = writeCsv(Seq("n", "12", "34"))
+    val f = new java.io.File(path)
+    val read = () => spark.read.format("sheet")
+      .option("header", "true").option("inferSchema", "true").load(path)
+    assert(read().schema("n").dataType.typeName == "long")
+    val mtime = f.lastModified()
+    val before = f.length()
+    Files.write(f.toPath, Seq("n", "ab", "cd").mkString("\n").getBytes)
+    assert(f.setLastModified(mtime) && f.length() == before)
+    val df = read()
+    assert(df.schema("n").dataType.typeName == "string")
+    assert(df.collect().map(_.getString(0)).toSeq == Seq("ab", "cd"))
+  }
 }
