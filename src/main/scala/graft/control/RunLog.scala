@@ -3,7 +3,6 @@ package graft.control
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardOpenOption}
 import java.time.Instant
-import scala.concurrent.{ExecutionContext, Future}
 
 /** K6 — the append-only 7-column run log (`manager.py:147-164`;
   * FIXTURES.md A.2): start, end, document, sheet, cellrange, status,
@@ -16,11 +15,6 @@ final case class RunLogEntry(
 
 trait RunLog {
   def append(entry: RunLogEntry): Unit
-
-  /** The reference appends from a fire-and-forget thread to hide sheet
-    * latency (`manager.py:154-164`); same shape via Future. */
-  final def appendAsync(entry: RunLogEntry)(implicit ec: ExecutionContext): Future[Unit] =
-    Future(append(entry))
 }
 
 /** File-backed log sheet: one quoted CSV line per run, append-only. */

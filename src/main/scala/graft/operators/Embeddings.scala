@@ -1611,18 +1611,8 @@ object Embeddings {
     // the in-memory catalog dies with the JVM while the files survive, and
     // the skip must work across sessions (a per-JVM skip would retrain on
     // every new session — measured 17.7 s vs 0.8 s at sf0.1)
-    val fresh =
-      try {
-        val meta = s.read.parquet(pqLoc(s, database, table, "_meta"))
-          .select($"n", $"fp").as[(Long, Long)].head()
-        val fs = new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_meta"))
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        meta == ((n, fp)) &&
-          fs.exists(new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_books"))) &&
-          fs.exists(new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_codes"))) &&
-          fs.exists(new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_coarse")))
-      } catch { case _: Exception => false }
-    if (!fresh) {
+    if (!graft.plans.PersistedIndex.isFresh(s, database, table,
+        Seq("n" -> n, "fp" -> fp), Seq("_books", "_codes", "_coarse"))) {
       // physically invalidate meta FIRST (catalog drop alone leaves the
       // files "valid" for a fresh JVM if this build crashes mid-rewrite)
       graft.plans.CoLocated.clearTable(s, database, s"${table}_meta")
@@ -1822,16 +1812,8 @@ object Embeddings {
         .as[(Long, Option[Long])].head()
       (c, x.getOrElse(0L))
     }
-    val fresh =
-      try {
-        val meta = s.read.parquet(pqLoc(s, database, table, "_meta"))
-          .select($"n", $"fp").as[(Long, Long)].head()
-        val fs = new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_meta"))
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        meta == ((n, fp)) &&
-          fs.exists(new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_postings")))
-      } catch { case _: Exception => false }
-    if (!fresh) {
+    if (!graft.plans.PersistedIndex.isFresh(s, database, table,
+        Seq("n" -> n, "fp" -> fp), Seq("_postings"))) {
       graft.plans.CoLocated.clearTable(s, database, s"${table}_meta")
       graft.plans.CoLocated.writeBucketed(
         bm25ScoreTable(prepared.select($"doc_id", split($"text", " ").as("toks"))),

@@ -61,108 +61,91 @@ object StreamingSemanticDedup {
     * survivors + append codes, both ledgered. */
   def dedupBatch(table: String,
       database: String = WarehouseSink.DefaultDatabase,
-      threshold: Double = 0.45, bands: Int = 4, planes: Int = 4): (DataFrame, Long) => Unit = {
-    (batch, batchId) =>
-      WarehouseSink.requireIdent(database, "database")
-      WarehouseSink.requireIdent(table, "destination table")
-      val spark = batch.sparkSession
+      threshold: Double = 0.45, bands: Int = 4, planes: Int = 4): (DataFrame, Long) => Unit =
+    StreamingDelivery.envelope(database, table) { (snap, batchId) =>
+      val spark = snap.sparkSession
       import spark.implicits._
-      val snap = batch.localCheckpoint()
-      try {
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
-        val qualified = s"`$database`.`$table`"
-        val doneTable = table + DoneSuffix
-        val doneStamps =
-          StreamingDelivery.deliveredRowCount(spark, database, doneTable, batchId)
-        val delivered =
-          StreamingDelivery.deliveredRowCount(spark, database, table, batchId)
-        if (doneStamps <= 0L) {
-          val coded = Embeddings.bandCodes(
-            snap.select(col("vec_id"), col("v")), bands, planes).localCheckpoint()
-          try {
-            val codesTable = table + CodesSuffix
-            val codesQualified = s"`$database`.`$codesTable`"
-            val codesDelivered =
-              StreamingDelivery.deliveredRowCount(spark, database, codesTable, batchId)
-            // a pre-existing codes table must be OURS (the band/code
-            // schema is the dedup state) — fail clearly, not per-column
-            if (codesDelivered >= 0L) {
-              val cols = spark.table(codesQualified).columns.toSet
-              if (!Set("vec_id", "band", "code", "v", "nrm").subsetOf(cols))
-                throw new IllegalStateException(
-                  s"$codesQualified exists but is not a semantic-dedup codes table " +
-                    "— deliver to a fresh table")
-            }
-            val history =
-              if (codesDelivered < 0L) coded.limit(0)
-              else spark.table(codesQualified)
-                .filter(col(StreamingDelivery.BatchIdCol) =!= batchId)
-                .select("vec_id", "band", "code", "v", "nrm")
-            // the kernel's ida < idb predicate NEVER fires on equal ids,
-            // so a duplicate vec_id — within the batch or re-sent after
-            // an earlier batch — would sail through both probes and
-            // deliver twice. The monotone-id contract the parity claim
-            // rests on makes both illegal; enforce it loudly (the
-            // StreamingUpsert duplicate-key discipline) instead of
-            // corrupting the table: one aggregate over the batch, one
-            // single-column max over the pruned history ledger.
-            val stats = snap.agg(count(lit(1)), countDistinct(col("vec_id")),
-              min(col("vec_id"))).collect()(0)
-            if (stats.getLong(0) != stats.getLong(1))
-              throw new IllegalStateException(
-                s"batch $batchId carries duplicate vec_ids " +
-                  s"(${stats.getLong(0)} rows, ${stats.getLong(1)} distinct) — " +
-                  "semantic dedup keys on vec_id; dedup the feed first")
-            if (codesDelivered >= 0L && stats.getLong(0) > 0L) {
-              val maxSeen = history.agg(max(col("vec_id"))).collect()(0)
-              if (!maxSeen.isNullAt(0) && stats.getLong(2) <= maxSeen.getLong(0))
-                throw new IllegalStateException(
-                  s"batch $batchId min vec_id ${stats.getLong(2)} does not exceed " +
-                    s"the history's max ${maxSeen.getLong(0)} — ids must be " +
-                    "monotone across batches (a re-sent id would deliver twice " +
-                    "and the batch-parity contract assumes ascending ingest)")
-            }
-            // earlier = resident history ∪ this batch's own rows; the
-            // ida < idb predicate inside the kernel orders the batch
-            // internally AND (under monotone ids) places history first
-            val droppers = Embeddings.greedyDroppers(
-              coded, history.unionByName(coded), threshold, broadcastProbe = true)
-            val survivors = snap.join(droppers, Seq("vec_id"), "left_anti")
-              .withColumn(InputRowsCol, lit(snap.count()))
-            if (codesDelivered <= 0L)
-              StreamingDelivery.appendLedgered(coded, database, codesTable, batchId,
-                tableIsNew = codesDelivered < 0L)
-            // delivered > 0 happens only on a crash-replay that died
-            // between the survivor append and the stamp append below —
-            // re-appending would double those rows
-            if (delivered <= 0L)
-              StreamingDelivery.appendLedgered(survivors, database, table, batchId,
-                tableIsNew = delivered < 0L)
-            // stamp LAST: the batch is complete (and its input size
-            // recorded) even when it delivered zero survivors. Nothing
-            // writes the done table between the entry probe and here,
-            // so the entry value decides tableIsNew — no second
-            // metastore round-trip per batch.
-            StreamingDelivery.appendLedgered(
-              Seq(snap.count()).toDF(InputRowsCol).select(col(InputRowsCol)),
-              database, doneTable, batchId, tableIsNew = doneStamps < 0L)
-          } finally coded.unpersist(blocking = false)
-        } else {
-          // replayed batch: verify the pre-dedup input size recorded at
-          // completion (what the batch CONTRIBUTED depends on the history
-          // it first saw, so the delivered-row count proves nothing)
-          val recorded = spark.table(s"`$database`.`$doneTable`")
-            .filter(col(StreamingDelivery.BatchIdCol) === batchId)
-            .agg(max(col(InputRowsCol))).collect()(0).getLong(0)
-          val incoming = snap.count()
-          if (incoming != recorded)
+      val doneTable = table + DoneSuffix
+      val doneStamps =
+        StreamingDelivery.deliveredRowCount(spark, database, doneTable, batchId)
+      val delivered =
+        StreamingDelivery.deliveredRowCount(spark, database, table, batchId)
+      if (doneStamps <= 0L) StreamingDelivery.materialized(Embeddings.bandCodes(
+          snap.select(col("vec_id"), col("v")), bands, planes)) { coded =>
+        val codesTable = table + CodesSuffix
+        val codesQualified = s"`$database`.`$codesTable`"
+        val codesDelivered =
+          StreamingDelivery.deliveredRowCount(spark, database, codesTable, batchId)
+        // a pre-existing codes table must be OURS (the band/code
+        // schema is the dedup state) — fail clearly, not per-column
+        if (codesDelivered >= 0L) {
+          val cols = spark.table(codesQualified).columns.toSet
+          if (!Set("vec_id", "band", "code", "v", "nrm").subsetOf(cols))
             throw new IllegalStateException(
-              s"$qualified batch $batchId completed from $recorded input rows " +
-                s"but the replayed batch carries $incoming — checkpoint and ledger " +
-                "disagree (checkpoint reset over a changed source?)")
+              s"$codesQualified exists but is not a semantic-dedup codes table " +
+                "— deliver to a fresh table")
         }
-      } finally snap.unpersist(blocking = false)
-  }
+        val history =
+          if (codesDelivered < 0L) coded.limit(0)
+          else spark.table(codesQualified)
+            .filter(col(StreamingDelivery.BatchIdCol) =!= batchId)
+            .select("vec_id", "band", "code", "v", "nrm")
+        // the kernel's ida < idb predicate NEVER fires on equal ids,
+        // so a duplicate vec_id — within the batch or re-sent after
+        // an earlier batch — would sail through both probes and
+        // deliver twice. The monotone-id contract the parity claim
+        // rests on makes both illegal; enforce it loudly (the
+        // StreamingUpsert duplicate-key discipline) instead of
+        // corrupting the table: one aggregate over the batch, one
+        // single-column max over the pruned history ledger.
+        val stats = snap.agg(count(lit(1)), countDistinct(col("vec_id")),
+          min(col("vec_id"))).collect()(0)
+        if (stats.getLong(0) != stats.getLong(1))
+          throw new IllegalStateException(
+            s"batch $batchId carries duplicate vec_ids " +
+              s"(${stats.getLong(0)} rows, ${stats.getLong(1)} distinct) — " +
+              "semantic dedup keys on vec_id; dedup the feed first")
+        if (codesDelivered >= 0L && stats.getLong(0) > 0L) {
+          val maxSeen = history.agg(max(col("vec_id"))).collect()(0)
+          if (!maxSeen.isNullAt(0) && stats.getLong(2) <= maxSeen.getLong(0))
+            throw new IllegalStateException(
+              s"batch $batchId min vec_id ${stats.getLong(2)} does not exceed " +
+                s"the history's max ${maxSeen.getLong(0)} — ids must be " +
+                "monotone across batches (a re-sent id would deliver twice " +
+                "and the batch-parity contract assumes ascending ingest)")
+        }
+        // earlier = resident history ∪ this batch's own rows; the
+        // ida < idb predicate inside the kernel orders the batch
+        // internally AND (under monotone ids) places history first
+        val droppers = Embeddings.greedyDroppers(
+          coded, history.unionByName(coded), threshold, broadcastProbe = true)
+        val survivors = snap.join(droppers, Seq("vec_id"), "left_anti")
+          .withColumn(InputRowsCol, lit(snap.count()))
+        if (codesDelivered <= 0L)
+          StreamingDelivery.appendLedgered(coded, database, codesTable, batchId,
+            tableIsNew = codesDelivered < 0L)
+        // delivered > 0 happens only on a crash-replay that died
+        // between the survivor append and the stamp append below —
+        // re-appending would double those rows
+        if (delivered <= 0L)
+          StreamingDelivery.appendLedgered(survivors, database, table, batchId,
+            tableIsNew = delivered < 0L)
+        // stamp LAST: the batch is complete (and its input size
+        // recorded) even when it delivered zero survivors. Nothing
+        // writes the done table between the entry probe and here,
+        // so the entry value decides tableIsNew — no second
+        // metastore round-trip per batch.
+        StreamingDelivery.appendLedgered(
+          Seq(snap.count()).toDF(InputRowsCol).select(col(InputRowsCol)),
+          database, doneTable, batchId, tableIsNew = doneStamps < 0L)
+      } else {
+        // replayed batch: verify the pre-dedup input size recorded at
+        // completion (what the batch CONTRIBUTED depends on the history
+        // it first saw, so the delivered-row count proves nothing)
+        StreamingDelivery.requireReplayRows(snap, database, table, batchId,
+          StreamingDelivery.recordedInputRows(spark, database, doneTable, batchId))
+      }
+    }
 
   /** Wire a streaming embeddings frame `(vec_id, v)` into a
     * semantically-deduped warehouse table. */
@@ -170,10 +153,6 @@ object StreamingSemanticDedup {
       database: String = WarehouseSink.DefaultDatabase,
       threshold: Double = 0.45, bands: Int = 4, planes: Int = 4,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(dedupBatch(table, database, threshold, bands, planes))
-      .start()
+    StreamingDelivery.start(vectors, checkpointDir, trigger)(
+      dedupBatch(table, database, threshold, bands, planes))
 }

@@ -55,37 +55,7 @@ object PersistedIndex {
       force: Boolean, aux: Seq[(String, () => DataFrame)],
       auxPath: Set[String] = Set.empty)(
       compute: => DataFrame): String = {
-    import org.apache.spark.sql.functions.col
-    // The catch below is the "artifact absent or unreadable-as-ours"
-    // decision, and a stale verdict is DESTRUCTIVE (the rebuild clears
-    // and rewrites the directory) — so only the expected miss shapes may
-    // map to stale: a missing/empty _meta (AnalysisException covers both
-    // the absent path and a column-set mismatch from an older protocol
-    // version; head() on a zero-row _meta raises NoSuchElementException)
-    // or a vanished file between listing and read. A transient
-    // filesystem fault (IOException from fs.exists or the read) must
-    // PROPAGATE: rebuilding on a hiccup would be indistinguishable from
-    // a real invalidation in logs and re-pays the full build for nothing.
-    val fresh = !force && (try {
-      val stored: Row = s.read.parquet(location(s, table, "_meta"))
-        .select(meta.map(m => col(m._1)): _*).head()
-      val fs = new org.apache.hadoop.fs.Path(location(s, table, "_meta"))
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      meta.indices.forall(i => stored.getLong(i) == meta(i)._2) &&
-        ("_pairs" +: aux.map(_._1)).forall(sfx =>
-          fs.exists(new org.apache.hadoop.fs.Path(location(s, table, sfx))))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => false
-      case _: java.util.NoSuchElementException => false
-      case _: java.io.FileNotFoundException => false
-      // the vanished-between-listing-and-read race surfaces driver-side
-      // as FileNotFoundException but EXECUTOR-side wrapped in a
-      // SparkException — walk the cause chain so that shape also maps
-      // to stale, while other wrapped faults still propagate
-      case e: org.apache.spark.SparkException
-          if Iterator.iterate(e.getCause)(_.getCause).takeWhile(_ != null)
-            .take(8).exists(_.isInstanceOf[java.io.FileNotFoundException]) => false
-    })
+    val fresh = !force && isFresh(s, Database, table, meta, "_pairs" +: aux.map(_._1))
     if (!fresh) {
       CoLocated.clearTable(s, Database, s"${table}_meta")
       CoLocated.replaceTable(compute, Database, s"${table}_pairs")
@@ -105,6 +75,45 @@ object PersistedIndex {
       stamp(s, table, meta)
     }
     location(s, table, "_pairs")
+  }
+
+  /** The freshness probe of a persisted index in `database`: true when
+    * the `{table}_meta` row at its warehouse LOCATION equals `meta`
+    * column-for-column and every `{table}{suffix}` artifact directory
+    * exists. All three index builds ([[ensureWith]],
+    * [[graft.operators.Embeddings.buildPqIndex]],
+    * [[graft.operators.Embeddings.buildBm25Index]]) decide here.
+    *
+    * A stale verdict is DESTRUCTIVE (the rebuild clears and rewrites the
+    * directory), so only the expected miss shapes map to stale: a
+    * missing/empty `_meta` (AnalysisException covers both the absent
+    * path and a column-set mismatch from an older protocol version;
+    * head() on a zero-row `_meta` raises NoSuchElementException) or a
+    * vanished file between listing and read. Any other fault — a
+    * transient filesystem error, a corrupt `_meta` footer — PROPAGATES:
+    * rebuilding on it would be indistinguishable from a real
+    * invalidation in logs and re-pays the full build for nothing. */
+  def isFresh(s: SparkSession, database: String, table: String,
+      meta: Seq[(String, Long)], artifacts: Seq[String]): Boolean = {
+    def path(sfx: String) = CoLocated.tableLocation(s, database, table + sfx)
+    try {
+      val stored: Row = s.read.parquet(path("_meta").toString)
+        .select(meta.map(m => org.apache.spark.sql.functions.col(m._1)): _*).head()
+      val fs = path("_meta").getFileSystem(s.sparkContext.hadoopConfiguration)
+      meta.indices.forall(i => stored.getLong(i) == meta(i)._2) &&
+        artifacts.forall(sfx => fs.exists(path(sfx)))
+    } catch {
+      case _: org.apache.spark.sql.AnalysisException => false
+      case _: java.util.NoSuchElementException => false
+      case _: java.io.FileNotFoundException => false
+      // the vanished-between-listing-and-read race surfaces driver-side
+      // as FileNotFoundException but EXECUTOR-side wrapped in a
+      // SparkException — walk the cause chain so that shape also maps
+      // to stale, while other wrapped faults still propagate
+      case e: org.apache.spark.SparkException
+          if Iterator.iterate(e.getCause)(_.getCause).takeWhile(_ != null)
+            .take(8).exists(_.isInstanceOf[java.io.FileNotFoundException]) => false
+    }
   }
 
   /** Physically invalidate `_meta` BEFORE an append mutates the

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, max}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming → warehouse delivery: the streaming analog of the
@@ -23,11 +23,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the difference. The delivered table is partitioned by `_batch_id`, so
   * the ledger probe prunes to a directory listing rather than a table
   * scan at any size.
+  *
+  * This object is also the one micro-batch envelope of every
+  * `foreachBatch` sink in the repo ([[StreamingUpsert]],
+  * [[StreamingScd2]], [[graft.pipeline.StreamingCuration]],
+  * [[graft.pipeline.StreamingSemanticDedup]]): [[envelope]] (identifier
+  * checks, one-shot batch snapshot, database bootstrap, release),
+  * [[materialized]], [[requireReplayRows]] and [[start]]. The sinks keep
+  * only their own dedup or merge logic.
   */
 object StreamingDelivery {
 
   /** Column stamped onto every delivered row; doubles as the commit ledger. */
   val BatchIdCol = "_batch_id"
+
+  /** Pre-dedup batch size, stamped at delivery by the sinks whose
+    * delivered rows are a filtered subset of the batch; the replay
+    * check's counterpart of the `_batch_id` ledger. */
+  val InputRowsCol = "_input_rows"
 
   /** Rows already delivered for `batchId`, or -1 if the table does not
     * exist yet. Fails fast on a foreign table without the ledger column
@@ -63,57 +76,87 @@ object StreamingDelivery {
       .saveAsTable(s"`$database`.`$table`")
   }
 
-  /** The `foreachBatch` function: batchId-idempotent append into
-    * `database`.`table` (auto-created, like the reference's dataset
-    * bootstrap — `bigquery.py:13-16`). */
-  def warehouseBatch(table: String,
-      database: String = WarehouseSink.DefaultDatabase): (DataFrame, Long) => Unit = {
+  /** The micro-batch envelope: a `foreachBatch` function that checks
+    * both identifiers, runs `precheck` on the raw batch (schema checks
+    * that must fail before any work), snapshots the batch, bootstraps the
+    * database (like the reference's dataset bootstrap —
+    * `bigquery.py:13-16`) and hands the snapshot to `body`.
+    *
+    * The snapshot executes the micro-batch plan EXACTLY ONCE, up front:
+    * a stateful upstream (dedup, windowed agg) must commit its state
+    * stores under the streaming harness every batch — a skipped batch
+    * that never touches `batch`, or a `.write` that re-plans it
+    * batch-side, both trip Spark's state-commit validation. The snapshot
+    * is micro-batch sized (bounded by the trigger) and spills if needed. */
+  private[graft] def envelope(database: String, table: String,
+      precheck: DataFrame => Unit = _ => ())(
+      body: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     (batch, batchId) =>
       WarehouseSink.requireIdent(database, "database")
       WarehouseSink.requireIdent(table, "destination table")
-      val spark = batch.sparkSession
-      // Execute the micro-batch plan EXACTLY ONCE, up front: a stateful
-      // upstream (dedup, windowed agg) must commit its state stores under
-      // the streaming harness every batch — a skipped batch that never
-      // touches `batch`, or a `.write` that re-plans it batch-side, both
-      // trip Spark's state-commit validation. The snapshot is micro-batch
-      // sized (bounded by the trigger), spills if needed, and the append
-      // below reads it instead of re-executing the plan.
-      val snap = batch.localCheckpoint()
-      try {
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
-        val qualified = s"`$database`.`$table`"
-        val deliveredRows = deliveredRowCount(spark, database, table, batchId)
-        if (deliveredRows < 0L || deliveredRows == 0L)
-          appendLedgered(snap, database, table, batchId, tableIsNew = deliveredRows < 0L)
-        else {
-          // batchId matching is only sound while batch boundaries
-          // reproduce — true for crash-replay under ONE checkpoint
-          // lineage (the WAL pins each batch's offsets). After a
-          // checkpoint reset over a source that grew or re-batched,
-          // "same id" no longer means "same rows": skipping silently
-          // would LOSE the difference, so verify the one cheap
-          // invariant we hold (row count) and fail loudly on mismatch.
-          val incoming = snap.count()
-          if (incoming != deliveredRows)
-            throw new IllegalStateException(
-              s"$qualified already holds $deliveredRows rows for batch $batchId " +
-                s"but the replayed batch carries $incoming — the checkpoint and the " +
-                "delivery ledger disagree (checkpoint reset over a changed source?). " +
-                "Deliver to a fresh table or restore the original checkpoint.")
-        }
-      } finally snap.unpersist(blocking = false)
+      precheck(batch)
+      materialized(batch) { snap =>
+        snap.sparkSession.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
+        body(snap, batchId)
+      }
   }
+
+  /** Run `f` over a local checkpoint of `df` (its plan executes once;
+    * every read of the snapshot reuses the result) and release the
+    * snapshot however `f` ends. */
+  private[graft] def materialized[T](df: DataFrame)(f: DataFrame => T): T = {
+    val snap = df.localCheckpoint()
+    try f(snap) finally snap.unpersist(blocking = false)
+  }
+
+  /** The replay check. batchId matching is only sound while batch
+    * boundaries reproduce — true for crash-replay under ONE checkpoint
+    * lineage (the WAL pins each batch's offsets). After a checkpoint
+    * reset over a source that grew or re-batched, "same id" no longer
+    * means "same rows": skipping silently would LOSE the difference, so
+    * compare the replayed batch's row count with the `recorded` one and
+    * fail loudly on a mismatch. */
+  private[graft] def requireReplayRows(snap: DataFrame, database: String,
+      table: String, batchId: Long, recorded: Long): Unit = {
+    val incoming = snap.count()
+    if (incoming != recorded)
+      throw new IllegalStateException(
+        s"`$database`.`$table` batch $batchId was delivered from $recorded input " +
+          s"rows but the replayed batch carries $incoming — the delivery ledger " +
+          "disagrees with the checkpoint (checkpoint and ledger diverge after a " +
+          "checkpoint reset over a changed source). Deliver to a fresh table or " +
+          "restore the original checkpoint.")
+  }
+
+  /** The [[InputRowsCol]] stamp `database`.`table` recorded for `batchId`. */
+  private[graft] def recordedInputRows(spark: org.apache.spark.sql.SparkSession,
+      database: String, table: String, batchId: Long): Long =
+    spark.table(s"`$database`.`$table`")
+      .filter(col(BatchIdCol) === batchId)
+      .agg(max(col(InputRowsCol))).collect()(0).getLong(0)
+
+  /** Start `df` streaming into the `foreachBatch` function `fn`. */
+  private[graft] def start(df: DataFrame, checkpointDir: String, trigger: Trigger,
+      outputMode: String = "append")(fn: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream.outputMode(outputMode).option("checkpointLocation", checkpointDir)
+      .trigger(trigger).foreachBatch(fn).start()
+
+  /** The `foreachBatch` function: batchId-idempotent append into
+    * `database`.`table` (auto-created). A replayed batch appends
+    * nothing; it must carry the rows it delivered. */
+  def warehouseBatch(table: String,
+      database: String = WarehouseSink.DefaultDatabase): (DataFrame, Long) => Unit =
+    envelope(database, table) { (snap, batchId) =>
+      val deliveredRows = deliveredRowCount(snap.sparkSession, database, table, batchId)
+      if (deliveredRows <= 0L)
+        appendLedgered(snap, database, table, batchId, tableIsNew = deliveredRows < 0L)
+      else requireReplayRows(snap, database, table, batchId, deliveredRows)
+    }
 
   /** Wire a (transformed) streaming frame into the warehouse. Callers
     * compose: `startToWarehouse(EventStreams.dedupEvents(src), ...)`. */
   def startToWarehouse(df: DataFrame, table: String, checkpointDir: String,
       database: String = WarehouseSink.DefaultDatabase,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(warehouseBatch(table, database))
-      .start()
+    start(df, checkpointDir, trigger)(warehouseBatch(table, database))
 }

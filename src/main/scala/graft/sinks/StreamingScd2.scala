@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -24,9 +24,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the dimension slice never shuffles. The bucket count pins in a
   * `{table}_scd2_meta` table on first delivery (a writer with a
   * different count would split a key's history across buckets — fail
-  * loudly, the upsert sink's discipline; the distinct meta name also
-  * stops an SCD2 writer from silently treating a LAST-WRITER-WINS table
-  * as history, and vice versa).
+  * loudly, the upsert sink's discipline). The two sinks' distinct meta
+  * names (`{table}_scd2_meta`, `{table}_upsert_meta`) also keep an SCD2
+  * writer from treating a LAST-WRITER-WINS table as history, and vice
+  * versa: [[KeyBuckets.delivered]], the first-delivery guard both sinks
+  * share, refuses a table the other kind's meta pins.
   *
   * Exactly-once without a ledger: replay converges because SCD2's
   * change detection is the idempotency guard. Re-applying a delivered
@@ -45,23 +47,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingScd2 {
 
-  private def qualified(database: String, table: String) = s"`$database`.`$table`"
-
-  private def bucketOf(keys: Seq[String], numBuckets: Int) =
-    pmod(xxhash64(keys.map(col): _*), lit(numBuckets.toLong))
-
-  private def readMetaBuckets(spark: SparkSession, database: String,
-      table: String): Option[Int] =
-    if (!spark.catalog.tableExists(s"$database.${table}_scd2_meta")) None
-    else Some(spark.table(qualified(database, s"${table}_scd2_meta"))
-      .select("num_buckets").head().getInt(0))
-
-  private def refreshAll(spark: SparkSession, database: String, table: String): Unit = {
-    spark.catalog.refreshTable(s"$database.$table")
-    SparkSession.getDefaultSession.filter(_ ne spark)
-      .foreach(_.catalog.refreshTable(s"$database.$table"))
-  }
-
   /** The `foreachBatch` function. `keys` identify a dimension row,
     * `attrs` are the tracked attributes (a change in any opens a new
     * version), `effectiveCol` carries each change's effective time, and
@@ -77,9 +62,7 @@ object StreamingScd2 {
     require(keys.nonEmpty, "scd2 delivery requires at least one key column")
     require(attrs.nonEmpty, "scd2 delivery requires at least one tracked attribute")
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    (batch, _) =>
-      WarehouseSink.requireIdent(database, "database")
-      WarehouseSink.requireIdent(table, "destination table")
+    StreamingDelivery.envelope(database, table, precheck = batch => {
       val missing = (keys ++ attrs ++ Seq(effectiveCol) ++ tombstoneCol)
         .filterNot(batch.columns.contains)
       require(missing.isEmpty, s"batch lacks columns: ${missing.mkString(",")}")
@@ -87,94 +70,47 @@ object StreamingScd2 {
         s"batch already carries reserved column ${StreamingUpsert.BucketCol}")
       require(!Seq(validFrom, validTo).exists(batch.columns.contains),
         s"batch must not carry $validFrom/$validTo — the sink owns the history columns")
-      val spark = batch.sparkSession
-      // one-shot batch execution (warehouseBatch's stateful-upstream
-      // discipline): the plan must run exactly once under the harness
-      val snap = batch.localCheckpoint()
-      try {
-        // version granularity = the micro-batch: collapse to the latest
-        // change per key (deterministic total order — content tiebreak)
-        val latest = StreamingUpsert.latestPerKey(snap, keys, Seq(effectiveCol))
-        val tomb = tombstoneCol.map(col(_) <=> true).getOrElse(lit(false))
-        val ups = latest.filter(!tomb)
-          .select((keys ++ attrs :+ effectiveCol).map(col): _*)
-        val dels = latest.filter(tomb)
-          .select(keys.map(col) :+ col(effectiveCol).as("_del_eff"): _*)
-        if (latest.isEmpty) ()
-        else {
-          spark.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
-          val q = qualified(database, table)
-          readMetaBuckets(spark, database, table) match {
-            case None =>
-              // first delivery: every non-tombstone update opens a row
-              // (tombstones target keys that cannot exist yet — dropped).
-              // A pre-existing table without our meta is foreign unless
-              // it carries the _kb layout (= the crash-window
-              // half-delivery); refuse to destroy user data otherwise.
-              if (spark.catalog.tableExists(s"$database.$table") &&
-                  !spark.catalog.listColumns(s"$database.$table").collect()
-                    .exists(c => c.isPartition && c.name == StreamingUpsert.BucketCol))
-                throw new IllegalStateException(
-                  s"$q exists but is not an scd2-delivered table (no " +
-                    s"${StreamingUpsert.BucketCol} partition layout, no " +
-                    s"{table}_scd2_meta) — refusing to overwrite it; deliver " +
-                    "to a fresh table")
-              val effType = ups.schema(effectiveCol).dataType
-              ups.select(
-                  (keys ++ attrs).map(col) :+
-                    col(effectiveCol).as(validFrom) :+
-                    lit(null).cast(effType).as(validTo): _*)
-                .withColumn(StreamingUpsert.BucketCol, bucketOf(keys, numBuckets))
-                .write.mode(SaveMode.Overwrite).format("parquet")
-                .partitionBy(StreamingUpsert.BucketCol).saveAsTable(q)
-              import spark.implicits._
-              Seq(numBuckets).toDF("num_buckets")
-                .write.mode(SaveMode.Overwrite).format("parquet")
-                .saveAsTable(qualified(database, s"${table}_scd2_meta"))
-            case Some(stored) =>
-              if (stored != numBuckets)
-                throw new IllegalStateException(
-                  s"$q was delivered with numBuckets=$stored but this writer " +
-                    s"uses $numBuckets — a key's history would split across " +
-                    "buckets; use the stored bucket count")
-              val touched = latest.select(bucketOf(keys, numBuckets)
-                  .as(StreamingUpsert.BucketCol))
-                .distinct().collect().map(_.getLong(0))
-              val existing = spark.table(q)
-                .filter(col(StreamingUpsert.BucketCol).isin(touched: _*))
-                .drop(StreamingUpsert.BucketCol)
-              val applied = graft.operators.Scd2(existing, ups, keys, attrs,
-                effectiveCol, validFrom, validTo)
-              // tombstones: close the key's open row at the delete's
-              // effective time, no successor. Replay-safe: once closed,
-              // there is no open row left to close.
-              val withDel = applied
-                .join(broadcast(dels), keys, "left_outer")
-                .withColumn(validTo,
-                  when(col("_del_eff").isNotNull && col(validTo).isNull,
-                    col("_del_eff")).otherwise(col(validTo)))
-                .drop("_del_eff")
-              // materialize BEFORE overwriting what we read; dynamic
-              // overwrite then replaces only the touched bucket dirs.
-              // SCD2 never drops rows, so no bucket can empty out (no
-              // stale-dir cleanup needed, unlike the upsert sink).
-              val out = withDel
-                .withColumn(StreamingUpsert.BucketCol, bucketOf(keys, numBuckets))
-                .localCheckpoint()
-              try {
-                val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try out.select(spark.table(q).columns.map(col): _*)
-                  .write.mode(SaveMode.Overwrite).insertInto(q)
-                finally prev match {
-                  case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-                  case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-                }
-                refreshAll(spark, database, table)
-              } finally out.unpersist(blocking = false)
-          }
+    }) { (snap, _) =>
+      // version granularity = the micro-batch: collapse to the latest
+      // change per key (deterministic total order — content tiebreak)
+      val latest = StreamingUpsert.latestPerKey(snap, keys, Seq(effectiveCol))
+      val tomb = tombstoneCol.map(col(_) <=> true).getOrElse(lit(false))
+      val ups = latest.filter(!tomb)
+        .select((keys ++ attrs :+ effectiveCol).map(col): _*)
+      val dels = latest.filter(tomb)
+        .select(keys.map(col) :+ col(effectiveCol).as("_del_eff"): _*)
+      if (!latest.isEmpty) {
+        val layout = new KeyBuckets(snap.sparkSession, KeyBuckets.Scd2, database, table)
+        if (!layout.delivered(numBuckets)) {
+          // first delivery: every non-tombstone update opens a row
+          // (tombstones target keys that cannot exist yet — dropped)
+          val effType = ups.schema(effectiveCol).dataType
+          layout.create(ups.select(
+              (keys ++ attrs).map(col) :+
+                col(effectiveCol).as(validFrom) :+
+                lit(null).cast(effType).as(validTo): _*)
+            .withColumn(StreamingUpsert.BucketCol, KeyBuckets.of(keys, numBuckets)),
+            numBuckets)
+        } else {
+          val touched = layout.touched(latest, keys, numBuckets)
+          val applied = graft.operators.Scd2(
+            layout.read(touched).drop(StreamingUpsert.BucketCol), ups, keys, attrs,
+            effectiveCol, validFrom, validTo)
+          // tombstones: close the key's open row at the delete's
+          // effective time, no successor. Replay-safe: once closed,
+          // there is no open row left to close. SCD2 never drops rows,
+          // so no bucket can empty out (no stale-dir cleanup, unlike the
+          // upsert sink).
+          layout.swap(applied
+            .join(broadcast(dels), keys, "left_outer")
+            .withColumn(validTo,
+              when(col("_del_eff").isNotNull && col(validTo).isNull,
+                col("_del_eff")).otherwise(col(validTo)))
+            .drop("_del_eff")
+            .withColumn(StreamingUpsert.BucketCol, KeyBuckets.of(keys, numBuckets)))
         }
-      } finally snap.unpersist(blocking = false)
+      }
+    }
   }
 
   /** Wire a streaming CDC frame into the warehouse as SCD2 history. */
@@ -183,11 +119,6 @@ object StreamingScd2 {
       numBuckets: Int = 64, tombstoneCol: Option[String] = None,
       database: String = WarehouseSink.DefaultDatabase,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(scd2Batch(table, keys, attrs, effectiveCol, numBuckets,
-        tombstoneCol, database))
-      .start()
+    StreamingDelivery.start(df, checkpointDir, trigger)(
+      scd2Batch(table, keys, attrs, effectiveCol, numBuckets, tombstoneCol, database))
 }

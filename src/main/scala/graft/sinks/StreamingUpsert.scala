@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -34,20 +34,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * guarantee is the stream's: upserts across batches apply in batch
   * order; within a batch, `orderBy` picks the surviving version per key.
   *
+  * The bucket layout is [[KeyBuckets]], shared with [[StreamingScd2]]:
   * `numBuckets` is pinned in a `{table}_upsert_meta` parquet table on
-  * first delivery (the PQ-index meta discipline): a later writer with a
-  * different bucket count would scatter the same key across two buckets
-  * and silently duplicate it — the guard fails loudly instead.
+  * first delivery (the PQ-index meta discipline), since a later writer
+  * with a different bucket count would scatter the same key across two
+  * buckets and silently duplicate it; the same guard refuses a foreign
+  * table and an SCD2-delivered one.
   */
 object StreamingUpsert {
 
   /** Key-hash bucket partition column stamped on the delivered table. */
-  val BucketCol = "_kb"
-
-  private def qualified(database: String, table: String) = s"`$database`.`$table`"
-
-  private def bucketOf(keys: Seq[String], numBuckets: Int) =
-    pmod(xxhash64(keys.map(col): _*), lit(numBuckets.toLong))
+  val BucketCol: String = KeyBuckets.Col
 
   /** Reduce a batch to ONE row per key. With `orderBy` columns the
     * greatest (orderBy, then keys — callers should make orderBy total
@@ -82,12 +79,6 @@ object StreamingUpsert {
       batch
     }
 
-  private def readMetaBuckets(spark: SparkSession, database: String,
-      table: String): Option[Int] =
-    if (!spark.catalog.tableExists(s"$database.${table}_upsert_meta")) None
-    else Some(spark.table(qualified(database, s"${table}_upsert_meta"))
-      .select("num_buckets").head().getInt(0))
-
   /** The `foreachBatch` function. `keys` identify a row; `orderBy`
     * orders versions WITHIN a batch (latest wins); rows whose
     * `tombstoneCol` is true delete their key.
@@ -109,119 +100,46 @@ object StreamingUpsert {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     require(!strictTombstones || tombstoneCol.nonEmpty,
       "strictTombstones requires a tombstoneCol")
-    (batch, _) =>
-      WarehouseSink.requireIdent(database, "database")
-      WarehouseSink.requireIdent(table, "destination table")
+    StreamingDelivery.envelope(database, table, precheck = batch => {
       val missing = (keys ++ orderBy ++ tombstoneCol).filterNot(batch.columns.contains)
       require(missing.isEmpty, s"batch lacks columns: ${missing.mkString(",")}")
       require(!batch.columns.contains(BucketCol),
         s"batch already carries reserved column $BucketCol")
-      val spark = batch.sparkSession
-      // one-shot batch execution, warehouseBatch's stateful-upstream
-      // discipline: the plan must run exactly once under the harness
-      val snap = batch.localCheckpoint()
-      try {
-        for (tc <- tombstoneCol if strictTombstones) {
-          val bad = snap.filter(col(tc).isNull)
-            .select(keys.map(col): _*).limit(1).collect()
-          if (bad.nonEmpty)
-            throw new IllegalStateException(
-              s"batch carries a NULL $tc tombstone value (key " +
-                s"${bad(0).toSeq.mkString(",")}) — strict tombstone mode treats " +
-                "a NULL delete flag as a malformed CDC row; clean the feed or " +
-                "disable strictTombstones to default NULL to keep")
-        }
-        val reduced = latestPerKey(snap, keys, orderBy)
-        // NULL-safe: a NULL tombstone means "not a delete". A plain
-        // `=== true` predicate is NULL for such rows, so BOTH filters
-        // below would drop them — the row would neither upsert nor
-        // delete (silent loss).
-        val tomb = tombstoneCol.map(col(_) <=> true).getOrElse(lit(false))
-        val upserts = reduced.filter(!tomb).drop(tombstoneCol.toSeq: _*)
-          .withColumn(BucketCol, bucketOf(keys, numBuckets))
-        val deletes = reduced.filter(tomb)
-          .select(keys.map(col): _*)
-        if (reduced.isEmpty) ()
+    }) { (snap, _) =>
+      for (tc <- tombstoneCol if strictTombstones) {
+        val bad = snap.filter(col(tc).isNull)
+          .select(keys.map(col): _*).limit(1).collect()
+        if (bad.nonEmpty)
+          throw new IllegalStateException(
+            s"batch carries a NULL $tc tombstone value (key " +
+              s"${bad(0).toSeq.mkString(",")}) — strict tombstone mode treats " +
+              "a NULL delete flag as a malformed CDC row; clean the feed or " +
+              "disable strictTombstones to default NULL to keep")
+      }
+      val reduced = latestPerKey(snap, keys, orderBy)
+      // NULL-safe: a NULL tombstone means "not a delete". A plain
+      // `=== true` predicate is NULL for such rows, so BOTH filters
+      // below would drop them — the row would neither upsert nor
+      // delete (silent loss).
+      val tomb = tombstoneCol.map(col(_) <=> true).getOrElse(lit(false))
+      val upserts = reduced.filter(!tomb).drop(tombstoneCol.toSeq: _*)
+        .withColumn(BucketCol, KeyBuckets.of(keys, numBuckets))
+      val deletes = reduced.filter(tomb)
+        .select(keys.map(col): _*)
+      if (!reduced.isEmpty) {
+        val layout = new KeyBuckets(snap.sparkSession, KeyBuckets.Upsert, database, table)
+        if (!layout.delivered(numBuckets)) layout.create(upserts, numBuckets)
         else {
-          spark.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
-          val q = qualified(database, table)
-          readMetaBuckets(spark, database, table) match {
-            case None =>
-              // first delivery: create the bucketed table, then pin the
-              // layout. Meta is written AFTER the table — a crash between
-              // the two replays this batch against case Some below only
-              // if meta landed; against None (a clean re-create) if not.
-              // A PRE-EXISTING table without meta is only overwritable if
-              // it carries our _kb partition layout (i.e. it IS the
-              // crash-window half-delivery); anything else is a foreign
-              // table and silently destroying it would lose user data —
-              // fail loudly instead (StreamingDelivery's foreign-ledger
-              // discipline).
-              if (spark.catalog.tableExists(s"$database.$table") &&
-                  !spark.catalog.listColumns(s"$database.$table").collect()
-                    .exists(c => c.isPartition && c.name == BucketCol))
-                throw new IllegalStateException(
-                  s"$q exists but is not an upsert-delivered table (no " +
-                    s"$BucketCol partition layout, no {table}_upsert_meta) — " +
-                    "refusing to overwrite it; deliver to a fresh table")
-              upserts.write.mode(SaveMode.Overwrite).format("parquet")
-                .partitionBy(BucketCol).saveAsTable(q)
-              import spark.implicits._
-              Seq(numBuckets).toDF("num_buckets")
-                .write.mode(SaveMode.Overwrite).format("parquet")
-                .saveAsTable(qualified(database, s"${table}_upsert_meta"))
-            case Some(stored) =>
-              if (stored != numBuckets)
-                throw new IllegalStateException(
-                  s"$q was delivered with numBuckets=$stored but this writer " +
-                    s"uses $numBuckets — the same key would hash to two buckets; " +
-                    "use the stored bucket count")
-              // touched buckets: from the FULL reduced batch (upserts +
-              // deletes), a ≤numBuckets-sized driver list
-              val touched = reduced.select(bucketOf(keys, numBuckets).as(BucketCol))
-                .distinct().collect().map(_.getLong(0))
-              val existing = spark.table(q)
-                .filter(col(BucketCol).isin(touched: _*))
-              val merged = graft.operators.MergeUpsert(existing, upserts, keys)
-                .join(broadcast(deletes), keys, "left_anti")
-              // materialize BEFORE overwriting what we read; dynamic
-              // overwrite then replaces ONLY the touched bucket dirs
-              val out = merged.localCheckpoint()
-              try {
-                val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try out.select(spark.table(q).columns.map(col): _*)
-                  .write.mode(SaveMode.Overwrite).insertInto(q)
-                finally prev match {
-                  case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-                  case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-                }
-                // dynamic overwrite only replaces partitions PRESENT in
-                // `out`: a touched bucket whose every row was deleted has
-                // no output rows, so its stale dir would survive — drop
-                // those explicitly. Runs AFTER the insert (which cannot
-                // touch them); a crash in between replays the batch and
-                // re-derives the same empty set, so this converges.
-                val outBuckets = out.select(col(BucketCol)).distinct()
-                  .collect().map(_.getLong(0)).toSet
-                touched.filterNot(outBuckets.contains).foreach { b =>
-                  spark.sql(s"ALTER TABLE $q DROP IF EXISTS PARTITION ($BucketCol=$b)")
-                }
-                // a session holding a cached file listing for the
-                // relation whose partitions were just replaced would
-                // chase deleted part files on its next read. Refresh BOTH
-                // sessions in play: under foreachBatch `spark` is the
-                // stream's CLONED session, while the user reads the table
-                // through the original (default) one — refreshing only
-                // the clone leaves the user's cache stale (caught by the
-                // e2e spec).
-                spark.catalog.refreshTable(s"$database.$table")
-                SparkSession.getDefaultSession.filter(_ ne spark)
-                  .foreach(_.catalog.refreshTable(s"$database.$table"))
-              } finally out.unpersist(blocking = false)
-          }
+          // touched buckets: from the FULL reduced batch (upserts +
+          // deletes); a bucket whose every row was deleted empties out
+          val touched = layout.touched(reduced, keys, numBuckets)
+          layout.swap(
+            graft.operators.MergeUpsert(layout.read(touched), upserts, keys)
+              .join(broadcast(deletes), keys, "left_anti"),
+            dropEmpty = touched)
         }
-      } finally snap.unpersist(blocking = false)
+      }
+    }
   }
 
   /** Wire a streaming CDC frame into the warehouse with MERGE delivery. */
@@ -232,13 +150,9 @@ object StreamingUpsert {
       trigger: Trigger = Trigger.AvailableNow(),
       outputMode: String = "append",
       strictTombstones: Boolean = false): StreamingQuery =
-    df.writeStream
-      .outputMode(outputMode)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(upsertBatch(table, keys, orderBy, numBuckets, tombstoneCol,
-        database, strictTombstones))
-      .start()
+    StreamingDelivery.start(df, checkpointDir, trigger, outputMode)(
+      upsertBatch(table, keys, orderBy, numBuckets, tombstoneCol, database,
+        strictTombstones))
 
   /** Compact an upsert-delivered table's buckets: every micro-batch
     * rewrite leaves one file set per touched bucket, so after N batches
@@ -257,26 +171,12 @@ object StreamingUpsert {
       database: String = WarehouseSink.DefaultDatabase): Unit = {
     WarehouseSink.requireIdent(database, "database")
     WarehouseSink.requireIdent(table, "destination table")
-    val buckets = readMetaBuckets(spark, database, table).getOrElse(
+    val layout = new KeyBuckets(spark, KeyBuckets.Upsert, database, table)
+    val buckets = layout.pinned.getOrElse(
       throw new IllegalStateException(
-        s"${qualified(database, table)} has no {table}_upsert_meta — " +
+        s"${layout.qualified} has no {table}_upsert_meta — " +
           "only upsert-delivered tables can be compacted"))
-    val q = qualified(database, table)
-    val snap = spark.table(q)
-      .repartition(buckets, col(BucketCol)).localCheckpoint()
-    try {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try snap.select(spark.table(q).columns.map(col): _*)
-        .write.mode(SaveMode.Overwrite).insertInto(q)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      spark.catalog.refreshTable(s"$database.$table")
-      SparkSession.getDefaultSession.filter(_ ne spark)
-        .foreach(_.catalog.refreshTable(s"$database.$table"))
-    } finally snap.unpersist(blocking = false)
+    layout.swap(spark.table(layout.qualified).repartition(buckets, col(BucketCol)))
   }
 
   /** Incrementally-maintained MATERIALIZED VIEW: an UNWINDOWED streaming

@@ -478,6 +478,42 @@ class EmbeddingsSpec extends SparkSpec {
     Embeddings.buildBm25Index(docsText, "graft_index", table)
   }
 
+  test("a corrupt _meta footer propagates from buildPqIndex and buildBm25Index instead of rebuilding") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val docs = Seq((1L, "red fox"), (2L, "blue fox"), (3L, "red hen")).toDF("doc_id", "text")
+    Embeddings.buildPqIndex(vecs, "graft_index", "v15corrupt")
+    Embeddings.buildBm25Index(docs, "graft_index", "v19corrupt")
+    // overwrite every _meta part file with bytes that are not parquet
+    // (and drop the checksums, so the read reaches the footer)
+    def corruptMeta(table: String): Unit = {
+      val dir = new java.io.File(graft.plans.CoLocated
+        .tableLocation(spark, "graft_index", s"${table}_meta").toUri.getPath)
+      dir.listFiles().foreach { f =>
+        if (f.getName.endsWith(".crc")) f.delete()
+        else if (f.getName.startsWith("part-"))
+          java.nio.file.Files.write(f.toPath, "not a parquet footer".getBytes("UTF-8"))
+      }
+    }
+    for ((table, artifacts, build) <- Seq[(String, Seq[String], () => String)](
+        ("v15corrupt", Seq("_books", "_codes", "_coarse"),
+          () => Embeddings.buildPqIndex(vecs, "graft_index", "v15corrupt")),
+        ("v19corrupt", Seq("_postings"),
+          () => Embeddings.buildBm25Index(docs, "graft_index", "v19corrupt")))) {
+      corruptMeta(table)
+      val before = pqListFiles((artifacts :+ "_meta").map(table + _))
+      // a corrupt footer is not a miss: rebuilding would clear the index
+      // and retrain on a fault that may be transient
+      intercept[org.apache.spark.SparkException](build())
+      assert(pqListFiles((artifacts :+ "_meta").map(table + _)) == before,
+        s"$table: a corrupt _meta must not trigger a rebuild")
+      (artifacts :+ "_meta").foreach(sfx =>
+        graft.plans.CoLocated.clearTable(spark, "graft_index", table + sfx))
+    }
+  }
+
   test("appendToPqIndex: encodes with the persisted codebooks, adds files only, poisons the fingerprint") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -109,6 +109,44 @@ class StreamingScd2Spec extends SparkSpec {
     }
     assert(e2.getMessage.contains("refusing to overwrite"))
     assert(spark.table(s"`$db`.`foreign_dim`").count() == 1, "foreign table intact")
+    // an upsert-delivered table carries the same _kb layout but is
+    // pinned by {table}_upsert_meta: it is current state, not history
+    StreamingUpsert.upsertBatch("upsert_owned", Seq("k"), numBuckets = 4, database = db)(
+      Seq((1L, "x", 1.0), (2L, "y", 2.0)).toDF("k", "s", "v"), 0L)
+    val state = spark.table(s"`$db`.`upsert_owned`").collect().toSet
+    val e3 = intercept[IllegalStateException] {
+      StreamingScd2.scd2Batch("upsert_owned", Seq("k"), Seq("s", "v"), "eff",
+        numBuckets = 4, database = db)(Seq((1L, "a", 1.0, 100L)).toDF("k", "s", "v", "eff"), 0L)
+    }
+    assert(e3.getMessage.contains("refusing to overwrite"))
+    assert(spark.table(s"`$db`.`upsert_owned`").collect().toSet == state,
+      "the upsert table must survive the refused SCD2 delivery")
+    // and the upsert compactor refuses an SCD2 history
+    val hist = history(t)
+    val e4 = intercept[IllegalStateException](StreamingUpsert.compact(spark, t, database = db))
+    assert(e4.getMessage.contains("upsert_meta"))
+    assert(history(t) == hist)
+  }
+
+  test("a crash between the table write and the meta pin replays to a clean delivery") {
+    val b0 = Seq((1L, "a", 1.0, 100L), (2L, "b", 2.0, 100L)).toDF("k", "s", "v", "eff")
+    def fn(t: String) = StreamingScd2.scd2Batch(t, Seq("k"), Seq("s", "v"), "eff",
+      numBuckets = 4, database = db)
+    def layout(t: String) = spark.table(s"`$db`.`$t`")
+      .select("k", "s", "v", "valid_from", "valid_to", StreamingUpsert.BucketCol)
+      .collect().toSet
+    fn("dim_crash_clean")(b0, 0L)
+    fn("dim_crash")(b0, 0L)
+    // what a crash after the table write and before the meta write leaves
+    spark.sql(s"DROP TABLE `$db`.`dim_crash_scd2_meta`")
+    fn("dim_crash")(b0, 0L) // the replay of batch 0
+    assert(layout("dim_crash") == layout("dim_crash_clean"))
+    assert(spark.table(s"`$db`.`dim_crash_scd2_meta`").collect().map(_.getInt(0)).toSeq ==
+      Seq(4), "the replay must pin the layout again")
+    val b1 = Seq((1L, "a2", 1.5, 200L)).toDF("k", "s", "v", "eff")
+    fn("dim_crash")(b1, 1L)
+    fn("dim_crash_clean")(b1, 1L)
+    assert(layout("dim_crash") == layout("dim_crash_clean"))
   }
 
   test("end-to-end: a file CDC stream builds the same history as the batch fold") {

@@ -196,6 +196,42 @@ class StreamingUpsertSpec extends SparkSpec {
     // the foreign data is untouched
     assert(spark.table(s"`$db`.`foreign_tbl`").collect()
       .map(_.getString(1)).toSeq == Seq("precious"))
+    // an SCD2-delivered history carries the same _kb layout but is
+    // pinned by {table}_scd2_meta: an upsert over it would keep one row
+    // per key and drop the closed versions
+    val scd = StreamingScd2.scd2Batch("scd2_owned", Seq("k"), Seq("s", "v"), "eff",
+      numBuckets = 4, database = db)
+    Seq(100L, 200L, 300L).zipWithIndex.foreach { case (eff, b) =>
+      scd(Seq((1L, s"v$b", b.toDouble, eff)).toDF("k", "s", "v", "eff"), b.toLong)
+    }
+    val history = spark.table(s"`$db`.`scd2_owned`").collect().toSet
+    assert(history.size == 3)
+    val e2 = intercept[IllegalStateException](
+      StreamingUpsert.upsertBatch("scd2_owned", Seq("k"), numBuckets = 4, database = db)(
+        Seq((1L, "z", 9.0)).toDF("k", "s", "v"), 0L))
+    assert(e2.getMessage.contains("refusing to overwrite"))
+    assert(spark.table(s"`$db`.`scd2_owned`").collect().toSet == history,
+      "the SCD2 history must survive the refused upsert")
+  }
+
+  test("a crash between the table write and the meta pin replays to a clean delivery") {
+    val b0 = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).toDF("k", "s", "v")
+    def fn(t: String) = StreamingUpsert.upsertBatch(t, Seq("k"), numBuckets = 4, database = db)
+    def layout(t: String) = spark.table(s"`$db`.`$t`")
+      .select("k", "s", "v", StreamingUpsert.BucketCol).collect().toSet
+    fn("cdc_crash_clean")(b0, 0L)
+    fn("cdc_crash")(b0, 0L)
+    // what a crash after the table write and before the meta write leaves
+    spark.sql(s"DROP TABLE `$db`.`cdc_crash_upsert_meta`")
+    fn("cdc_crash")(b0, 0L) // the replay of batch 0
+    assert(layout("cdc_crash") == layout("cdc_crash_clean"))
+    assert(spark.table(s"`$db`.`cdc_crash_upsert_meta`").collect().map(_.getInt(0)).toSeq ==
+      Seq(4), "the replay must pin the layout again")
+    // the re-pinned table merges the next batch like the clean one
+    val b1 = Seq((1L, "A", 9.0)).toDF("k", "s", "v")
+    fn("cdc_crash")(b1, 1L)
+    fn("cdc_crash_clean")(b1, 1L)
+    assert(layout("cdc_crash") == layout("cdc_crash_clean"))
   }
 
   test("materialized view: update-mode aggregate + merge sink equals the batch aggregate") {
