@@ -81,37 +81,6 @@ object QueryHelpers {
   def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Corpus fingerprint for persisted-index freshness probes over the
-    * documents table: row count + XOR of per-row xxhash64(doc_id, text)
-    * — [[graft.operators.Embeddings.buildPqIndex]]'s fingerprint scheme
-    * lifted to text corpora (order-independent, one map-side scan, no
-    * overflow: rows are distinct in doc_id so cancellation needs a
-    * 64-bit collision). Every derived-index build (media pHash pairs,
-    * simhash pairs) keys its skip-rebuild check on this. */
-  def docsFingerprint(docs: DataFrame): (Long, Long) = {
-    import docs.sparkSession.implicits._
-    val (n, fp) = docs
-      .agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, text))"))
-      .as[(Long, Option[Long])].head()
-    (n, fp.getOrElse(0L))
-  }
-
-  /** [[docsFingerprint]] plus the corpus max doc_id, in the same single
-    * map-side scan. The max rides in the media index's `_meta` because
-    * its append contract is ORDER-based (representatives are min-doc_id
-    * per payload group, so a delta must be id-above the WHOLE resident
-    * corpus — including collapsed duplicates absent from `_sigs`, which
-    * is why the bound must be persisted rather than derived from the
-    * signature table). Empty corpus → Long.MinValue, so any delta
-    * passes the order check against an empty base. */
-  def docsFingerprintMax(docs: DataFrame): (Long, Long, Long) = {
-    import docs.sparkSession.implicits._
-    val (n, fp, mx) = docs
-      .agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, text))"), max(col("doc_id")))
-      .as[(Long, Option[Long], Option[Long])].head()
-    (n, fp.getOrElse(0L), mx.getOrElse(Long.MinValue))
-  }
-
   /** The `events` table stores TIMESTAMP(NANOS) parquet. How Spark reads
     * that column varies by version: older readers reject it unless
     * `spark.sql.legacy.parquet.nanosAsLong` maps it to BIGINT nanos;

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryHelpers._
+import graft.plans.PersistedIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -775,7 +776,7 @@ object Documents {
       // sf0.1 in the pre-kernel form)
       graft.CacheRegistry.retain("neardup.simhash", simhashSigsOf(docs))
     }
-    graft.plans.PersistedIndex.ensureWith(s, table, meta, force,
+    PersistedIndex.ensureWith(s, table, meta, force,
       // _sigs persists the BANDED rows kb-CLUSTERED (range-partitioned
       // and sorted on kb, see [[sigBandRows]]) in a flat path-addressed
       // directory: append-time resident probes prune on parquet
@@ -790,21 +791,24 @@ object Documents {
       auxPath = Set("_sigs"))(simhashPairsFrom(sim))
   }
 
-  /** Build-once persisted simhash near-dup index — the
-    * [[graft.operators.Embeddings.buildPqIndex]] pattern for the d04
-    * family: verified pairs in `graft_index.simhash_<dir>_pairs`, the
-    * per-doc signature history in `_sigs` (what [[appendToSimhashIndex]]
-    * probes), a corpus fingerprint in `_meta` (invalidated first,
-    * rewritten last), freshness decided from the warehouse LOCATION so
-    * the skip works across JVMs — the shared
-    * [[graft.plans.PersistedIndex]] protocol, including its
-    * single-writer contract. `force` is the d00 named-builder path. */
-  def ensureSimhashIndex(s: SparkSession, dir: String, force: Boolean = false): String = {
-    val (n, fp) = graft.QueryHelpers.docsFingerprint(tbl(s, dir, "documents"))
+  /** The simhash index's freshness tuple: the corpus fingerprint's
+    * (n, fp) — the pair family carries no order contract, so no maxid. */
+  private def simhashMeta(f: PersistedIndex.Fingerprint): Seq[(String, Long)] =
+    Seq("n" -> f._1, "fp" -> f._2)
+
+  /** Build-once persisted simhash near-dup index for the d04 family:
+    * verified pairs in `graft_index.simhash_<dir>_pairs`, the per-doc
+    * signature history in `_sigs` (what [[appendToSimhashIndex]]
+    * probes), a corpus fingerprint in `_meta` — the shared
+    * [[graft.plans.PersistedIndex]] protocol (meta invalidated first,
+    * rewritten last, freshness decided from the warehouse LOCATION so
+    * the skip works across JVMs), including its single-writer contract.
+    * `force` is the d00 named-builder path. */
+  def ensureSimhashIndex(s: SparkSession, dir: String, force: Boolean = false): String =
     simhashBuild(s, tbl(s, dir, "documents"),
       "simhash_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_"),
-      Seq("n" -> n, "fp" -> fp), force)
-  }
+      simhashMeta(PersistedIndex.fingerprint(tbl(s, dir, "documents"), "doc_id", "text")),
+      force)
 
   /** [[ensureSimhashIndex]] over an explicit docs frame and table name —
     * the build half of the d11 incremental-maintenance pair. */
@@ -812,35 +816,29 @@ object Documents {
       meta: Seq[(String, Long)], force: Boolean = false): String =
     simhashBuild(s, docs, table, meta, force)
 
-  /** Incremental append for the persisted simhash index — v11's
-    * append discipline ([[graft.operators.Embeddings.appendToPqIndex]])
-    * applied to the pair family: NEW docs are hashed with the build's
+  /** Incremental append for the persisted simhash index — the verified
+    * [[graft.plans.PersistedIndex.append]] applied to the pair family
+    * (`_meta` poisoned FIRST, grown fingerprint stamped LAST, a retried
+    * append after a crash refused): NEW docs are hashed with the build's
     * exact fold and probed against the RESIDENT `_sigs` history (the
     * [[graft.pipeline.StreamingSemanticDedup]] resident-history pattern
     * — the new side is the small delta and broadcasts; the resident
     * side is scanned once, never shuffled), verified cross pairs plus
     * the within-delta banded pairs are APPENDED (resident pair files
-    * are untouched — pinned byte-for-byte in PersistedIndexSpec), and
-    * `_meta` is poisoned FIRST / stamped with the grown fingerprint
-    * LAST so a crash mid-append leaves a stale state the next ensure
-    * repairs by rebuilding. Correctness contract: `newDocs` doc_ids are
-    * disjoint from the indexed corpus (checked) — under that, appended
+    * are untouched — pinned byte-for-byte in PersistedIndexSpec).
+    * Correctness contract: `newDocs` doc_ids are disjoint from the
+    * indexed corpus (checked) — under that, appended
     * pairs ∪ resident pairs EQUALS a full rebuild on the grown corpus
     * (each pair stratum — old×old, old×new, new×new — keeps the
     * pigeonhole completeness argument independently). `base` is the
-    * fingerprint the caller BUILT the resident index under: the append
-    * reads `_meta` and refuses unless it matches, so a retried append
-    * (crash after the `_pairs` append, before `_sigs`) hits the poison
-    * sentinel instead of silently appending the identical pairs a
-    * second time and re-stamping them durably fresh — mirrors
-    * [[graft.operators.Embeddings.appendToPqIndex]], which never
-    * re-stamps freshness it didn't verify. At 100 TB with
+    * [[graft.plans.PersistedIndex.fingerprint]] the caller BUILT the
+    * resident index under and `grown` the grown corpus's; their (n, fp)
+    * are the verified and the stamped `_meta`. At 100 TB with
     * daily ingest this turns the dominant recurring cost (a full d00
     * rebuild per batch) into work proportional to the delta. */
   def appendToSimhashIndex(s: SparkSession, newDocs: DataFrame, table: String,
-      base: (Long, Long), grown: (Long, Long)): String = {
+      base: PersistedIndex.Fingerprint, grown: PersistedIndex.Fingerprint): String = {
     import s.implicits._
-    val P = graft.plans.PersistedIndex
     // Same staleness class as simhashBuild: newDocs' shingled subtree is
     // a pure-Catalyst plan that can plan-match a warm "neardup.shingles"
     // cache entry whose backing parquet was rewritten in place — the
@@ -849,101 +847,65 @@ object Documents {
     // hashing, unconditionally (cost: one shingle re-derivation for
     // later plan-matched callers, paid only on appends).
     graft.CacheRegistry.release("neardup.shingles")
-    val metaLoc = P.location(s, table, "_meta")
-    val stored =
-      try s.read.parquet(metaLoc).select($"n", $"fp").head()
-      catch {
-        // absent/zero-row/old-schema _meta → there is nothing verified
-        // to append to; transient I/O propagates as itself
-        case e @ (_: org.apache.spark.sql.AnalysisException |
-                  _: java.util.NoSuchElementException) =>
-          throw new IllegalStateException(
-            s"graft_index.$table has no readable _meta — nothing verified to " +
-              "append to. Run ensureSimhashIndex to build first.", e)
-      }
-    require(stored.getLong(0) == base._1 && stored.getLong(1) == base._2,
-      s"appendToSimhashIndex($table): resident _meta (n=${stored.getLong(0)}, " +
-        s"fp=${stored.getLong(1)}) does not match the expected base " +
-        s"(n=${base._1}, fp=${base._2}) — the index is poisoned, mid-append, " +
-        "or built from a different corpus. Appending would duplicate or " +
-        "orphan pairs; run ensureSimhashIndex to rebuild instead.")
-    // refuse the r19 hive-partitioned _sigs loudly BEFORE reading it:
-    // the read itself would succeed (kb surfaces as a partition column),
-    // but this append writes flat kb-clustered files, and mixing those
-    // into a kb=NN directory tree leaves the artifact unreadable —
-    // appenders refuse old layouts, they never half-migrate them
-    val sigsPath = new org.apache.hadoop.fs.Path(P.location(s, table, "_sigs"))
-    val sigsFs = sigsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (sigsFs.exists(sigsPath) &&
-        sigsFs.listStatus(sigsPath).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith("kb=")))
-      throw new IllegalStateException(
-        s"graft_index.$table persists _sigs in the r19 hive-partitioned " +
-          "layout; this appender writes the kb-clustered flat layout. Run " +
-          "ensureSimhashIndex once to rebuild (migrate) before appending.")
-    val resident =
-      try s.read.parquet(P.location(s, table, "_sigs"))
-        .select($"doc_id", $"simhash", $"i", $"k", $"kb")
-      catch {
-        // only the NOT-FOUND / wrong-column shape means "old layout,
-        // rebuild to migrate" (a pre-r19 _sigs lacks the banded i/k/kb
-        // columns and fails the select the same way a missing table
-        // does); transient I/O must propagate as itself (the
-        // appendToPqIndex rationale)
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"graft_index.$table has no persisted signature table in the " +
-              "band-keyed layout — it predates the appendable layout or its " +
-              "r19 band-partitioned revision. Run ensureSimhashIndex once to " +
-              "migrate (the freshness probe requires _sigs and will rebuild).", e)
-      }
-    val newSigs = simhashSigsOf(newDocs).localCheckpoint()
-    try {
-      val newBand = sigBandRows(newSigs)
-      // the delta's touched band buckets (≤ 128 values, driver-sized):
-      // every resident probe below carries a kb predicate that parquet
-      // row-group stats prune against (the history is kb-clustered), so
-      // an empty delta reads ZERO resident row groups and a small one
-      // reads ≤ 8·|delta| of 64 buckets' worth — the r18
-      // corpus-proportional bookkeeping floor made delta-proportional
-      // (r18 verdict #6)
-      val kbs = newBand.select($"kb").distinct().as[Int].collect().toSeq
-      // EMPTY delta: nothing to hash, pair or stamp — the grown corpus
-      // IS the base corpus (same fingerprint by determinism, checked),
-      // so resident state is already exactly the full-rebuild answer.
-      // Returning before poison/append/stamp drops the empty-append
-      // bookkeeping floor (measured 1.09 s of pure meta+commit work at
-      // sf0.1) to the validation reads alone.
-      if (kbs.isEmpty) {
-        require(base == grown,
-          s"appendToSimhashIndex($table): empty delta but grown fingerprint " +
-            s"(n=${grown._1}, fp=${grown._2}) differs from base (n=${base._1}, " +
-            s"fp=${base._2}) — the delta frame lost rows the caller counted")
-        return P.location(s, table, "_pairs")
-      }
-      // the kb < 8 slice is exactly the i = 0 band rows — one row per
-      // resident doc, pruned to 8 of 64 kb buckets (the one resident
-      // probe that stays corpus-proportional: doc_id equality has no band
-      // relationship to prune on)
-      require(resident.filter($"kb" < 8).select($"doc_id")
-          .join(broadcast(newSigs), Seq("doc_id")).limit(1).count() == 0L,
-        s"appendToSimhashIndex($table): newDocs doc_ids overlap the indexed corpus " +
-          "— an append cannot re-pair resident docs; rebuild instead")
-      P.poison(s, table, Seq("n", "fp"))
-      val cross = HammingBands.crossPairs(
-        resident.filter($"kb".isin(kbs: _*)), newBand, "simhash")
-      P.appendTable(cross.unionByName(simhashPairsFrom(newSigs))
-        .select(col("doc_a"), col("doc_b"), col("hamming")), table, "_pairs")
-      // kb-range-cluster the delta so its new files carry tight kb
-      // row-group stats (the pruning the r19 hive directories gave) —
-      // the append commits a few flat files instead of ≤64 directory
-      // entries (the commit constant that dominated d11)
-      P.appendTablePath(
-        newBand.repartitionByRange(col("kb")).sortWithinPartitions("kb"),
-        table, "_sigs")
-      P.stamp(s, table, Seq("n" -> grown._1, "fp" -> grown._2))
-    } finally newSigs.unpersist(false)
-    P.location(s, table, "_pairs")
+    PersistedIndex.append(s, table, "ensureSimhashIndex",
+        simhashMeta(base), simhashMeta(grown)) { commit =>
+      // refuse the r19 hive-partitioned _sigs loudly BEFORE reading it:
+      // the read itself would succeed (kb surfaces as a partition column),
+      // but this append writes flat kb-clustered files, and mixing those
+      // into a kb=NN directory tree leaves the artifact unreadable —
+      // appenders refuse old layouts, they never half-migrate them
+      val sigsPath = new org.apache.hadoop.fs.Path(PersistedIndex.location(s, table, "_sigs"))
+      val sigsFs = sigsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (sigsFs.exists(sigsPath) &&
+          sigsFs.listStatus(sigsPath).exists(st =>
+            st.isDirectory && st.getPath.getName.startsWith("kb=")))
+        throw new IllegalStateException(
+          s"graft_index.$table persists _sigs in the r19 hive-partitioned " +
+            "layout; this appender writes the kb-clustered flat layout. Run " +
+            "ensureSimhashIndex once to rebuild (migrate) before appending.")
+      // a pre-r19 _sigs lacks the banded i/k/kb columns and refuses the
+      // same way a missing one does
+      val resident = PersistedIndex.readArtifact(s, table, "_sigs",
+        Seq("doc_id", "simhash", "i", "k", "kb"), "ensureSimhashIndex")
+      val newSigs = simhashSigsOf(newDocs).localCheckpoint()
+      try {
+        val newBand = sigBandRows(newSigs)
+        // the delta's touched band buckets (≤ 128 values, driver-sized):
+        // every resident probe below carries a kb predicate that parquet
+        // row-group stats prune against (the history is kb-clustered), so
+        // an empty delta reads ZERO resident row groups and a small one
+        // reads ≤ 8·|delta| of 64 buckets' worth — the r18
+        // corpus-proportional bookkeeping floor made delta-proportional
+        // (r18 verdict #6)
+        val kbs = newBand.select($"kb").distinct().as[Int].collect().toSeq
+        // an EMPTY delta never commits: nothing to hash, pair or stamp
+        // (measured 1.09 s of pure meta+commit work at sf0.1 before the
+        // empty-delta rule)
+        if (kbs.nonEmpty) {
+          // the kb < 8 slice is exactly the i = 0 band rows — one row per
+          // resident doc, pruned to 8 of 64 kb buckets (the one resident
+          // probe that stays corpus-proportional: doc_id equality has no
+          // band relationship to prune on)
+          require(resident.filter($"kb" < 8).select($"doc_id")
+              .join(broadcast(newSigs), Seq("doc_id")).limit(1).count() == 0L,
+            s"appendToSimhashIndex($table): newDocs doc_ids overlap the indexed corpus " +
+              "— an append cannot re-pair resident docs; rebuild instead")
+          commit {
+            val cross = HammingBands.crossPairs(
+              resident.filter($"kb".isin(kbs: _*)), newBand, "simhash")
+            PersistedIndex.appendArtifact(cross.unionByName(simhashPairsFrom(newSigs))
+              .select(col("doc_a"), col("doc_b"), col("hamming")), table, "_pairs")
+            // kb-range-cluster the delta so its new files carry tight kb
+            // row-group stats (the pruning the r19 hive directories gave) —
+            // the append commits a few flat files instead of ≤64 directory
+            // entries (the commit constant that dominated d11)
+            PersistedIndex.appendArtifact(
+              newBand.repartitionByRange(col("kb")).sortWithinPartitions("kb"),
+              table, "_sigs")
+          }
+        }
+      } finally newSigs.unpersist(false)
+    }
   }
 
   val entries: Seq[QueryDef] = Seq(
@@ -1192,10 +1154,10 @@ object Documents {
         val docs = tbl(s, dir, "documents")
         val table = "simhashapp_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
         val base = docs.filter($"doc_id" % 3 =!= 0)
-        val (bn, bfp) = graft.QueryHelpers.docsFingerprint(base)
-        ensureSimhashIndexFor(s, base, table, Seq("n" -> bn, "fp" -> bfp))
+        val bm = PersistedIndex.fingerprint(base, "doc_id", "text")
+        ensureSimhashIndexFor(s, base, table, simhashMeta(bm))
         val path = appendToSimhashIndex(s, docs.filter($"doc_id" % 3 === 0),
-          table, (bn, bfp), graft.QueryHelpers.docsFingerprint(docs))
+          table, bm, PersistedIndex.fingerprint(docs, "doc_id", "text"))
         s.read.parquet(path)
           .agg(count(lit(1)).cast("long").as("n_pairs"),
             coalesce(sum($"hamming"), lit(0L)).cast("long").as("sum_hamming"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryHelpers._
+import graft.plans.PersistedIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1369,20 +1370,18 @@ object Embeddings {
     * reuse the build-time value (a persisted bucket layout cannot be
     * re-coded incrementally; when the corpus outgrows its geometry,
     * rebuild). */
-  def buildIndex(vectors: DataFrame, database: String, table: String,
-      planes: Int = 4): String =
+  def buildIndex(vectors: DataFrame, table: String, planes: Int = 4): String =
     graft.plans.CoLocated.writeBucketed(
-      indexRows(vectors, planes), database, table, "bucket", buckets = 16)
+      indexRows(vectors, planes), PersistedIndex.Database, table, "bucket", buckets = 16)
 
   /** Incremental index maintenance: bucket-code + norm the NEW vectors
     * only and append them into the existing [[buildIndex]] table (same
     * bucket spec AND the same `planes` geometry, so the layout invariant
     * [[queryIndex]] relies on is preserved). Append-then-query equals a
     * full rebuild over the union — pinned in EmbeddingsSpec. */
-  def appendToIndex(vectors: DataFrame, database: String, table: String,
-      planes: Int = 4): String =
+  def appendToIndex(vectors: DataFrame, table: String, planes: Int = 4): String =
     graft.plans.CoLocated.appendBucketed(
-      indexRows(vectors, planes), database, table, "bucket", buckets = 16)
+      indexRows(vectors, planes), PersistedIndex.Database, table, "bucket", buckets = 16)
 
   /** Top-3 neighbors per vector from a [[buildIndex]] table. The read is
     * `groupBy(bucket).as[…].flatMapGroups` — grouping on the STORED
@@ -1392,10 +1391,10 @@ object Embeddings {
     * recomputation (asserted in EmbeddingsSpec). Same kernel arithmetic
     * and (cosine desc, id asc) ordering as v02, so the output is
     * bit-identical to rebuilding from scratch. */
-  def queryIndex(s: SparkSession, database: String, table: String): DataFrame = {
+  def queryIndex(s: SparkSession, table: String): DataFrame = {
     import s.implicits._
     val K = 3
-    s.table(s"`$database`.`$table`")
+    s.table(s"`${PersistedIndex.Database}`.`$table`")
       .select($"bucket".as("_1"), $"vec_id".as("_2"), $"v".as("_3"), $"nrm".as("_4"))
       .groupBy($"_1").as[Long, (Long, Long, Array[Double], Double)]
       .flatMapGroups { (bkt, iter) =>
@@ -1576,46 +1575,27 @@ object Embeddings {
       dtDF, Seq("s", "cell"))
   }
 
-  /** Corpus fingerprint for the skip-retrain check: row count + XOR of
-    * per-row xxhash64(vec_id, v). XOR is order-independent and cannot
-    * overflow (rows are distinct — vec_id is part of the hash — so
-    * pairwise cancellation needs a 64-bit collision). One map-side pass
-    * over the corpus; at 100 TB this is the cheap "is the index still
-    * current?" probe that replaces 12 Lloyd passes. */
-  private def pqFingerprint(prepared: DataFrame): (Long, Long) = {
-    import prepared.sparkSession.implicits._
-    val (n, fp) = prepared
-      .agg(count(lit(1)), expr("bit_xor(xxhash64(vec_id, v))"))
-      .as[(Long, Option[Long])].head()
-    (n, fp.getOrElse(0L))
-  }
-
   /** Build-once PQ index: train the 4 codebooks and encode the corpus
-    * into THREE warehouse tables — `{table}_books` (s, cell, cv, cn:
-    * model-sized), `{table}_codes` (vec_id + 4 tinyint cell ids, bucketed
-    * on vec_id), `{table}_meta` (corpus fingerprint). If the stored
-    * fingerprint already matches the input, the build is SKIPPED entirely
-    * — "train rarely, encode once, serve from 4-byte codes" is the whole
-    * point of PQ at 100 TB, and the fingerprint probe is one map-side
-    * scan vs 12 full training passes. A mismatched or missing fingerprint
-    * (including the poison an [[appendToPqIndex]] leaves) always
-    * retrains. meta is dropped FIRST and rewritten LAST, so a crash
-    * mid-build can only leave a stale-fingerprint state that the next
-    * build repairs by retraining. */
-  def buildPqIndex(vectors: DataFrame, database: String, table: String): String = {
+    * into FOUR warehouse tables — `{table}_books` (s, cell, cv, cn:
+    * model-sized), `{table}_coarse` (the IVF quantizer), `{table}_codes`
+    * (vec_id + 4 tinyint cell ids + the coarse cell, bucketed on vec_id)
+    * and `{table}_meta` (the [[PersistedIndex.fingerprint]] of
+    * (vec_id, v)). If the stored fingerprint already matches the input,
+    * the build is SKIPPED entirely — "train rarely, encode once, serve
+    * from 4-byte codes" is the whole point of PQ at 100 TB, and the
+    * fingerprint probe is one map-side scan vs 12 full training passes
+    * (decided from the warehouse LOCATION, so the skip works across
+    * sessions: a per-JVM skip measured 17.7 s vs 0.8 s at sf0.1). A
+    * mismatched or missing fingerprint (including the poison an
+    * [[appendToPqIndex]] leaves) always retrains, under
+    * [[PersistedIndex.rebuild]]'s crash ordering. */
+  def buildPqIndex(vectors: DataFrame, table: String): String = {
     val s = vectors.sparkSession
     import s.implicits._
     val prepared = vectors.select(col("vec_id").cast("long").as("vec_id"), col("v"))
-    val (n, fp) = pqFingerprint(prepared)
-    // freshness is decided from the warehouse LOCATION, not the catalog:
-    // the in-memory catalog dies with the JVM while the files survive, and
-    // the skip must work across sessions (a per-JVM skip would retrain on
-    // every new session — measured 17.7 s vs 0.8 s at sf0.1)
-    if (!graft.plans.PersistedIndex.isFresh(s, database, table,
-        Seq("n" -> n, "fp" -> fp), Seq("_books", "_codes", "_coarse"))) {
-      // physically invalidate meta FIRST (catalog drop alone leaves the
-      // files "valid" for a fresh JVM if this build crashes mid-rewrite)
-      graft.plans.CoLocated.clearTable(s, database, s"${table}_meta")
+    val (n, fp, _) = PersistedIndex.fingerprint(prepared, "vec_id", "v")
+    PersistedIndex.rebuild(s, table, Seq("n" -> n, "fp" -> fp),
+        Seq("_books", "_codes", "_coarse"), force = false) {
       // the IVF half of an IVFADC index: the coarse quantizer (8 full-
       // dim centroids) and each vector's nearest coarse cell persist
       // WITH the codes, so cell-pruned serving (v18) reads no raw
@@ -1628,28 +1608,28 @@ object Embeddings {
       val books = models.zipWithIndex.flatMap { case (m, si) =>
         m.map { case (cell, cv, cn) => (si, cell, cv.toSeq, cn) }
       }
-      graft.plans.CoLocated.replaceTable(
-        books.toDF("s", "cell", "cv", "cn"), database, s"${table}_books")
+      graft.plans.CoLocated.replaceTable(books.toDF("s", "cell", "cv", "cn"),
+        PersistedIndex.Database, s"${table}_books")
       val coarse = coarseJoin()
       graft.plans.CoLocated.replaceTable(
         coarse.toSeq.map { case (cell, cv, cn) => (cell, cv.toSeq, cn) }
-          .toDF("cell", "cv", "cn"), database, s"${table}_coarse")
+          .toDF("cell", "cv", "cn"), PersistedIndex.Database, s"${table}_coarse")
       graft.plans.CoLocated.writeBucketed(
         pqCodeRows(pqEncode(prepared, models, Some(coarse))),
-        database, s"${table}_codes", "vec_id", buckets = 16)
-      graft.plans.CoLocated.replaceTable(
-        Seq((n, fp)).toDF("n", "fp"), database, s"${table}_meta")
+        PersistedIndex.Database, s"${table}_codes", "vec_id", buckets = 16)
     }
-    s"$database.$table"
+    s"${PersistedIndex.Database}.$table"
   }
 
   /** Read the persisted coarse quantizer back in [[kMeansModel]]'s
-    * shape, ascending-cell order (the assignment tie order). */
-  private[operators] def pqReadCoarse(s: SparkSession, database: String,
+    * shape, ascending-cell order (the assignment tie order). An index
+    * persisted before the IVF half has no `_coarse`: the read refuses
+    * with the migration route (one [[buildPqIndex]] call retrains under
+    * the current layout). */
+  private[operators] def pqReadCoarse(s: SparkSession,
       table: String): Array[(Long, Array[Double], Double)] = {
     import s.implicits._
-    s.read.parquet(pqLoc(s, database, table, "_coarse"))
-      .select($"cell", $"cv", $"cn")
+    PersistedIndex.readArtifact(s, table, "_coarse", Seq("cell", "cv", "cn"), "buildPqIndex")
       .as[(Long, Array[Double], Double)].collect().sortBy(_._1)
   }
 
@@ -1664,21 +1644,14 @@ object Embeddings {
     codes.select(cols: _*)
   }
 
-  /** Managed location of a PQ artifact table as a string path — the
-    * cross-JVM address of the persisted index (see [[graft.plans
-    * .CoLocated.tableLocation]]). */
-  private def pqLoc(s: SparkSession, database: String, table: String,
-      suffix: String): String =
-    graft.plans.CoLocated.tableLocation(s, database, table + suffix).toString
-
   /** Read the persisted codebooks back into [[pqEncode]]/[[pqAdc]]'s
     * model shape — sorted by cell within each subspace, restoring the
     * exact tie-break order the build used. Reads by location so it works
     * in sessions that never built the index. */
-  private[operators] def pqReadBooks(s: SparkSession, database: String,
+  private[operators] def pqReadBooks(s: SparkSession,
       table: String): Seq[Array[(Long, Array[Double], Double)]] = {
     import s.implicits._
-    val rows = s.read.parquet(pqLoc(s, database, table, "_books"))
+    val rows = s.read.parquet(PersistedIndex.location(s, table, "_books"))
       .select($"s", $"cell", $"cv", $"cn")
       .as[(Int, Long, Array[Double], Double)].collect()
     (0 until PqS).map { si =>
@@ -1690,56 +1663,31 @@ object Embeddings {
     * that is the production ingest path: codebooks change rarely, codes
     * append daily) and append them to the codes table without touching
     * resident files ([[graft.plans.CoLocated.appendBucketed]]). The
-    * stored fingerprint is poisoned (n = -1 can never match a real
-    * count) BEFORE the codes table mutates, so a later [[buildPqIndex]]
-    * retrains instead of wrongly skipping over a corpus the codebooks
-    * never saw — even if this append crashes mid-write. Appending needs the
+    * stored fingerprint is [[PersistedIndex.poison]]ed (n = -1 can never
+    * match a real count) BEFORE the codes table mutates, so a later
+    * [[buildPqIndex]] retrains instead of wrongly skipping over a corpus
+    * the codebooks never saw — even if this append crashes mid-write.
+    * The append never re-stamps: its codebooks were not trained on the
+    * grown corpus, so only a retrain may declare it fresh. Indexes
+    * persisted before the IVF half (no `_coarse` table / no `ccell`
+    * column) are refused with the migration route — appending rows WITH
+    * a ccell into a codes table without one corrupts the layout, and an
+    * append never rewrites resident files. Appending needs the
     * codes table in THIS session's catalog (appendBucketed is a catalog
     * write) — same session-or-metastore caveat as [[appendToIndex]];
     * reads ([[queryPqIndex]]) and the build's freshness skip are
     * location-based and have no such constraint. */
-  def appendToPqIndex(vectors: DataFrame, database: String, table: String): String = {
+  def appendToPqIndex(vectors: DataFrame, table: String): String = {
     val s = vectors.sparkSession
-    import s.implicits._
     val prepared = vectors.select(col("vec_id").cast("long").as("vec_id"), col("v"))
-    val models = pqReadBooks(s, database, table)
-    // indexes persisted before the IVF half (no _coarse table / no
-    // ccell column) cannot be appended to safely — appending rows WITH
-    // a ccell into a codes table without one corrupts the layout, and
-    // append cannot migrate (it never rewrites resident files). Fail
-    // with the migration route instead of a raw path error: ONE
-    // buildPqIndex call rebuilds the index under the new layout (the
-    // missing _coarse fails its freshness probe, forcing the retrain).
-    // only the NOT-FOUND shapes mean "old layout, migrate"; transient
-    // I/O or corruption errors must propagate as themselves — rebranding
-    // them as a migration prompt would steer an operator into a
-    // needless 12-pass retrain for an index that only needed a retry
-    val coarse =
-      try pqReadCoarse(s, database, table)
-      catch {
-        case e @ (_: org.apache.spark.sql.AnalysisException |
-                  _: java.io.FileNotFoundException) =>
-          throw new IllegalStateException(
-            s"$database.$table has no persisted coarse quantizer — it predates " +
-              "the IVF half of the index. Run buildPqIndex once to migrate " +
-              "(the freshness probe requires _coarse and will retrain).", e)
-      }
-    require(s.read.parquet(pqLoc(s, database, table, "_codes"))
-        .columns.contains("ccell"),
-      s"$database.$table codes table lacks the ccell column — rebuild with " +
-        "buildPqIndex before appending")
-    // poison BEFORE mutating codes — the same crash discipline as
-    // buildPqIndex (meta dropped first, rewritten last): if the append
-    // dies between the two steps the fingerprint is already invalid, so
-    // a later build retrains instead of fingerprint-matching a codes
-    // table this append half-mutated (append-then-poison left exactly
-    // that window)
-    graft.plans.CoLocated.replaceTable(
-      Seq((-1L, 0L)).toDF("n", "fp"), database, s"${table}_meta")
+    val models = pqReadBooks(s, table)
+    val coarse = pqReadCoarse(s, table)
+    PersistedIndex.readArtifact(s, table, "_codes", Seq("ccell"), "buildPqIndex")
+    PersistedIndex.poison(s, table, Seq("n", "fp"))
     graft.plans.CoLocated.appendBucketed(
       pqCodeRows(pqEncode(prepared, models, Some(coarse))),
-      database, s"${table}_codes", "vec_id", buckets = 16)
-    s"$database.$table"
+      PersistedIndex.Database, s"${table}_codes", "vec_id", buckets = 16)
+    s"${PersistedIndex.Database}.$table"
   }
 
   /** Serve top-10 per query from a [[buildPqIndex]] table. The plan
@@ -1749,10 +1697,10 @@ object Embeddings {
     * (pinned in EmbeddingsSpec — the physical plan scans `{table}_codes`
     * and no embeddings parquet). */
   def queryPqIndex(s: SparkSession, queryRows: Array[(Long, Array[Double])],
-      database: String, table: String): DataFrame = {
+      table: String): DataFrame = {
     import s.implicits._
-    val models = pqReadBooks(s, database, table)
-    val codes = s.read.parquet(pqLoc(s, database, table, "_codes"))
+    val models = pqReadBooks(s, table)
+    val codes = s.read.parquet(PersistedIndex.location(s, table, "_codes"))
       .select($"vec_id",
         $"k0".cast("long").as("k0"), $"k1".cast("long").as("k1"),
         $"k2".cast("long").as("k2"), $"k3".cast("long").as("k3"))
@@ -1790,8 +1738,8 @@ object Embeddings {
 
   /** Build-once BM25 inverted index: persist [[bm25ScoreTable]] as a
     * term-bucketed warehouse table `{table}_postings` plus a
-    * `{table}_meta` corpus fingerprint — [[buildPqIndex]]'s exact
-    * discipline applied to the LEXICAL leg of hybrid retrieval. v16
+    * `{table}_meta` corpus fingerprint — the [[PersistedIndex]]
+    * rebuild protocol applied to the LEXICAL leg of hybrid retrieval. v16
     * recomputes the corpus-wide tokenize → tf/df aggregation on every
     * call (the same per-call-cost smell the r6 verdict flagged for
     * v12's training, one scale rung down: one corpus pass instead of
@@ -1799,29 +1747,19 @@ object Embeddings {
     * matching fingerprint turns repeat builds into one map-side scan.
     * Input: (doc_id, text) — ALREADY restricted to the retrieval
     * universe (the fingerprint covers exactly that frame, so a changed
-    * universe — including changed embedding coverage — retrains). meta
-    * is dropped FIRST and rewritten LAST: a crash mid-build leaves a
-    * stale-fingerprint state the next build repairs by rebuilding. */
-  def buildBm25Index(docs: DataFrame, database: String, table: String): String = {
+    * universe — including changed embedding coverage — retrains). */
+  def buildBm25Index(docs: DataFrame, table: String): String = {
     val s = docs.sparkSession
     import s.implicits._
     val prepared = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val (n, fp) = {
-      val (c, x) = prepared
-        .agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, text))"))
-        .as[(Long, Option[Long])].head()
-      (c, x.getOrElse(0L))
-    }
-    if (!graft.plans.PersistedIndex.isFresh(s, database, table,
-        Seq("n" -> n, "fp" -> fp), Seq("_postings"))) {
-      graft.plans.CoLocated.clearTable(s, database, s"${table}_meta")
+    val (n, fp, _) = PersistedIndex.fingerprint(prepared, "doc_id", "text")
+    PersistedIndex.rebuild(s, table, Seq("n" -> n, "fp" -> fp), Seq("_postings"),
+        force = false) {
       graft.plans.CoLocated.writeBucketed(
         bm25ScoreTable(prepared.select($"doc_id", split($"text", " ").as("toks"))),
-        database, s"${table}_postings", "term", buckets = 16)
-      graft.plans.CoLocated.replaceTable(
-        Seq((n, fp)).toDF("n", "fp"), database, s"${table}_meta")
+        PersistedIndex.Database, s"${table}_postings", "term", buckets = 16)
     }
-    s"$database.$table"
+    s"${PersistedIndex.Database}.$table"
   }
 
   /** Serve per-query BM25 top-k from a [[buildBm25Index]] table. The
@@ -1833,11 +1771,11 @@ object Embeddings {
     * stored 1e-9-grid contributions — identical to summing the freshly
     * computed table. */
   def queryBm25Index(s: SparkSession, queryTerms: Array[(Long, String)],
-      database: String, table: String, k: Int): DataFrame = {
+      table: String, k: Int): DataFrame = {
     import s.implicits._
     val qterm = queryTerms.toSeq.toDF("query_id", "term")
     val wb = Window.partitionBy($"query_id").orderBy($"bm25".desc, $"doc_id")
-    s.read.parquet(pqLoc(s, database, table, "_postings"))
+    s.read.parquet(PersistedIndex.location(s, table, "_postings"))
       .join(broadcast(qterm), Seq("term"))
       .filter($"query_id" =!= $"doc_id")
       .groupBy($"query_id", $"doc_id")
@@ -2439,9 +2377,9 @@ object Embeddings {
         // [[adcRank]] tail runs partial agg under WindowGroupLimit.
         val table = "v15_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
         val base = based(s, dir)
-        Embeddings.buildPqIndex(base, "graft_index", table)
-        val books = pqReadBooks(s, "graft_index", table)
-        val coarse = pqReadCoarse(s, "graft_index", table)
+        Embeddings.buildPqIndex(base, table)
+        val books = pqReadBooks(s, table)
+        val coarse = pqReadCoarse(s, table)
         val queryRows = base.filter($"vec_id" < 10)
           .as[(Long, Array[Double])].collect()
         // probe selection under the trainer's (cosine desc, cell asc)
@@ -2458,7 +2396,7 @@ object Embeddings {
         }.toSeq
         val dtDF = broadcast(pqAdc(queryRows, books).toDF("query_id", "s", "cell", "d"))
         val probeDF = broadcast(probes.toDF("query_id", "ccell"))
-        val codes = s.read.parquet(pqLoc(s, "graft_index", table, "_codes"))
+        val codes = s.read.parquet(PersistedIndex.location(s, table, "_codes"))
           .select($"vec_id",
             $"k0".cast("long").as("k0"), $"k1".cast("long").as("k1"),
             $"k2".cast("long").as("k2"), $"k3".cast("long").as("k3"),
@@ -2743,12 +2681,12 @@ object Embeddings {
           .withColumn("nrm", expr(NormSql))
         val docsText = tbl(s, dir, "documents").select($"doc_id", $"text")
           .join(base.select($"vec_id".as("doc_id")), Seq("doc_id"), "left_semi")
-        Embeddings.buildBm25Index(docsText, "graft_index", table)
+        Embeddings.buildBm25Index(docsText, table)
         val qterms = docsText.filter($"doc_id" < 10)
           .select($"doc_id".as("query_id"),
             explode(array_distinct(split($"text", " "))).as("term"))
           .as[(Long, String)].collect()
-        val lex = Embeddings.queryBm25Index(s, qterms, "graft_index", table, K)
+        val lex = Embeddings.queryBm25Index(s, qterms, table, K)
         val qv = base.filter($"vec_id" < 10)
           .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
         val wv = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"doc_id")
@@ -3178,9 +3116,9 @@ object Embeddings {
         // a 32-bit hash lets two dirs collide and silently share an index
         val table = "v08_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
         val base = based(s, dir)
-        Embeddings.buildIndex(base, "graft_index", table,
+        Embeddings.buildIndex(base, table,
           planes = lshPlanes(base.count(), minPlanes = 4, maxPlanes = 16))
-        Embeddings.queryIndex(s, "graft_index", table)
+        Embeddings.queryIndex(s, table)
           .orderBy($"query_id", $"rnk")
       },
       Some(SignIndexOracleSql)),
@@ -3205,9 +3143,9 @@ object Embeddings {
         // buildIndex's scaladoc): append must reuse the build-time plane
         // count, and the oracle derives planes from the full COUNT(*)
         val planes = lshPlanes(all.count(), minPlanes = 4, maxPlanes = 16)
-        Embeddings.buildIndex(all.filter($"vec_id" % 3 =!= 0), "graft_index", table, planes)
-        Embeddings.appendToIndex(all.filter($"vec_id" % 3 === 0), "graft_index", table, planes)
-        Embeddings.queryIndex(s, "graft_index", table)
+        Embeddings.buildIndex(all.filter($"vec_id" % 3 =!= 0), table, planes)
+        Embeddings.appendToIndex(all.filter($"vec_id" % 3 === 0), table, planes)
+        Embeddings.queryIndex(s, table)
           .orderBy($"query_id", $"rnk")
       },
       Some(SignIndexOracleSql)),
@@ -3260,9 +3198,9 @@ object Embeddings {
         // discipline), so each SF keeps its own index.
         val table = "v15_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
         val base = based(s, dir)
-        Embeddings.buildPqIndex(base, "graft_index", table)
+        Embeddings.buildPqIndex(base, table)
         val queryRows = base.filter($"vec_id" < 10).as[(Long, Array[Double])].collect()
-        Embeddings.queryPqIndex(s, queryRows, "graft_index", table)
+        Embeddings.queryPqIndex(s, queryRows, table)
           .orderBy($"query_id", $"rnk")
       },
       Some(PqOracleSql)),

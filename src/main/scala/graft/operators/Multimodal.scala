@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryHelpers._
+import graft.plans.PersistedIndex
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -177,7 +178,7 @@ object Multimodal {
     * the registry entry is gone (Bench's isolation pass, Engine.close),
     * the owning session stopped, or the data dir differs. */
   private val phashPairsMemo = new java.util.concurrent.atomic.AtomicReference[
-    (String, SparkSession, Long, (Long, Long, Long), DataFrame)]()
+    (String, SparkSession, Long, PersistedIndex.Fingerprint, DataFrame)]()
 
   /** Serve-path entry for the verified media pair set: fingerprint the
     * corpus (one map-side scan, every call — staleness is decided by
@@ -191,7 +192,7 @@ object Multimodal {
     * serve from artifacts" split applied to the media family. */
   private[operators] def phashPairs(s: SparkSession, dir: String,
       maxBandBucket: Long = MaxBandBucket): DataFrame = {
-    val nfp = graft.QueryHelpers.docsFingerprintMax(tbl(s, dir, "documents"))
+    val nfp = PersistedIndex.fingerprint(tbl(s, dir, "documents"), "doc_id", "text")
     val memo = phashPairsMemo.get()
     if (memo != null && memo._1 == dir && (memo._2 eq s) &&
       memo._3 == maxBandBucket && memo._4 == nfp && !s.sparkContext.isStopped &&
@@ -233,7 +234,7 @@ object Multimodal {
     * against the whole resident corpus, not just the representatives
     * `_sigs` retains (a collapsed duplicate's id never reaches `_sigs`
     * but still bounds what a later delta may reuse). */
-  def mediaMeta(nfp: (Long, Long, Long), maxBandBucket: Long): Seq[(String, Long)] =
+  def mediaMeta(nfp: PersistedIndex.Fingerprint, maxBandBucket: Long): Seq[(String, Long)] =
     Seq("n" -> nfp._1, "fp" -> nfp._2, "gate" -> maxBandBucket, "maxid" -> nfp._3)
 
   /** Build-once persisted media near-dup index — the shared
@@ -245,10 +246,10 @@ object Multimodal {
   def ensureMediaIndex(s: SparkSession, dir: String, force: Boolean = false,
       maxBandBucket: Long = MaxBandBucket): String =
     ensureMediaIndexFp(s, dir, force, maxBandBucket,
-      graft.QueryHelpers.docsFingerprintMax(tbl(s, dir, "documents")))
+      PersistedIndex.fingerprint(tbl(s, dir, "documents"), "doc_id", "text"))
 
   private def ensureMediaIndexFp(s: SparkSession, dir: String, force: Boolean,
-      maxBandBucket: Long, nfp: (Long, Long, Long)): String =
+      maxBandBucket: Long, nfp: PersistedIndex.Fingerprint): String =
     mediaBuild(s, tbl(s, dir, "documents"),
       "media_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_"),
       mediaMeta(nfp, maxBandBucket), force, maxBandBucket)
@@ -499,7 +500,7 @@ object Multimodal {
       // collapse + hash pipeline executes once per consumer
       graft.CacheRegistry.retain("media.phash", phashSigsOf(docs))
     }
-    graft.plans.PersistedIndex.ensureWith(s, table, meta, force,
+    PersistedIndex.ensureWith(s, table, meta, force,
       // _prof persists the band-bucket occupancy profile (bi, bv, cnt —
       // ≤ 8·256 rows) so the APPEND can gate the merged corpus from a
       // profile MERGE (stored + delta counts; exact, since absorption
@@ -515,9 +516,10 @@ object Multimodal {
     }
   }
 
-  /** Incremental append for the persisted media index —
-    * [[graft.operators.Documents.appendToSimhashIndex]]'s discipline
-    * with the two media-specific twists:
+  /** Incremental append for the persisted media index — the verified
+    * [[graft.plans.PersistedIndex.append]], as
+    * [[graft.operators.Documents.appendToSimhashIndex]] uses it, with
+    * two media-specific twists:
     *
     *   - ORDER contract instead of plain disjointness: representatives
     *     are the MIN doc_id of each byte-identical payload group, so an
@@ -534,152 +536,110 @@ object Multimodal {
     * band profile — resident reps ∪ fresh delta reps, exactly the grown
     * corpus's rep set, so a refusal here equals the rebuild's refusal)
     * all happens BEFORE the poison, so a refused append leaves the
-    * resident index fresh. Then: poison `_meta` first, append the
-    * cross (resident×delta, delta broadcast) and within-delta verified
-    * pairs plus the fresh-rep `_sigs` rows — resident files untouched,
-    * pinned byte-for-byte in PersistedIndexSpec — and stamp the grown
-    * meta LAST. Under the contract, appended ∪ resident EQUALS a full
-    * rebuild on the grown corpus (each stratum keeps the pigeonhole
-    * argument; absorption reproduces the rebuild's collapse). At 100 TB
-    * with daily media ingest this replaces the dominant recurring cost
-    * (a full m00 decode→hash→verify rebuild per batch) with work
-    * proportional to the delta. */
+    * resident index fresh. Then the commit appends the cross
+    * (resident×delta, delta broadcast) and within-delta verified pairs
+    * plus the fresh-rep `_sigs` rows — resident files untouched, pinned
+    * byte-for-byte in PersistedIndexSpec. Under the contract, appended ∪
+    * resident EQUALS a full rebuild on the grown corpus (each stratum
+    * keeps the pigeonhole argument; absorption reproduces the rebuild's
+    * collapse). At 100 TB with daily media ingest this replaces the
+    * dominant recurring cost (a full m00 decode→hash→verify rebuild per
+    * batch) with work proportional to the delta. */
   def appendToMediaIndex(s: SparkSession, newDocs: DataFrame, table: String,
       base: Seq[(String, Long)], grown: Seq[(String, Long)],
       maxBandBucket: Option[Long] = None): String = {
     import s.implicits._
-    val P = graft.plans.PersistedIndex
     // same plan-match staleness class as the build: the delta's hash
     // plan could substitute a warm pre-rewrite cache entry
     graft.CacheRegistry.release("media.phash")
-    val stored =
-      try s.read.parquet(P.location(s, table, "_meta"))
-        .select(base.map(m => col(m._1)): _*).head()
-      catch {
-        case e @ (_: org.apache.spark.sql.AnalysisException |
-                  _: java.util.NoSuchElementException) =>
-          throw new IllegalStateException(
-            s"graft_index.$table has no readable _meta with the appendable " +
-              "layout (n, fp, gate, maxid) — nothing verified to append to. " +
-              "Run ensureMediaIndex to build/migrate first.", e)
+    PersistedIndex.append(s, table, "ensureMediaIndex", base, grown) { commit =>
+      val baseMaxId = base.collectFirst { case ("maxid", v) => v }.getOrElse(
+        throw new IllegalArgumentException(
+          s"appendToMediaIndex($table): base meta carries no maxid — build with " +
+            "mediaMeta/ensureMediaIndex so the order contract is checkable"))
+      val resident = PersistedIndex.readArtifact(s, table, "_sigs",
+        Seq("doc_id", "md5", "h0", "h1"), "ensureMediaIndex")
+      // order contract over ALL new docs (not just the reps the collapse
+      // keeps): a sub-maxid duplicate would displace a resident rep; an
+      // EMPTY delta (no min) never commits
+      val minNew = newDocs.agg(min(col("doc_id"))).head().get(0)
+      if (minNew != null) {
+        require(minNew.asInstanceOf[Long] > baseMaxId,
+          s"appendToMediaIndex($table): delta min doc_id $minNew is not above the " +
+            s"resident corpus max $baseMaxId — media reps are min-doc_id per " +
+            "payload group, so out-of-order ingest would displace resident " +
+            "representatives; rebuild with ensureMediaIndex instead")
+        // enforce the gate the BASE was built under (it is part of the
+        // verified _meta tuple): a caller who built with a custom bound and
+        // omits it here (None) must not gate the merged profile under the
+        // default (spurious refusal) or silently append past a tighter
+        // stored contract — and ANY explicit argument must agree, including
+        // an explicit Some(MaxBandBucket) against a custom-gate index (the
+        // r15 Long-default form made that disagreement indistinguishable
+        // from an omission and silently used the stored gate).
+        val baseGate = base.collectFirst { case ("gate", v) => v }
+          .orElse(maxBandBucket).getOrElse(MaxBandBucket)
+        maxBandBucket.foreach { explicit =>
+          require(explicit == baseGate,
+            s"appendToMediaIndex($table): explicit maxBandBucket=$explicit " +
+              s"disagrees with the gate the index was built under ($baseGate) — " +
+              "the append enforces the stored contract; rebuild with " +
+              "ensureMediaIndex to change the gate")
+        }
+        // the GROWN tuple is stamped verbatim as the next append's verified
+        // base — a grown "gate" entry that differs from baseGate would
+        // silently rewrite the stored gate contract for every future append
+        // (r15 advice), the drift class this validation exists to close
+        grown.collectFirst { case ("gate", v) => v }.foreach { g =>
+          require(g == baseGate,
+            s"appendToMediaIndex($table): grown meta carries gate=$g but the " +
+              s"index's verified gate is $baseGate — the append cannot change " +
+              "the gate contract; rebuild with ensureMediaIndex to re-gate")
+        }
+        val newSigs = phashSigsOf(newDocs).localCheckpoint()
+        try {
+          // absorption: md5 matches collapse into the resident rep (no new
+          // rep, no pairs — the rebuild's collapse, reproduced); only
+          // genuinely new payloads survive as fresh reps
+          val freshNew = absorptionSurvivors(newSigs, resident).localCheckpoint()
+          try {
+            // gate BEFORE the commit, on the merged profile == grown corpus
+            // reps. The stored _prof carries the RESIDENT profile, so the
+            // merge is stored + delta counts (exact: absorption guarantees
+            // the fresh reps are disjoint from resident reps) — no resident
+            // re-scan. Materialized driver-side (≤ 8·256 + delta-bucket
+            // rows) because the _prof rewrite below must not read the files
+            // it replaces.
+            val storedProf = PersistedIndex.readArtifact(s, table, "_prof",
+              Seq("bi", "bv", "cnt"), "ensureMediaIndex").as[(Int, Long, Long)].collect()
+            val deltaProf = bandProfile(freshNew).as[(Int, Long, Long)].collect()
+            val mergedProf = scala.collection.mutable.HashMap.empty[(Int, Long), Long]
+            (storedProf.iterator ++ deltaProf.iterator).foreach { case (bi, bv, c) =>
+              mergedProf.updateWith((bi, bv))(prev => Some(prev.getOrElse(0L) + c)) }
+            gateCheck(if (mergedProf.isEmpty) 0L else mergedProf.values.max, baseGate,
+              "append")
+            commit {
+              val freshPacked = packedSigs(freshNew)
+              val cross = HammingBands.crossPairs(
+                HammingBands.bandRows(packedSigs(resident), "sig"),
+                HammingBands.bandRows(freshPacked, "sig"), "sig")
+              PersistedIndex.appendArtifact(
+                cross.unionByName(HammingBands.pairs(freshPacked, "sig")), table, "_pairs")
+              PersistedIndex.appendArtifact(freshNew.select($"doc_id", $"md5", $"h0", $"h1"),
+                table, "_sigs")
+              // rewrite the (profile-sized) _prof with the merged counts so
+              // the NEXT append's gate also merges instead of re-profiling;
+              // inside the commit, so a crash here leaves the poisoned meta
+              // the next ensure repairs by rebuilding everything incl. _prof
+              graft.plans.CoLocated.replaceTable(
+                mergedProf.iterator.map { case ((bi, bv), c) => (bi, bv, c) }
+                  .toSeq.toDF("bi", "bv", "cnt"),
+                PersistedIndex.Database, table + "_prof")
+            }
+          } finally freshNew.unpersist(false)
+        } finally newSigs.unpersist(false)
       }
-    require(base.indices.forall(i => stored.getLong(i) == base(i)._2),
-      s"appendToMediaIndex($table): resident _meta " +
-        s"(${base.map(_._1).zipWithIndex.map { case (n, i) => s"$n=${stored.getLong(i)}" }.mkString(", ")}) " +
-        s"does not match the expected base (${base.map { case (n, v) => s"$n=$v" }.mkString(", ")}) " +
-        "— the index is poisoned, mid-append, or built from a different " +
-        "corpus/gate. Run ensureMediaIndex to rebuild instead.")
-    val baseMaxId = base.collectFirst { case ("maxid", v) => v }.getOrElse(
-      throw new IllegalArgumentException(
-        s"appendToMediaIndex($table): base meta carries no maxid — build with " +
-          "mediaMeta/ensureMediaIndex so the order contract is checkable"))
-    val resident =
-      try s.read.parquet(P.location(s, table, "_sigs"))
-        .select($"doc_id", $"md5", $"h0", $"h1")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"graft_index.$table has no persisted signature table — it predates " +
-              "the appendable layout. Run ensureMediaIndex once to migrate " +
-              "(the freshness probe requires _sigs and will rebuild).", e)
-      }
-    // order contract over ALL new docs (not just the reps the collapse
-    // keeps): a sub-maxid duplicate would displace a resident rep
-    val minNew = newDocs.agg(min(col("doc_id"))).head().get(0)
-    // EMPTY delta: the grown corpus IS the base corpus, so the resident
-    // index is already the full-rebuild answer — return before any
-    // write, unless the caller's grown meta says rows were lost
-    if (minNew == null) {
-      require(base == grown,
-        s"appendToMediaIndex($table): empty delta but grown meta " +
-          s"(${grown.map { case (n, v) => s"$n=$v" }.mkString(", ")}) differs from base " +
-          s"(${base.map { case (n, v) => s"$n=$v" }.mkString(", ")}) — the delta " +
-          "frame lost rows the caller counted")
-      return P.location(s, table, "_pairs")
     }
-    require(minNew.asInstanceOf[Long] > baseMaxId,
-      s"appendToMediaIndex($table): delta min doc_id $minNew is not above the " +
-        s"resident corpus max $baseMaxId — media reps are min-doc_id per " +
-        "payload group, so out-of-order ingest would displace resident " +
-        "representatives; rebuild with ensureMediaIndex instead")
-    // enforce the gate the BASE was built under (it is part of the
-    // verified _meta tuple): a caller who built with a custom bound and
-    // omits it here (None) must not gate the merged profile under the
-    // default (spurious refusal) or silently append past a tighter
-    // stored contract — and ANY explicit argument must agree, including
-    // an explicit Some(MaxBandBucket) against a custom-gate index (the
-    // r15 Long-default form made that disagreement indistinguishable
-    // from an omission and silently used the stored gate).
-    val baseGate = base.collectFirst { case ("gate", v) => v }
-      .orElse(maxBandBucket).getOrElse(MaxBandBucket)
-    maxBandBucket.foreach { explicit =>
-      require(explicit == baseGate,
-        s"appendToMediaIndex($table): explicit maxBandBucket=$explicit " +
-          s"disagrees with the gate the index was built under ($baseGate) — " +
-          "the append enforces the stored contract; rebuild with " +
-          "ensureMediaIndex to change the gate")
-    }
-    // the GROWN tuple is stamped verbatim as the next append's verified
-    // base — a grown "gate" entry that differs from baseGate would
-    // silently rewrite the stored gate contract for every future append
-    // (r15 advice), the drift class this validation exists to close
-    grown.collectFirst { case ("gate", v) => v }.foreach { g =>
-      require(g == baseGate,
-        s"appendToMediaIndex($table): grown meta carries gate=$g but the " +
-          s"index's verified gate is $baseGate — the append cannot change " +
-          "the gate contract; rebuild with ensureMediaIndex to re-gate")
-    }
-    val newSigs = phashSigsOf(newDocs).localCheckpoint()
-    try {
-      // absorption: md5 matches collapse into the resident rep (no new
-      // rep, no pairs — the rebuild's collapse, reproduced); only
-      // genuinely new payloads survive as fresh reps
-      val freshNew = absorptionSurvivors(newSigs, resident).localCheckpoint()
-      try {
-        // gate BEFORE poison, on the merged profile == grown corpus reps.
-        // The stored _prof carries the RESIDENT profile, so the merge is
-        // stored + delta counts (exact: absorption guarantees the fresh
-        // reps are disjoint from resident reps) — no resident re-scan.
-        // Materialized driver-side (≤ 8·256 + delta-bucket rows) because
-        // the _prof rewrite below must not read the files it replaces.
-        val storedProf =
-          try s.read.parquet(P.location(s, table, "_prof"))
-            .select($"bi", $"bv", $"cnt").as[(Int, Long, Long)].collect()
-          catch {
-            case e: org.apache.spark.sql.AnalysisException =>
-              throw new IllegalStateException(
-                s"graft_index.$table has no persisted band profile — it predates " +
-                  "the appendable layout's r19 profile revision. Run " +
-                  "ensureMediaIndex once to migrate (the freshness probe " +
-                  "requires _prof and will rebuild).", e)
-          }
-        val deltaProf = bandProfile(freshNew).as[(Int, Long, Long)].collect()
-        val mergedProf = scala.collection.mutable.HashMap.empty[(Int, Long), Long]
-        (storedProf.iterator ++ deltaProf.iterator).foreach { case (bi, bv, c) =>
-          mergedProf.updateWith((bi, bv))(prev => Some(prev.getOrElse(0L) + c)) }
-        gateCheck(if (mergedProf.isEmpty) 0L else mergedProf.values.max, baseGate,
-          "append")
-        P.poison(s, table, base.map(_._1))
-        val freshPacked = packedSigs(freshNew)
-        val cross = HammingBands.crossPairs(
-          HammingBands.bandRows(packedSigs(resident), "sig"),
-          HammingBands.bandRows(freshPacked, "sig"), "sig")
-        P.appendTable(cross.unionByName(HammingBands.pairs(freshPacked, "sig")),
-          table, "_pairs")
-        P.appendTable(freshNew.select($"doc_id", $"md5", $"h0", $"h1"),
-          table, "_sigs")
-        // rewrite the (profile-sized) _prof with the merged counts so the
-        // NEXT append's gate also merges instead of re-profiling; between
-        // poison and stamp, so a crash here leaves the poisoned meta the
-        // next ensure repairs by rebuilding everything including _prof
-        graft.plans.CoLocated.replaceTable(
-          mergedProf.iterator.map { case ((bi, bv), c) => (bi, bv, c) }
-            .toSeq.toDF("bi", "bv", "cnt"),
-          P.Database, table + "_prof")
-        P.stamp(s, table, grown)
-      } finally freshNew.unpersist(false)
-    } finally newSigs.unpersist(false)
-    P.location(s, table, "_pairs")
   }
 
   /** The append's absorption probe: delta signature rows whose md5 does
@@ -1205,10 +1165,10 @@ object Multimodal {
           .as[(Long, Long)].head()
         val cut = mn + (mx - mn) * 2 / 3
         val base = docs.filter($"doc_id" <= cut)
-        val bm = mediaMeta(graft.QueryHelpers.docsFingerprintMax(base), MaxBandBucket)
+        val bm = mediaMeta(PersistedIndex.fingerprint(base, "doc_id", "text"), MaxBandBucket)
         ensureMediaIndexFor(s, base, table, bm)
-        val path = appendToMediaIndex(s, docs.filter($"doc_id" > cut), table,
-          bm, mediaMeta(graft.QueryHelpers.docsFingerprintMax(docs), MaxBandBucket))
+        val path = appendToMediaIndex(s, docs.filter($"doc_id" > cut), table, bm,
+          mediaMeta(PersistedIndex.fingerprint(docs, "doc_id", "text"), MaxBandBucket))
         s.read.parquet(path)
           .agg(count(lit(1)).cast("long").as("n_pairs"),
             coalesce(sum($"hamming"), lit(0L)).cast("long").as("sum_hamming"))

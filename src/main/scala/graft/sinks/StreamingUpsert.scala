@@ -131,12 +131,14 @@ object StreamingUpsert {
         if (!layout.delivered(numBuckets)) layout.create(upserts, numBuckets)
         else {
           // touched buckets: from the FULL reduced batch (upserts +
-          // deletes); a bucket whose every row was deleted empties out
+          // deletes); a bucket whose every row was deleted empties out.
+          // Without a tombstone column every touched bucket keeps its
+          // upserted rows, so the empty-bucket scan is skipped
           val touched = layout.touched(reduced, keys, numBuckets)
           layout.swap(
             graft.operators.MergeUpsert(layout.read(touched), upserts, keys)
               .join(broadcast(deletes), keys, "left_anti"),
-            dropEmpty = touched)
+            dropEmpty = if (tombstoneCol.isDefined) touched else Nil)
         }
       }
     }

@@ -397,4 +397,48 @@ class PlanRegressionSpec extends SparkSpec {
       assert(!p.contains("Exchange") && !p.contains("Sort"), s"sheet read must not shuffle or sort:\n$p")
     } finally sc.removeSparkListener(listener)
   }
+
+  test("upsert merge batch without a tombstone column skips the empty-bucket scan") {
+    import graft.sinks.StreamingUpsert
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    import spark.implicits._
+    // with no deletes every touched bucket keeps its upserted rows, so
+    // the kept-bucket distinct scan (two jobs) would be pure overhead
+    val fn = StreamingUpsert.upsertBatch("jobs_merge", Seq("k"), database = "plan_upsert")
+    def batch(ver: Double) = (1L to 100L).map(k => (k, s"s$k", k + ver)).toDF("k", "s", "v")
+    fn(batch(0.0), 0L) // first delivery creates the table
+    fn(batch(1.0), 1L) // warm the merge path
+    val mark = s"upsert-jobs-${System.nanoTime()}"
+    val counting = new AtomicBoolean(false)
+    val jobs = new AtomicInteger()
+    val drained = new CountDownLatch(1)
+    // listener events arrive in order: every job between the two marker
+    // jobs belongs to the merge batch
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == s"$mark-start" => counting.set(true)
+          case Some(g) if g == s"$mark-drain" => counting.set(false); drained.countDown()
+          case _ => if (counting.get) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      def marker(g: String): Unit = {
+        sc.setJobGroup(g, g)
+        try spark.range(1).count() finally sc.clearJobGroup()
+      }
+      marker(s"$mark-start")
+      fn(batch(2.0), 2L)
+      marker(s"$mark-drain")
+      assert(drained.await(60, TimeUnit.SECONDS), "listener never saw the drain job")
+      // 11 jobs; the kept-bucket scan would add two more
+      assert(jobs.get <= 11,
+        s"a 100-row no-tombstone merge batch ran ${jobs.get} jobs (at most 11)")
+    } finally sc.removeSparkListener(listener)
+    assert(spark.table("plan_upsert.jobs_merge").count() == 100L)
+  }
 }

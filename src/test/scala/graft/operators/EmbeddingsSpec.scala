@@ -267,8 +267,8 @@ class EmbeddingsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    Embeddings.buildIndex(vecs, "graft_index", "v08spec")
-    val q = Embeddings.queryIndex(spark, "graft_index", "v08spec")
+    Embeddings.buildIndex(vecs, "v08spec")
+    val q = Embeddings.queryIndex(spark, "v08spec")
     val plan = q.queryExecution.executedPlan.toString
     // the whole point of the persisted index: the bucketed layout feeds
     // the kernel directly — no shuffle, no norm/bucket recomputation
@@ -289,9 +289,9 @@ class EmbeddingsSpec extends SparkSpec {
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // same-session rebuild (Overwrite path)
-    Embeddings.buildIndex(vecs, "graft_index", "v08idem")
-    Embeddings.buildIndex(vecs, "graft_index", "v08idem")
-    val n1 = Embeddings.queryIndex(spark, "graft_index", "v08idem").count()
+    Embeddings.buildIndex(vecs, "v08idem")
+    Embeddings.buildIndex(vecs, "v08idem")
+    val n1 = Embeddings.queryIndex(spark, "v08idem").count()
     assert(n1 > 0)
     // the r4 failure mode: a managed-table directory left by an EARLIER
     // JVM while the current catalog has no entry for it — simulated by
@@ -303,8 +303,8 @@ class EmbeddingsSpec extends SparkSpec {
     fs.mkdirs(stale)
     fs.create(new org.apache.hadoop.fs.Path(stale, "junk.bin")).close()
     assert(!spark.catalog.tableExists("graft_index.v08stale"))
-    Embeddings.buildIndex(vecs, "graft_index", "v08stale")
-    assert(Embeddings.queryIndex(spark, "graft_index", "v08stale").count() == n1)
+    Embeddings.buildIndex(vecs, "v08stale")
+    assert(Embeddings.queryIndex(spark, "v08stale").count() == n1)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(stale, "junk.bin")),
       "stale junk must be replaced by the rebuilt index")
     spark.sql("DROP TABLE IF EXISTS graft_index.v08idem")
@@ -317,7 +317,7 @@ class EmbeddingsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val head = vecs.filter(col("vec_id") < 250)
     val tail = vecs.filter(col("vec_id") >= 250)
-    Embeddings.buildIndex(head, "graft_index", "v08incr")
+    Embeddings.buildIndex(head, "v08incr")
     // file-listing diff across the append: every resident file must
     // survive byte-identical (path, length, mtime) — the append may only
     // ADD files. This is the claim that makes incremental maintenance
@@ -339,20 +339,20 @@ class EmbeddingsSpec extends SparkSpec {
       b.result()
     }
     val before = listFiles()
-    Embeddings.appendToIndex(tail, "graft_index", "v08incr")
+    Embeddings.appendToIndex(tail, "v08incr")
     val after = listFiles()
     val touched = before.filter { case (p, meta) => after.get(p) != Some(meta) }
     assert(touched.isEmpty, s"append modified resident files: ${touched.keys}")
     assert(after.size > before.size, "append must add new files")
-    Embeddings.buildIndex(vecs, "graft_index", "v08full")
-    def rows(t: String) = Embeddings.queryIndex(spark, "graft_index", t).collect()
+    Embeddings.buildIndex(vecs, "v08full")
+    def rows(t: String) = Embeddings.queryIndex(spark, t).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
       .sortBy(t => (t._1, t._2)).toSeq
     assert(rows("v08incr") == rows("v08full"),
       "incremental append must be indistinguishable from a full rebuild")
     // the appended table still reads Exchange-free (the invariant the
     // bucketed layout exists to preserve)
-    val plan = Embeddings.queryIndex(spark, "graft_index", "v08incr")
+    val plan = Embeddings.queryIndex(spark, "v08incr")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"appended index read-back must not shuffle:\n$plan")
     spark.sql("DROP TABLE IF EXISTS graft_index.v08incr")
@@ -399,7 +399,7 @@ class EmbeddingsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val queryRows = vecs.filter(col("vec_id") < 10)
       .as[(Long, Array[Double])].collect()
-    val serve = Embeddings.queryPqIndex(spark, queryRows, "graft_index", table)
+    val serve = Embeddings.queryPqIndex(spark, queryRows, table)
     // inspect the actual scan relations (the plan STRING truncates long
     // file paths): every file scan in the serve plan must be the
     // persisted code table — which simultaneously proves no raw-corpus
@@ -420,15 +420,15 @@ class EmbeddingsSpec extends SparkSpec {
     val tables = Seq(s"${table}_books", s"${table}_codes", s"${table}_meta")
     val before = pqListFiles(tables)
     assert(before.nonEmpty)
-    Embeddings.buildPqIndex(vecs, "graft_index", table)
+    Embeddings.buildPqIndex(vecs, table)
     assert(pqListFiles(tables) == before,
       "matching-fingerprint rebuild must not touch the persisted index")
     // a CHANGED corpus must invalidate the skip and rewrite the index
-    Embeddings.buildPqIndex(vecs.filter(col("vec_id") % 2 === 0), "graft_index", table)
+    Embeddings.buildPqIndex(vecs.filter(col("vec_id") % 2 === 0), table)
     assert(pqListFiles(tables) != before,
       "a different corpus must retrain — the fingerprint may not false-match")
     // restore the full-corpus index for any later test/catalog run
-    Embeddings.buildPqIndex(vecs, "graft_index", table)
+    Embeddings.buildPqIndex(vecs, table)
   }
 
   test("v19 persisted BM25: equals v16; lex serve scans only the posting table; rebuild skips") {
@@ -446,7 +446,7 @@ class EmbeddingsSpec extends SparkSpec {
     // scan, no tokenize, no tf/df aggregation (those jobs read
     // documents.parquet, which this plan provably cannot)
     val table = "v19_" + sf.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-    val lex = Embeddings.queryBm25Index(spark, Array((0L, "the")), "graft_index", table, 60)
+    val lex = Embeddings.queryBm25Index(spark, Array((0L, "the")), table, 60)
     val scans = lex.queryExecution.optimizedPlan.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
@@ -466,16 +466,16 @@ class EmbeddingsSpec extends SparkSpec {
     val tables = Seq(s"${table}_postings", s"${table}_meta")
     val before = pqListFiles(tables)
     assert(before.nonEmpty)
-    Embeddings.buildBm25Index(docsText, "graft_index", table)
+    Embeddings.buildBm25Index(docsText, table)
     assert(pqListFiles(tables) == before,
       "matching-fingerprint rebuild must not touch the persisted index")
     // a CHANGED corpus must invalidate the skip and rewrite the index
     Embeddings.buildBm25Index(
-      docsText.filter(col("doc_id") % 2 === 0), "graft_index", table)
+      docsText.filter(col("doc_id") % 2 === 0), table)
     assert(pqListFiles(tables) != before,
       "a changed corpus must rebuild — the fingerprint may not false-match")
     // restore the full-universe index for any later test/catalog run
-    Embeddings.buildBm25Index(docsText, "graft_index", table)
+    Embeddings.buildBm25Index(docsText, table)
   }
 
   test("a corrupt _meta footer propagates from buildPqIndex and buildBm25Index instead of rebuilding") {
@@ -484,8 +484,8 @@ class EmbeddingsSpec extends SparkSpec {
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val docs = Seq((1L, "red fox"), (2L, "blue fox"), (3L, "red hen")).toDF("doc_id", "text")
-    Embeddings.buildPqIndex(vecs, "graft_index", "v15corrupt")
-    Embeddings.buildBm25Index(docs, "graft_index", "v19corrupt")
+    Embeddings.buildPqIndex(vecs, "v15corrupt")
+    Embeddings.buildBm25Index(docs, "v19corrupt")
     // overwrite every _meta part file with bytes that are not parquet
     // (and drop the checksums, so the read reaches the footer)
     def corruptMeta(table: String): Unit = {
@@ -499,9 +499,9 @@ class EmbeddingsSpec extends SparkSpec {
     }
     for ((table, artifacts, build) <- Seq[(String, Seq[String], () => String)](
         ("v15corrupt", Seq("_books", "_codes", "_coarse"),
-          () => Embeddings.buildPqIndex(vecs, "graft_index", "v15corrupt")),
+          () => Embeddings.buildPqIndex(vecs, "v15corrupt")),
         ("v19corrupt", Seq("_postings"),
-          () => Embeddings.buildBm25Index(docs, "graft_index", "v19corrupt")))) {
+          () => Embeddings.buildBm25Index(docs, "v19corrupt")))) {
       corruptMeta(table)
       val before = pqListFiles((artifacts :+ "_meta").map(table + _))
       // a corrupt footer is not a miss: rebuilding would clear the index
@@ -521,12 +521,12 @@ class EmbeddingsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val head = vecs.filter(col("vec_id") % 3 =!= 0)
     val tail = vecs.filter(col("vec_id") % 3 === 0)
-    Embeddings.buildPqIndex(head, "graft_index", "v15incr")
+    Embeddings.buildPqIndex(head, "v15incr")
     // _coarse is resident state too: an append that rewrote the coarse
     // quantizer would silently re-cell the whole corpus
     val tables = Seq("v15incr_books", "v15incr_codes", "v15incr_coarse")
     val before = pqListFiles(tables)
-    Embeddings.appendToPqIndex(tail, "graft_index", "v15incr")
+    Embeddings.appendToPqIndex(tail, "v15incr")
     val after = pqListFiles(tables)
     val touched = before.filter { case (p, meta) => after.get(p) != Some(meta) }
     assert(touched.isEmpty, s"append modified resident files: ${touched.keys}")
@@ -548,11 +548,56 @@ class EmbeddingsSpec extends SparkSpec {
     // including the head slice the fingerprint once matched — retrains
     // rather than serving codes its books never saw
     val poisoned = pqListFiles(Seq("v15incr_meta"))
-    Embeddings.buildPqIndex(head, "graft_index", "v15incr")
+    Embeddings.buildPqIndex(head, "v15incr")
     assert(pqListFiles(Seq("v15incr_meta")) != poisoned,
       "post-append build must retrain (rewrite meta), not fingerprint-skip")
     Seq("v15incr_books", "v15incr_codes", "v15incr_coarse", "v15incr_meta")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_index.$t"))
+      .foreach(t => graft.plans.CoLocated.clearTable(spark, "graft_index", t))
+  }
+
+  test("appendToPqIndex killed inside its codes write: sentinel stays, next build retrains, v15 == v12") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val P = graft.plans.PersistedIndex
+    val table = "v15_" + sf.toLowerCase.replaceAll("[^a-z0-9]+", "_")
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    Embeddings.buildPqIndex(vecs, table)
+    // a 2-dim delta vector: the lazy encode throws inside the codes
+    // write, after the poison
+    val short = Seq((1000000L, Array(1.0, 2.0))).toDF("vec_id", "v")
+    intercept[Exception](Embeddings.appendToPqIndex(short, table))
+    val stored = spark.read.parquet(P.location(spark, table, "_meta"))
+      .select($"n", $"fp").as[(Long, Long)].collect().toSeq
+    assert(stored == Seq((-1L, -1L)), s"_meta must hold the poison sentinel, got $stored")
+    val poisoned = pqListFiles(Seq(s"${table}_meta"))
+    Embeddings.buildPqIndex(vecs, table)
+    assert(pqListFiles(Seq(s"${table}_meta")) != poisoned,
+      "the build after a killed append must retrain (rewrite meta)")
+    val v15 = Catalog.byName("v15_ann_pq_persisted").run(spark, sf).collect().toSeq
+    val v12 = Catalog.byName("v12_ann_pq").run(spark, sf).collect().toSeq
+    assert(v15 == v12, "the retrained index must serve exactly v12's answer")
+  }
+
+  test("a PQ _meta written as a catalog table by an earlier version stays fresh") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val P = graft.plans.PersistedIndex
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    Embeddings.buildPqIndex(vecs, "v15upgrade")
+    // rewrite _meta the way earlier versions did: the same (n, fp) as a
+    // catalog CTAS table at the same location
+    val (n, fp) = spark.read.parquet(P.location(spark, "v15upgrade", "_meta"))
+      .select($"n", $"fp").as[(Long, Long)].head()
+    graft.plans.CoLocated.replaceTable(Seq((n, fp)).toDF("n", "fp"),
+      "graft_index", "v15upgrade_meta")
+    val tables = Seq("_books", "_codes", "_coarse", "_meta").map("v15upgrade" + _)
+    val before = pqListFiles(tables)
+    Embeddings.buildPqIndex(vecs, "v15upgrade")
+    assert(pqListFiles(tables) == before,
+      "an upgraded reader must fingerprint-skip, not retrain, a deployed index")
+    tables.foreach(t => graft.plans.CoLocated.clearTable(spark, "graft_index", t))
   }
 
   test("v07 prefix rerank: reranked cosines are exact and recall vs v01 is high") {

@@ -179,8 +179,8 @@ class PersistedIndexSpec extends SparkSpec {
     val P = graft.plans.PersistedIndex
     val base = baseDocs.toDF("doc_id", "text")
     val delta = deltaDocs.toDF("doc_id", "text")
-    val bm = graft.QueryHelpers.docsFingerprint(base)
-    val gm = graft.QueryHelpers.docsFingerprint(base.unionByName(delta))
+    val bm = graft.plans.PersistedIndex.fingerprint(base, "doc_id", "text")
+    val gm = graft.plans.PersistedIndex.fingerprint(base.unionByName(delta), "doc_id", "text")
     Documents.ensureSimhashIndexFor(spark, base, "apx_bytes",
       Seq("n" -> bm._1, "fp" -> bm._2), force = true)
     val pairsBefore = fileSnapshot(P.location(spark, "apx_bytes", "_pairs"))
@@ -212,13 +212,13 @@ class PersistedIndexSpec extends SparkSpec {
   test("append refuses doc_ids that overlap the indexed corpus") {
     graft.CacheRegistry.unpersistAll()
     val base = baseDocs.toDF("doc_id", "text")
-    val bm = graft.QueryHelpers.docsFingerprint(base)
+    val bm = graft.plans.PersistedIndex.fingerprint(base, "doc_id", "text")
     Documents.ensureSimhashIndexFor(spark, base, "apx_overlap",
       Seq("n" -> bm._1, "fp" -> bm._2), force = true)
     val overlapping = Seq((0L, "same id as a resident doc")).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
       Documents.appendToSimhashIndex(spark, overlapping, "apx_overlap",
-        bm, (bm._1 + 1, 12345L))
+        bm, (bm._1 + 1, 12345L, bm._3))
     }
     assert(e.getMessage.contains("overlap"))
     graft.CacheRegistry.unpersistAll()
@@ -229,14 +229,14 @@ class PersistedIndexSpec extends SparkSpec {
     val P = graft.plans.PersistedIndex
     val base = baseDocs.toDF("doc_id", "text")
     val delta = deltaDocs.toDF("doc_id", "text")
-    val bm = graft.QueryHelpers.docsFingerprint(base)
-    val gm = graft.QueryHelpers.docsFingerprint(base.unionByName(delta))
+    val bm = graft.plans.PersistedIndex.fingerprint(base, "doc_id", "text")
+    val gm = graft.plans.PersistedIndex.fingerprint(base.unionByName(delta), "doc_id", "text")
     Documents.ensureSimhashIndexFor(spark, base, "apx_basechk",
       Seq("n" -> bm._1, "fp" -> bm._2), force = true)
     // wrong base: the caller thinks the index was built from another corpus
     val e1 = intercept[IllegalArgumentException] {
       Documents.appendToSimhashIndex(spark, delta, "apx_basechk",
-        (bm._1, bm._2 + 1), gm)
+        (bm._1, bm._2 + 1, bm._3), gm)
     }
     assert(e1.getMessage.contains("does not match the expected base"))
     // empty delta: grown == base returns the pair table and writes
@@ -266,7 +266,7 @@ class PersistedIndexSpec extends SparkSpec {
     graft.CacheRegistry.unpersistAll()
     val P = graft.plans.PersistedIndex
     val base = baseDocs.toDF("doc_id", "text")
-    val bm = graft.QueryHelpers.docsFingerprint(base)
+    val bm = graft.plans.PersistedIndex.fingerprint(base, "doc_id", "text")
     val meta = Seq("n" -> bm._1, "fp" -> bm._2)
     val loc = Documents.ensureSimhashIndexFor(spark, base, "apx_crash", meta,
       force = true)
@@ -284,13 +284,53 @@ class PersistedIndexSpec extends SparkSpec {
     graft.CacheRegistry.unpersistAll()
   }
 
+  test("append killed between poison and stamp: sentinel stays, retry refuses, next ensure rebuilds clean") {
+    graft.CacheRegistry.unpersistAll()
+    val P = graft.plans.PersistedIndex
+    val base = baseDocs.toDF("doc_id", "text")
+    val bm = P.fingerprint(base, "doc_id", "text")
+    val gm = P.fingerprint(base.unionByName(deltaDocs.toDF("doc_id", "text")), "doc_id", "text")
+    val meta = Seq("n" -> bm._1, "fp" -> bm._2)
+    Documents.ensureSimhashIndexFor(spark, base, "apx_killed", meta, force = true)
+    // the shared append step with a body that appends _pairs and dies
+    // before the rest of its writes and the stamp
+    val killed = intercept[RuntimeException] {
+      P.append(spark, "apx_killed", "ensureSimhashIndex", meta,
+          Seq("n" -> gm._1, "fp" -> gm._2)) { commit =>
+        commit {
+          P.appendArtifact(Seq((0L, 10L, 0L)).toDF("doc_a", "doc_b", "hamming"),
+            "apx_killed", "_pairs")
+          throw new RuntimeException("killed mid-append")
+        }
+      }
+    }
+    assert(killed.getMessage == "killed mid-append")
+    val stored = spark.read.parquet(P.location(spark, "apx_killed", "_meta"))
+      .select($"n", $"fp").as[(Long, Long)].collect().toSeq
+    assert(stored == Seq((-1L, -1L)), s"_meta must hold the poison sentinel, got $stored")
+    // a retried append refuses and sends the caller to the rebuild
+    val retry = intercept[IllegalArgumentException] {
+      Documents.appendToSimhashIndex(spark, deltaDocs.toDF("doc_id", "text"),
+        "apx_killed", bm, gm)
+    }
+    assert(retry.getMessage.contains("ensureSimhashIndex"))
+    // the next (unforced) ensure rebuilds _pairs equal to a clean build
+    Documents.ensureSimhashIndexFor(spark, base, "apx_killed", meta)
+    Documents.ensureSimhashIndexFor(spark, base, "apx_clean", meta, force = true)
+    def pairs(t: String) = spark.read.parquet(P.location(spark, t, "_pairs"))
+      .as[(Long, Long, Long)].collect().toSet
+    assert(pairs("apx_killed") == pairs("apx_clean"),
+      "the rebuild must drop the half-appended pair")
+    graft.CacheRegistry.unpersistAll()
+  }
+
   test("append on a pre-_sigs layout raises the migration error") {
     graft.CacheRegistry.unpersistAll()
     val P = graft.plans.PersistedIndex
     val base = baseDocs.toDF("doc_id", "text")
     val delta = deltaDocs.toDF("doc_id", "text")
-    val bm = graft.QueryHelpers.docsFingerprint(base)
-    val gm = graft.QueryHelpers.docsFingerprint(base.unionByName(delta))
+    val bm = graft.plans.PersistedIndex.fingerprint(base, "doc_id", "text")
+    val gm = graft.plans.PersistedIndex.fingerprint(base.unionByName(delta), "doc_id", "text")
     // a pre-aux artifact: pairs + meta written by the OLD protocol (no
     // _sigs) — exactly what a pre-r13 build left on disk
     P.ensure(spark, "apx_oldlayout", Seq("n" -> bm._1, "fp" -> bm._2),
@@ -316,9 +356,9 @@ class PersistedIndexSpec extends SparkSpec {
       (11L, "a wholly new media payload body here")).toDF("doc_id", "text")
     val grown = base.unionByName(mdelta)
     val bm = Multimodal.mediaMeta(
-      graft.QueryHelpers.docsFingerprintMax(base), Multimodal.MaxBandBucket)
+      graft.plans.PersistedIndex.fingerprint(base, "doc_id", "text"), Multimodal.MaxBandBucket)
     val gm = Multimodal.mediaMeta(
-      graft.QueryHelpers.docsFingerprintMax(grown), Multimodal.MaxBandBucket)
+      graft.plans.PersistedIndex.fingerprint(grown, "doc_id", "text"), Multimodal.MaxBandBucket)
     Multimodal.ensureMediaIndexFor(spark, base, "mapx_bytes", bm, force = true)
     val pairsBefore = fileSnapshot(P.location(spark, "mapx_bytes", "_pairs"))
     val sigsBefore = fileSnapshot(P.location(spark, "mapx_bytes", "_sigs"))
@@ -384,13 +424,13 @@ class PersistedIndexSpec extends SparkSpec {
     // contradicts it
     val customGate = 1L << 18
     val bm = Multimodal.mediaMeta(
-      graft.QueryHelpers.docsFingerprintMax(base), customGate)
+      graft.plans.PersistedIndex.fingerprint(base, "doc_id", "text"), customGate)
     Multimodal.ensureMediaIndexFor(spark, base, "mapx_gate", bm, force = true,
       maxBandBucket = customGate)
     val delta = Seq((30L, "a fresh gate-test payload")).toDF("doc_id", "text")
     val grown = base.unionByName(delta)
     val gm = Multimodal.mediaMeta(
-      graft.QueryHelpers.docsFingerprintMax(grown), customGate)
+      graft.plans.PersistedIndex.fingerprint(grown, "doc_id", "text"), customGate)
     val e = intercept[IllegalArgumentException] {
       Multimodal.appendToMediaIndex(spark, delta, "mapx_gate", bm, gm,
         maxBandBucket = Some(12345L))
@@ -429,7 +469,7 @@ class PersistedIndexSpec extends SparkSpec {
     val P = graft.plans.PersistedIndex
     val base = baseDocs.toDF("doc_id", "text")
     val bm = Multimodal.mediaMeta(
-      graft.QueryHelpers.docsFingerprintMax(base), Multimodal.MaxBandBucket)
+      graft.plans.PersistedIndex.fingerprint(base, "doc_id", "text"), Multimodal.MaxBandBucket)
     Multimodal.ensureMediaIndexFor(spark, base, "mapx_ord", bm, force = true)
     // order contract: a delta id at-or-below the resident max could
     // displace a min-doc_id representative — refuse (subsumes overlap)
