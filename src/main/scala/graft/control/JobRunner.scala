@@ -68,10 +68,26 @@ final class JobRunner(
       .option("inferSchema", "true")
       .load(resolveSheet(job.document, job.sheet).toString)
 
+  /** A state write that cannot land — e.g. an operator deleted the row
+    * under a running job — is logged, never thrown: it must not cost the
+    * job's run-log line, the cycle's other due jobs or the poll loop.
+    * None when it did not land. */
+  private def stateWrite[A](job: JobSpec)(write: => A): Option[A] =
+    scala.util.Try(write).fold(e => {
+      log(s"state write failed on row ${job.row}: ${e.getMessage}")
+      None
+    }, Some(_))
+
   /** Run one job through the U1→(U2|U3) lifecycle, appending the log line
-    * (`run_job`, `manager.py:183-203`; log `manager.py:147-164`). */
+    * (`run_job`, `manager.py:183-203`; log `manager.py:147-164`). A job
+    * whose Running mark cannot be written does not start (false, no log
+    * line); a started job whose outcome cannot be written logs a Failure
+    * line with the write's cause. */
   def runJob(job: JobSpec): Boolean = {
-    val start = StateMachine.markRunning(control, job, clock)
+    val start = stateWrite(job)(StateMachine.markRunning(control, job, clock)) match {
+      case Some(at) => at
+      case None => return false
+    }
     val outcome =
       try {
         val df = exportPlan(job)
@@ -103,7 +119,7 @@ final class JobRunner(
       } catch {
         case NonFatal(e) =>
           val msg = Errors.translate(e, identity)
-          StateMachine.markFailure(control, job, msg)
+          stateWrite(job)(StateMachine.markFailure(control, job, msg))
           Left(msg)
       }
     val end = clock.instant()
@@ -130,7 +146,7 @@ final class JobRunner(
     val (valid, invalid) = Scheduler.partitionValid(control.jobs())
     invalid.foreach { case (job, err) =>
       log(s"invalid schedule on row ${job.row}: $err")
-      StateMachine.markInvalidSchedule(control, job, err)
+      stateWrite(job)(StateMachine.markInvalidSchedule(control, job, err))
     }
     val due = valid.filter { case (job, interval) => Scheduler.shouldRun(job, interval, now) }
     if (maxConcurrent == 1 || due.size <= 1) due.foreach { case (job, _) => runJob(job) }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryHelpers._
+import graft.operators.CosineKernels._
 import graft.plans.PersistedIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -89,26 +90,6 @@ object Embeddings {
   private[operators] def sqlGt(a: Double, b: Double): Boolean =
     if (a.isNaN) !b.isNaN else !b.isNaN && a > b
 
-  /** Bounded top-k insertion under (score desc, id asc) SQL ordering —
-    * the ranking contract shared by the v02 kernel and [[annTopK]] (one
-    * implementation, so an ordering tweak cannot de-synchronize them). */
-  private[operators] final class TopKBuffer(k: Int) {
-    val scores = new Array[Double](k)
-    val ids = new Array[Long](k)
-    var filled = 0
-    def insert(score: Double, id: Long): Unit = {
-      var p = 0
-      while (p < filled && !(sqlGt(score, scores(p)) ||
-        ((score == scores(p) || (score.isNaN && scores(p).isNaN)) && id < ids(p)))) p += 1
-      if (p < k) {
-        var q = math.min(filled, k - 1)
-        while (q > p) { scores(q) = scores(q - 1); ids(q) = ids(q - 1); q -= 1 }
-        scores(p) = score; ids(p) = id
-        if (filled < k) filled += 1
-      }
-    }
-  }
-
   /** Declarative faces of the fixed-point contract, now routed through
     * the native `fp_dot` expression ([[graft.functions.FixedPointDot]],
     * installed by [[based]]/[[annTopK]]/[[indexRows]] before analysis).
@@ -135,16 +116,14 @@ object Embeddings {
     * execute as a nested-loop join with per-pair expression eval
     * (interpreted in BroadcastNestedLoopJoin — measured 80-180 s at
     * sf0.1). This is the genuine custom-kernel case (SURVEY §2.1
-    * preference (d)): a BLOCK SELF-JOIN — rows get a block id
-    * (floorMod(vec_id, B)), every row is replicated to the B unordered
-    * block pairs it belongs to, and each of the B(B+1)/2 pair groups
-    * runs a tight primitive-array kernel over its two blocks. Nothing is
-    * ever collected to the driver; per-task memory is two blocks (~2n/B
+    * preference (d)): [[CosineKernels.blockPairs]]'s BLOCK SELF-JOIN over
+    * one cell — each of the B(B+1)/2 block-pair groups runs a tight
+    * primitive-array kernel over its two blocks. Nothing is ever
+    * collected to the driver; per-task memory is two blocks (~2n/B
     * vectors), so B scales with the corpus (B ≈ n·rowBytes /
     * executorBudget) at the price of a B× shuffle replication — the
     * standard dense all-pairs decomposition. The kernel keeps the SAME
-    * fixed-point arithmetic as the declarative ops (products are
-    * commutative, so block order cannot change a value), so v04's DuckDB
+    * fixed-point arithmetic as the declarative ops, so v04's DuckDB
     * oracle hash-matches it.
     *
     * SIZE-GATED: block decomposition bounds per-task MEMORY, but the
@@ -178,49 +157,11 @@ object Embeddings {
           "near-dup use Embeddings.semanticDedup (d07: k-means cells, quadratic within " +
           "cells only) or Embeddings.annTopK (v02: LSH buckets); raise maxRows only " +
           "with the quadratic cost explicitly budgeted.")
-    val t = threshold
-    val B = blocks
-    val base = vectors.select(col("vec_id").cast("long"), col("v")).as[(Long, Array[Double])]
-    val tagged = base.flatMap { case (id, v) =>
-      val nrm = fpNorm(v)
-      val b = java.lang.Math.floorMod(id, B.toLong).toInt // ids may be negative in foreign corpora
-      (0 until B).iterator.map { c =>
-        (math.min(b, c) * B + math.max(b, c), b, id, v, nrm)
-      }
-    }
-    tagged.groupByKey(_._1).flatMapGroups { (key, iter) =>
-      val lo = key / B
-      val hi = key % B
-      val left = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
-      val right = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
-      iter.foreach { case (_, b, id, v, n) =>
-        if (b == lo) left += ((id, v, n)) else right += ((id, v, n))
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      def emit(a: (Long, Array[Double], Double), b: (Long, Array[Double], Double)): Unit = {
-        val c = fpCos(a._2, b._2, a._3, b._3)
-        // NaN (zero-norm vector) passes: SQL comparisons rank NaN above
-        // the threshold in both engines, so the declarative form and the
-        // DuckDB oracle both keep the pair
-        if (c >= t || c.isNaN) out += ((math.min(a._1, b._1), math.max(a._1, b._1), c))
-      }
-      if (lo == hi) { // diagonal group: all pairs within one block
-        var i = 0
-        while (i < left.length) {
-          var j = i + 1
-          while (j < left.length) { emit(left(i), left(j)); j += 1 }
-          i += 1
-        }
-      } else { // off-diagonal: full cross of the two blocks
-        var i = 0
-        while (i < left.length) {
-          var j = 0
-          while (j < right.length) { emit(left(i), right(j)); j += 1 }
-          i += 1
-        }
-      }
-      out.iterator
-    }.toDF("doc_a", "doc_b", "cosine")
+    val rows = vectors.select(col("vec_id").cast("long"), col("v")).as[(Long, Array[Double])]
+      .map { case (id, v) => (0L, id, v, fpNorm(v)) }
+    blockPairs(rows, blocks, threshold,
+      () => scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)])(
+      (lo, hi, c) => (lo, hi, c)).toDF("doc_a", "doc_b", "cosine")
   }
 
   /** Parameterized all-pairs ANN: approximate top-`k` cosine neighbors
@@ -234,65 +175,39 @@ object Embeddings {
     * only query rows replicate (×(planes+1)), so a (query, candidate)
     * pair is generated at most once and the final per-query rank needs
     * no dedup. Execution: the source is scanned ONCE into a tagged frame
-    * (code + norm per row) built from deterministic COLUMN expressions
-    * and retained under [[graft.CacheRegistry]] — plan-matched repeat
-    * calls hit one entry, and the storage is released by `Engine.close`
-    * / `unpersistAll` instead of waiting on the ContextCleaner the way
-    * the earlier `localCheckpoint` form did (the repo's own argument
-    * against localCheckpoint, `Curation.clusters` scaladoc). Both
-    * cogroup sides read that frame, a primitive top-k kernel runs per
-    * bucket, then one global row_number ≤ k (Spark's WindowGroupLimit
-    * keeps that partial).
+    * ([[indexRows]]: the v02/v08 sign bucket + norm per row) built from
+    * deterministic COLUMN expressions and retained under
+    * [[graft.CacheRegistry]] — plan-matched repeat calls hit one entry,
+    * and the storage is released by `Engine.close` / `unpersistAll`
+    * instead of waiting on the ContextCleaner the way the earlier
+    * `localCheckpoint` form did (the repo's own argument against
+    * localCheckpoint, `Curation.clusters` scaladoc). Both sides of
+    * [[CosineKernels.probeTopK]] read that frame.
     * Returns (query_id, rnk, neighbor_id, cosine).
     *
-    * Relation to the catalog: v02 pins the same bucket-kernel SHAPE
-    * (4 sign planes, no probing, its own bit numbering and bucket
-    * output column) under a DuckDB oracle; v06 is the IVF alternative.
-    * annTopK itself is recall-gated against brute force in
-    * EmbeddingsSpec rather than oracled (approximate by design).
+    * Relation to the catalog: v02 pins the same buckets (no probing,
+    * all-vs-all within a bucket) under a DuckDB oracle; v06 is the IVF
+    * alternative. annTopK itself is recall-gated against brute force
+    * and pinned to a driver-side same-bucket top-k in EmbeddingsSpec
+    * rather than oracled (approximate by design).
     */
   def annTopK(vectors: DataFrame, k: Int, planes: Int = 4,
       multiProbe: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(planes > 0 && planes <= 16, s"planes must be in 1..16, got $planes")
     val session = vectors.sparkSession
-    graft.functions.FixedPointDot.install(session)
     import session.implicits._
     val P = planes
-    // sign code as a column expression (ANSI array indexing throws on a
-    // vector shorter than `planes`); tuple-named columns so the retained
-    // DataFrame converts straight back to the kernel's typed Dataset
-    val codeCol = (0 until P).map(p =>
-      when(col("v").getItem(p) >= 0.0, lit(1 << p)).otherwise(lit(0))).reduce(_ + _)
+    // tuple-named columns so the retained frame converts straight back to
+    // the kernel's typed Dataset
     val tagged = graft.CacheRegistry.retain(s"ann.tagged.p$P",
-      vectors.select(codeCol.as("_1"), col("vec_id").cast("long").as("_2"),
-        col("v").as("_3"), expr(NormSql).as("_4")))
-      .as[(Int, Long, Array[Double], Double)]
+      indexRows(vectors, P).toDF("_1", "_2", "_3", "_4")).as[Tagged]
     val queries =
       if (!multiProbe) tagged
       else tagged.flatMap { case (c, id, v, n) =>
-        (Iterator(c) ++ (0 until P).iterator.map(p => c ^ (1 << p))).map(pb => (pb, id, v, n))
+        (Iterator(c) ++ (0 until P).iterator.map(p => c ^ (1L << p))).map(pb => (pb, id, v, n))
       }
-    val K = k
-    val scored = queries.groupByKey(_._1).cogroup(tagged.groupByKey(_._1)) { (_, qs, cs) =>
-      val cand = cs.toArray
-      qs.flatMap { case (_, qid, qv, qn) =>
-        val top = new TopKBuffer(K)
-        var ci = 0
-        while (ci < cand.length) {
-          val (_, cid, cv, cn) = cand(ci)
-          if (cid != qid) top.insert(fpCos(qv, cv, qn, cn), cid)
-          ci += 1
-        }
-        (0 until top.filled).iterator.map(r => (qid, top.ids(r), top.scores(r)))
-      }
-    }.toDF("query_id", "neighbor_id", "cosine")
-    // merge the ≤ probesPerQuery per-bucket top-k lists into one rank
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id")
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter($"rnk" <= K)
-      .select($"query_id", $"rnk", $"neighbor_id", $"cosine")
+    probeTopK(queries, tagged, k)
   }
 
   /** The trainer's deterministic sample bound: Knuth-hash values BELOW
@@ -317,24 +232,6 @@ object Embeddings {
     * every sub-64× tier EXACTLY as before (the cut is a no-op below
     * 65536 rows) and bound the trainer at sample × cells forever. */
   val TrainSampleTarget: Long = 65536L
-
-  /** Argmax fixed-point cosine against a centroid array in ascending-id
-    * order under SQL NaN semantics ([[sqlGt]] — NaN ranks first, ties
-    * keep the smallest id, zero-norm rows land on the first centroid).
-    * THE assignment arithmetic: the trainer, d07/p09/m10's assignment
-    * passes and [[CellModel.assign]] all route through this one loop so
-    * engine and oracle cannot drift per-consumer. */
-  private[operators] def argmaxCell(cs: Array[(Long, Array[Double], Double)],
-      v: Array[Double], nrm: Double): Long = {
-    var best = Long.MinValue; var bestC = Double.NegativeInfinity; var any = false
-    var ci = 0
-    while (ci < cs.length) {
-      val c = fpCos(v, cs(ci)._2, nrm, cs(ci)._3)
-      if (!any || sqlGt(c, bestC)) { bestC = c; best = cs(ci)._1; any = true }
-      ci += 1
-    }
-    best
-  }
 
   /** Deterministic Lloyd's k-means over a `(vec_id, v)` frame — the
     * trainer v06's label-centroid stand-in lacks, making IVF possible on
@@ -450,9 +347,10 @@ object Embeddings {
     java.math.BigDecimal.valueOf(x).setScale(12, java.math.RoundingMode.HALF_UP)
 
   /** The Lloyd round's per-(cell, position) exact accumulator — ONE
-    * implementation shared by the driver-local chunk fold
-    * ([[lloydLocal]]) and the distributed treeAggregate round
-    * ([[kMeansModel]], r20), so the two trainer routes cannot drift:
+    * implementation shared by the driver-local chunk folds
+    * ([[lloydLocal]], [[twoLevelLocal]]'s fine rounds) and the
+    * distributed treeAggregate round ([[kMeansModel]], r20), so the
+    * trainer routes cannot drift:
     * exact DECIMAL(38,12) sums (order-independent — what makes any
     * chunking/partitioning deterministic) with per-position counts
     * (ragged rows contribute only to the positions they carry, exactly
@@ -521,7 +419,7 @@ object Embeddings {
   /** Driver-local [[kMeansModel]] over an already-collected sample —
     * the SAMPLED trainer route. Bit-identical to the distributed form:
     * same seed order (knuth hash asc, vec_id asc, take k), same
-    * [[argmaxCell]] assignment, same DECIMAL(38,12) HALF_UP mean
+    * [[CosineKernels.argmaxCell]] assignment, same DECIMAL(38,12) HALF_UP mean
     * ([[sqlDecimalMean]]), same keep-old-centroid rule for emptied
     * cells. The fold is chunk-parallel over [[fork]] threads; exact
     * decimal addition and per-row argmax make the result independent of
@@ -654,16 +552,6 @@ object Embeddings {
         out.toArray
       }
     }
-    private def topCells(cs: Array[(Long, Array[Double], Double)],
-        v: Array[Double], nrm: Double, p: Int): Array[Long] = {
-      val top = new TopKBuffer(p)
-      var ci = 0
-      while (ci < cs.length) {
-        top.insert(fpCos(v, cs(ci)._2, nrm, cs(ci)._3), cs(ci)._1)
-        ci += 1
-      }
-      top.ids.take(top.filled)
-    }
   }
 
   /** Coarse→fine two-level trainer — the designed answer past
@@ -773,7 +661,7 @@ object Embeddings {
 
   /** Driver-local [[twoLevelModel]] over an already-collected sample —
     * bit-identical replay of the distributed form: coarse =
-    * [[lloydLocal]]; assignment = the same [[argmaxCell]]; fine seeds =
+    * [[lloydLocal]]; assignment = the same [[CosineKernels.argmaxCell]]; fine seeds =
     * per-coarse (knuth hash asc, vec_id asc) rank ≤ finePer (the
     * distributed window's exact order); fine rounds = the same
     * argmax-within-coarse + DECIMAL(38,12) mean fold, rows whose coarse
@@ -796,36 +684,19 @@ object Embeddings {
     var round = 0
     while (round < iters) {
       val fm = fine
-      // same chunk-parallel exact fold as lloydLocal, keyed by the
-      // GLOBAL fine cell id
+      // lloydLocal's chunk-parallel exact fold, keyed by the GLOBAL fine
+      // cell id
       val nThreads = math.max(1, math.min(Runtime.getRuntime.availableProcessors(), 16))
       val chunk = math.max(1, (sample.length + nThreads - 1) / nThreads)
       val parts = sample.indices.by(chunk).map { lo =>
         val hi = math.min(lo + chunk, sample.length)
         fork(s"graft-fine-$lo") {
-          val acc = new java.util.HashMap[Long, (Array[java.math.BigDecimal], Array[Long])]()
+          val acc = new LloydAcc()
           var r = lo
           while (r < hi) {
             fm.get(ccOf(r)) match {
               case Some(fcs) if fcs.nonEmpty =>
-                val v = sample(r)._2
-                val cell = argmaxCell(fcs, v, nrms(r))
-                var st = acc.get(cell)
-                if (st == null) {
-                  st = (Array.fill(v.length)(java.math.BigDecimal.ZERO),
-                    new Array[Long](v.length))
-                  acc.put(cell, st)
-                } else if (st._1.length < v.length) {
-                  st = (st._1.padTo(v.length, java.math.BigDecimal.ZERO),
-                    st._2.padTo(v.length, 0L))
-                  acc.put(cell, st)
-                }
-                var p = 0
-                while (p < v.length) {
-                  st._1(p) = st._1(p).add(toDecimal12(v(p)))
-                  st._2(p) += 1L
-                  p += 1
-                }
+                lloydFold(acc, argmaxCell(fcs, sample(r)._2, nrms(r)), sample(r)._2)
               case _ => ()
             }
             r += 1
@@ -833,39 +704,8 @@ object Embeddings {
           acc
         }
       }.map(_())
-      val merged = new java.util.HashMap[Long, (Array[java.math.BigDecimal], Array[Long])]()
-      parts.foreach { acc =>
-        acc.forEach { (cell, st) =>
-          val cur = merged.get(cell)
-          if (cur == null) merged.put(cell, st)
-          else {
-            val len = math.max(cur._1.length, st._1.length)
-            val sums = new Array[java.math.BigDecimal](len)
-            val cnts = new Array[Long](len)
-            var p = 0
-            while (p < len) {
-              val a = if (p < cur._1.length) cur._1(p) else java.math.BigDecimal.ZERO
-              val b = if (p < st._1.length) st._1(p) else java.math.BigDecimal.ZERO
-              sums(p) = a.add(b)
-              cnts(p) = (if (p < cur._2.length) cur._2(p) else 0L) +
-                (if (p < st._2.length) st._2(p) else 0L)
-              p += 1
-            }
-            merged.put(cell, (sums, cnts))
-          }
-        }
-      }
-      fine = fine.map { case (cc, fcs) =>
-        cc -> fcs.map { case (g, cv, cn) =>
-          val st = merged.get(g)
-          if (st == null) (g, cv, cn)
-          else {
-            val m = st._1.indices.filter(st._2(_) > 0L)
-              .map(p => sqlDecimalMean(st._1(p), st._2(p))).toArray
-            (g, m, fpNorm(m))
-          }
-        }
-      }
+      val merged = parts.foldLeft(new LloydAcc())(lloydMerge)
+      fine = fine.map { case (cc, fcs) => cc -> lloydMeans(fcs, merged) }
       round += 1
     }
     new CellModel(coarse, fine, stride)
@@ -944,15 +784,7 @@ object Embeddings {
         val cs = bc.value
         rows.map { case (id, v) =>
           val nrm = fpNorm(v)
-          // nearest-first probe cells under the same (cosine desc, cell
-          // asc) SQL ordering as the trainer's assignment
-          val top = new TopKBuffer(P)
-          var ci = 0
-          while (ci < cs.length) {
-            top.insert(fpCos(v, cs(ci)._2, nrm, cs(ci)._3), cs(ci)._1)
-            ci += 1
-          }
-          (top.ids.take(top.filled), id, v, nrm)
+          (topCells(cs, v, nrm, P), id, v, nrm)
         }
       }.toDF())
       .as[(Array[Long], Long, Array[Double], Double)]
@@ -964,25 +796,7 @@ object Embeddings {
     val qp = queryPred
     val queries = tagged.filter(t => qp(t._2))
       .flatMap { case (pc, id, v, n) => pc.iterator.map(c => (c, id, v, n)) }
-    val K = k
-    val scored = queries.groupByKey(_._1).cogroup(corpus.groupByKey(_._1)) { (_, qs, cs) =>
-      val cand = cs.toArray
-      qs.flatMap { case (_, qid, qv, qn) =>
-        val top = new TopKBuffer(K)
-        var ci = 0
-        while (ci < cand.length) {
-          val (_, cid, cv, cn) = cand(ci)
-          if (cid != qid) top.insert(fpCos(qv, cv, qn, cn), cid)
-          ci += 1
-        }
-        (0 until top.filled).iterator.map(r => (qid, top.ids(r), top.scores(r)))
-      }
-    }.toDF("query_id", "neighbor_id", "cosine")
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id")
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter($"rnk" <= K)
-      .select($"query_id", $"rnk", $"neighbor_id", $"cosine")
+    probeTopK(queries, corpus, k)
   }
 
   /** SemDeDup-shaped semantic dedup over a `(vec_id, v)` frame: cluster
@@ -999,7 +813,8 @@ object Embeddings {
     * Scale shape: training is [[kMeansModel]] (broadcast model, no
     * vector shuffle); assignment is one map pass against the broadcast
     * model; candidate generation is v04's block self-join kernel
-    * RE-KEYED BY (cell, block-pair) — quadratic work happens within
+    * ([[CosineKernels.blockPairs]]) keyed by (cell, block-pair) —
+    * quadratic work happens within
     * cells only, never across the corpus, and each cell further splits
     * into B(B+1)/2 block tasks so per-task memory stays two blocks of
     * ONE cell. Cross-cell pairs are structurally impossible (the group
@@ -1127,58 +942,19 @@ object Embeddings {
     val assignedDf = graft.CacheRegistry.retain(s"semdedup.assigned.$cacheTag",
       assigned.toDF("vec_id", "cell", "v", "nrm"))
     val assignedDs = assignedDf.as[(Long, Long, Array[Double], Double)]
-    val B = blocks
-    val t = threshold
     val P = probes
     val S = coarseSpan
-    val tagged = assignedDs.flatMap { case (id, cell, v, nrm) =>
-      val b = java.lang.Math.floorMod(id, B.toLong).toInt
-      // probes = 1 rides the cached assignment (cell) untouched; the
-      // multi-probe path re-ranks against the broadcast model once per
-      // row — the same flops the assignment pass paid
-      val cs = if (P == 1) Iterator.single(cell)
-        else bc.value.probe(v, nrm, P, S).iterator
-      cs.flatMap { c =>
-        (0 until B).iterator.map { c2 =>
-          // group key = cell * B² + unordered block pair: a pair of rows
-          // can only meet inside their shared cell's groups
-          (c * (B * B).toLong + (math.min(b, c2) * B + math.max(b, c2)), b, id, v, nrm)
-        }
-      }
+    // probes = 1 rides the cached assignment (cell) untouched; the
+    // multi-probe path re-ranks against the broadcast model once per row
+    // — the same flops the assignment pass paid
+    val rows = assignedDs.flatMap { case (id, cell, v, nrm) =>
+      val cs = if (P == 1) Iterator.single(cell) else bc.value.probe(v, nrm, P, S).iterator
+      cs.map(c => (c, id, v, nrm))
     }
-    val dropped = tagged.groupByKey(_._1).flatMapGroups { (key, iter) =>
-      val pairIdx = (key % (B * B).toLong).toInt
-      val lo = pairIdx / B
-      val hi = pairIdx % B
-      val left = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
-      val right = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
-      iter.foreach { case (_, b, id, v, n) =>
-        if (b == lo) left += ((id, v, n)) else right += ((id, v, n))
-      }
-      val out = scala.collection.mutable.HashSet.empty[Long]
-      def emit(a: (Long, Array[Double], Double), b: (Long, Array[Double], Double)): Unit = {
-        val c = fpCos(a._2, b._2, a._3, b._3)
-        // NaN (zero-norm) counts as a dup, matching SQL's NaN-ranks-high
-        // comparison in both engines (cosineNearDupPairs' convention)
-        if (c >= t || c.isNaN) out += math.max(a._1, b._1)
-      }
-      if (lo == hi) {
-        var i = 0
-        while (i < left.length) {
-          var j = i + 1
-          while (j < left.length) { emit(left(i), left(j)); j += 1 }
-          i += 1
-        }
-      } else {
-        var i = 0
-        while (i < left.length) {
-          var j = 0
-          while (j < right.length) { emit(left(i), right(j)); j += 1 }
-          i += 1
-        }
-      }
-      out.iterator
-    }.toDF("vec_id").distinct()
+    // keep-first: the larger id of a qualifying pair is dropped
+    val dropped = blockPairs(rows, blocks, threshold,
+      () => scala.collection.mutable.HashSet.empty[Long])((_, hi, _) => hi)
+      .toDF("vec_id").distinct()
     assignedDf
       .join(dropped, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"))
@@ -1388,32 +1164,11 @@ object Embeddings {
     * bucket column lets Catalyst prove the bucketed scan already
     * satisfies the ClusteredDistribution, so the physical plan is scan →
     * partition-local sort → kernel with NO Exchange and no norm/bucket
-    * recomputation (asserted in EmbeddingsSpec). Same kernel arithmetic
-    * and (cosine desc, id asc) ordering as v02, so the output is
-    * bit-identical to rebuilding from scratch. */
-  def queryIndex(s: SparkSession, table: String): DataFrame = {
-    import s.implicits._
-    val K = 3
-    s.table(s"`${PersistedIndex.Database}`.`$table`")
-      .select($"bucket".as("_1"), $"vec_id".as("_2"), $"v".as("_3"), $"nrm".as("_4"))
-      .groupBy($"_1").as[Long, (Long, Long, Array[Double], Double)]
-      .flatMapGroups { (bkt, iter) =>
-        val items = iter.toArray
-        val n = items.length
-        items.indices.iterator.flatMap { qi =>
-          val (_, qid, qv, qn) = items(qi)
-          val top = new TopKBuffer(K)
-          var ci = 0
-          while (ci < n) {
-            if (ci != qi) top.insert(fpCos(qv, items(ci)._3, qn, items(ci)._4), items(ci)._2)
-            ci += 1
-          }
-          (0 until top.filled).iterator.map { r =>
-            (qid, (r + 1).toLong, top.ids(r), bkt, top.scores(r))
-          }
-        }
-      }.toDF("query_id", "rnk", "neighbor_id", "bucket", "cosine")
-  }
+    * recomputation (asserted in EmbeddingsSpec). v02 ranks a fresh
+    * bucketing through the same [[CosineKernels.bucketTopK]], so the
+    * output is bit-identical to rebuilding from scratch. */
+  def queryIndex(s: SparkSession, table: String): DataFrame =
+    bucketTopK(s.table(s"`${PersistedIndex.Database}`.`$table`"), 3)
 
   // ---- Product quantization: shared kernels + persisted index ----
   //
@@ -1502,28 +1257,9 @@ object Embeddings {
           var si = 0
           while (si < S) {
             val sub = java.util.Arrays.copyOfRange(v, si * D, si * D + D)
-            val nrm = fpNorm(sub)
-            var best = Long.MinValue; var bestC = Double.NegativeInfinity; var any = false
-            val cs = ms(si)
-            var ci = 0
-            while (ci < cs.length) {
-              val c = fpCos(sub, cs(ci)._2, nrm, cs(ci)._3)
-              if (!any || sqlGt(c, bestC)) { bestC = c; best = cs(ci)._1; any = true }
-              ci += 1
-            }
-            ks(si) = best; si += 1
+            ks(si) = argmaxCell(ms(si), sub, fpNorm(sub)); si += 1
           }
-          var cbest = -1L
-          if (cc.nonEmpty) {
-            val nrm = fpNorm(v)
-            var bestC = Double.NegativeInfinity; var any = false
-            var ci = 0
-            while (ci < cc.length) {
-              val c = fpCos(v, cc(ci)._2, nrm, cc(ci)._3)
-              if (!any || sqlGt(c, bestC)) { bestC = c; cbest = cc(ci)._1; any = true }
-              ci += 1
-            }
-          }
+          val cbest = if (cc.nonEmpty) argmaxCell(cc, v, fpNorm(v)) else -1L
           (id, ks(0), ks(1), ks(2), ks(3), cbest)
         }
       }.toDF("vec_id", "k0", "k1", "k2", "k3", "ccell")
@@ -2383,16 +2119,9 @@ object Embeddings {
         val queryRows = base.filter($"vec_id" < 10)
           .as[(Long, Array[Double])].collect()
         // probe selection under the trainer's (cosine desc, cell asc)
-        // tie order — the same TopKBuffer scan ivfTopK uses
+        // tie order — ivfTopK's topCells scan
         val probes = queryRows.flatMap { case (qid, qv) =>
-          val qn = fpNorm(qv)
-          val top = new TopKBuffer(2)
-          var ci = 0
-          while (ci < coarse.length) {
-            top.insert(fpCos(qv, coarse(ci)._2, qn, coarse(ci)._3), coarse(ci)._1)
-            ci += 1
-          }
-          top.ids.take(top.filled).map(c => (qid, c))
+          topCells(coarse, qv, fpNorm(qv), 2).map(c => (qid, c))
         }.toSeq
         val dtDF = broadcast(pqAdc(queryRows, books).toDF("query_id", "s", "cell", "d"))
         val probeDF = broadcast(probes.toDF("query_id", "ccell"))
@@ -2845,9 +2574,10 @@ object Embeddings {
         // grows: 4 planes to 8k vectors, then one more per doubling up
         // to 16). Neighbors are searched WITHIN the bucket only.
         //
-        // Execution: one column-pruned COUNT(*), then ONE shuffle keyed
-        // on the bucket, then a primitive-array kernel per bucket group
-        // (norms + dot products + a bounded top-3 insertion per query).
+        // Execution: one column-pruned COUNT(*), the index row (bucket +
+        // norm as column expressions, [[indexRows]]), then ONE shuffle
+        // keyed on the bucket and v08's [[CosineKernels.bucketTopK]] per
+        // bucket group (dot products + a bounded top-3 per query).
         // The earlier declarative form — a bucket-keyed self-join with
         // an `aggregate()` lambda fold per candidate pair — paid an
         // interpreted 64-term HOF outside whole-stage codegen on every
@@ -2858,43 +2588,9 @@ object Embeddings {
         // memory is one bucket; past the 16-plane cap (33M vectors)
         // apply v04's block decomposition inside oversized buckets or
         // move to the trained-cell families.
-        val ds = based(s, dir).as[(Long, Array[Double])]
-        val planes = lshPlanes(ds.count(), minPlanes = 4, maxPlanes = 16)
-        def bucketOf(v: Array[Double]): Long = {
-          var b = 0L
-          var j = 0
-          while (j < planes) {
-            if (v(j) >= 0.0) b |= 1L << (planes - 1 - j)
-            j += 1
-          }
-          b
-        }
-        ds.groupByKey { case (_, v) => bucketOf(v) }
-          .flatMapGroups { (bkt, iter) =>
-            val items = iter.toArray
-            val n = items.length
-            val norms = new Array[Double](n)
-            var i = 0
-            while (i < n) { norms(i) = fpNorm(items(i)._2); i += 1 }
-            val K = 3
-            items.indices.iterator.flatMap { qi =>
-              val (qid, qv) = items(qi)
-              // bounded top-K by (cosine desc, neighbor_id asc) under SQL
-              // ordering (NaN ranks first) — exactly the row_number
-              // ordering of the declarative form; shared TopKBuffer
-              val top = new TopKBuffer(K)
-              var ci = 0
-              while (ci < n) {
-                if (ci != qi) top.insert(fpCos(qv, items(ci)._2, norms(qi), norms(ci)), items(ci)._1)
-                ci += 1
-              }
-              (0 until top.filled).iterator.map { r =>
-                (qid, (r + 1).toLong, top.ids(r), bkt, top.scores(r))
-              }
-            }
-          }
-          .toDF("query_id", "rnk", "neighbor_id", "bucket", "cosine")
-          .orderBy($"query_id", $"rnk")
+        val base = based(s, dir)
+        val planes = lshPlanes(base.count(), minPlanes = 4, maxPlanes = 16)
+        bucketTopK(indexRows(base, planes), 3).orderBy($"query_id", $"rnk")
       },
       // same oracle as v08/v11: the rebuilt-from-scratch and persisted-
       // index forms must agree exactly, planes derivation included
@@ -3032,17 +2728,7 @@ object Embeddings {
         val cells = base.select($"vec_id", $"v", $"nrm").as[(Long, Array[Double], Double)]
           .mapPartitions { it =>
             val cs = bcModel.value
-            it.map { case (id, v, nrm) =>
-              var best = Long.MinValue; var bestC = Double.NegativeInfinity; var any = false
-              var ci = 0
-              while (ci < cs.length) {
-                val (label, cv, cn) = cs(ci)
-                val c = fpCos(v, cv, nrm, cn)
-                if (!any || sqlGt(c, bestC)) { bestC = c; best = label; any = true }
-                ci += 1
-              }
-              (id, best)
-            }
+            it.map { case (id, v, nrm) => (id, argmaxCell(cs, v, nrm)) }
           }.toDF("vec_id", "cell")
         val withCell = base.join(cells, "vec_id")
         val queries = withCell.filter($"vec_id" < 10)

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.sinks.SinkRegistry
 import java.nio.file.Files
 import java.time.{Clock, Instant, ZoneOffset}
+import scala.jdk.CollectionConverters._
 
 /** Poll-cycle e2e over the FIXTURES.md A.1 row matrix: due /
   * not-due / refresh-now / running-skip / empty-document / invalid
@@ -142,6 +143,102 @@ class JobRunnerSpec extends SparkSpec {
     }
     assert(ct.readAll().forall(_.state == "Success"))
     assert(runLog.asInstanceOf[CsvRunLog].entries().length == 4)
+  }
+
+  /** Control table whose writes to `row` fail once `okWrites` of them
+    * have landed — an operator deleting the row under a running job
+    * (`CsvControlTable` then throws `row out of range`). */
+  private final class RowLostControl(inner: ControlTable, row: Long, okWrites: Int)
+      extends ControlTable {
+    private val landed = new java.util.concurrent.atomic.AtomicInteger
+    def readAll(): Seq[JobSpec] = inner.readAll()
+    def updateCells(r: Long, values: Map[Int, String]): Unit =
+      if (r == row && landed.getAndIncrement() >= okWrites)
+        throw new IllegalArgumentException(s"requirement failed: row out of range: $r")
+      else inner.updateCells(r, values)
+  }
+
+  test("a control-table write failure is logged: the job's log line and the cycle survive") {
+    for (maxConcurrent <- Seq(1, 2); okWrites <- Seq(0, 1)) {
+      val (root, runLog) = freshEnv()
+      val ct = CsvControlTable.init(Files.createTempFile("ctl", ".csv"), Seq(
+        cells(dest = s"lost_a$maxConcurrent$okWrites", refreshNow = "yes"),
+        cells(dest = s"lost_b$maxConcurrent$okWrites", refreshNow = "yes")))
+      val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val runner = new JobRunner(spark, new RowLostControl(ct, 2L, okWrites),
+        SinkRegistry.default(Files.createTempDirectory("csvout").toString), root, runLog,
+        clock = clock, log = logged.add(_), maxConcurrent = maxConcurrent)
+      val what = s"maxConcurrent=$maxConcurrent okWrites=$okWrites"
+      assert(runner.pollOnce() == 2, what)
+      val byRow = ct.readAll().map(j => j.row -> j).toMap
+      // the other due job ran to completion
+      assert(byRow(3L).state == "Success", what)
+      assert(spark.table(s"g_sheets.lost_b$maxConcurrent$okWrites").count() == 3, what)
+      val entries = runLog.entries()
+      if (okWrites == 0) {
+        // the Running mark never landed: the job did not start, no log line
+        assert(entries.map(_.status) == Seq("Success"), what)
+        assert(byRow(2L).state == "" && byRow(2L).refreshNow == "yes", what)
+      } else {
+        // started, ran, and its outcome could not be written: one
+        // Failure line carrying the write's cause
+        assert(entries.map(_.status).sorted == Seq("Failure", "Success"), what)
+        assert(entries.find(_.status == "Failure").get.result ==
+          "requirement failed: row out of range: 2", what)
+        assert(byRow(2L).state == "Running", what)
+      }
+      assert(logged.asScala.exists(_.startsWith("state write failed on row 2")), what)
+    }
+    // the daemon loop outlives a failing write
+    val (root, runLog) = freshEnv()
+    val ct = CsvControlTable.init(Files.createTempFile("ctl", ".csv"), Seq(
+      cells(dest = "lost_loop", interval = "1 minute")))
+    new JobRunner(spark, new RowLostControl(ct, 2L, 0),
+      SinkRegistry.default(Files.createTempDirectory("csvout").toString), root, runLog,
+      clock = clock, log = _ => ()).run(pollMillis = 0L, maxCycles = Some(2))
+    assert(runLog.entries().isEmpty)
+  }
+
+  test("a load failing after the Overwrite drop ends Failure; Refresh Now restores the table") {
+    val (root, runLog) = freshEnv()
+    val ct = CsvControlTable.init(Files.createTempFile("ctl", ".csv"), Seq(
+      cells(dest = "crash_t", refreshNow = "yes", interval = "1 day")))
+    // a warehouse sink whose frame, while armed, throws at execution
+    // time: the failure lands inside saveAsTable, after Overwrite has
+    // dropped the existing table
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val boom = org.apache.spark.sql.functions.udf { () =>
+      throw new IllegalStateException("injected load failure"); true
+    }.asNondeterministic()
+    val warehouse = new graft.sinks.WarehouseSink()
+    val crashing = new graft.sinks.Sink {
+      def load(req: graft.sinks.LoadRequest): String =
+        warehouse.load(if (armed.get) req.copy(df = req.df.filter(boom())) else req)
+    }
+    val runner = new JobRunner(spark, ct, SinkRegistry.default(
+      Files.createTempDirectory("csvout").toString).withSink("warehouse", crashing),
+      root, runLog, clock = clock, log = _ => ())
+    assert(runner.pollOnce() == 1)
+    assert(spark.table("g_sheets.crash_t").count() == 3)
+
+    armed.set(true)
+    ct.updateCell(2, StateMachine.ColRefreshNow, "yes")
+    assert(runner.pollOnce() == 1)
+    val failed = ct.readAll().head
+    assert(failed.state == "Failure" && failed.refreshInterval == "" && failed.refreshNow == "",
+      s"$failed")
+    assert(failed.lastResult.contains("injected load failure"), failed.lastResult)
+    assert(runLog.entries().map(_.status) == Seq("Success", "Failure"))
+    // the old rows do not survive: Overwrite dropped the table before the
+    // failing write, which leaves no table behind
+    assert(!spark.catalog.tableExists("g_sheets.crash_t"))
+
+    armed.set(false)
+    ct.updateCell(2, StateMachine.ColRefreshNow, "yes")
+    assert(runner.pollOnce() == 1)
+    assert(ct.readAll().head.state == "Success")
+    assert(spark.table("g_sheets.crash_t").count() == 3)
+    assert(runLog.entries().map(_.status) == Seq("Success", "Failure", "Success"))
   }
 
   test("streaming daemon form drives poll cycles via Trigger.ProcessingTime") {

@@ -59,24 +59,33 @@ class EmbeddingsSpec extends SparkSpec {
       val id = if (i % 3 == 0) -(i.toLong * 5 + 1) else i.toLong * 7
       (id, Array.fill(dim)(rnd.nextGaussian()))
     }
-    // plant an exact duplicate (cosine 1.0) in a different block
-    val all = vecs :+ (999L, vecs.head._2.clone())
+    // plant an exact duplicate (cosine 1.0) in a different block, and two
+    // zero-norm vectors: every pair with one has cosine 0/0 = NaN
+    val all = vecs :+ (999L, vecs.head._2.clone()) :+
+      (1001L, Array.fill(dim)(0.0)) :+ (-1003L, Array.fill(dim)(0.0))
     val t = 0.3
+    // cosines compare by their bits: NaN == NaN is false
+    def exact(ps: Seq[(Long, Long, Double)]) =
+      ps.map { case (a, b, c) => (a, b, java.lang.Double.doubleToLongBits(c)) }.toSet
     // blocks > residue spread leaves some blocks EMPTY — off-diagonal
     // groups with one empty side must emit nothing (not within-pairs)
     val got = Embeddings.cosineNearDupPairs(all.toDF("vec_id", "v"), t, blocks = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // brute force with the identical fixed-point fold, same index order
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    // brute force with the identical fixed-point fold, same index order;
+    // NaN passes, as SQL ranks it above any threshold
     def fp(x: Double) = math.floor(x * 1e12 + 0.5).toLong
     def nrm(v: Array[Double]) = math.sqrt(v.map(x => fp(x * x)).sum.toDouble / 1e12)
-    val want = (for {
+    val want = for {
       a <- all; b <- all if a._1 < b._1
       dot = a._2.zip(b._2).map { case (x, y) => fp(x * y) }.sum.toDouble / 1e12
-      c = dot / (nrm(a._2) * nrm(b._2)) if c >= t
-    } yield (a._1, b._1, c)).toSet
-    assert(got == want, s"block join diverged from brute force (${got.size} vs ${want.size})")
+      c = dot / (nrm(a._2) * nrm(b._2)) if c >= t || c.isNaN
+    } yield (a._1, b._1, c)
+    assert(got.length == want.length && exact(got) == exact(want),
+      s"block join diverged from brute force (${got.size} vs ${want.size})")
     assert(got.exists { case (a, b, c) => b == 999L && c > 0.999999 },
       "planted exact duplicate must surface")
+    assert(got.exists { case (a, b, c) => a == -1003L && b == 1001L && c.isNaN },
+      "the zero-norm pair must surface with a NaN cosine")
   }
 
   test("cosineNearDupPairs size gate: refuses above maxRows, names the scale-safe routes") {
@@ -142,6 +151,41 @@ class EmbeddingsSpec extends SparkSpec {
     assert(rM >= r1, "multi-probe recall must not be below single-probe")
     assert(rM >= 2 * r1, "Hamming-1 probing should roughly triple recall here")
     assert(rM >= 0.4 && r1 >= 0.1)
+  }
+
+  test("annTopK == driver-side top-k over same-sign-bucket candidates, with and without multi-probe") {
+    val spark0 = spark
+    import spark0.implicits._
+    val (k, planes) = (5, 4)
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select($"vec_id".cast("long").as("vec_id"),
+        $"embedding".cast("array<double>").as("v"))
+    val all = vecs.as[(Long, Array[Double])].collect()
+    val norms = all.map { case (id, v) => id -> Embeddings.fpNorm(v) }.toMap
+    // bucket membership is what the operator promises, not a numbering:
+    // a candidate shares the query's sign pattern over the first `planes`
+    // dims, or (multi-probe) differs from it in exactly one of them
+    def code(v: Array[Double]) = (0 until planes).map(j => if (v(j) >= 0.0) 1 << j else 0).sum
+    def ranksFirst(a: (Long, Double), b: (Long, Double)) =
+      if (a._2 == b._2 || (a._2.isNaN && b._2.isNaN)) a._1 < b._1
+      else Embeddings.sqlGt(a._2, b._2)
+    def want(maxFlips: Int) = all.toSeq.flatMap { case (qid, qv) =>
+      all.filter { case (cid, cv) =>
+        cid != qid && Integer.bitCount(code(cv) ^ code(qv)) <= maxFlips
+      }.map { case (cid, cv) => (cid, Embeddings.fpCos(qv, cv, norms(qid), norms(cid))) }
+        .sortWith(ranksFirst).take(k).zipWithIndex.map { case ((cid, c), r) =>
+          (qid, r + 1L, cid, java.lang.Double.doubleToLongBits(c))
+        }
+    }
+    def got(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3))))
+    Seq(false -> 0, true -> 1).foreach { case (multiProbe, flips) =>
+      val out = got(Embeddings.annTopK(vecs, k, planes, multiProbe))
+      val exp = want(flips)
+      assert(out.length == exp.length && out.toSet == exp.toSet,
+        s"multiProbe=$multiProbe: ${out.length} rows vs ${exp.length} expected")
+    }
+    graft.CacheRegistry.unpersistAll()
   }
 
   test("kMeansModel is deterministic and ivfTopK beats its probed-fraction baseline") {

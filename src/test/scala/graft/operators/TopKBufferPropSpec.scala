@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
 /** Property-style coverage (seeded sampling) for the bounded top-k
-  * insertion buffer shared by the v02 kernel and annTopK. The reference
+  * insertion buffer of [[CosineKernels]] (ranked cells, bucket and probe
+  * top-k, v17's hamming prerank). The reference
   * implementation is a full sort under SQL ordering — (score DESC with
   * NaN ranking first, id ASC on ties) — which is exactly the row_number
   * ordering of the declarative forms the kernels replace.
@@ -37,7 +38,7 @@ class TopKBufferPropSpec extends AnyFunSuite {
           else (rnd.nextInt(10) - 5) / 4.0
         (score, rnd.nextInt(25).toLong)
       }
-      val buf = new Embeddings.TopKBuffer(k)
+      val buf = new CosineKernels.TopKBuffer(k)
       items.foreach { case (s, id) => buf.insert(s, id) }
       val got = (0 until buf.filled).map(i => (buf.scores(i), buf.ids(i)))
       val want = reference(items, k)
