@@ -16,7 +16,8 @@ import scala.collection.mutable.ListBuffer
   *    for A/B probes (combine with `SPARK_GRAFT_CONF` to A/B a session
   *    conf on the same build). Clears the registry before every rep, so
   *    each rep pays its own cache build like the bench's isolated pass,
-  *    and prints per-rep seconds, GC ms and the median. Probe instrument
+  *    and prints per-rep seconds and GC ms (warm-ups too), the median
+  *    and the reps' trend ([[timeLine]]). Probe instrument
   *    only: committed numbers always come from the catalog bench.
   *  - `plan <sfDir> [names|all] [outDir]` — `explain("formatted")` of the
   *    unexecuted frame the catalog serves, to stdout or to
@@ -134,7 +135,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // untimed warmup: pay JVM/codegen/filesystem first-touch cost once
     // here instead of inside whichever query happens to run first
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    sources.ParquetTables.read(spark, s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()
     // second untimed warmup on a tiny SYNTHETIC frame (never the bench
@@ -358,15 +359,29 @@ object Bench {
         CacheRegistry.unpersistAll(blocking = true)
         Measure.noop(SparkEntry.queries(name)(spark, sfDir))
       }
-      (0 until warmups).foreach(_ => rep())
-      val ts = (1 to reps).map { i =>
+      def timed(label: String): Double = {
         val t = rep()
-        println(f"[time] $name rep$i ${t.seconds}%.3f s (gc ${t.gcMs} ms)")
+        println(f"[time] $name $label ${t.seconds}%.3f s (gc ${t.gcMs} ms)")
         t.seconds
       }
-      println(f"TIME $name%-34s median=${Measure.median(ts)}%8.3f s  " +
-        s"reps=${ts.map(t => f"$t%.3f").mkString(",")}")
+      val warm = (1 to warmups).map(i => timed(s"warmup$i"))
+      println(timeLine(name, warm, (1 to reps).map(i => timed(s"rep$i"))))
     }
+
+  /** The summary line of one `time` row: the median, then every warm-up
+    * and rep time in run order, then `trend`, the median of the later
+    * half of the reps over that of the earlier half. A trend well below
+    * 1 means the reps were still getting faster (JIT warm-up), so the
+    * median mixes cold and steady reps: add warm-ups before comparing. */
+  private[graft] def timeLine(name: String, warm: Seq[Double], reps: Seq[Double]): String = {
+    def series(ts: Seq[Double]) = ts.map(t => f"$t%.3f").mkString(",")
+    val half = reps.size / 2
+    val trend =
+      if (half == 0) ""
+      else f"  trend=${Measure.median(reps.takeRight(half)) / Measure.median(reps.take(half))}%.2f"
+    f"TIME $name%-34s median=${Measure.median(reps)}%8.3f s  " +
+      s"warmups=${series(warm)} reps=${series(reps)}$trend"
+  }
 
   /** A query whose CONSTRUCTION throws still gets its text (the exception),
     * so a sweep over the catalog is total. */

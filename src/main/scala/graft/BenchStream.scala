@@ -97,7 +97,7 @@ object BenchStream {
   }
 
   private def fileStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream.schema(s.read.parquet(dir).schema)
+    s.readStream.schema(sources.ParquetTables.read(s, dir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
 
   def run(spark: SparkSession, sfDir: String): Unit = {

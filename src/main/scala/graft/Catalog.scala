@@ -30,7 +30,7 @@ object Catalog {
       catch { case _: org.apache.spark.sql.AnalysisException => /* table absent */ }
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      tryRegister(t)(spark.read.parquet(s"$dir/$t.parquet"))
+      tryRegister(t)(sources.ParquetTables.read(spark, s"$dir/$t.parquet"))
     }
     tryRegister("events")(QueryHelpers.eventsTbl(spark, dir))
   }

@@ -79,7 +79,7 @@ object QueryHelpers {
 
   /** Load one test table from the scale-factor directory. */
   def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    sources.ParquetTables.read(spark, s"$dir/$name.parquet")
 
   /** The `events` table stores TIMESTAMP(NANOS) parquet. How Spark reads
     * that column varies by version: older readers reject it unless
@@ -100,7 +100,7 @@ object QueryHelpers {
   def eventsTbl(spark: SparkSession, dir: String): DataFrame = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = sources.ParquetTables.read(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // FLOOR division: `div` truncates toward zero, which for a

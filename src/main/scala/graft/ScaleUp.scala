@@ -51,7 +51,7 @@ object ScaleUp {
   }
 
   def run(spark: SparkSession, src: String, dst: String, factor: Int): Unit = {
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = sources.ParquetTables.read(spark, s"$src/$t.parquet")
 
     /** Explode one source row into `factor` rows tagged 0..factor-1. */
     def replicate(df: DataFrame): DataFrame =
@@ -114,7 +114,7 @@ object ScaleUp {
 
     val counts = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
-      .map(t => t -> spark.read.parquet(s"$dst/$t.parquet").count())
+      .map(t => t -> sources.ParquetTables.read(spark, s"$dst/$t.parquet").count())
     counts.foreach { case (t, n) => println(s"[scaleup] $t: $n rows") }
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.QueryHelpers._
 import graft.plans.PersistedIndex
+import graft.sources.ParquetTables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -922,7 +923,7 @@ object Documents {
         // the persisted pairs (count + hamming mass), so the oracle
         // gates the BUILD OUTPUT, not just its row count.
         val path = ensureSimhashIndex(s, dir, force = true)
-        s.read.parquet(path)
+        ParquetTables.read(s, path)
           .agg(count(lit(1)).cast("long").as("n_pairs"),
             coalesce(sum($"hamming"), lit(0L)).cast("long").as("sum_hamming"))
       },
@@ -1108,7 +1109,7 @@ object Documents {
         // replays the fold with an inlined power table and checks the
         // banded hamming filter. Text is ASCII word-soup, so charAt ==
         // ascii() codepoints.
-        s.read.parquet(ensureSimhashIndex(s, dir))
+        ParquetTables.read(s, ensureSimhashIndex(s, dir))
           .select($"doc_a", $"doc_b", $"hamming")
           .orderBy($"doc_a", $"doc_b")
       },
@@ -1158,7 +1159,7 @@ object Documents {
         ensureSimhashIndexFor(s, base, table, simhashMeta(bm))
         val path = appendToSimhashIndex(s, docs.filter($"doc_id" % 3 === 0),
           table, bm, PersistedIndex.fingerprint(docs, "doc_id", "text"))
-        s.read.parquet(path)
+        ParquetTables.read(s, path)
           .agg(count(lit(1)).cast("long").as("n_pairs"),
             coalesce(sum($"hamming"), lit(0L)).cast("long").as("sum_hamming"))
       },

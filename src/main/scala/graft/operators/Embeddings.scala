@@ -4,6 +4,7 @@ import graft.QueryDef
 import graft.QueryHelpers._
 import graft.operators.CosineKernels._
 import graft.plans.PersistedIndex
+import graft.sources.ParquetTables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1387,7 +1388,7 @@ object Embeddings {
   private[operators] def pqReadBooks(s: SparkSession,
       table: String): Seq[Array[(Long, Array[Double], Double)]] = {
     import s.implicits._
-    val rows = s.read.parquet(PersistedIndex.location(s, table, "_books"))
+    val rows = ParquetTables.read(s, PersistedIndex.location(s, table, "_books"))
       .select($"s", $"cell", $"cv", $"cn")
       .as[(Int, Long, Array[Double], Double)].collect()
     (0 until PqS).map { si =>
@@ -1436,7 +1437,7 @@ object Embeddings {
       table: String): DataFrame = {
     import s.implicits._
     val models = pqReadBooks(s, table)
-    val codes = s.read.parquet(PersistedIndex.location(s, table, "_codes"))
+    val codes = ParquetTables.read(s, PersistedIndex.location(s, table, "_codes"))
       .select($"vec_id",
         $"k0".cast("long").as("k0"), $"k1".cast("long").as("k1"),
         $"k2".cast("long").as("k2"), $"k3".cast("long").as("k3"))
@@ -1511,7 +1512,7 @@ object Embeddings {
     import s.implicits._
     val qterm = queryTerms.toSeq.toDF("query_id", "term")
     val wb = Window.partitionBy($"query_id").orderBy($"bm25".desc, $"doc_id")
-    s.read.parquet(PersistedIndex.location(s, table, "_postings"))
+    ParquetTables.read(s, PersistedIndex.location(s, table, "_postings"))
       .join(broadcast(qterm), Seq("term"))
       .filter($"query_id" =!= $"doc_id")
       .groupBy($"query_id", $"doc_id")
@@ -2125,7 +2126,7 @@ object Embeddings {
         }.toSeq
         val dtDF = broadcast(pqAdc(queryRows, books).toDF("query_id", "s", "cell", "d"))
         val probeDF = broadcast(probes.toDF("query_id", "ccell"))
-        val codes = s.read.parquet(PersistedIndex.location(s, table, "_codes"))
+        val codes = ParquetTables.read(s, PersistedIndex.location(s, table, "_codes"))
           .select($"vec_id",
             $"k0".cast("long").as("k0"), $"k1".cast("long").as("k1"),
             $"k2".cast("long").as("k2"), $"k3".cast("long").as("k3"),

@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.QueryHelpers._
 import graft.plans.PersistedIndex
+import graft.sources.ParquetTables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -220,7 +221,7 @@ object Multimodal {
     // retained frame; order is irrelevant (consumers re-sort or
     // aggregate).
     val out = graft.CacheRegistry.retain("media.pairs",
-      s.read.parquet(pairsPath).select(col("doc_a"), col("doc_b"), col("hamming"))
+      ParquetTables.read(s, pairsPath).select(col("doc_a"), col("doc_b"), col("hamming"))
         .repartition(s.sparkContext.defaultParallelism))
     phashPairsMemo.set((dir, s, maxBandBucket, nfp, out))
     out
@@ -779,7 +780,7 @@ object Multimodal {
         // (count + hamming mass), so the oracle gates the BUILD OUTPUT,
         // not just its row count.
         val path = ensureMediaIndex(s, dir, force = true)
-        s.read.parquet(path)
+        ParquetTables.read(s, path)
           .agg(count(lit(1)).cast("long").as("n_pairs"),
             coalesce(sum($"hamming"), lit(0L)).cast("long").as("sum_hamming"))
       },
@@ -1169,7 +1170,7 @@ object Multimodal {
         ensureMediaIndexFor(s, base, table, bm)
         val path = appendToMediaIndex(s, docs.filter($"doc_id" > cut), table, bm,
           mediaMeta(PersistedIndex.fingerprint(docs, "doc_id", "text"), MaxBandBucket))
-        s.read.parquet(path)
+        ParquetTables.read(s, path)
           .agg(count(lit(1)).cast("long").as("n_pairs"),
             coalesce(sum($"hamming"), lit(0L)).cast("long").as("sum_hamming"))
       },

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.sources.ParquetTables
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, count, lit, max, xxhash64}
 
@@ -119,7 +120,7 @@ object PersistedIndex {
     * fault would be indistinguishable from a real invalidation in logs
     * and re-pay the full build for nothing. */
   private def storedMeta(s: SparkSession, table: String, cols: Seq[String]): Option[Row] =
-    try Some(s.read.parquet(location(s, table, "_meta")).select(cols.map(col): _*).head())
+    try Some(ParquetTables.read(s, location(s, table, "_meta")).select(cols.map(col): _*).head())
     catch {
       case _: org.apache.spark.sql.AnalysisException => None
       case _: java.util.NoSuchElementException => None
@@ -197,7 +198,7 @@ object PersistedIndex {
     * needed a retry. */
   def readArtifact(s: SparkSession, table: String, suffix: String,
       cols: Seq[String], ensure: String): DataFrame =
-    try s.read.parquet(location(s, table, suffix)).select(cols.map(col): _*)
+    try ParquetTables.read(s, location(s, table, suffix)).select(cols.map(col): _*)
     catch {
       case e @ (_: org.apache.spark.sql.AnalysisException |
                 _: java.io.FileNotFoundException) =>

@@ -53,6 +53,16 @@ class BenchSpec extends AnyFunSuite {
     assert(ledger.refusals.map(_._1) == Seq("reprobe:slow_b"))
   }
 
+  test("a time row shows every warm-up and rep next to the median, and the reps' trend") {
+    // m10's series after one warm-up: still warming, trend well below 1
+    val warming = Bench.timeLine("m10", Seq(2.52), Seq(2.24, 1.90, 1.85, 1.46, 1.24))
+    assert(warming.contains("median=   1.850 s"))
+    assert(warming.endsWith("warmups=2.520 reps=2.240,1.900,1.850,1.460,1.240  trend=0.65"), warming)
+    val steady = Bench.timeLine("q01", Seq.empty, Seq(1.0, 1.1, 0.9, 1.0))
+    assert(steady.endsWith("warmups= reps=1.000,1.100,0.900,1.000  trend=0.90"), steady)
+    assert(Bench.timeLine("q01", Seq(1.0), Seq(0.5)).endsWith("warmups=1.000 reps=0.500"))
+  }
+
   test("an unknown subcommand or bad arguments fail with usage before a session starts") {
     for (args <- Seq(Array("nope"), Array("time"), Array("stream"),
         Array("time", "/d", "q01_pricing_summary", "x"), Array("curation", "/d", "0"))) {

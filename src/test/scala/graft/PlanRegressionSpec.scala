@@ -350,9 +350,6 @@ class PlanRegressionSpec extends SparkSpec {
   }
   test("daemon sheet read: range + header + infer runs one Spark job, no exchange, no sort") {
     import graft.control.{CsvControlTable, CsvRunLog, JobRunner, JobSpec}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
     // the removed DataFrame reader launched 7 jobs per read: the CSV
     // column probe, the row-numbering offset count, the header collect,
     // the inference aggregate and the write re-running the rest
@@ -365,44 +362,18 @@ class PlanRegressionSpec extends SparkSpec {
       graft.sinks.SinkRegistry.default(root.resolve("out").toString), root,
       new CsvRunLog(root.resolve("runlog.csv")), log = _ => ())
     val job = JobSpec("Doc", "S1", "B1:D", "warehouse", "t", "", "", "", "", "", "", 2L)
-    val group = s"sheet-jobs-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val drained = new CountDownLatch(1)
-    // listener events arrive in order: once the drain job's start is
-    // seen, every job the read started has been counted
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-drain" => drained.countDown()
-          case _ =>
-        }
+    val (df, jobs) = jobsDuring {
+      val d = runner.exportPlan(job)
+      d.write.format("noop").mode("overwrite").save()
+      d
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      def inGroup[T](g: String)(body: => T): T = {
-        sc.setJobGroup(g, g)
-        try body finally sc.clearJobGroup()
-      }
-      val df = inGroup(group) {
-        val d = runner.exportPlan(job)
-        d.write.format("noop").mode("overwrite").save()
-        d
-      }
-      inGroup(s"$group-drain")(spark.range(1).count())
-      assert(drained.await(60, TimeUnit.SECONDS), "listener never saw the drain job")
-      assert(jobs.get == 1, s"a sheet read must run exactly one Spark job, ran ${jobs.get}")
-      val p = df.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange") && !p.contains("Sort"), s"sheet read must not shuffle or sort:\n$p")
-    } finally sc.removeSparkListener(listener)
+    assert(jobs == 1, s"a sheet read must run exactly one Spark job, ran $jobs")
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange") && !p.contains("Sort"), s"sheet read must not shuffle or sort:\n$p")
   }
 
   test("upsert merge batch without a tombstone column skips the empty-bucket scan") {
     import graft.sinks.StreamingUpsert
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
     import spark.implicits._
     // with no deletes every touched bucket keeps its upserted rows, so
     // the kept-bucket distinct scan (two jobs) would be pure overhead
@@ -410,35 +381,27 @@ class PlanRegressionSpec extends SparkSpec {
     def batch(ver: Double) = (1L to 100L).map(k => (k, s"s$k", k + ver)).toDF("k", "s", "v")
     fn(batch(0.0), 0L) // first delivery creates the table
     fn(batch(1.0), 1L) // warm the merge path
-    val mark = s"upsert-jobs-${System.nanoTime()}"
-    val counting = new AtomicBoolean(false)
-    val jobs = new AtomicInteger()
-    val drained = new CountDownLatch(1)
-    // listener events arrive in order: every job between the two marker
-    // jobs belongs to the merge batch
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == s"$mark-start" => counting.set(true)
-          case Some(g) if g == s"$mark-drain" => counting.set(false); drained.countDown()
-          case _ => if (counting.get) jobs.incrementAndGet()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      def marker(g: String): Unit = {
-        sc.setJobGroup(g, g)
-        try spark.range(1).count() finally sc.clearJobGroup()
-      }
-      marker(s"$mark-start")
-      fn(batch(2.0), 2L)
-      marker(s"$mark-drain")
-      assert(drained.await(60, TimeUnit.SECONDS), "listener never saw the drain job")
-      // 11 jobs; the kept-bucket scan would add two more
-      assert(jobs.get <= 11,
-        s"a 100-row no-tombstone merge batch ran ${jobs.get} jobs (at most 11)")
-    } finally sc.removeSparkListener(listener)
+    val (_, jobs) = jobsDuring(fn(batch(2.0), 2L))
+    // 11 jobs; the kept-bucket scan would add two more
+    assert(jobs <= 11, s"a 100-row no-tombstone merge batch ran $jobs jobs (at most 11)")
     assert(spark.table("plan_upsert.jobs_merge").count() == 100L)
+  }
+
+  test("warm catalog frames build without inference jobs: q01, t01, e04 start none, m05 at most 3") {
+    // each table read used to infer its parquet schema with one job on
+    // every call; m05 also ran one for each of the _meta and _pairs reads.
+    // Two warm calls: on a fresh warehouse the first builds m05's index,
+    // and its _meta read comes before the stamp it then writes
+    val bound = Seq("q01_pricing_summary" -> 0, "t01_text_stats" -> 0,
+      "e04_sessionize" -> 0, "m05_phash_neardup" -> 3)
+    for (_ <- 1 to 2; (q, _) <- bound) {
+      CacheRegistry.unpersistAll(blocking = true)
+      Catalog.byName(q).run(spark, sf).write.format("noop").mode("overwrite").save()
+    }
+    bound.foreach { case (q, most) =>
+      CacheRegistry.unpersistAll(blocking = true)
+      val (_, jobs) = jobsDuring(Catalog.byName(q).run(spark, sf))
+      assert(jobs <= most, s"building warm $q started $jobs jobs (at most $most)")
+    }
   }
 }

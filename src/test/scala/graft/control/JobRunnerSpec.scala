@@ -241,6 +241,39 @@ class JobRunnerSpec extends SparkSpec {
     assert(runLog.entries().map(_.status) == Seq("Success", "Failure", "Success"))
   }
 
+  test("a JVM dying between the Success write and the run-log append: no early re-run, no duplicate Success") {
+    val (root, runLog) = freshEnv()
+    val ctlPath = Files.createTempFile("ctl", ".csv")
+    CsvControlTable.init(ctlPath, Seq(
+      cells(dest = "crash_log", refreshNow = "yes", interval = "1 hour")))
+    def runner(log: RunLog, at: Clock) = new JobRunner(spark, new CsvControlTable(ctlPath),
+      SinkRegistry.default(Files.createTempDirectory("csvout").toString), root, log,
+      clock = at, log = _ => ())
+    // the first process dies inside the log append: InterruptedException
+    // is fatal to the append's Try, so it leaves runJob the way a kill
+    // ends the process there, after the Success write has landed
+    val dying = new RunLog {
+      def append(e: RunLogEntry): Unit = throw new InterruptedException("killed")
+    }
+    intercept[InterruptedException](runner(dying, clock).pollOnce())
+    val crashed = new CsvControlTable(ctlPath).readAll().head
+    assert(crashed.state == "Success" && crashed.refreshNow == "" &&
+      crashed.lastSuccessInstant.contains(now), s"$crashed")
+    assert(spark.table("g_sheets.crash_log").count() == 3)
+
+    // a fresh process over the same control table: inside the interval
+    // the job is not due, so it neither re-runs nor writes a line; the
+    // dead run's line is lost for good (CHANGES.md FOUND)
+    assert(runner(runLog, clock).pollOnce() == 0)
+    assert(runLog.entries().isEmpty)
+    // once the interval has passed it runs once, with one Success line
+    val later = Clock.fixed(now.plus(java.time.Duration.ofMinutes(61)), ZoneOffset.UTC)
+    assert(runner(runLog, later).pollOnce() == 1)
+    assert(runner(runLog, later).pollOnce() == 0)
+    assert(runLog.entries().map(_.status) == Seq("Success"))
+    assert(new CsvControlTable(ctlPath).readAll().head.state == "Success")
+  }
+
   test("streaming daemon form drives poll cycles via Trigger.ProcessingTime") {
     val (root, runLog) = freshEnv()
     val ctlPath = Files.createTempFile("ctl", ".csv")
