@@ -71,7 +71,9 @@ object ParquetTables {
     }
 
   /** The qualified path and its [[Signature]], from a driver-side
-    * recursive listing; None when the listing fails. */
+    * recursive `listStatus` walk; None when the listing fails. A plain
+    * listing, not `listFiles`: its located statuses look up the block
+    * locations of every file, which the signature never reads. */
   private def signature(spark: SparkSession, path: String): Option[(String, Signature)] =
     try {
       val p = new Path(path)
@@ -79,11 +81,11 @@ object ParquetTables {
       val root = fs.makeQualified(p)
       val prefix = root.toUri.getPath
       val files = Vector.newBuilder[(String, Long, Long)]
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toUri.getPath.stripPrefix(prefix), f.getLen, f.getModificationTime))
+      def walk(dir: Path): Unit = fs.listStatus(dir).foreach { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else files += ((f.getPath.toUri.getPath.stripPrefix(prefix), f.getLen, f.getModificationTime))
       }
+      walk(root)
       Some(root.toString ->
         Signature(files.result().sortBy(_._1), InferenceConfs.map(spark.conf.getOption)))
     } catch { case NonFatal(_) => None }

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTimeState.{micros, wakeAt, watermarkUs}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming form of e18's rolling anomaly detection: per event_type,
   * each OBSERVED hour's volume is z-scored against the previous 24
@@ -50,9 +51,6 @@ object AnomalyStream {
     .ofPattern("yyyy-MM-dd HH:mm:ss")
 
   def anomalies(events: Dataset[Ev]): Dataset[AnomalyRow] = {
-    implicit val outEnc = Encoders.product[AnomalyRow]
-    implicit val stEnc = Encoders.kryo[St]
-    implicit val keyEnc = Encoders.STRING
     // hour bucketing and labels follow the SESSION timezone, exactly
     // like batch e18's date_trunc/date_format — a UTC-pinned formatter
     // would silently break the streamed==batch parity on any session
@@ -60,15 +58,8 @@ object AnomalyStream {
     // even the bucket BOUNDARIES differ from epoch-hour multiples)
     val zone = java.time.ZoneId.of(
       events.sparkSession.conf.get("spark.sql.session.timeZone"))
-    events
-      .withWatermark("ts", EventStreams.Lateness)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        process(zone))
+    EventTimeState.keyed(events)(_.event_type)(process(zone))
   }
-
-  private def micros(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
 
   /** Micros of the supremum instant of the bucket ENDING at local time
     * `ldtEnd` — its finality bound. The offset that matters is the one
@@ -102,7 +93,7 @@ object AnomalyStream {
         .atZone(zone).truncatedTo(java.time.temporal.ChronoUnit.HOURS))
       pending = pending.updated(k, pending.getOrElse(k, 0L) + 1L)
     }
-    val wm = state.getCurrentWatermarkMs() * 1000L
+    val wm = watermarkUs(state)
     // the watermark instant past which bucket k can no longer grow
     def endUs(k: String): Long =
       latestInstantUs(java.time.LocalDateTime.parse(k, Fmt).plusHours(1), zone)
@@ -139,7 +130,7 @@ object AnomalyStream {
     state.update((ring, pending))
     if (pending.nonEmpty)
       // wake when the watermark passes the earliest unemitted hour's end
-      state.setTimeoutTimestamp(pending.keys.map(endUs).min / 1000L + 1L)
+      wakeAt(state, pending.keys.map(endUs).min)
     out.result().iterator
   }
 }

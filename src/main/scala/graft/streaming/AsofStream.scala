@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTimeState.{drain, micros, wakeAt}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming form of e08's AS-OF enrichment: every event is annotated
   * with the user's most recent prior-or-same-time 'purchase' (id and
@@ -16,7 +17,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * same-timestamp GROUPS: fold the group's purchases into the
   * last-purchase slot first, then emit the group's events.
   *
-  * Finality rule (as [[TransitionStream]]/[[StatefulSessions]]): a group
+  * Finality rule ([[EventTimeState.drain]]): a group
   * at time t is final only when the watermark passes t strictly — an
   * admissible late purchase (ts ≥ watermark) at pt ≤ t would change the
   * enrichment otherwise. State is ONE anchor (the last finalized
@@ -34,32 +35,20 @@ object AsofStream {
   /** ((last purchase micros, max purchase id at that time), pending). */
   type St = (Option[(Long, Long)], List[(Long, Long, String)])
 
-  def enrich(events: Dataset[Ev]): Dataset[Enriched] = {
-    implicit val outEnc = Encoders.product[Enriched]
-    implicit val stEnc = Encoders.kryo[St]
-    implicit val keyEnc = Encoders.scalaLong
-    events
-      .withWatermark("ts", EventStreams.Lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process)
-  }
-
-  private def micros(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
+  def enrich(events: Dataset[Ev]): Dataset[Enriched] =
+    EventTimeState.keyed(events)(_.user_id)(process)
 
   private[streaming] def process(
       userId: Long, events: Iterator[Ev], state: GroupState[St]): Iterator[Enriched] = {
-    val (lp0, pending0) = state.getOption.getOrElse((None, Nil))
-    val merged = (pending0 ++ events.map(e => (micros(e.ts), e.event_id, e.event_type)))
-      .sortBy(e => (e._1, e._2))
-    val wmMicros = state.getCurrentWatermarkMs() * 1000L
-
-    var lp = lp0
+    var (lp, pending) = state.getOption.getOrElse((None, Nil))
+    val (done, rest) =
+      drain(pending, events.map(e => (micros(e.ts), e.event_id, e.event_type)), state)
     val out = List.newBuilder[Enriched]
-    var rest = merged
-    while (rest.nonEmpty && rest.head._1 < wmMicros) {
-      val t = rest.head._1
-      val (grp, tail) = rest.span(_._1 == t)
+    // a same-ts group lies wholly in the final prefix or wholly past it
+    var todo = done
+    while (todo.nonEmpty) {
+      val t = todo.head._1
+      val (grp, tail) = todo.span(_._1 == t)
       val purch = grp.filter(_._3 == "purchase")
       if (purch.nonEmpty) {
         val pid = purch.map(_._2).max
@@ -73,14 +62,12 @@ object AsofStream {
       grp.foreach { case (_, eid, _) =>
         out += Enriched(eid, userId, t, lp.map(_._2), lp.map(t - _._1))
       }
-      rest = tail
+      todo = tail
     }
-
     state.update((lp, rest))
-    if (rest.nonEmpty)
-      // wake when the watermark passes the earliest pending group so it
-      // finalizes even if the user goes quiet
-      state.setTimeoutTimestamp(rest.head._1 / 1000L + 1L)
+    // wake when the watermark passes the earliest pending group so it
+    // finalizes even if the user goes quiet
+    rest.headOption.foreach(e => wakeAt(state, e._1))
     out.result().iterator
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.QueryHelpers.sumExact
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming forms of the event analytics (SURVEY §2.3 last
@@ -25,22 +25,21 @@ object EventStreams {
 
   /** Streaming dual of e02_hourly_tumbling. */
   def hourlyTumbling(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", Lateness)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sumExact(col("value")).as("sum_value"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("event_type"), col("n"), col("sum_value"))
+    windowedCounts(events, window(col("ts"), "1 hour"), "hour")
 
   /** Streaming dual of e05_sliding_window (1h window, 30m slide). */
   def slidingWindow(events: DataFrame): DataFrame =
+    windowedCounts(events, window(col("ts"), "1 hour", "30 minutes"), "win_start")
+
+  /** Count and exact value sum per (`win`, event_type), each window
+    * named by its formatted start in column `label`. */
+  private def windowedCounts(events: DataFrame, win: Column, label: String): DataFrame =
     events
       .withWatermark("ts", Lateness)
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
+      .groupBy(win, col("event_type"))
       .agg(count(lit(1)).as("n"), sumExact(col("value")).as("sum_value"))
       .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
+        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as(label),
         col("event_type"), col("n"), col("sum_value"))
 
   /** Streaming dual of e04_sessionize: native session windows with the

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTimeState.{drain, micros, wakeAt}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming form of e11's ordered funnel (signup → click → purchase,
   * each stage the user's FIRST qualifying event strictly after the
@@ -10,8 +12,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * qualifying event in (ts, event_id) order, so a single forward fold
   * over watermark-final events reproduces the batch chain exactly — an
   * event can only influence a stage decision once no earlier-sorting
-  * admissible event can still arrive (strictly ts < watermark, same
-  * finality rule as [[TransitionStream]]).
+  * admissible event can still arrive (strictly ts < watermark, the
+  * finality rule of [[EventTimeState.drain]]).
   *
   * State: the three resolved stage times plus the not-yet-final event
   * suffix, watermark-bounded; once the funnel completes the suffix is
@@ -28,33 +30,19 @@ object FunnelStream {
 
   private val Stages = Set("signup", "click", "purchase")
 
-  def stages(events: Dataset[Ev]): Dataset[StageHit] = {
-    implicit val outEnc = Encoders.product[StageHit]
-    implicit val stEnc = Encoders.kryo[St]
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .filter($"event_type".isin(Stages.toSeq: _*))
-      .withWatermark("ts", EventStreams.Lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process _)
-  }
-
-  private def micros(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
+  /** The stage filter runs before the watermark, so events outside the
+    * funnel never advance it. */
+  def stages(events: Dataset[Ev]): Dataset[StageHit] =
+    EventTimeState.keyed(events.filter(col("event_type").isin(Stages.toSeq: _*)))(
+      _.user_id)(process)
 
   private[streaming] def process(
       userId: Long, events: Iterator[Ev], state: GroupState[St]): Iterator[StageHit] = {
-    val (s0, c0, p0, pending0) = state.getOption.getOrElse((None, None, None, Nil))
-    val merged = (pending0 ++ events.map(e => (micros(e.ts), e.event_id, e.event_type)))
-      .sortBy(e => (e._1, e._2))
-    val wmMicros = state.getCurrentWatermarkMs() * 1000L
-
-    var (tS, tC, tP) = (s0, c0, p0)
+    var (tS, tC, tP, pending) = state.getOption.getOrElse((None, None, None, Nil))
+    val (done, rest) =
+      drain(pending, events.map(e => (micros(e.ts), e.event_id, e.event_type)), state)
     val out = List.newBuilder[StageHit]
-    var rest = merged
-    while (rest.nonEmpty && rest.head._1 < wmMicros) {
-      val (t, _, tpe) = rest.head
+    done.foreach { case (t, _, tpe) =>
       tpe match {
         case "signup" if tS.isEmpty =>
           tS = Some(t); out += StageHit(userId, "signup", t)
@@ -64,13 +52,10 @@ object FunnelStream {
           tP = Some(t); out += StageHit(userId, "purchase", t)
         case _ => // non-qualifying under the ordered-chain rule
       }
-      rest = rest.tail
     }
-
     val keep = if (tP.isDefined) Nil else rest
     state.update((tS, tC, tP, keep))
-    if (keep.nonEmpty)
-      state.setTimeoutTimestamp(keep.head._1 / 1000L + 1L)
+    keep.headOption.foreach(e => wakeAt(state, e._1))
     out.result().iterator
   }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTimeState.{micros, wakeAt, watermarkUs}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming form of e17's gap-filled hourly series: per event_type,
   * every hour from the type's first observed hour onward is emitted
@@ -10,7 +11,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * A dashboard consuming this stream sees the same contiguous series the
   * batch query computes, minutes after each hour closes.
   *
-  * Finality and bounds (the [[TransitionStream]] discipline): hour h is
+  * Finality and bounds (the [[EventTimeState]] discipline): hour h is
   * emitted once (a) the watermark passed its END (h+1h ≤ wm — any event
   * belonging to h would now be dropped as late, so h's count is frozen),
   * and (b) h does not run past the type's LATEST OBSERVED hour — batch
@@ -41,18 +42,8 @@ object GapFillStream {
 
   private val HourUs = 3600L * 1000000L
 
-  def gapFill(events: Dataset[Ev]): Dataset[HourRow] = {
-    implicit val outEnc = Encoders.product[HourRow]
-    implicit val stEnc = Encoders.kryo[St]
-    implicit val keyEnc = Encoders.STRING
-    events
-      .withWatermark("ts", EventStreams.Lateness)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process)
-  }
-
-  private def micros(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
+  def gapFill(events: Dataset[Ev]): Dataset[HourRow] =
+    EventTimeState.keyed(events)(_.event_type)(process)
 
   private[streaming] def process(eventType: String, events: Iterator[Ev],
       state: GroupState[St]): Iterator[HourRow] = {
@@ -67,7 +58,7 @@ object GapFillStream {
       pending = pending.updated(h, (n0 + 1L, r1))
       if (!maxObs.exists(_ >= h)) maxObs = Some(h)
     }
-    val wm = state.getCurrentWatermarkMs() * 1000L
+    val wm = watermarkUs(state)
     val out = List.newBuilder[HourRow]
     if (maxObs.nonEmpty) {
       var h = lastHour.map(_ + HourUs)
@@ -87,7 +78,7 @@ object GapFillStream {
     if (pending.nonEmpty)
       // wake when the watermark passes the earliest unemitted hour's end
       // so a quiet type still drains its finalized (and gap) hours
-      state.setTimeoutTimestamp((pending.keys.min + HourUs) / 1000L + 1L)
+      wakeAt(state, pending.keys.min + HourUs)
     out.result().iterator
   }
 }

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTimeState.{micros, wakeAt, watermarkUs}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
 import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
 
-/** Custom sessionization state machine on
-  * `KeyValueGroupedDataset.flatMapGroupsWithState` — the hand-rolled
+/** Custom sessionization state machine on the keyed event-time state
+  * of [[EventTimeState.keyed]] — the hand-rolled
   * counterpart of `EventStreams.sessionize` for session logic
   * `session_window` can't express (per-session custom accumulators,
   * emit-on-close semantics, cross-batch gap handling under a watermark).
@@ -28,19 +29,8 @@ object StatefulSessions {
 
   private val Fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(ZoneOffset.UTC)
 
-  def sessionize(events: Dataset[Ev], gapMicros: Long = 1800L * 1000000L): Dataset[SessionOut] = {
-    implicit val outEnc = Encoders.product[SessionOut]
-    implicit val bufEnc = Encoders.kryo[Buf]
-    implicit val keyEnc = Encoders.scalaLong
-    events
-      .withWatermark("ts", EventStreams.Lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        process(gapMicros))
-  }
-
-  private def micros(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
+  def sessionize(events: Dataset[Ev], gapMicros: Long = 1800L * 1000000L): Dataset[SessionOut] =
+    EventTimeState.keyed(events)(_.user_id)(process(gapMicros))
 
   private[streaming] def process(gapMicros: Long)(
       userId: Long, events: Iterator[Ev], state: GroupState[Buf]): Iterator[SessionOut] = {
@@ -48,7 +38,7 @@ object StatefulSessions {
     val all = (buffered ++ events.map(e => (micros(e.ts), e.value))).sortBy(_._1)
     if (all.isEmpty) { state.remove(); return Iterator.empty }
 
-    val wmMicros = state.getCurrentWatermarkMs() * 1000L
+    val wmMicros = watermarkUs(state)
 
     // split into gap-delimited sessions (strict >, matching the batch
     // gaps-and-islands in e04)
@@ -66,8 +56,9 @@ object StatefulSessions {
       // wake up when the watermark passes the EARLIEST open session's
       // close point (a later session's close point would delay emitting
       // earlier finished sessions for a quiet user); each wake-up re-arms
-      // for the next session still open
-      state.setTimeoutTimestamp(open.head.last._1 / 1000L + gapMicros / 1000L + 1L)
+      // for the next session still open (last event and gap each in
+      // whole ms)
+      wakeAt(state, (open.head.last._1 / 1000L + gapMicros / 1000L) * 1000L)
     }
 
     closed.iterator.map { s =>

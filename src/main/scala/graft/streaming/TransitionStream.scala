@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import EventTimeState.{drain, micros, wakeAt}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming form of e13's first-order transition matrix: per-user event
   * chains finalized under the watermark, emitted as raw `(user, prev,
@@ -31,41 +32,19 @@ object TransitionStream {
   /** (micros, event_id, type): anchor + chronological pending suffix. */
   type St = (Option[(Long, Long, String)], List[(Long, Long, String)])
 
-  def transitions(events: Dataset[Ev]): Dataset[Transition] = {
-    implicit val outEnc = Encoders.product[Transition]
-    implicit val stEnc = Encoders.kryo[St]
-    implicit val keyEnc = Encoders.scalaLong
-    events
-      .withWatermark("ts", EventStreams.Lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process)
-  }
-
-  private def micros(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
+  def transitions(events: Dataset[Ev]): Dataset[Transition] =
+    EventTimeState.keyed(events)(_.user_id)(process)
 
   private[streaming] def process(
       userId: Long, events: Iterator[Ev], state: GroupState[St]): Iterator[Transition] = {
-    val (anchor0, pending0) = state.getOption.getOrElse((None, Nil))
-    val merged = (pending0 ++ events.map(e => (micros(e.ts), e.event_id, e.event_type)))
-      .sortBy(e => (e._1, e._2))
-    val wmMicros = state.getCurrentWatermarkMs() * 1000L
-
-    var anchor = anchor0
-    val out = List.newBuilder[Transition]
-    var rest = merged
-    while (rest.nonEmpty && rest.head._1 < wmMicros) {
-      val e = rest.head
-      anchor.foreach(a => out += Transition(userId, a._3, e._3))
-      anchor = Some(e)
-      rest = rest.tail
-    }
-
-    state.update((anchor, rest))
-    if (rest.nonEmpty)
-      // wake when the watermark passes the earliest pending event so its
-      // transition finalizes even if the user goes quiet
-      state.setTimeoutTimestamp(rest.head._1 / 1000L + 1L)
-    out.result().iterator
+    val (anchor, pending) = state.getOption.getOrElse((None, Nil))
+    val (done, rest) =
+      drain(pending, events.map(e => (micros(e.ts), e.event_id, e.event_type)), state)
+    val chain = anchor.toList ++ done
+    state.update((chain.lastOption, rest))
+    // wake when the watermark passes the earliest pending event so its
+    // transition finalizes even if the user goes quiet
+    rest.headOption.foreach(e => wakeAt(state, e._1))
+    chain.zip(chain.drop(1)).map { case (a, e) => Transition(userId, a._3, e._3) }.iterator
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import EventTimeState.{wakeAt, watermarkUs}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming form of e15's rolling 7-day active users: each observed day
   * emits its WAU exactly once when the watermark closes it. Same
@@ -37,12 +38,11 @@ object WauStream {
 
   private val DayUs = 86400L * 1000000L
 
-  /** `events` must carry `ts` (timestamp) and `user_id`. */
+  /** `events` must carry `ts` (timestamp) and `user_id`. The explode
+    * runs before the watermark. */
   def rollingWau(events: DataFrame): Dataset[WauRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    implicit val outEnc = Encoders.product[WauRow]
-    implicit val stEnc = Encoders.kryo[St]
     val contribs = events
       .select(col("ts"), col("user_id"),
         datediff(to_date(date_trunc("day", col("ts"))), lit("1970-01-01"))
@@ -51,11 +51,8 @@ object WauStream {
         explode(expr("sequence(eday, eday + 6)")).as("day"))
       .select(col("ts"), col("user_id"), col("day"),
         (col("day") === col("eday")).as("observed"))
-      .withWatermark("ts", EventStreams.Lateness)
       .as[Contrib]
-    contribs
-      .groupByKey(_.day)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process)
+    EventTimeState.keyed(contribs)(_.day)(process)
   }
 
   private[streaming] def process(day: Long, rows: Iterator[Contrib],
@@ -65,7 +62,7 @@ object WauStream {
       users += c.user_id
       observed |= c.observed
     }
-    val wm = state.getCurrentWatermarkMs() * 1000L
+    val wm = watermarkUs(state)
     val endOfDay = (day + 1L) * DayUs
     if (wm >= endOfDay) {
       state.remove()
@@ -76,7 +73,7 @@ object WauStream {
       state.update((users, observed))
       // wake at the day's deadline so it emits even if the stream goes
       // quiet on this key
-      state.setTimeoutTimestamp(endOfDay / 1000L + 1L)
+      wakeAt(state, endOfDay)
       Iterator.empty
     }
   }

@@ -1,8 +1,10 @@
 package graft.sources
 
 import graft.SparkSpec
+import java.net.URI
 import java.nio.file.Files
-import org.apache.hadoop.fs.Path
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
@@ -91,6 +93,31 @@ class ParquetTablesSpec extends SparkSpec {
     sameAsPlain(spark, path, got)
   }
 
+  test("a warm read of an N-file table adds no located listing and no block lookup") {
+    import spark.implicits._
+    val local = tempPath()
+    (1 to 60).map(i => (i.toLong, s"s$i")).toDF("id", "s").repartition(12).write.parquet(local)
+    val parts = new java.io.File(local).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(parts == 12)
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[CountingFs].getName)
+    val path = s"countfs://$local"
+    def counted(read: => DataFrame): (Int, Int) = {
+      CountingFs.reset()
+      read
+      (CountingFs.located.get, CountingFs.blocks.get)
+    }
+    val schema = ParquetTables.read(spark, path).schema
+    // Spark's own scan listing (InMemoryFileIndex) asks each part file
+    // for its block locations; a schema-given read is only that
+    val plain = counted(spark.read.schema(schema).parquet(path))
+    assert(plain == ((0, parts)), s"(located listings, block lookups) of the plain read: $plain")
+    // no job: the warm read served the known schema, not the fallback
+    val (warm, jobs) = jobsDuring(counted(ParquetTables.read(spark, path)))
+    assert(jobs == 0, s"a warm read must start no Spark job, ran $jobs")
+    assert(warm == plain,
+      s"(located listings, block lookups): warm read $warm, schema-given read $plain")
+  }
+
   test("a missing path and an empty directory fail like the plain read") {
     val missing = tempPath()
     val empty = Files.createTempDirectory("pqtables-empty").toString
@@ -106,4 +133,31 @@ class ParquetTablesSpec extends SparkSpec {
       assert(failure(ParquetTables.read(spark, path)) == plain, path)
     }
   }
+}
+
+/** The local filesystem under the `countfs` scheme, counting located
+  * listings (`listLocatedStatus`, which `listFiles` calls per directory)
+  * and block-location lookups. Listings return plain statuses: the raw
+  * local ones load their permissions from the path string, which the
+  * test scheme's paths do not resolve. */
+class CountingFs extends RawLocalFileSystem {
+  override def getScheme: String = "countfs"
+  override def getUri: URI = URI.create("countfs:///")
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(s => new FileStatus(s.getLen, s.isDirectory, s.getReplication,
+      s.getBlockSize, s.getModificationTime, s.getPath))
+  override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
+    CountingFs.located.incrementAndGet()
+    super.listLocatedStatus(f)
+  }
+  override def getFileBlockLocations(f: FileStatus, start: Long, len: Long): Array[BlockLocation] = {
+    CountingFs.blocks.incrementAndGet()
+    super.getFileBlockLocations(f, start, len)
+  }
+}
+
+object CountingFs {
+  val located = new AtomicInteger
+  val blocks = new AtomicInteger
+  def reset(): Unit = { located.set(0); blocks.set(0) }
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, StreamReplay}
 import graft.QueryHelpers.eventsTbl
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
 /** Streaming rolling-anomaly == batch e18 on a chunked file replay: the
@@ -74,27 +72,12 @@ class AnomalyStreamSpec extends SparkSpec {
 
     // time-ordered chunks: the watermark advances monotonically across
     // triggers, so no real event is ever dropped as late by the replay
-    val replay = Files.createTempDirectory("anomdstreplay").toString
     val ev = rows.map(r => (r._2, r._4)).toDF("ts", "event_type")
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"ts")))
-    (1 to 4).foreach { c =>
-      chunked.filter($"chunk" === c).drop("chunk")
-        .coalesce(1).write.mode("append").parquet(replay)
-    }
-    Seq(Tuple2(java.sql.Timestamp.from(
-        java.time.Instant.parse("2025-11-20T00:00:00Z")), "_sentinel"))
-      .toDF("ts", "event_type")
-      .coalesce(1).write.mode("append").parquet(replay)
-    val src = ns.readStream
-      .schema(ns.read.parquet(replay).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replay)
-      .as[AnomalyStream.Ev]
-    val q = AnomalyStream.anomalies(src).writeStream
-      .format("memory").queryName("anomdst").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val replay = StreamReplay.write("anomdstreplay", ev,
+      Seq(Tuple2(java.sql.Timestamp.from(
+          java.time.Instant.parse("2025-11-20T00:00:00Z")), "_sentinel"))
+        .toDF("ts", "event_type"))
+    StreamReplay.run(ns, replay, "anomdst")(src => AnomalyStream.anomalies(src.as[AnomalyStream.Ev]))
     val streamed = ns.table("anomdst").filter($"event_type" =!= "_sentinel").collect()
     val got = streamed
       .map(r => (r.getString(0), r.getString(1)) ->
@@ -116,30 +99,13 @@ class AnomalyStreamSpec extends SparkSpec {
   }
 
   test("streaming anomaly detection equals batch e18 across a 4-chunk replay") {
-    val dir = Files.createTempDirectory("anomreplay").toString
     val ev = eventsTbl(spark, sf).select($"ts", $"event_type")
-    val maxTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0).toInstant
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"ts")))
-    (1 to 4).foreach { c =>
-      chunked.filter($"chunk" === c).drop("chunk")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
     // far-future sentinel (own type) advances the watermark so every
     // real hour finalizes; its own series never reaches a full ring
-    Seq(Tuple2(java.sql.Timestamp.from(maxTs.plusSeconds(10 * 86400)), "_sentinel"))
-      .toDF("ts", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-
-    val src = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .as[AnomalyStream.Ev]
-    val q = AnomalyStream.anomalies(src).writeStream
-      .format("memory").queryName("anomstream").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val dir = StreamReplay.write("anomreplay", ev,
+      Seq(Tuple2(StreamReplay.sentinelTs(ev), "_sentinel")).toDF("ts", "event_type"))
+    StreamReplay.run(spark, dir, "anomstream")(src =>
+      AnomalyStream.anomalies(src.as[AnomalyStream.Ev]))
 
     val got = spark.table("anomstream")
       .filter($"event_type" =!= "_sentinel")

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, StreamReplay}
 import graft.QueryHelpers.eventsTbl
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 /** Streaming as-of enrichment == batch e08 on a chunked file replay:
   * same (last_purchase_id, gap) for every event, including NULLs for
@@ -16,30 +14,13 @@ class AsofStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("streaming as-of enrichment equals batch e08 across a 4-chunk replay") {
-    val dir = Files.createTempDirectory("asofreplay").toString
     val ev = eventsTbl(spark, sf).select($"event_id", $"ts", $"user_id", $"event_type")
-    val maxTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0).toInstant
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"ts")))
-    (1 to 4).foreach { c =>
-      chunked.filter($"chunk" === c).drop("chunk")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
     // far-future sentinel advances the watermark so every real event
     // finalizes; its own user (-1) is filtered from the comparison
-    Seq((-1L, java.sql.Timestamp.from(maxTs.plusSeconds(10 * 86400)), -1L, "x"))
-      .toDF("event_id", "ts", "user_id", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-
-    val src = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .as[AsofStream.Ev]
-    val q = AsofStream.enrich(src).writeStream
-      .format("memory").queryName("asofstream").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val dir = StreamReplay.write("asofreplay", ev,
+      Seq((-1L, StreamReplay.sentinelTs(ev), -1L, "x"))
+        .toDF("event_id", "ts", "user_id", "event_type"))
+    StreamReplay.run(spark, dir, "asofstream")(src => AsofStream.enrich(src.as[AsofStream.Ev]))
 
     val got = spark.table("asofstream").filter($"user_id" =!= -1L)
       .collect().map { r =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, StreamReplay}
 import graft.QueryHelpers.eventsTbl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -18,32 +18,15 @@ class EventStreamsSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
   private lazy val replayDir: String = {
-    val dir = Files.createTempDirectory("replay").toString
     val ev = eventsTbl(spark, sf).select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val maxTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0).toInstant
-    // 4 time-ordered chunks by ntile over ts
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"ts")))
-    (1 to 4).foreach { c =>
-      chunked.filter($"chunk" === c).drop("chunk")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
     // sentinel: 10 days past the end, closes every real window
-    Seq((-1L, java.sql.Timestamp.from(maxTs.plusSeconds(10 * 86400)), -1L, "sentinel", 0.0))
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .coalesce(1).write.mode("append").parquet(dir)
-    dir
+    StreamReplay.write("replay", ev,
+      Seq((-1L, StreamReplay.sentinelTs(ev), -1L, "sentinel", 0.0))
+        .toDF("event_id", "ts", "user_id", "event_type", "value"))
   }
 
   private def runStream(transform: DataFrame => DataFrame, name: String): DataFrame = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(replayDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayDir)
-    val q = transform(src).writeStream
-      .format("memory").queryName(name).outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    StreamReplay.run(spark, replayDir, name)(transform)
     if (name == "sess") spark.table(name).filter(col("user_id") =!= -1L)
     else spark.table(name).filter(col("event_type") =!= "sentinel")
   }
@@ -71,15 +54,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("stream-stream interval join equals batch e09 click attribution") {
-    val src = spark.readStream
-      .schema(spark.read.parquet(replayDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(replayDir)
-    val q = EventStreams.clickAttribution(src).writeStream
-      .format("memory").queryName("attrib").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("attrib")
+    val got = StreamReplay.run(spark, replayDir, "attrib")(EventStreams.clickAttribution)
     val want = graft.Catalog.byName("e09_click_attribution").run(spark, sf)
     assert(sortedRows(got) == sortedRows(want))
   }
@@ -101,14 +76,7 @@ class EventStreamsSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .coalesce(1).write.mode("append").parquet(dir)
 
-    val src = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-    val q = EventStreams.hourlyTumbling(src).writeStream
-      .format("memory").queryName("late").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    StreamReplay.run(spark, dir, "late")(EventStreams.hourlyTumbling)
     val counts = spark.table("late").filter($"event_type" =!= "sentinel")
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     // the late 10:30 event must be aggregated into the 10:00 window

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, StreamReplay}
 import graft.QueryHelpers.eventsTbl
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 /** Streaming funnel == batch e11 on a chunked replay — compared at the
   * strongest granularity: the full per-user (stage, t) sets, derived
@@ -17,28 +15,11 @@ class FunnelStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("streaming funnel stages equal batch e11's chain across a replay") {
-    val dir = Files.createTempDirectory("funnelreplay").toString
     val ev = eventsTbl(spark, sf).select($"event_id", $"ts", $"user_id", $"event_type")
-    val maxTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0).toInstant
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"ts")))
-    (1 to 4).foreach { c =>
-      chunked.filter($"chunk" === c).drop("chunk")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    Seq((-1L, java.sql.Timestamp.from(maxTs.plusSeconds(10 * 86400)), -1L, "signup"))
-      .toDF("event_id", "ts", "user_id", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-
-    val src = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .as[FunnelStream.Ev]
-    val q = FunnelStream.stages(src).writeStream
-      .format("memory").queryName("funstream").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val dir = StreamReplay.write("funnelreplay", ev,
+      Seq((-1L, StreamReplay.sentinelTs(ev), -1L, "signup"))
+        .toDF("event_id", "ts", "user_id", "event_type"))
+    StreamReplay.run(spark, dir, "funstream")(src => FunnelStream.stages(src.as[FunnelStream.Ev]))
 
     val got = spark.table("funstream").filter($"user_id" =!= -1L)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet

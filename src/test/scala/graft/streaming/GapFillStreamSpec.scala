@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, StreamReplay}
 import graft.QueryHelpers.eventsTbl
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 /** Streaming gap fill == batch e17 on a chunked file replay: same hours
   * (zeros included), same counts, same forward-filled revenues — and
@@ -16,30 +14,12 @@ class GapFillStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("streaming gap fill equals batch e17 across a 4-chunk replay") {
-    val dir = Files.createTempDirectory("gapreplay").toString
     val ev = eventsTbl(spark, sf).select($"ts", $"event_type", $"value")
-    val maxTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0).toInstant
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"ts")))
-    (1 to 4).foreach { c =>
-      chunked.filter($"chunk" === c).drop("chunk")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
     // far-future sentinel (own type) advances the watermark so every
     // real hour finalizes; its own single-hour series is filtered out
-    Seq((java.sql.Timestamp.from(maxTs.plusSeconds(10 * 86400)), "_sentinel", 0.0))
-      .toDF("ts", "event_type", "value")
-      .coalesce(1).write.mode("append").parquet(dir)
-
-    val src = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .as[GapFillStream.Ev]
-    val q = GapFillStream.gapFill(src).writeStream
-      .format("memory").queryName("gapstream").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val dir = StreamReplay.write("gapreplay", ev,
+      Seq((StreamReplay.sentinelTs(ev), "_sentinel", 0.0)).toDF("ts", "event_type", "value"))
+    StreamReplay.run(spark, dir, "gapstream")(src => GapFillStream.gapFill(src.as[GapFillStream.Ev]))
 
     val got = spark.table("gapstream")
       .filter($"event_type" =!= "_sentinel")

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, StreamReplay}
 import graft.QueryHelpers.eventsTbl
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 /** flatMapGroupsWithState sessionizer == batch gaps-and-islands (e04) on
   * a file-replay stream. Session identity compares exactly; sum_value
@@ -17,28 +15,10 @@ class StatefulSessionsSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("custom-state sessionization equals batch e04 on replay") {
-    val dir = Files.createTempDirectory("sessreplay").toString
     val ev = eventsTbl(spark, sf).select($"event_id", $"ts", $"user_id", $"value")
-    val maxTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0).toInstant
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"ts")))
-    (1 to 4).foreach { c =>
-      chunked.filter($"chunk" === c).drop("chunk")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    Seq((-1L, java.sql.Timestamp.from(maxTs.plusSeconds(10 * 86400)), -1L, 0.0))
-      .toDF("event_id", "ts", "user_id", "value")
-      .coalesce(1).write.mode("append").parquet(dir)
-
-    val src = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .as[StatefulSessions.Ev]
-    val q = StatefulSessions.sessionize(src).writeStream
-      .format("memory").queryName("statesess").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val dir = StreamReplay.write("sessreplay", ev,
+      Seq((-1L, StreamReplay.sentinelTs(ev), -1L, 0.0)).toDF("event_id", "ts", "user_id", "value"))
+    StreamReplay.run(spark, dir, "statesess")(src => StatefulSessions.sessionize(src.as[StatefulSessions.Ev]))
 
     val got = spark.table("statesess").filter($"user_id" =!= -1L)
       .collect().map(r => (r.getLong(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, StreamReplay}
 import graft.QueryHelpers.eventsTbl
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 /** The streaming transition chain == batch e13 on a chunked file replay:
   * same pairs, same multiplicities, hence the same matrix and (replayed
@@ -16,30 +14,13 @@ class TransitionStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("streaming transitions equal batch e13 across a 4-chunk replay") {
-    val dir = Files.createTempDirectory("transreplay").toString
     val ev = eventsTbl(spark, sf).select($"event_id", $"ts", $"user_id", $"event_type")
-    val maxTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0).toInstant
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"ts")))
-    (1 to 4).foreach { c =>
-      chunked.filter($"chunk" === c).drop("chunk")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
     // far-future sentinel advances the watermark so every real
     // transition finalizes; its own user (-1) emits nothing (one event)
-    Seq((-1L, java.sql.Timestamp.from(maxTs.plusSeconds(10 * 86400)), -1L, "x"))
-      .toDF("event_id", "ts", "user_id", "event_type")
-      .coalesce(1).write.mode("append").parquet(dir)
-
-    val src = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .as[TransitionStream.Ev]
-    val q = TransitionStream.transitions(src).writeStream
-      .format("memory").queryName("transtream").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val dir = StreamReplay.write("transreplay", ev,
+      Seq((-1L, StreamReplay.sentinelTs(ev), -1L, "x"))
+        .toDF("event_id", "ts", "user_id", "event_type"))
+    StreamReplay.run(spark, dir, "transtream")(src => TransitionStream.transitions(src.as[TransitionStream.Ev]))
 
     val got = spark.table("transtream").filter($"user_id" =!= -1L)
       .groupBy($"prev_type", $"event_type").agg(count(lit(1)).as("transitions"))

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, StreamReplay}
 import graft.QueryHelpers.eventsTbl
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 /** Streaming rolling WAU == batch e15 on a chunked file replay: same
   * observed days, same exact distinct counts, each day exactly once.
@@ -15,32 +13,15 @@ class WauStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("streaming rolling WAU equals batch e15 across a 4-chunk replay") {
-    val dir = Files.createTempDirectory("waureplay").toString
     val ev = eventsTbl(spark, sf).select($"ts", $"user_id")
-    val maxTs = ev.agg(max($"ts")).collect()(0).getTimestamp(0).toInstant
-    val chunked = ev.withColumn("chunk",
-      ntile(4).over(org.apache.spark.sql.expressions.Window.orderBy($"ts")))
-    (1 to 4).foreach { c =>
-      chunked.filter($"chunk" === c).drop("chunk")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
     // far-future sentinel closes every real day; its own day is dropped
     // from the comparison (it IS observed, 10 days past the real data,
     // so none of its 7 contribution days overlap real ones)
-    val sentinelTs = java.sql.Timestamp.from(maxTs.plusSeconds(10 * 86400))
+    val sentinelTs = StreamReplay.sentinelTs(ev)
     val sentinelDay = sentinelTs.toInstant.atZone(java.time.ZoneOffset.UTC)
       .toLocalDate.toString
-    Seq((sentinelTs, -1L)).toDF("ts", "user_id")
-      .coalesce(1).write.mode("append").parquet(dir)
-
-    val src = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-    val q = WauStream.rollingWau(src).writeStream
-      .format("memory").queryName("waustream").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val dir = StreamReplay.write("waureplay", ev, Seq((sentinelTs, -1L)).toDF("ts", "user_id"))
+    StreamReplay.run(spark, dir, "waustream")(WauStream.rollingWau)
 
     val gotRows = spark.table("waustream").filter($"day" =!= sentinelDay).collect()
     val got = gotRows.map(r => r.getString(0) -> r.getLong(1)).toMap
