@@ -1,47 +1,36 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 /** Physical-layout helpers for the 100 TB regime: bucketing to pre-pay a
   * join shuffle once at write time, and salting to split hot keys that
   * AQE's skew handling can't reach (e.g. a skewed aggregation key).
+  * `CoLocated` also holds the engine's one full table replace (`swap`,
+  * behind [[CoLocated.writeBucketed]] and [[CoLocated.replaceTable]]):
+  * the new table is staged beside the old one and swapped in, so a
+  * failed write keeps the last good table.
   */
 object CoLocated {
 
   /** Write a table bucketed+sorted on its join key. Two tables bucketed
     * on the same key with the same bucket count join WITHOUT a shuffle
     * (and without a sort, since buckets are pre-sorted): the exchange is
-    * paid once at load time instead of on every join.
-    *
-    * Idempotent ACROSS JVMs, not just within one session: a managed-table
-    * directory left by an earlier process survives in the warehouse while
-    * a fresh session's in-memory catalog has no entry for it, so
-    * `SaveMode.Overwrite` alone cannot drop it and the CTAS throws
-    * `LOCATION_ALREADY_EXISTS`. Drop the catalog entry (if known) AND
-    * remove any stale location before writing — rebuilding an index into
-    * the same name must always succeed (pinned in EmbeddingsSpec). */
+    * paid once at load time instead of on every join. A full replace
+    * through [[swap]]: rebuilding an index into the same name always
+    * succeeds, across JVMs too (pinned in EmbeddingsSpec), and a failed
+    * rebuild leaves the last good index readable (pinned in ScaleSpec). */
   def writeBucketed(df: DataFrame, database: String, table: String,
-      key: String, buckets: Int): String = {
-    dropAndClear(df.sparkSession, database, table)
-    df.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .saveAsTable(s"`$database`.`$table`")
-    s"$database.$table"
-  }
+      key: String, buckets: Int): String =
+    swap(df, database, table)(_.bucketBy(buckets, key).sortBy(key))
 
-  /** Full-replace a plain (unbucketed) managed table with the same
-    * cross-JVM idempotence discipline as [[writeBucketed]] — for
-    * model-sized artifacts (codebooks, metadata rows) that accompany a
-    * bucketed index and need no layout guarantee of their own. */
-  def replaceTable(df: DataFrame, database: String, table: String): String = {
-    dropAndClear(df.sparkSession, database, table)
-    df.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"`$database`.`$table`")
-    s"$database.$table"
-  }
+  /** Full-replace a plain (unbucketed) managed table through [[swap]] —
+    * for model-sized artifacts (codebooks, metadata rows) that accompany
+    * a bucketed index and need no layout guarantee of their own, and for
+    * the warehouse sink's non-incremental load. */
+  def replaceTable(df: DataFrame, database: String, table: String): String =
+    swap(df, database, table)(identity)
 
   /** Resolve the managed location of `database.table` (creating the
     * database entry if this JVM has not seen it yet). Warehouse data
@@ -55,21 +44,54 @@ object CoLocated {
       spark.catalog.getDatabase(database).locationUri, table.toLowerCase)
   }
 
-  /** Drop the catalog entry AND delete the managed location — the public
-    * face of the replace prologue, for callers that must invalidate an
-    * artifact before starting a multi-table rewrite. */
+  /** Drop the catalog entry AND delete the managed location — for
+    * callers that must invalidate an artifact before starting a
+    * multi-table rewrite. */
   def clearTable(spark: SparkSession, database: String, table: String): Unit =
     dropAndClear(spark, database, table)
 
-  /** The shared prologue: drop the catalog entry AND any stale managed
-    * location a previous JVM left behind (SaveMode.Overwrite alone throws
-    * LOCATION_ALREADY_EXISTS on the orphaned directory — the r4 failure
-    * mode, pinned in EmbeddingsSpec). */
+  /** Table names starting with this prefix are staging slots of
+    * [[swap]]; `WarehouseSink.requireIdent` refuses them as destinations,
+    * so no destination can collide with a staging slot. Catalog names
+    * fold case, so the check does too. */
+  private[graft] val StagingPrefix = "graft_staged_"
+
+  /** The one full replace: the table is written beside the old one and
+    * swapped in, so a failed write leaves the last good table readable
+    * (the reference deletes and then loads, `bigquery.py:38-47`, and
+    * loses the old table when the load fails). Clear the staging slot
+    * (whatever a dead process left there), write `df` into it with the
+    * caller's `layout`, drop the target's entry and clear its managed
+    * location, then rename the staged table onto the target, which also
+    * moves its directory there. Every restart shape follows that one
+    * rule: an orphan directory, an entry an append re-adopted at the
+    * managed location and a user-registered foreign table all lose their
+    * entry, the managed slot is rewritten, and files outside it are
+    * never touched. Not for partitioned tables: the in-memory catalog
+    * does not move partition locations on a rename. */
+  private def swap(df: DataFrame, database: String, table: String)(
+      layout: DataFrameWriter[Row] => DataFrameWriter[Row]): String = {
+    val spark = df.sparkSession
+    val staged = StagingPrefix + table
+    dropAndClear(spark, database, staged)
+    layout(df.write.format("parquet")).saveAsTable(s"`$database`.`$staged`")
+    dropAndClear(spark, database, table)
+    // the catalog call, not `ALTER TABLE … RENAME`: the SQL command
+    // first resolves the staged relation (listing its files) to uncache
+    // it, 27 ms against 0.5 ms on a 4-core host, and nothing caches a
+    // staging slot; the target's cached data went with its DROP above
+    spark.sessionState.catalog.renameTable(
+      TableIdentifier(staged, Some(database)), TableIdentifier(table, Some(database)))
+    s"$database.$table"
+  }
+
+  /** Drop the catalog entry AND any managed location a previous JVM left
+    * behind without an entry (a CTAS onto it throws
+    * LOCATION_ALREADY_EXISTS — the r4 failure mode, pinned in
+    * EmbeddingsSpec). */
   private def dropAndClear(spark: SparkSession, database: String, table: String): Unit = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
+    val loc = tableLocation(spark, database, table)
     spark.sql(s"DROP TABLE IF EXISTS `$database`.`$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.catalog.getDatabase(database).locationUri, table.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
   }

@@ -20,10 +20,12 @@ trait Sink {
   def load(req: LoadRequest): String
 }
 
-/** K2/K3/K5: Spark-catalog warehouse sink. Non-incremental load is
-  * `SaveMode.Overwrite` — for a datasource table this drops and recreates
-  * with the NEW schema, matching the reference's delete-then-reload +
-  * re-autodetect (`bigquery.py:38-39,45-46`); incremental appends
+/** K2/K3/K5: Spark-catalog warehouse sink. A non-incremental load is
+  * the reference's delete-then-reload with its schema re-autodetected
+  * (`bigquery.py:38-39,45-46`), made atomic: [[graft.plans.CoLocated
+  * .replaceTable]] writes the new table into a staging slot and swaps it
+  * in, so a failed load leaves the last good table readable where the
+  * reference's delete has already lost it. An incremental load appends
   * (`bigquery.py:45-46`). The database is auto-created like the dataset
   * bootstrap (`bigquery.py:13-16`) — but lazily at load, not at import
   * (explicit lifecycle, SURVEY §2.1 X2).
@@ -36,33 +38,27 @@ final class WarehouseSink(database: String = WarehouseSink.DefaultDatabase) exte
     // redirect the load)
     WarehouseSink.requireIdent(database, "database")
     WarehouseSink.requireIdent(req.destination, "destination table")
+    if (req.incremental) append(req)
+    else graft.plans.CoLocated.replaceTable(req.df, database, req.destination)
+  }
+
+  private def append(req: LoadRequest): String = {
     val spark = req.df.sparkSession
     // Cross-process durability: warehouse FILES outlive the in-memory
     // catalog, so a fresh JVM can meet a table directory it has no
     // entry for (the daemon's restart path; caught by the scripted
     // packaged-jar smoke on its second run — saveAsTable throws
-    // LOCATION_ALREADY_EXISTS). BigQuery parity demands both modes keep
-    // working across scheduler restarts (`bigquery.py:38-46`): a full
-    // replace clears the orphan (it is about to be overwritten anyway —
-    // CoLocated's r4 discipline), an append RE-ADOPTS it by registering
-    // the surviving location so new rows continue the table.
+    // LOCATION_ALREADY_EXISTS). BigQuery parity demands appends keep
+    // working across scheduler restarts (`bigquery.py:38-46`): an append
+    // RE-ADOPTS the orphan by registering the surviving location so new
+    // rows continue the table (the full replace clears it in its swap).
     val loc = graft.plans.CoLocated.tableLocation(spark, database, req.destination)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ident = s"`$database`.`${req.destination}`"
     // tableExists must see the BACKTICKED name: requireIdent allows
     // digit-only destinations ('2024'), which the multipart-identifier
     // parser lexes as an integer literal unless quoted
-    val exists = spark.catalog.tableExists(ident)
-    val orphan = !exists && fs.exists(loc)
-    if (!req.incremental) {
-      // clear both restart shapes: the bare orphan (files, no entry) and
-      // a table a previous APPEND re-adopted (external entry at the
-      // managed location — Overwrite would drop it without its files,
-      // then recreate managed on the non-empty directory and throw)
-      if (orphan || (exists &&
-          WarehouseSink.isAdoptedExternal(spark, database, req.destination, loc)))
-        graft.plans.CoLocated.clearTable(spark, database, req.destination)
-    } else if (orphan) {
+    if (!spark.catalog.tableExists(ident) && fs.exists(loc)) {
       // re-adopt with the INCOMING schema spelled out: inference would
       // fail forever on a directory holding only _temporary/_SUCCESS
       // leftovers of a crashed write (underscore-prefixed entries are
@@ -71,8 +67,7 @@ final class WarehouseSink(database: String = WarehouseSink.DefaultDatabase) exte
       spark.sql(s"CREATE TABLE $ident (${req.df.schema.toDDL}) " +
         s"USING parquet LOCATION '${loc.toString}'")
     }
-    val mode = if (req.incremental) SaveMode.Append else SaveMode.Overwrite
-    req.df.write.mode(mode).format("parquet").saveAsTable(ident)
+    req.df.write.mode(SaveMode.Append).format("parquet").saveAsTable(ident)
     s"$database.${req.destination}"
   }
 }
@@ -82,25 +77,15 @@ object WarehouseSink {
   val DefaultDatabase = "g_sheets"
 
   private val Ident = "^[A-Za-z0-9_]+$".r
+  /** Letters, digits and `_` only, and never a name in the table
+    * replace's reserved staging namespace. */
   private[graft] def requireIdent(s: String, what: String): Unit =
     if (!Ident.matches(s))
       throw new IllegalArgumentException(
         s"invalid $what '$s': only letters, digits and _ are allowed")
-
-  /** True iff `database.table` is an EXTERNAL entry whose location is the
-    * database's own managed slot for that name — i.e. a table the
-    * incremental branch re-adopted after a restart, not a user-registered
-    * foreign table (those keep Spark's stock Overwrite semantics: entry
-    * replaced, foreign files untouched). */
-  private[sinks] def isAdoptedExternal(spark: org.apache.spark.sql.SparkSession,
-      database: String, table: String, managedLoc: org.apache.hadoop.fs.Path): Boolean = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(database)))
-    val fs = managedLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    meta.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL &&
-      fs.makeQualified(new org.apache.hadoop.fs.Path(meta.location)) ==
-        fs.makeQualified(managedLoc)
-  }
+    else if (s.toLowerCase.startsWith(graft.plans.CoLocated.StagingPrefix))
+      throw new IllegalArgumentException(
+        s"invalid $what '$s': the ${graft.plans.CoLocated.StagingPrefix} prefix is reserved")
 }
 
 /** K1: CSV sink with all-cells-quoted output. The reference writes

@@ -404,4 +404,18 @@ class PlanRegressionSpec extends SparkSpec {
       assert(jobs <= most, s"building warm $q started $jobs jobs (at most $most)")
     }
   }
+
+  test("a full-replace warehouse load starts one Spark job: the staged write") {
+    import spark.implicits._
+    // the swap around the write (clear the staging slot, drop the target,
+    // rename) is catalog and file-system work only; the delete-then-load
+    // it replaced also started one job
+    val sink = new graft.sinks.WarehouseSink("plan_sink")
+    def load(n: Int) = sink.load(graft.sinks.LoadRequest(
+      (1 to n).map(i => (i, s"v$i")).toDF("id", "v"), "t_replace", incremental = false))
+    load(3)
+    val (_, jobs) = jobsDuring(load(5))
+    assert(jobs <= 1, s"a full-replace load ran $jobs jobs (at most 1)")
+    assert(spark.table("plan_sink.t_replace").count() == 5)
+  }
 }

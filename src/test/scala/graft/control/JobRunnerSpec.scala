@@ -199,13 +199,12 @@ class JobRunnerSpec extends SparkSpec {
     assert(runLog.entries().isEmpty)
   }
 
-  test("a load failing after the Overwrite drop ends Failure; Refresh Now restores the table") {
+  test("a load failing inside its write ends Failure and keeps the old table; Refresh Now reloads it") {
     val (root, runLog) = freshEnv()
     val ct = CsvControlTable.init(Files.createTempFile("ctl", ".csv"), Seq(
       cells(dest = "crash_t", refreshNow = "yes", interval = "1 day")))
     // a warehouse sink whose frame, while armed, throws at execution
-    // time: the failure lands inside saveAsTable, after Overwrite has
-    // dropped the existing table
+    // time: the failure lands inside the staged write of the replace
     val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val boom = org.apache.spark.sql.functions.udf { () =>
       throw new IllegalStateException("injected load failure"); true
@@ -229,9 +228,9 @@ class JobRunnerSpec extends SparkSpec {
       s"$failed")
     assert(failed.lastResult.contains("injected load failure"), failed.lastResult)
     assert(runLog.entries().map(_.status) == Seq("Success", "Failure"))
-    // the old rows do not survive: Overwrite dropped the table before the
-    // failing write, which leaves no table behind
-    assert(!spark.catalog.tableExists("g_sheets.crash_t"))
+    // the old rows survive: the replace swaps the table only after the
+    // staged write has succeeded
+    assert(spark.table("g_sheets.crash_t").count() == 3)
 
     armed.set(false)
     ct.updateCell(2, StateMachine.ColRefreshNow, "yes")

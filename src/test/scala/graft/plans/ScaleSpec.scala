@@ -29,6 +29,33 @@ class ScaleSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
+  test("a bucketed rebuild that fails in its write keeps the last good table, bucket spec and appends") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+    val ident = TableIdentifier("keep_b", Some("g_bucketed"))
+    val good = (1L to 100L).map(i => (i % 7, i)).toDF("k", "v")
+    CoLocated.writeBucketed(good, "g_bucketed", "keep_b", "k", 4)
+    // the replacement frame throws at execution time, inside the write
+    val boom = udf { () => throw new IllegalStateException("injected rebuild failure"); true }
+      .asNondeterministic()
+    val failed = intercept[Exception](CoLocated.writeBucketed(
+      good.filter(boom()), "g_bucketed", "keep_b", "k", 4))
+    assert(causeMessages(failed).exists(_.contains("injected rebuild failure")), failed)
+    val meta = spark.sessionState.catalog.getTableMetadata(ident)
+    assert(meta.tableType == CatalogTableType.MANAGED)
+    assert(meta.bucketSpec.map(b => (b.numBuckets, b.bucketColumnNames, b.sortColumnNames))
+      .contains((4, Seq("k"), Seq("k"))), meta.bucketSpec)
+    assert(spark.table("g_bucketed.keep_b").as[(Long, Long)].collect().toSet ==
+      good.as[(Long, Long)].collect().toSet)
+    // the kept table still takes a same-spec append
+    CoLocated.appendBucketed(Seq((3L, 101L)).toDF("k", "v"), "g_bucketed", "keep_b", "k", 4)
+    assert(spark.table("g_bucketed.keep_b").count() == 101)
+    // and the next rebuild replaces it through the failed one's leftovers
+    CoLocated.writeBucketed(good.limit(10), "g_bucketed", "keep_b", "k", 4)
+    assert(spark.table("g_bucketed.keep_b").count() == 10)
+    CoLocated.clearTable(spark, "g_bucketed", "keep_b")
+  }
+
   test("salted aggregation equals plain aggregation") {
     val orders = spark.read.parquet(s"$sf/orders.parquet")
     val salted = Salting.saltedCounts(orders, "o_custkey", "o_orderkey", 4)

@@ -64,11 +64,10 @@ class SinksSpec extends SparkSpec {
     sink.load(LoadRequest(Seq((6, "appended")).toDF("id", "v"), "t_orph", incremental = true))
     assert(spark.table("g_sheets_orph.t_orph").as[(Int, String)].collect().toSet ==
       Set((5, "new"), (6, "appended")))
-    // the re-adopted entry is EXTERNAL at the managed location; a later
-    // full replace must clear it rather than letting Overwrite drop the
-    // entry (files survive an external drop) and then throw
-    // LOCATION_ALREADY_EXISTS recreating a managed table on the
-    // non-empty directory — the replace-after-restart-append cycle
+    // the re-adopted entry is EXTERNAL at the managed location, whose
+    // files survive a drop of the entry; a later full replace must clear
+    // them too, or moving the staged table there throws
+    // LOCATION_ALREADY_EXISTS — the replace-after-restart-append cycle
     sink.load(LoadRequest(Seq((7, "replaced")).toDF("id", "v"), "t_orph", incremental = false))
     assert(spark.table("g_sheets_orph.t_orph").as[(Int, String)].collect().toSet ==
       Set((7, "replaced")))
@@ -109,6 +108,56 @@ class SinksSpec extends SparkSpec {
       sink.load(LoadRequest(df, "a`.`b", incremental = false)))
     intercept[IllegalArgumentException](
       sink.load(LoadRequest(df, "t1; DROP TABLE x", incremental = false)))
+    // the table replace's staging slots are reserved, in any case
+    intercept[IllegalArgumentException](
+      sink.load(LoadRequest(df, "graft_staged_t1", incremental = false)))
+    intercept[IllegalArgumentException](
+      sink.load(LoadRequest(df, "GRAFT_STAGED_t1", incremental = true)))
+  }
+
+  test("warehouse full load over a foreign EXTERNAL table replaces the entry, leaves its files") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+    val foreign = Files.createTempDirectory("foreign_ext").resolve("t")
+    Seq((1, "mine"), (2, "yours")).toDF("id", "v").write.parquet(foreign.toString)
+    def snapshot(): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(foreign).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => foreign.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+    }
+    val before = snapshot()
+    spark.sql("CREATE DATABASE IF NOT EXISTS g_sheets_ext")
+    spark.sql(s"CREATE TABLE g_sheets_ext.t_ext USING parquet LOCATION '${foreign.toUri}'")
+    val sink = new WarehouseSink("g_sheets_ext")
+    sink.load(LoadRequest(Seq((7, "new", true)).toDF("id", "v", "flag"), "t_ext", incremental = false))
+    assert(spark.table("g_sheets_ext.t_ext").as[(Int, String, Boolean)].collect().toSeq ==
+      Seq((7, "new", true)))
+    val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier("t_ext", Some("g_sheets_ext")))
+    assert(meta.tableType == CatalogTableType.MANAGED, meta)
+    assert(new org.apache.hadoop.fs.Path(meta.location) ==
+      graft.plans.CoLocated.tableLocation(spark, "g_sheets_ext", "t_ext"), meta.location)
+    assert(snapshot() == before, "the foreign table's files must stay byte-identical")
+    assert(spark.read.parquet(foreign.toString).count() == 2)
+  }
+
+  test("warehouse full load clears a staging slot a dead process left: an entry or a bare directory") {
+    val sink = new WarehouseSink("g_sheets_stage")
+    val staged = graft.plans.CoLocated.StagingPrefix + "t_st"
+    val stagedLoc = graft.plans.CoLocated.tableLocation(spark, "g_sheets_stage", staged)
+    val fs = stagedLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a dead replace's staged table, with an entry and another schema
+    Seq(("x", 1.5)).toDF("other", "cols")
+      .write.format("parquet").saveAsTable(s"g_sheets_stage.$staged")
+    sink.load(LoadRequest(Seq((1, "a"), (2, "b")).toDF("id", "v"), "t_st", incremental = false))
+    assert(spark.table("g_sheets_stage.t_st").as[(Int, String)].collect().toSet ==
+      Set((1, "a"), (2, "b")))
+    assert(!spark.catalog.tableExists(s"g_sheets_stage.$staged") && !fs.exists(stagedLoc))
+    // a bare staging directory (the dead process's catalog went with it)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(stagedLoc, "_temporary/0"))
+    fs.create(new org.apache.hadoop.fs.Path(stagedLoc, "part-00000-junk.parquet")).close()
+    sink.load(LoadRequest(Seq((3, "c")).toDF("id", "v"), "t_st", incremental = false))
+    assert(spark.table("g_sheets_stage.t_st").as[(Int, String)].collect().toSet == Set((3, "c")))
+    assert(!spark.catalog.tableExists(s"g_sheets_stage.$staged") && !fs.exists(stagedLoc))
   }
 
   test("csv sink quotes every field (K1, QUOTE_NONNUMERIC on all-string cells)") {
