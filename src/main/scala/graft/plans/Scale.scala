@@ -1,8 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Physical-layout helpers for the 100 TB regime: bucketing to pre-pay a
   * join shuffle once at write time, and salting to split hot keys that
@@ -20,29 +24,56 @@ object CoLocated {
     * paid once at load time instead of on every join. A full replace
     * through [[swap]]: rebuilding an index into the same name always
     * succeeds, across JVMs too (pinned in EmbeddingsSpec), and a failed
-    * rebuild leaves the last good index readable (pinned in ScaleSpec). */
+    * rebuild leaves the last good index readable (pinned in ScaleSpec).
+    * The staged slot is a `saveAsTable`: `DataFrameWriter.save` refuses
+    * `bucketBy`, so the bucket spec can only come from a CTAS. */
   def writeBucketed(df: DataFrame, database: String, table: String,
       key: String, buckets: Int): String =
-    swap(df, database, table)(_.bucketBy(buckets, key).sortBy(key))
+    swap(df, database, table) { (staged, _) =>
+      df.write.format("parquet").bucketBy(buckets, key).sortBy(key)
+        .saveAsTable(s"`$database`.`$staged`")
+    }
 
   /** Full-replace a plain (unbucketed) managed table through [[swap]] —
     * for model-sized artifacts (codebooks, metadata rows) that accompany
     * a bucketed index and need no layout guarantee of their own, and for
-    * the warehouse sink's non-incremental load. */
+    * the warehouse sink's non-incremental load. The staged slot is a
+    * path write plus [[register]], not a CTAS: a CTAS lists and resolves
+    * the relation it has just written to build the entry, whose every
+    * field is known before the write. */
   def replaceTable(df: DataFrame, database: String, table: String): String =
-    swap(df, database, table)(identity)
+    swap(df, database, table) { (staged, location) =>
+      df.write.parquet(location.toString)
+      register(df.sparkSession, database, staged, df.schema, location)
+    }
 
   /** Resolve the managed location of `database.table` (creating the
     * database entry if this JVM has not seen it yet). Warehouse data
     * OUTLIVES the in-memory catalog — a fresh JVM finds the files but no
     * table entries — so cross-JVM consumers (e.g. the PQ index freshness
-    * probe) address artifacts by location, not by catalog name. */
-  def tableLocation(spark: SparkSession, database: String,
-      table: String): org.apache.hadoop.fs.Path = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
-    new org.apache.hadoop.fs.Path(
-      spark.catalog.getDatabase(database).locationUri, table.toLowerCase)
+    * probe) address artifacts by location, not by catalog name. Catalog
+    * calls, not SQL commands: a warm lookup is two map reads. */
+  def tableLocation(spark: SparkSession, database: String, table: String): Path = {
+    val catalog = spark.sessionState.catalog
+    if (!catalog.databaseExists(database))
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
+    new Path(new Path(catalog.getDatabaseMetadata(database).locationUri), table.toLowerCase)
   }
+
+  /** Register the parquet files at `location` as the MANAGED table
+    * `database.table`, with the entry a CTAS of a `schema` frame records
+    * there (provider parquet; every field, array element and map value
+    * nullable), without listing or reading the files. The replace's
+    * staged slot and the sink's re-adopted orphan directory both come
+    * through here. */
+  private[graft] def register(spark: SparkSession, database: String, table: String,
+      schema: StructType, location: Path): Unit =
+    spark.sessionState.catalog.createTable(CatalogTable(
+      identifier = TableIdentifier(table, Some(database)),
+      tableType = CatalogTableType.MANAGED,
+      storage = CatalogStorageFormat.empty.copy(locationUri = Some(location.toUri)),
+      schema = schema.toNullable,
+      provider = Some("parquet")), ignoreIfExists = false, validateLocation = false)
 
   /** Drop the catalog entry AND delete the managed location — for
     * callers that must invalidate an artifact before starting a
@@ -60,40 +91,54 @@ object CoLocated {
     * swapped in, so a failed write leaves the last good table readable
     * (the reference deletes and then loads, `bigquery.py:38-47`, and
     * loses the old table when the load fails). Clear the staging slot
-    * (whatever a dead process left there), write `df` into it with the
-    * caller's `layout`, drop the target's entry and clear its managed
-    * location, then rename the staged table onto the target, which also
-    * moves its directory there. Every restart shape follows that one
-    * rule: an orphan directory, an entry an append re-adopted at the
-    * managed location and a user-registered foreign table all lose their
-    * entry, the managed slot is rewritten, and files outside it are
-    * never touched. Not for partitioned tables: the in-memory catalog
-    * does not move partition locations on a rename. */
+    * (whatever a dead process left there), `write` `df` into it (given
+    * the slot's name and managed location; it leaves a MANAGED entry
+    * there), drop the target's entry and clear its managed location,
+    * then rename the staged table onto the target, which also moves its
+    * directory there. Every restart shape follows that one rule: an
+    * orphan directory, an entry an append re-adopted at the managed
+    * location and a user-registered foreign table all lose their entry,
+    * the managed slot is rewritten, and files outside it are never
+    * touched. Not for partitioned tables: the in-memory catalog does not
+    * move partition locations on a rename. Only the write is a Spark
+    * job or a SQL execution; the rest is catalog and file-system calls. */
   private def swap(df: DataFrame, database: String, table: String)(
-      layout: DataFrameWriter[Row] => DataFrameWriter[Row]): String = {
+      write: (String, Path) => Unit): String = {
     val spark = df.sparkSession
     val staged = StagingPrefix + table
-    dropAndClear(spark, database, staged)
-    layout(df.write.format("parquet")).saveAsTable(s"`$database`.`$staged`")
+    write(staged, dropAndClear(spark, database, staged))
     dropAndClear(spark, database, table)
     // the catalog call, not `ALTER TABLE … RENAME`: the SQL command
     // first resolves the staged relation (listing its files) to uncache
     // it, 27 ms against 0.5 ms on a 4-core host, and nothing caches a
-    // staging slot; the target's cached data went with its DROP above
+    // staging slot; the target's cached data went with its drop above
     spark.sessionState.catalog.renameTable(
       TableIdentifier(staged, Some(database)), TableIdentifier(table, Some(database)))
     s"$database.$table"
   }
 
   /** Drop the catalog entry AND any managed location a previous JVM left
-    * behind without an entry (a CTAS onto it throws
+    * behind without an entry (a write onto it fails: a CTAS throws
     * LOCATION_ALREADY_EXISTS — the r4 failure mode, pinned in
-    * EmbeddingsSpec). */
-  private def dropAndClear(spark: SparkSession, database: String, table: String): Unit = {
+    * EmbeddingsSpec — and a path write PATH_ALREADY_EXISTS); returns
+    * that location. `DROP TABLE`'s steps as
+    * catalog calls, skipped when there is no entry: uncache every cached
+    * plan that reads the table, by name (the SQL command resolves the
+    * relation, a file listing, to find them by plan), then drop the
+    * session's cached relation and the entry. */
+  private def dropAndClear(spark: SparkSession, database: String, table: String): Path = {
     val loc = tableLocation(spark, database, table)
-    spark.sql(s"DROP TABLE IF EXISTS `$database`.`$table`")
+    val catalog = spark.sessionState.catalog
+    val ident = catalog.qualifyIdentifier(TableIdentifier(table, Some(database)))
+    if (catalog.tableExists(ident)) {
+      spark.sharedState.cacheManager.uncacheTableOrView(castToImpl(spark), ident.nameParts,
+        cascade = true)
+      catalog.refreshTable(ident)
+      catalog.dropTable(ident, ignoreIfNotExists = true, purge = false)
+    }
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
+    loc
   }
 
   /** Append rows into an existing bucketed table with the SAME bucket

@@ -1,6 +1,8 @@
 package graft.sinks
 
+import graft.plans.CoLocated
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import java.time.{Clock, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
@@ -26,7 +28,11 @@ trait Sink {
   * .replaceTable]] writes the new table into a staging slot and swaps it
   * in, so a failed load leaves the last good table readable where the
   * reference's delete has already lost it. An incremental load appends
-  * (`bigquery.py:45-46`). The database is auto-created like the dataset
+  * (`bigquery.py:45-46`), re-adopting a table directory an earlier
+  * process left without a catalog entry. Either load is one Spark write
+  * (one job, one SQL execution on a one-partition frame, pinned in
+  * PlanRegressionSpec); everything around it is catalog and file-system
+  * calls, no SQL command. The database is auto-created like the dataset
   * bootstrap (`bigquery.py:13-16`) — but lazily at load, not at import
   * (explicit lifecycle, SURVEY §2.1 X2).
   */
@@ -39,7 +45,7 @@ final class WarehouseSink(database: String = WarehouseSink.DefaultDatabase) exte
     WarehouseSink.requireIdent(database, "database")
     WarehouseSink.requireIdent(req.destination, "destination table")
     if (req.incremental) append(req)
-    else graft.plans.CoLocated.replaceTable(req.df, database, req.destination)
+    else CoLocated.replaceTable(req.df, database, req.destination)
   }
 
   private def append(req: LoadRequest): String = {
@@ -52,22 +58,23 @@ final class WarehouseSink(database: String = WarehouseSink.DefaultDatabase) exte
     // working across scheduler restarts (`bigquery.py:38-46`): an append
     // RE-ADOPTS the orphan by registering the surviving location so new
     // rows continue the table (the full replace clears it in its swap).
-    val loc = graft.plans.CoLocated.tableLocation(spark, database, req.destination)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ident = s"`$database`.`${req.destination}`"
-    // tableExists must see the BACKTICKED name: requireIdent allows
-    // digit-only destinations ('2024'), which the multipart-identifier
-    // parser lexes as an integer literal unless quoted
-    if (!spark.catalog.tableExists(ident) && fs.exists(loc)) {
-      // re-adopt with the INCOMING schema spelled out: inference would
-      // fail forever on a directory holding only _temporary/_SUCCESS
-      // leftovers of a crashed write (underscore-prefixed entries are
-      // invisible to inference and scans alike, so an empty adoption is
-      // still a valid continuation point)
-      spark.sql(s"CREATE TABLE $ident (${req.df.schema.toDDL}) " +
-        s"USING parquet LOCATION '${loc.toString}'")
+    // The probe takes a TableIdentifier, not a parsed name: requireIdent
+    // allows digit-only destinations ('2024'), which the multipart-
+    // identifier parser lexes as an integer literal.
+    if (!spark.sessionState.catalog.tableExists(TableIdentifier(req.destination, Some(database)))) {
+      val loc = CoLocated.tableLocation(spark, database, req.destination)
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // re-adopt with the INCOMING schema: inference would fail forever
+      // on a directory holding only _temporary/_SUCCESS leftovers of a
+      // crashed write (underscore-prefixed entries are invisible to
+      // inference and scans alike, so an empty adoption is still a valid
+      // continuation point)
+      if (fs.exists(loc)) CoLocated.register(spark, database, req.destination, req.df.schema, loc)
     }
-    req.df.write.mode(SaveMode.Append).format("parquet").saveAsTable(ident)
+    // saveAsTable, not a path write: its by-name column checks refuse a
+    // frame that does not fit the table
+    req.df.write.mode(SaveMode.Append).format("parquet")
+      .saveAsTable(s"`$database`.`${req.destination}`")
     s"$database.${req.destination}"
   }
 }
@@ -83,9 +90,9 @@ object WarehouseSink {
     if (!Ident.matches(s))
       throw new IllegalArgumentException(
         s"invalid $what '$s': only letters, digits and _ are allowed")
-    else if (s.toLowerCase.startsWith(graft.plans.CoLocated.StagingPrefix))
+    else if (s.toLowerCase.startsWith(CoLocated.StagingPrefix))
       throw new IllegalArgumentException(
-        s"invalid $what '$s': the ${graft.plans.CoLocated.StagingPrefix} prefix is reserved")
+        s"invalid $what '$s': the ${CoLocated.StagingPrefix} prefix is reserved")
 }
 
 /** K1: CSV sink with all-cells-quoted output. The reference writes

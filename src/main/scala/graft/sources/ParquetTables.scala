@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -24,6 +23,10 @@ import scala.util.control.NonFatal
   * files change between the listing and the inference, the schema is
   * recorded under the older listing and the next read, which lists the
   * newer files, infers again.
+  *
+  * The memo keeps the [[Capacity]] most recently read paths: a resident
+  * daemon meets new paths for as long as it runs, and a path that falls
+  * out is inferred again on its next read.
   */
 object ParquetTables {
 
@@ -51,7 +54,20 @@ object ParquetTables {
 
   private final case class Known(signature: Signature, schema: StructType)
 
-  private val known = new ConcurrentHashMap[String, Known]()
+  /** The most paths the memo holds; the least recently read goes first. */
+  private[sources] val Capacity = 1024
+
+  private val known = new java.util.LinkedHashMap[String, Known](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Known]): Boolean =
+      size > Capacity
+  }
+
+  private def recall(key: String): Option[Known] = known.synchronized(Option(known.get(key)))
+
+  private def remember(key: String, k: Known): Unit = known.synchronized(known.put(key, k))
+
+  /** How many paths the memo holds now. */
+  private[sources] def knownPaths: Int = known.synchronized(known.size)
 
   /** `spark.read.parquet(path)`, without the inference job when the
     * files and confs are those of an earlier read. When the path cannot
@@ -61,11 +77,11 @@ object ParquetTables {
     signature(spark, path) match {
       case None => spark.read.parquet(path)
       case Some((key, sig)) =>
-        Option(known.get(key)).filter(_.signature == sig) match {
+        recall(key).filter(_.signature == sig) match {
           case Some(k) => spark.read.schema(k.schema).parquet(path)
           case None =>
             val df = spark.read.parquet(path)
-            known.put(key, Known(sig, df.schema))
+            remember(key, Known(sig, df.schema))
             df
         }
     }

@@ -418,4 +418,24 @@ class PlanRegressionSpec extends SparkSpec {
     assert(jobs <= 1, s"a full-replace load ran $jobs jobs (at most 1)")
     assert(spark.table("plan_sink.t_replace").count() == 5)
   }
+
+  test("a warm full replace and a warm append each start one SQL execution and one Spark job") {
+    import spark.implicits._
+    // everything around the write (database and table lookups, the
+    // staging and target drops, the staged entry, the rename, an append's
+    // probe) is catalog and file-system calls: a SQL command there would
+    // start an execution of its own
+    val sink = new graft.sinks.WarehouseSink("plan_sink_exec")
+    def load(n: Int, incremental: Boolean) = sink.load(graft.sinks.LoadRequest(
+      (1 to n).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), "t_exec", incremental))
+    load(3, incremental = false)
+    load(1, incremental = true)
+    val (_, replaceExecs, replaceJobs) = executionsDuring(load(5, incremental = false))
+    assert((replaceExecs, replaceJobs) == ((1, 1)),
+      s"a full replace ran $replaceExecs SQL executions and $replaceJobs jobs (1 and 1)")
+    val (_, appendExecs, appendJobs) = executionsDuring(load(2, incremental = true))
+    assert((appendExecs, appendJobs) == ((1, 1)),
+      s"an append ran $appendExecs SQL executions and $appendJobs jobs (1 and 1)")
+    assert(spark.table("plan_sink_exec.t_exec").count() == 7)
+  }
 }

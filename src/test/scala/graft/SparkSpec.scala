@@ -23,12 +23,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * between two marker jobs: listener events arrive in order, so every
     * job seen between the markers was started by `body`. */
   protected def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (out, _, jobs) = executionsDuring(body)
+    (out, jobs)
+  }
+
+  /** `body`'s result, the SQL executions it started and its Spark jobs,
+    * counted like [[jobsDuring]]. An execution is a root
+    * `SparkListenerSQLExecutionStart`: the executions a command runs
+    * inside its own (a `saveAsTable` append runs two) carry its id as
+    * their root and count with it, as the UI lists them. A marker's
+    * execution starts before its job: the start marker's comes before
+    * counting starts, the drain marker's is told apart by its job group. */
+  protected def executionsDuring[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
     val mark = s"jobs-during-${System.nanoTime()}"
     val counting = new AtomicBoolean(false)
     val jobs = new AtomicInteger()
+    val executions = new AtomicInteger()
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -37,6 +51,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
           case Some(g) if g == s"$mark-drain" => counting.set(false); drained.countDown()
           case _ => if (counting.get) jobs.incrementAndGet()
         }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if counting.get && x.rootExecutionId.forall(_ == x.executionId) &&
+              !x.jobGroupId.contains(s"$mark-drain") =>
+          executions.incrementAndGet()
+        case _ =>
+      }
     }
     val sc = spark.sparkContext
     def marker(g: String): Unit = {
@@ -49,7 +70,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val out = body
       marker(s"$mark-drain")
       assert(drained.await(60, TimeUnit.SECONDS), "listener never saw the drain job")
-      (out, jobs.get)
+      (out, executions.get, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
 

@@ -64,10 +64,10 @@ class SinksSpec extends SparkSpec {
     sink.load(LoadRequest(Seq((6, "appended")).toDF("id", "v"), "t_orph", incremental = true))
     assert(spark.table("g_sheets_orph.t_orph").as[(Int, String)].collect().toSet ==
       Set((5, "new"), (6, "appended")))
-    // the re-adopted entry is EXTERNAL at the managed location, whose
-    // files survive a drop of the entry; a later full replace must clear
-    // them too, or moving the staged table there throws
-    // LOCATION_ALREADY_EXISTS — the replace-after-restart-append cycle
+    // the re-adopted entry sits at the managed location; a later full
+    // replace must clear its files too, or moving the staged table there
+    // throws LOCATION_ALREADY_EXISTS — the replace-after-restart-append
+    // cycle
     sink.load(LoadRequest(Seq((7, "replaced")).toDF("id", "v"), "t_orph", incremental = false))
     assert(spark.table("g_sheets_orph.t_orph").as[(Int, String)].collect().toSet ==
       Set((7, "replaced")))
@@ -158,6 +158,34 @@ class SinksSpec extends SparkSpec {
     sink.load(LoadRequest(Seq((3, "c")).toDF("id", "v"), "t_st", incremental = false))
     assert(spark.table("g_sheets_stage.t_st").as[(Int, String)].collect().toSet == Set((3, "c")))
     assert(!spark.catalog.tableExists(s"g_sheets_stage.$staged") && !fs.exists(stagedLoc))
+  }
+
+  test("warehouse full load uncaches the old table and records the entry a CTAS records") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val sink = new WarehouseSink("g_sheets_cache")
+    // a non-nullable column and a non-nullable array element: a CTAS
+    // records both as nullable
+    sink.load(LoadRequest(Seq((1, "a", Seq(1.0)), (2, "b", Seq.empty[Double]))
+      .toDF("id", "v", "xs"), "t", incremental = false))
+    val cached = spark.table("g_sheets_cache.t").cache()
+    assert(cached.count() == 2 && spark.catalog.isCached("g_sheets_cache.t"))
+    // same schema and location: a cache entry left behind would still
+    // match the new table's plan and serve the old rows
+    val next = Seq((3, "c", Seq(1.5, 2.5))).toDF("id", "v", "xs")
+    sink.load(LoadRequest(next, "t", incremental = false))
+    assert(!spark.catalog.isCached("g_sheets_cache.t"))
+    assert(spark.table("g_sheets_cache.t").as[(Int, String, Seq[Double])].collect().toSeq ==
+      Seq((3, "c", Seq(1.5, 2.5))))
+    next.write.format("parquet").saveAsTable("g_sheets_cache.t_ctas")
+    val catalog = spark.sessionState.catalog
+    def entry(t: String) = catalog.getTableMetadata(TableIdentifier(t, Some("g_sheets_cache")))
+    val (got, twin) = (entry("t"), entry("t_ctas"))
+    assert(got.provider == twin.provider && got.provider.contains("parquet"), got.provider)
+    assert(got.tableType == twin.tableType, got.tableType)
+    assert(got.schema == twin.schema, s"${got.schema} vs the CTAS's ${twin.schema}")
+    // each at its own managed location
+    assert(got.location == catalog.defaultTablePath(got.identifier), got.location)
+    assert(twin.location == catalog.defaultTablePath(twin.identifier), twin.location)
   }
 
   test("csv sink quotes every field (K1, QUOTE_NONNUMERIC on all-string cells)") {

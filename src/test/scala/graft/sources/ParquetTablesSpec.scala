@@ -11,6 +11,8 @@ import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.LongType
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** [[ParquetTables.read]] against a plain `spark.read.parquet` of the
   * same path: same schema, rows and errors, and no inference job once
@@ -116,6 +118,35 @@ class ParquetTablesSpec extends SparkSpec {
     assert(jobs == 0, s"a warm read must start no Spark job, ran $jobs")
     assert(warm == plain,
       s"(located listings, block lookups): warm read $warm, schema-given read $plain")
+  }
+
+  test("the memo holds at most Capacity paths; an evicted path infers again, equal to the plain read") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("pqtables-lru")
+    val first = root.resolve("p0")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1).write.parquet(first.toString)
+    // byte copies of one table: Capacity + 1 distinct paths
+    val paths = first +: (1 to ParquetTables.Capacity).map { i =>
+      val dst = Files.createDirectory(root.resolve(s"p$i"))
+      Files.list(first).iterator().asScala.foreach(f => Files.copy(f, dst.resolve(f.getFileName)))
+      dst
+    }
+    // the first path alone, then the rest four at a time: the first is
+    // the least recently read
+    ParquetTables.read(spark, first.toString)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.traverse(paths.tail)(p => Future(ParquetTables.read(spark, p.toString))),
+      Duration.Inf)
+    finally pool.shutdown()
+    assert(ParquetTables.knownPaths <= ParquetTables.Capacity,
+      s"${ParquetTables.knownPaths} paths held, cap ${ParquetTables.Capacity}")
+    val (again, jobs) = jobsDuring(ParquetTables.read(spark, first.toString))
+    assert(jobs == 1, s"an evicted path must infer again with one job, ran $jobs")
+    sameAsPlain(spark, first.toString, again)
+    val (_, warmJobs) = jobsDuring(ParquetTables.read(spark, first.toString))
+    assert(warmJobs == 0, s"the re-read path must be known again, ran $warmJobs")
   }
 
   test("a missing path and an empty directory fail like the plain read") {
