@@ -121,11 +121,11 @@ object CoLocated {
     * behind without an entry (a write onto it fails: a CTAS throws
     * LOCATION_ALREADY_EXISTS — the r4 failure mode, pinned in
     * EmbeddingsSpec — and a path write PATH_ALREADY_EXISTS); returns
-    * that location. `DROP TABLE`'s steps as
-    * catalog calls, skipped when there is no entry: uncache every cached
-    * plan that reads the table, by name (the SQL command resolves the
-    * relation, a file listing, to find them by plan), then drop the
-    * session's cached relation and the entry. */
+    * that location. `DROP TABLE`'s steps as catalog calls, skipped when
+    * there is no entry: uncache every cached plan that reads the table,
+    * by name (the SQL command resolves the relation, a file listing, to
+    * find them by plan), then drop the session's cached relation and the
+    * entry. */
   private def dropAndClear(spark: SparkSession, database: String, table: String): Path = {
     val loc = tableLocation(spark, database, table)
     val catalog = spark.sessionState.catalog
