@@ -92,6 +92,16 @@ object Sessions {
     // PlanRegressionSpec's t09 case guards the exclusion.
     "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    // Without libhadoop the default `file:` FileSystem forks `chmod` for
+    // every directory and file a write creates, eight or nine for a
+    // one-task parquet or CSV write (a JFR recording of one 30 s
+    // daemon_fleet run on 4 cores held 4,224 chmod starts).
+    // graft.util.LocalFs sets the same bits in process. Hadoop caches FileSystem instances per scheme and
+    // user, not per conf: a JVM that touched `file:` before building its
+    // session keeps the instance it got then (LocalFsSpec checks this
+    // session's). Streaming checkpoints go through FileContext, which
+    // this key does not reach.
+    "spark.hadoop.fs.file.impl" -> classOf[graft.util.LocalFs].getName,
     "spark.ui.enabled" -> "false") ++ extraConf
 
   /** `SPARK_GRAFT_CONF="k=v;k2=v2"` — tuning overrides appended LAST so

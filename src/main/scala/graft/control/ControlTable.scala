@@ -2,7 +2,6 @@ package graft.control
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** The mutable job-control surface: read all specs, write individual cells
@@ -85,8 +84,8 @@ object CsvCodec {
     cells.map(c => "\"" +
       c.replace("\r", " ").replace("\n", " ").replace("\"", "\"\"") + "\"").mkString(",")
 
-  def parseLine(line: String): Seq[String] = {
-    val out = ArrayBuffer.empty[String]
+  def parseLine(line: String): Vector[String] = {
+    val out = Vector.newBuilder[String]
     val cur = new StringBuilder
     var inQuotes = false
     var i = 0
@@ -105,6 +104,6 @@ object CsvCodec {
       i += 1
     }
     out += cur.result()
-    out.toSeq
+    out.result()
   }
 }

@@ -61,8 +61,9 @@ object SheetSource {
       throw new IllegalArgumentException(
         s"sheet '${f.getName.stripSuffix(".csv")}' of document '${f.getParentFile.getName}' is empty")
     }
-    val width = parsed.map(_.length).max
-    Grid(parsed.map(_.toVector.padTo(width, "")), Vector.range(1L, parsed.length + 1L),
+    val width = parsed.iterator.map(_.length).max
+    Grid(parsed.map(r => if (r.length == width) r else r.padTo(width, "")),
+      Vector.range(1L, parsed.length + 1L),
       Vector.tabulate(width)(c => A1Notation.colLetters(c + 1)), Vector.fill(width)(StringType))
   }
 

@@ -438,4 +438,25 @@ class PlanRegressionSpec extends SparkSpec {
       s"an append ran $appendExecs SQL executions and $appendJobs jobs (1 and 1)")
     assert(spark.table("plan_sink_exec.t_exec").count() == 7)
   }
+
+  test("a warm full replace, a warm append and a warm CSV export start no process") {
+    import spark.implicits._
+    // Hadoop's raw local FileSystem without libhadoop forks `chmod` for
+    // every directory and file a write creates, eight or nine per write;
+    // the session's `file:` FileSystem sets the bits in process
+    val warehouse = new graft.sinks.WarehouseSink("plan_sink_fork")
+    val csv = new graft.sinks.CsvSink(
+      java.nio.file.Files.createTempDirectory("fork-csv").toString)
+    def frame(n: Int) = (1 to n).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1)
+    def writes(): Unit = {
+      warehouse.load(graft.sinks.LoadRequest(frame(5), "t_fork", incremental = false))
+      warehouse.load(graft.sinks.LoadRequest(frame(2), "t_fork", incremental = true))
+      csv.load(graft.sinks.LoadRequest(frame(3), "out.csv", incremental = false))
+    }
+    writes()
+    val (_, started) = processesDuring(writes())
+    assert(started.size == 0,
+      s"three warm writes started processes, the first: ${started.take(4).mkString("; ")}")
+    assert(spark.table("plan_sink_fork.t_fork").count() == 7)
+  }
 }

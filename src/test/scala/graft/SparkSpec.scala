@@ -74,6 +74,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** `body`'s result and the command line of every process the JVM
+    * started while it ran, from the `jdk.ProcessStart` events of an
+    * in-process JFR recording. `body`'s Spark jobs have finished when it
+    * returns, so their executor threads' forks are in the recording. */
+  protected def processesDuring[T](body: => T): (T, Seq[String]) = {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val rec = new Recording()
+    val dump = java.nio.file.Files.createTempFile("processes-during", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = try body finally rec.stop()
+      rec.dump(dump)
+      (out, RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command")))
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(dump)
+    }
+  }
+
   override def afterAll(): Unit = {
     // session is shared across suites — do not stop it here
     super.afterAll()
