@@ -96,11 +96,12 @@ object Sessions {
     // every directory and file a write creates, eight or nine for a
     // one-task parquet or CSV write (a JFR recording of one 30 s
     // daemon_fleet run on 4 cores held 4,224 chmod starts).
-    // graft.util.LocalFs sets the same bits in process. Hadoop caches FileSystem instances per scheme and
-    // user, not per conf: a JVM that touched `file:` before building its
-    // session keeps the instance it got then (LocalFsSpec checks this
-    // session's). Streaming checkpoints go through FileContext, which
-    // this key does not reach.
+    // graft.util.LocalFs sets the same bits in process (a sticky bit or a
+    // setuid/setgid directory still takes Hadoop's path). Hadoop caches
+    // FileSystem instances per scheme and user, not per conf: a JVM that
+    // touched `file:` before building its session keeps the instance it
+    // got then (LocalFsSpec checks this session's). Streaming checkpoints
+    // go through FileContext, which this key does not reach.
     "spark.hadoop.fs.file.impl" -> classOf[graft.util.LocalFs].getName,
     "spark.ui.enabled" -> "false") ++ extraConf
 

@@ -44,6 +44,31 @@ class LocalFsSpec extends SparkSpec {
     }
   }
 
+  test("a warehouse load under a setgid directory keeps setgid on every directory it creates") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("localfs-setgid")
+    // NIO cannot set the setgid bit; the test takes the `chmod` route
+    assert(new ProcessBuilder("chmod", "g+s", root.toString).start().waitFor() == 0)
+    try {
+      spark.sql(s"CREATE DATABASE localfs_setgid LOCATION '${root.toUri}db'")
+      val sink = new graft.sinks.WarehouseSink("localfs_setgid")
+      sink.load(graft.sinks.LoadRequest(
+        (1 to 20).map(i => (i, s"v$i")).toDF("id", "v"), "t_setgid", incremental = false))
+      sink.load(graft.sinks.LoadRequest(Seq((21, "v21")).toDF("id", "v"), "t_setgid", incremental = true))
+      val walk = Files.walk(root)
+      val entries = try walk.iterator.asScala.toVector finally walk.close()
+      assert(entries.count(p => p.getFileName.toString.startsWith("part-")) >= 2, entries)
+      val setgid = 0x400 // octal 02000
+      entries.filter(Files.isDirectory(_)).foreach(p =>
+        assert((Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & setgid) != 0, p))
+    } finally {
+      spark.sql("DROP DATABASE IF EXISTS localfs_setgid CASCADE")
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[JPath]).forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
+  }
+
   test("setPermission reads back the mode it set, the sticky bit included") {
     val dir = Files.createTempDirectory("localfs")
     val file = Files.createFile(dir.resolve("f"))

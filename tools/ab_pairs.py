@@ -15,7 +15,7 @@ and the verdict of the gain rule: a gain needs wins in at least nine
 tenths of the pairs and a median gap, in the better direction, larger
 than the distance between the parent's quartiles. A change median worse
 than the parent's by more than the metric's bound (a fraction of the
-parent median) reads `worse`. With `--log <file>` every run's result
+parent median) reads `worse`; one worse by less reads `unresolved`. With `--log <file>` every run's result
 line is appended to the file as `{"side", "seed", "result"}`.
 """
 import argparse
@@ -66,6 +66,8 @@ def verdict(metric, parent, change):
         word = "gain"
     elif -gap > metric["bound"] * abs(pm):
         word = "worse"
+    elif gap <= 0:
+        word = "unresolved"
     else:
         word = "no gain shown"
     return wins, gap, q3 - q1, word
