@@ -25,42 +25,39 @@ class LocalFsSpec extends SparkSpec {
     assert(fs.asInstanceOf[LocalFs].getRawFileSystem.getClass == classOf[LocalFs.Raw])
   }
 
-  test("a warehouse load's files and directories carry the umask-applied defaults") {
+  /** A full replace then an append of `database.table`; every path of the
+    * table's directory, the directory included. */
+  private def loadTwice(database: String, table: String): Vector[JPath] = {
     import spark.implicits._
-    val sink = new graft.sinks.WarehouseSink("localfs_perm")
+    val sink = new graft.sinks.WarehouseSink(database)
     sink.load(graft.sinks.LoadRequest(
-      (1 to 20).map(i => (i, s"v$i")).toDF("id", "v"), "t_perm", incremental = false))
-    sink.load(graft.sinks.LoadRequest(Seq((21, "v21")).toDF("id", "v"), "t_perm", incremental = true))
+      (1 to 20).map(i => (i, s"v$i")).toDF("id", "v"), table, incremental = false))
+    sink.load(graft.sinks.LoadRequest(Seq((21, "v21")).toDF("id", "v"), table, incremental = true))
+    val walk = Files.walk(JPath.of(graft.plans.CoLocated.tableLocation(spark, database, table).toUri))
+    val entries = try walk.iterator.asScala.toVector finally walk.close()
+    assert(entries.count(p => p.getFileName.toString.startsWith("part-")) >= 2, entries)
+    entries
+  }
+
+  test("a warehouse load's files and directories carry the umask-applied defaults") {
     val umask = FsPermission.getUMask(conf)
     val file = bits(FsPermission.getFileDefault.applyUMask(umask).toShort)
     val dir = bits(FsPermission.getDirDefault.applyUMask(umask).toShort)
-    val root = JPath.of(graft.plans.CoLocated.tableLocation(spark, "localfs_perm", "t_perm").toUri)
-    val walk = Files.walk(root)
-    val entries = try walk.iterator.asScala.toVector finally walk.close()
-    assert(entries.count(p => p.getFileName.toString.startsWith("part-")) >= 2, entries)
-    entries.foreach { p =>
+    loadTwice("localfs_perm", "t_perm").foreach { p =>
       val want = if (Files.isDirectory(p)) dir else file
       assert(posix(p) == want, p)
     }
   }
 
   test("a warehouse load under a setgid directory keeps setgid on every directory it creates") {
-    import spark.implicits._
     val root = Files.createTempDirectory("localfs-setgid")
     // NIO cannot set the setgid bit; the test takes the `chmod` route
     assert(new ProcessBuilder("chmod", "g+s", root.toString).start().waitFor() == 0)
     try {
       spark.sql(s"CREATE DATABASE localfs_setgid LOCATION '${root.toUri}db'")
-      val sink = new graft.sinks.WarehouseSink("localfs_setgid")
-      sink.load(graft.sinks.LoadRequest(
-        (1 to 20).map(i => (i, s"v$i")).toDF("id", "v"), "t_setgid", incremental = false))
-      sink.load(graft.sinks.LoadRequest(Seq((21, "v21")).toDF("id", "v"), "t_setgid", incremental = true))
-      val walk = Files.walk(root)
-      val entries = try walk.iterator.asScala.toVector finally walk.close()
-      assert(entries.count(p => p.getFileName.toString.startsWith("part-")) >= 2, entries)
       val setgid = 0x400 // octal 02000
-      entries.filter(Files.isDirectory(_)).foreach(p =>
-        assert((Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & setgid) != 0, p))
+      (root.resolve("db") +: loadTwice("localfs_setgid", "t_setgid")).filter(Files.isDirectory(_))
+        .foreach(p => assert((Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & setgid) != 0, p))
     } finally {
       spark.sql("DROP DATABASE IF EXISTS localfs_setgid CASCADE")
       val walk = Files.walk(root)
